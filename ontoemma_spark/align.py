@@ -20,11 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ontoemma_spark import config
-from ontoemma_spark.operators.blocking import (
-    candidate_pairs,
-    candidate_pairs_broadcast_index,
-    entity_tokens,
-)
+from ontoemma_spark.operators.blocking import candidate_pairs_broadcast_index, entity_tokens
 from ontoemma_spark.operators.features import entity_feature_table, featurize_pairs
 from ontoemma_spark.operators.scoring import DEFAULT_LR_MODEL, LRModel
 from ontoemma_spark.operators.strategy import apply_alignment_strategy
@@ -46,13 +42,11 @@ def align(
     strategy: str = "best",
     threshold: float = config.SIM_SCORE_THRESHOLD,
     top_k: int = config.KEEP_TOP_K_CANDIDATES,
-    broadcast_index: bool = True,
     normalize: bool = True,
 ) -> AlignmentResult:
-    """broadcast_index: compute candidates with the broadcast-inverted-
-    index kernel (target KB index fits in memory — always true for the
-    KB side; bit-identical to the shuffle plan, ~12x faster). Set False
-    to force the pure-relational plan (both-sides-big regime).
+    """Candidates come from candidate_pairs_broadcast_index, which runs
+    the relational blocking join itself when the target index does not
+    fit on the driver.
 
     normalize: apply P1 KB normalization first (the reference align()
     calls normalize_kb on both sides before candidate selection,
@@ -67,8 +61,7 @@ def align(
     s_count = s_entities.count()
     t_count = t_entities.count()
 
-    block = candidate_pairs_broadcast_index if broadcast_index else candidate_pairs
-    cands = block(
+    cands = candidate_pairs_broadcast_index(
         entity_tokens(s_entities), entity_tokens(t_entities), s_count, t_count, top_k=top_k
     )
 

@@ -80,9 +80,6 @@ MODH_KEEP_TOP_N_CANDIDATES = 10
 
 # ---- Scale knobs (ours, not the reference's) -------------------------------
 
-# Salt fan-out for skewed blocking tokens / head entities.
-DEFAULT_NUM_SALTS = 16
-
 # Connected-components convergence safety bound.
 CC_MAX_ITERATIONS = 50
 

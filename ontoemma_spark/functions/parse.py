@@ -95,17 +95,6 @@ def np_parse(name: str | None) -> tuple[str, list[str]]:
 _SPACY_NLP = None
 
 
-def spacy_available() -> bool:
-    """True when the spaCy package is importable (the model is checked
-    at load time — load_spacy raises its own actionable error)."""
-    try:
-        import spacy  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
 def load_spacy(model: str = "en_core_web_sm"):
     """Executor-side pipeline singleton. NER/lemmatizer disabled — the
     F9 feature only needs the dependency parse."""

@@ -209,25 +209,6 @@ def _p2_regions(w: str) -> tuple[int, int]:
     return r1, r2
 
 
-def _p2_short_syllable_at(w: str, i: int) -> bool:
-    """Short syllable ending at index i (spec): either (a) vowel at i
-    preceded by and followed by a non-vowel, with the following
-    non-vowel not w/x/Y — tested as position i being that vowel with
-    i-1 cons and i+1 cons — or (b) a vowel at position 0 followed by a
-    non-vowel."""
-    if i == 0:
-        return (
-            len(w) >= 2 and _p2_is_vowel(w, 0) and not _p2_is_vowel(w, 1)
-        )
-    return (
-        0 < i < len(w) - 1
-        and _p2_is_vowel(w, i)
-        and not _p2_is_vowel(w, i + 1)
-        and w[i + 1] not in "wxY"
-        and not _p2_is_vowel(w, i - 1)
-    )
-
-
 def _p2_ends_short_syllable(w: str) -> bool:
     n = len(w)
     if n >= 3 and _p2_is_vowel(w, n - 2) and not _p2_is_vowel(w, n - 1) \

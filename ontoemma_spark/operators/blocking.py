@@ -13,8 +13,11 @@ Scale notes (100 TB design):
   * The token join is the skew-critical shuffle. The IDF floor
     (constants IDF_LIMIT, ln 20) semantically bounds fan-out: a token
     passing the filter appears in ≤ N/19 entities. Residual skew is
-    handled by AQE skew-join; for pathological head tokens
-    `salted_token_join` replicates the build side over NUM_SALTS salts.
+    handled by AQE skew-join.
+  * When the target-side index fits on the driver
+    (session.driver_row_cap), candidate_pairs_broadcast_index replaces
+    the token join with a broadcast inverted index; above that gate it
+    runs candidate_pairs.
   * KB sides of rehydration joins are broadcast (KBs ≤ 10^6 rows vs
     10^12 mentions).
 """
@@ -26,6 +29,7 @@ from pyspark.sql import functions as F
 
 from ontoemma_spark import config
 from ontoemma_spark.functions.text import char_ngrams, idf, normalize_string, tokenize
+from ontoemma_spark.session import driver_row_cap
 
 
 def entity_tokens(
@@ -90,7 +94,6 @@ def candidate_pairs(
     t_count: int,
     idf_limit: float = config.IDF_LIMIT,
     top_k: int = config.KEEP_TOP_K_CANDIDATES,
-    num_salts: int | None = None,
 ) -> DataFrame:
     """The blocking join (CandidateSelection.py:130-149 select_candidates,
     vectorized over ALL source entities at once).
@@ -107,9 +110,7 @@ def candidate_pairs(
         and window): ~33-36s
     The shuffle join wins because the dominating cost is the 23M-group
     hash aggregation, which Spark balances best across its own exchange;
-    AQE's skew-join handles residual token skew. num_salts opts into
-    explicit salting for pathological head tokens (both-sides-big regime
-    where AQE cannot split a single join key).
+    AQE's skew-join handles residual token skew.
     """
     vocab = shared_vocabulary(
         token_idf(s_tokens, s_count), token_idf(t_tokens, t_count)
@@ -121,43 +122,13 @@ def candidate_pairs(
     # vocab is tiny after the IDF floor → broadcast it into both probes;
     # the s⋈t exchange on token is the one real shuffle.
     s_keyed = s.join(F.broadcast(vocab.select("token", "t_idf")), "token")
-    if num_salts and num_salts > 1:
-        s_keyed = s_keyed.withColumn(
-            "salt", F.pmod(F.xxhash64(F.col("s_id")), F.lit(num_salts))
-        )
-        t_keyed = t.withColumn(
-            "salt", F.explode(F.array(*[F.lit(i) for i in range(num_salts)]))
-        )
-        joined = s_keyed.join(t_keyed, ["token", "salt"]).drop("salt")
-    else:
-        joined = s_keyed.join(t, "token")
-    pairs = joined.groupBy("s_id", "t_id").agg(F.sum("t_idf").alias("cand_score"))
+    pairs = (
+        s_keyed.join(t, "token")
+        .groupBy("s_id", "t_id")
+        .agg(F.sum("t_idf").alias("cand_score"))
+    )
     w = Window.partitionBy("s_id").orderBy(F.desc("cand_score"), F.asc("t_id"))
     return pairs.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= top_k)
-
-
-def with_salt(df: DataFrame, key_col: str, num_salts: int = config.DEFAULT_NUM_SALTS) -> DataFrame:
-    """Deterministic salt for skewed keys: pmod(xxhash64(key), num_salts)."""
-    return df.withColumn("salt", F.pmod(F.xxhash64(F.col(key_col)), F.lit(num_salts)))
-
-
-def salted_token_join(
-    probe: DataFrame,
-    build: DataFrame,
-    key: str = "token",
-    num_salts: int = config.DEFAULT_NUM_SALTS,
-) -> DataFrame:
-    """Skew-safe equi-join: probe side gets a deterministic salt from its
-    row identity; build side is replicated across all salts. Join key
-    becomes (key, salt), splitting a hot key's rows over num_salts
-    reducers. Use for head tokens/entities that survive the IDF floor.
-    """
-    probe_cols = probe.columns
-    probe_s = probe.withColumn(
-        "salt", F.pmod(F.xxhash64(*[F.col(c) for c in probe_cols]), F.lit(num_salts))
-    )
-    build_s = build.withColumn("salt", F.explode(F.array(*[F.lit(i) for i in range(num_salts)])))
-    return probe_s.join(build_s, [key, "salt"]).drop("salt")
 
 
 def candidate_pairs_broadcast_index(
@@ -167,7 +138,6 @@ def candidate_pairs_broadcast_index(
     t_count: int,
     idf_limit: float = config.IDF_LIMIT,
     top_k: int = config.KEEP_TOP_K_CANDIDATES,
-    max_index_rows: int = 2_000_000,
 ) -> DataFrame:
     """candidate_pairs with the pair fan-out eliminated: the target
     inverted index (token → postings) is broadcast as numpy arrays and
@@ -179,10 +149,11 @@ def candidate_pairs_broadcast_index(
     (CandidateSelection.py:31-44 holds exactly this index in one dict);
     valid whenever the KB-side index fits in executor memory (KBs are
     ≤10^6 entities vs 10^12 mentions — the north-rule regime). That
-    regime is ENFORCED: the index row count is checked first (cheap
-    count job) and above max_index_rows the call falls back to the
-    relational candidate_pairs plan, so a both-sides-big misuse cannot
-    OOM the driver (tests/test_review_fixes.py pins fallback identity).
+    regime is ENFORCED: the index entry count is checked first (cheap
+    count job) and when it does not fit on the driver
+    (session.driver_row_cap) the call falls back to the relational
+    candidate_pairs plan, so a both-sides-big misuse cannot OOM the
+    driver (tests/test_broadcast_index.py pins fallback identity).
 
     Identical output to candidate_pairs: scores are sums over shared
     tokens accumulated in ascending token order (both engines sum ≤
@@ -232,7 +203,7 @@ def candidate_pairs_broadcast_index(
     t_sets = t_sets.persist(StorageLevel.MEMORY_AND_DISK)
     try:
         entries = t_sets.select(F.sum(F.size("toks"))).first()[0] or 0
-        if entries > max_index_rows:
+        if entries > driver_row_cap(t_sets, "toks"):
             return candidate_pairs(
                 s_tokens, t_tokens, s_count, t_count,
                 idf_limit=idf_limit, top_k=top_k,

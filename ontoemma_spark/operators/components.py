@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ontoemma_spark import config
+from ontoemma_spark.session import driver_row_cap
 
 
 def connected_components(
@@ -27,16 +28,15 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iterations: int = config.CC_MAX_ITERATIONS,
-    max_collect_edges: int | None = 500_000,
 ) -> DataFrame:
     """(node, component) with component = min node id (string order) in
     the node's connected component. Edges are treated as undirected.
 
     r6 fast path (guide §1.2 step 1): the edge list is COUNTED first;
-    at or below ``max_collect_edges`` it is collected (Arrow) and
-    labeled by driver-side union-find — the hash-min loop schedules
-    several shuffle jobs per round, which on the pair graphs this
-    operator actually sees (LSH survivors, alignment links: orders of
+    when it fits on the driver (session.driver_row_cap) it is collected
+    (Arrow) and labeled by driver-side union-find — the hash-min loop
+    schedules several shuffle jobs per round, which on the pair graphs
+    this operator actually sees (LSH survivors, alignment links: orders of
     magnitude smaller than the corpus) is pure fixed overhead. The
     guarded collect has the same legitimacy as a broadcast hash join's
     build side: measured first, bounded by construction, and the
@@ -46,50 +46,48 @@ def connected_components(
     same null/self-loop conventions (a null endpoint never joins; a
     self-loop-only node is its own singleton).
     """
-    if max_collect_edges is not None:
-        e_small = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        n_edges = e_small.limit(max_collect_edges + 1).count()
-        if n_edges <= max_collect_edges:
-            edge_rows = e_small.collect()
-            parent: dict = {}
+    e_small = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+    cap = driver_row_cap(e_small, "a", "b")
+    if e_small.limit(cap + 1).count() <= cap:
+        edge_rows = e_small.collect()
+        parent: dict = {}
 
-            def find(x):
-                r = x
-                while parent[r] != r:
-                    r = parent[r]
-                while parent[x] != x:
-                    parent[x], x = r, parent[x]
-                return r
+        def find(x):
+            r = x
+            while parent[r] != r:
+                r = parent[r]
+            while parent[x] != x:
+                parent[x], x = r, parent[x]
+            return r
 
-            has_null = False
-            for row in edge_rows:
-                a, b = row["a"], row["b"]
-                if a is None or b is None:
-                    has_null = True
-                for v in (a, b):
-                    if v is not None and v not in parent:
-                        parent[v] = v
-                if a is None or b is None or a == b:
-                    continue
-                ra, rb = find(a), find(b)
-                if ra != rb:
-                    # min id becomes the root — the hash-min label
-                    if rb < ra:
-                        ra, rb = rb, ra
-                    parent[rb] = ra
-            rows = [(v, find(v)) for v in parent]
-            if has_null:
-                # the distributed node universe keeps a NULL node (its
-                # component is NULL) — preserve that exactly
-                rows.append((None, None))
-            spark = edges.sparkSession
-            node_t = edges.schema[src].dataType.simpleString()
-            return spark.createDataFrame(
-                rows, schema=f"node {node_t}, component {node_t}"
-            )
+        has_null = False
+        for row in edge_rows:
+            a, b = row["a"], row["b"]
+            if a is None or b is None:
+                has_null = True
+            for v in (a, b):
+                if v is not None and v not in parent:
+                    parent[v] = v
+            if a is None or b is None or a == b:
+                continue
+            ra, rb = find(a), find(b)
+            if ra != rb:
+                # min id becomes the root — the hash-min label
+                if rb < ra:
+                    ra, rb = rb, ra
+                parent[rb] = ra
+        rows = [(v, find(v)) for v in parent]
+        if has_null:
+            # the distributed node universe keeps a NULL node (its
+            # component is NULL) — preserve that exactly
+            rows.append((None, None))
+        spark = edges.sparkSession
+        node_t = edges.schema[src].dataType.simpleString()
+        return spark.createDataFrame(
+            rows, schema=f"node {node_t}, component {node_t}"
+        )
     sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
+        e_small.union(e_small.select(F.col("b").alias("a"), F.col("a").alias("b")))
         .filter(F.col("a") != F.col("b"))
         .distinct()
         .localCheckpoint(eager=True)
@@ -150,12 +148,6 @@ def connected_components(
         f"connected_components did not converge in {max_iterations} rounds "
         "(graph diameter exceeds the bound); raise max_iterations"
     )
-
-
-def canonical_ids_from_matches(matches: DataFrame) -> DataFrame:
-    """Match pairs (s_id, t_id) → (node, component) canonical mapping,
-    singletons excluded (they keep their own id by definition)."""
-    return connected_components(matches, src="s_id", dst="t_id")
 
 
 def _min_reach_labels_bidir(
@@ -298,7 +290,6 @@ def strongly_connected_components(
     dst: str = "dst",
     max_rounds: int = 20,
     max_iterations: int = config.CC_MAX_ITERATIONS,
-    max_collect_edges: int | None = 500_000,
 ) -> DataFrame:
     """(node, component) over a DIRECTED graph, component = min node id
     in the node's strongly connected component. The web-graph shape:
@@ -347,16 +338,14 @@ def strongly_connected_components(
     )
     # r6 fast path (same guarded-collect pattern as connected_components'
     # union-find): live is already deduped and materialized, so the size
-    # probe is cheap; at or below the cap the SCC runs as driver-side
-    # iterative Tarjan — the FW-BW coloring loop schedules dozens of
-    # shuffle jobs per outer round, pure fixed overhead on the small
-    # distinct link graphs this sees. Identical labels (component = min
+    # probe is cheap; when it fits on the driver the SCC runs as
+    # driver-side iterative Tarjan — the FW-BW coloring loop schedules
+    # dozens of shuffle jobs per outer round, pure fixed overhead on the
+    # small distinct link graphs this sees. Identical labels (component = min
     # SCC member; self-loop-only nodes are singletons via the node
     # universe). Above the cap: the distributed loop below, unchanged.
-    if (
-        max_collect_edges is not None
-        and live.limit(max_collect_edges + 1).count() <= max_collect_edges
-    ):
+    cap = driver_row_cap(live, "src", "dst")
+    if live.limit(cap + 1).count() <= cap:
         from collections import defaultdict
 
         adj = defaultdict(list)
@@ -438,7 +427,6 @@ def bow_tie_classes(
     dst: str = "dst",
     max_rounds: int = 20,
     max_iterations: int = config.CC_MAX_ITERATIONS,
-    max_collect_edges: int | None = 500_000,
 ) -> DataFrame:
     """Broder et al. (2000) bow-tie anatomy of a directed link graph:
     every node classified as
@@ -501,11 +489,10 @@ def bow_tie_classes(
     # min-label propagation. Exact same classification: forward
     # reachability from the core ⟺ the sentinel-seeded forward label,
     # backward ⟺ the backward label. Above the cap: the distributed
-    # propagation, unchanged.
-    if (
-        max_collect_edges is not None
-        and live.limit(max_collect_edges + 1).count() <= max_collect_edges
-    ):
+    # propagation, unchanged. The inner SCC call above applies the same
+    # gate to the same edges.
+    cap = driver_row_cap(live, "src", "dst")
+    if live.limit(cap + 1).count() <= cap:
         from collections import defaultdict, deque
 
         fwd = defaultdict(list)

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ontoemma_spark.session import driver_row_cap
+
 
 def spread(df: DataFrame) -> DataFrame:
     """Round-robin repartition to the session's default parallelism when
@@ -724,52 +726,91 @@ def exact_substring_removal(
     )
 
 
+# Mean posting-list length at or below which a vocabulary counts as
+# Zipfian (long rare tail): above the driver gate such corpora take the
+# prefix-filtered plan, denser ones the relational self-join.
+ZIPF_MEAN_DF = 32.0
+
+
 def ngram_jaccard_pairs_auto(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     w: int = 3,
     min_jaccard: float = 0.5,
-    max_index_entries: int = 5_000_000,
-    zipf_mean_df: float = 32.0,
 ) -> DataFrame:
-    """Adaptive exact pairwise jaccard — picks the physical strategy by
-    MEASURED vocabulary shape (the same move Spark itself makes with
+    """Exact pairwise n-gram jaccard (doc_a < doc_b, jaccard >=
+    min_jaccard) — picks the physical strategy by MEASURED vocabulary
+    shape (the same move Spark itself makes with
     autoBroadcastJoinThreshold / AQE):
 
-      * postings entries <= max_index_entries → broadcast-postings
-        kernel. The entry count is MEASURED first (cheap agg on the
-        same plan object; the collect that follows reuses its shuffle
-        files), so the driver pull is bounded by construction — the
-        same legitimacy as a broadcast hash join's build side.
-      * cap tripped + mean df <= zipf_mean_df (Zipfian/web-text
-        vocabulary, long rare tail) → prefix-filtered AllPairs plan
-        (ngram_jaccard_pairs_prefix), fully distributed.
-      * cap tripped + dense vocabulary (every shingle a head token —
-        the Σ df² fan-out is inherent because the OUTPUT itself is
-        near-quadratic) → relational blocked self-join
+      * the postings index fits on the driver (session.driver_row_cap on
+        its Σ|doc_ids| entries) → broadcast-postings kernel: the
+        shingle→docs index is broadcast as numpy arrays and each task
+        accumulates intersection counts for its docs against all others
+        — the Σ df² pair intermediate never shuffles. The entry count is
+        MEASURED first with one cheap aggregate job on the SAME plan
+        object, so the groupBy's shuffle files are reused by the collect
+        that follows (the map stage shows as skipped) — the same
+        legitimacy as a broadcast hash join's build side.
+      * too big + mean df <= ZIPF_MEAN_DF (Zipfian/web-text vocabulary,
+        long rare tail) + min_jaccard > 0 → prefix-filtered AllPairs
+        plan (ngram_jaccard_pairs_prefix), fully distributed.
+      * too big otherwise (dense vocabulary — every shingle a head
+        token, the Σ df² fan-out is inherent because the OUTPUT itself
+        is near-quadratic — or min_jaccard = 0, which the prefix plan
+        cannot take) → relational blocked self-join
         (ngram_jaccard_pairs), fully distributed.
 
-    The fallback statistics are computed ON the already-aggregated
-    postings (shuffle files from the aborted kernel attempt are reused
-    by Spark's exchange reuse), so the dense/Zipf decision costs one
-    cheap agg only on the fallback path — the common small case pays
-    nothing beyond the collect it needed anyway.
-
-    All three paths return identical rows (tests/test_broadcast_index.py
-    pins pairwise identity). Measured at sf0.1 local[32]: kernel ~7s,
+    The oversized index is never pulled to the driver, so misuse cannot
+    OOM it; the mean df rides the size probe's aggregate. All three
+    paths return identical rows (tests/test_broadcast_index.py pins
+    pairwise identity). Measured at sf0.1 local[32]: kernel ~7s,
     relational 18.5s, prefix 26s+ (dense testdata defeats prefix
     filtering: 931 distinct shingles, median df 285 — no rare tokens
     to prefix on; on Zipfian web text the ordering reverses).
-    """
 
-    def fallback(postings_df: DataFrame) -> DataFrame:
-        stats = postings_df.select(
-            F.avg(F.size("doc_ids")).alias("mean_df")
-        ).first()
+    (A toLocalIterator streaming guard was tried and rejected: it runs
+    the 32 reduce partitions as near-sequential jobs — 9.7s vs 7.4s at
+    sf0.1 — while the agg+collect pair keeps both jobs fully parallel.)
+    """
+    import numpy as np
+    import pandas as pd
+
+    from pyspark import StorageLevel
+
+    # persist the SHINGLE ARRAYS, not the postings: the interpreted
+    # higher-order shingling is the dominant cost and every consumer —
+    # the size probe, the postings collect, and the mapInPandas probe
+    # below — rescans it (DataFrame actions do not share stages).
+    # Measured at sf0.1: guard+collect+probe-scan 2.7s cached vs 10-15s
+    # uncached. Left persisted because the returned DataFrame is lazy;
+    # MEMORY_AND_DISK spills, never OOMs, and it is one array row per
+    # doc (sketch-sized), not the pair fan-out.
+    # spread(): the shingling HOF chain is interpreted and the corpus
+    # often arrives as one parquet split — buy scan parallelism before
+    # the heavy narrow compute, not after (guide §2.6).
+    sh = spread(docs).select(
+        F.col(id_col).alias("doc_id"),
+        F.array_distinct(shingle_array(text_col, w)).alias("sh"),
+    ).persist(StorageLevel.MEMORY_AND_DISK)
+    # no array_sort: order is re-derived by searchsorted in the code map
+    postings_df = sh.select("doc_id", F.explode("sh").alias("shingle")).groupBy(
+        "shingle"
+    ).agg(F.collect_list("doc_id").alias("doc_ids"))
+    stats = postings_df.agg(
+        F.sum(F.size("doc_ids")).alias("entries"),
+        F.avg(F.size("doc_ids")).alias("mean_df"),
+    ).first()
+    if (stats["entries"] or 0) > driver_row_cap(sh, "doc_id"):
+        # the oversized index never reaches the driver. Both distributed
+        # plans recompute from `docs` and never read the cached shingles,
+        # so the persist above would be a pure leak in a long-lived
+        # session — release it before returning.
+        sh.unpersist()
         # prefix filtering requires t > 0 (its length filter divides
         # by t); threshold-0 requests route to the relational plan
-        if min_jaccard > 0.0 and (stats["mean_df"] or 0.0) <= zipf_mean_df:
+        if min_jaccard > 0.0 and (stats["mean_df"] or 0.0) <= ZIPF_MEAN_DF:
             return ngram_jaccard_pairs_prefix(
                 docs, text_col=text_col, id_col=id_col, w=w,
                 min_jaccard=min_jaccard,
@@ -778,12 +819,84 @@ def ngram_jaccard_pairs_auto(
             word_shingles(docs, text_col=text_col, id_col=id_col, w=w),
             min_jaccard=min_jaccard,
         )
-
-    return ngram_jaccard_pairs_broadcast(
-        docs, text_col=text_col, id_col=id_col, w=w,
-        min_jaccard=min_jaccard, max_index_rows=max_index_entries,
-        _fallback=fallback,
+    # Arrow toPandas + vectorized searchsorted code mapping (see
+    # lsh_jaccard_pairs_broadcast): posting lists arrive as numpy
+    # arrays, not per-element Python objects
+    pdf_idx = postings_df.toPandas()
+    p_arrs = [np.asarray(a) for a in pdf_idx["doc_ids"].to_numpy()]
+    spark = docs.sparkSession
+    all_docs = (
+        np.unique(np.concatenate(p_arrs)) if p_arrs else np.array([], dtype=object)
     )
+    code = {d: i for i, d in enumerate(all_docs.tolist())}
+    postings = {
+        s: np.searchsorted(all_docs, a)
+        for s, a in zip(pdf_idx["shingle"], p_arrs)
+    }
+    sizes = np.zeros(len(all_docs), dtype=np.int64)
+    for ids in postings.values():
+        sizes[ids] += 1
+    bc = spark.sparkContext.broadcast(
+        (postings, np.array(all_docs.tolist(), dtype=object), sizes, code)
+    )
+
+    id_type = sh.schema["doc_id"].dataType.simpleString()
+    out_schema = f"doc_a {id_type}, doc_b {id_type}, jaccard double"
+
+    # candidate extraction is a THRESHOLD SCAN over the accumulator
+    # (guide §1.2 step 2 — per-task work): a pair with J >= t needs
+    # inter >= t/(1+t) * (na + nb) >= t/(1+t) * (na + min_b nb), so
+    # scanning acc for that floor (over codes > me only — the
+    # pair-once rule for free) replaces the old per-doc
+    # unique(concat(postings)) sort, which was O(Σ df log Σ df) per doc
+    # and dominated the probe. The floor uses the GLOBAL min doc size —
+    # conservative, no false negatives; survivors are still exact-jaccard
+    # filtered. int32 accumulator halves the scan bandwidth.
+    def probe(batches):
+        postings_l, names, sizes_l, code_l = bc.value
+        n_docs = len(names)
+        acc = np.zeros(n_docs, dtype=np.int32)
+        nb_min = int(sizes_l.min()) if n_docs else 0
+        tt = min_jaccard / (1.0 + min_jaccard) if min_jaccard > 0 else 0.0
+        for pdf in batches:
+            out = {"doc_a": [], "doc_b": [], "jaccard": []}
+            for doc_id, shingles in zip(pdf["doc_id"], pdf["sh"]):
+                # docs shorter than w tokens (or null text) have no
+                # shingles, never entered the index, and can pair with
+                # nothing — skip, don't KeyError
+                me = code_l.get(doc_id)
+                if me is None:
+                    continue
+                touched = []
+                for s in shingles:
+                    ids = postings_l.get(s)
+                    if ids is not None:
+                        acc[ids] += 1
+                        touched.append(ids)
+                if not touched:
+                    continue
+                na = int(sizes_l[me])
+                lo = max(1, int(tt * (na + nb_min)))  # floor() — safe side
+                cand = np.flatnonzero(acc[me + 1:] >= lo) + (me + 1)
+                if len(cand):
+                    inter = acc[cand]
+                    union = sizes_l[me] + sizes_l[cand] - inter
+                    jac = inter / union
+                    keep = jac >= min_jaccard
+                    k = int(keep.sum())
+                    if k:
+                        out["doc_a"].extend([doc_id] * k)
+                        out["doc_b"].extend(names[cand[keep]])
+                        out["jaccard"].extend(jac[keep])
+                # memset reset: zeroing the whole accumulator is a
+                # sequential 4B/doc write (~0.2MB), ~10x cheaper than
+                # re-scattering every posting list to undo the adds
+                acc.fill(0)
+            yield pd.DataFrame(out)
+
+    return sh.mapInPandas(probe, schema=out_schema)
+
+
 
 
 def ngram_jaccard_pairs_prefix(
@@ -872,155 +985,6 @@ def ngram_jaccard_pairs_prefix(
         .select("doc_a", "doc_b", (inter / union).alias("jaccard"))
         .filter(F.col("jaccard") >= min_jaccard)
     )
-
-
-def ngram_jaccard_pairs_broadcast(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    w: int = 3,
-    min_jaccard: float = 0.5,
-    max_index_rows: int | None = 2_000_000,
-    _fallback=None,
-) -> DataFrame:
-    """ngram_jaccard_pairs with the shingle self-join eliminated: the
-    shingle→docs postings index is broadcast as numpy arrays and each
-    task accumulates intersection counts for its docs against all
-    others (np.add.at) — the Σ df² pair-intermediate never shuffles.
-
-    SMALL-CORPUS kernel: the postings index must fit in driver +
-    executor memory. The regime is ENFORCED, not assumed — the postings
-    ENTRY count (Σ|doc_ids|, the real memory footprint, not the row
-    count) is measured with one cheap aggregate job on the SAME plan
-    object, so the groupBy's shuffle files are reused by the collect
-    that follows (the map stage shows as skipped); anything above
-    max_index_rows falls back to ngram_jaccard_pairs_prefix, the
-    distributed exact plan, so misuse cannot OOM the driver — the
-    oversized index is never pulled to the driver at all.
-    max_index_rows=None skips the check for callers that already
-    measured the index. Output of both paths is identical
-    (doc_a < doc_b, exact jaccard).
-
-    (A toLocalIterator streaming guard was tried and rejected: it runs
-    the 32 reduce partitions as near-sequential jobs — 9.7s vs 7.4s at
-    sf0.1 — while the agg+collect pair keeps both jobs fully parallel.)
-    """
-    import numpy as np
-    import pandas as pd
-
-    from pyspark import StorageLevel
-
-    # persist the SHINGLE ARRAYS, not the postings: the interpreted
-    # higher-order shingling is the dominant cost and every consumer —
-    # the guard agg, the postings collect, and the mapInPandas probe
-    # below — rescans it (DataFrame actions do not share stages).
-    # Measured at sf0.1: guard+collect+probe-scan 2.7s cached vs 10-15s
-    # uncached. Left persisted because the returned DataFrame is lazy;
-    # MEMORY_AND_DISK spills, never OOMs, and it is one array row per
-    # doc (sketch-sized), not the pair fan-out.
-    # spread(): the shingling HOF chain is interpreted and the corpus
-    # often arrives as one parquet split — buy scan parallelism before
-    # the heavy narrow compute, not after (guide §2.6).
-    sh = spread(docs).select(
-        F.col(id_col).alias("doc_id"),
-        F.array_distinct(shingle_array(text_col, w)).alias("sh"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    # no array_sort: order is re-derived by searchsorted in the code map
-    postings_df = sh.select("doc_id", F.explode("sh").alias("shingle")).groupBy(
-        "shingle"
-    ).agg(F.collect_list("doc_id").alias("doc_ids"))
-    if max_index_rows is not None:
-        entries = postings_df.select(F.sum(F.size("doc_ids"))).first()[0] or 0
-        if entries > max_index_rows:
-            # the oversized index never reaches the driver. The fallback
-            # plans recompute from `docs` and never read the cached
-            # shingles, so the persist above would be a pure leak in a
-            # long-lived session — release it before returning (ADVICE r2).
-            if _fallback is not None:
-                out = _fallback(postings_df)
-                sh.unpersist()
-                return out
-            sh.unpersist()
-            return ngram_jaccard_pairs_prefix(
-                docs, text_col=text_col, id_col=id_col, w=w,
-                min_jaccard=min_jaccard,
-            )
-    # Arrow toPandas + vectorized searchsorted code mapping (see
-    # lsh_jaccard_pairs_broadcast): posting lists arrive as numpy
-    # arrays, not per-element Python objects
-    pdf_idx = postings_df.toPandas()
-    p_arrs = [np.asarray(a) for a in pdf_idx["doc_ids"].to_numpy()]
-    spark = docs.sparkSession
-    all_docs = (
-        np.unique(np.concatenate(p_arrs)) if p_arrs else np.array([], dtype=object)
-    )
-    code = {d: i for i, d in enumerate(all_docs.tolist())}
-    postings = {
-        s: np.searchsorted(all_docs, a)
-        for s, a in zip(pdf_idx["shingle"], p_arrs)
-    }
-    sizes = np.zeros(len(all_docs), dtype=np.int64)
-    for ids in postings.values():
-        sizes[ids] += 1
-    bc = spark.sparkContext.broadcast(
-        (postings, np.array(all_docs.tolist(), dtype=object), sizes, code)
-    )
-
-    id_type = sh.schema["doc_id"].dataType.simpleString()
-    out_schema = f"doc_a {id_type}, doc_b {id_type}, jaccard double"
-
-    # candidate extraction is a THRESHOLD SCAN over the accumulator
-    # (guide §1.2 step 2 — per-task work): a pair with J >= t needs
-    # inter >= t/(1+t) * (na + nb) >= t/(1+t) * (na + min_b nb), so
-    # scanning acc for that floor (over codes > me only — the
-    # pair-once rule for free) replaces the old per-doc
-    # unique(concat(postings)) sort, which was O(Σ df log Σ df) per doc
-    # and dominated the probe. The floor uses the GLOBAL min doc size —
-    # conservative, no false negatives; survivors are still exact-jaccard
-    # filtered. int32 accumulator halves the scan bandwidth.
-    def probe(batches):
-        postings_l, names, sizes_l, code_l = bc.value
-        n_docs = len(names)
-        acc = np.zeros(n_docs, dtype=np.int32)
-        nb_min = int(sizes_l.min()) if n_docs else 0
-        tt = min_jaccard / (1.0 + min_jaccard) if min_jaccard > 0 else 0.0
-        for pdf in batches:
-            out = {"doc_a": [], "doc_b": [], "jaccard": []}
-            for doc_id, shingles in zip(pdf["doc_id"], pdf["sh"]):
-                # docs shorter than w tokens (or null text) have no
-                # shingles, never entered the index, and can pair with
-                # nothing — skip, don't KeyError
-                me = code_l.get(doc_id)
-                if me is None:
-                    continue
-                touched = []
-                for s in shingles:
-                    ids = postings_l.get(s)
-                    if ids is not None:
-                        acc[ids] += 1
-                        touched.append(ids)
-                if not touched:
-                    continue
-                na = int(sizes_l[me])
-                lo = max(1, int(tt * (na + nb_min)))  # floor() — safe side
-                cand = np.flatnonzero(acc[me + 1:] >= lo) + (me + 1)
-                if len(cand):
-                    inter = acc[cand]
-                    union = sizes_l[me] + sizes_l[cand] - inter
-                    jac = inter / union
-                    keep = jac >= min_jaccard
-                    k = int(keep.sum())
-                    if k:
-                        out["doc_a"].extend([doc_id] * k)
-                        out["doc_b"].extend(names[cand[keep]])
-                        out["jaccard"].extend(jac[keep])
-                # memset reset: zeroing the whole accumulator is a
-                # sequential 4B/doc write (~0.2MB), ~10x cheaper than
-                # re-scattering every posting list to undo the adds
-                acc.fill(0)
-            yield pd.DataFrame(out)
-
-    return sh.mapInPandas(probe, schema=out_schema)
 
 
 def resolve_duplicate_clusters(
@@ -1208,7 +1172,6 @@ def lsh_jaccard_pairs_broadcast(
     min_jaccard: float = 0.5,
     max_band_df: int | None = None,
     keep_jaccard: bool = False,
-    max_index_rows: int = 5_000_000,
 ) -> DataFrame:
     """Fused LSH candidate generation + exact-jaccard rescore over a
     cached (doc_id, sh) shingle-array table and its (doc_id, h0..hN)
@@ -1225,8 +1188,9 @@ def lsh_jaccard_pairs_broadcast(
     per-doc shingle ARRAYS onto both sides of every pair and runs an
     interpreted array_intersect per pair. The fused kernel broadcasts
     the postings index once (same guarded collect as
-    ngram_jaccard_pairs_broadcast — the regime is MEASURED, with the
-    composed plan as the fallback above the cap) plus one band-hash
+    ngram_jaccard_pairs_auto — the regime is MEASURED with
+    session.driver_row_cap, with the composed plan as the fallback
+    above the gate) plus one band-hash
     array per band (~32 bytes/doc/band), computes intersections by
     vectorized scatter-add + threshold scan, and applies the band
     agreement as a vectorized byte-compare on the survivors — the pair
@@ -1246,17 +1210,14 @@ def lsh_jaccard_pairs_broadcast(
             "enter any band, changing the LSH operating point"
         )
 
-    def composed() -> DataFrame:
+    entries = sh.select(F.sum(F.size("sh"))).first()[0] or 0
+    if entries > driver_row_cap(sh, "doc_id"):
         cand = lsh_candidate_pairs(
             sig, num_hashes=num_hashes, bands=bands, max_band_df=max_band_df
         )
         return rescore_jaccard_pairs(
             cand, sh, min_jaccard, keep_jaccard=keep_jaccard
         )
-
-    entries = sh.select(F.sum(F.size("sh"))).first()[0] or 0
-    if entries > max_index_rows:
-        return composed()
 
     # no array_sort on the posting lists: the kernel re-codes them via
     # searchsorted against the sorted doc universe, so within-list order

@@ -34,31 +34,6 @@ from ontoemma_spark.functions.stem import simple_lemmatize, snowball_stem
 from ontoemma_spark.functions.text import acronym, char_ngrams, tokenize
 
 
-_NP_PARSE_TYPE = StructType(
-    [
-        StructField("root", StringType()),
-        StructField("root_words", ArrayType(StringType())),
-    ]
-)
-
-
-@pandas_udf(_NP_PARSE_TYPE)
-def _np_parse_udf(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-    """F9: noun-phrase head finder over the RAW canonical name (the
-    reference parses ent['canonical_name'] with spaCy — the parse sees
-    prepositions and determiners, so it must NOT run on the
-    stopword-filtered token array). Backend-dispatching: executors with
-    ONTOEMMA_PARSE_BACKEND=spacy + the public model run the real parser
-    (parse.np_parse_auto); the default is the deterministic rules."""
-    from ontoemma_spark.functions.parse import np_parse_auto
-
-    for series in it:
-        parsed = series.map(np_parse_auto)
-        yield pd.DataFrame(
-            {"root": parsed.map(lambda p: p[0]), "root_words": parsed.map(lambda p: p[1])}
-        )
-
-
 _DERIVED_TEXT_TYPE = StructType(
     [
         StructField("stemmed", ArrayType(StringType())),

@@ -10,23 +10,11 @@ Reference:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ontoemma_spark import config
-
-# Node count below which the per-round (node, rank) tables of the
-# iterative kernels (pagerank, hits) fit Spark's default 10 MB
-# autoBroadcastJoinThreshold (~20 B/row → 500k rows ≈ 10 MB) and the
-# per-round joins should be left to Catalyst's broadcast selection;
-# above it the co-partitioned-edge-cache + shuffle_hash shape applies
-# (see pagerank/hits bodies). Env-parameterised so a cluster with a
-# raised broadcast threshold can raise the gate to match.
-_BROADCAST_RANK_NODES = int(
-    os.environ.get("SPARK_GRAFT_BROADCAST_RANK_NODES", "500000")
-)
+from ontoemma_spark.session import driver_row_cap
 
 
 def symmetric_closure(
@@ -212,10 +200,11 @@ def pagerank(
             # empty crawl slice: an empty (node, rank) frame, not a
             # driver-side ZeroDivisionError mid-pipeline
             return nodes.withColumn("rank", F.lit(0.0)).limit(0)
-        # Scale-adaptive per-round join strategy (r6): below
-        # _BROADCAST_RANK_NODES the (node, rank) table fits the default
-        # 10 MB autoBroadcast threshold, Catalyst broadcasts it, and the
-        # per-round join moves no data — forcing shuffle_hash there
+        ranks = nodes.withColumn("rank", F.lit(1.0 / n))
+        # Scale-adaptive per-round join strategy (r6): while the
+        # (node, rank) table fits under the session's autoBroadcast
+        # threshold (session.driver_row_cap), Catalyst broadcasts it, and
+        # the per-round join moves no data — forcing shuffle_hash there
         # DISABLES that broadcast (measured 1.3x slower at sf0.1), and a
         # key-partitioned edge cache buys nothing a broadcast join does
         # not already give. Above it the rank table is too big to
@@ -225,13 +214,12 @@ def pagerank(
         # partitioning no longer satisfies the per-round join) and hint
         # shuffle_hash so only the rank table shuffles per round and the
         # cached edges are never re-sorted by SMJ (guide §3.1).
-        big = n > _BROADCAST_RANK_NODES
+        big = n > driver_row_cap(ranks, "node", "rank")
         w = e.join(outdeg, "src")
         if big:
             w = w.repartition(par, "src")
         weighted = w.persist(StorageLevel.MEMORY_AND_DISK)
         base = (1.0 - damping) / n
-        ranks = nodes.withColumn("rank", F.lit(1.0 / n))
         for it in range(iterations):
             contribs = (
                 weighted.join(
@@ -483,9 +471,10 @@ def hits(
     e_src = e_dst = e
     try:
         # Scale-adaptive per-round join strategy (r6) — same gate and
-        # rationale as `pagerank`: below _BROADCAST_RANK_NODES the rank
-        # tables broadcast and the per-round joins move no data, so the
-        # plain cached edge table is optimal; above it, keep TWO
+        # rationale as `pagerank`: while the rank tables fit under the
+        # autoBroadcast threshold they broadcast and the per-round joins
+        # move no data, so the plain cached edge table is optimal; above
+        # it, keep TWO
         # key-partitioned cached copies (guide §2.4: the authority
         # half-step joins on src, the hub half-step on dst — each copy's
         # cache partitioning satisfies its join, so only the node-sized
@@ -495,7 +484,8 @@ def hits(
         # of being re-sorted every round by SMJ (guide §3.1). Costs one
         # extra cached copy of the edge list; saves 2 edge-table
         # exchanges per iteration.
-        big = nodes.count() > _BROADCAST_RANK_NODES
+        hubs = nodes.withColumn("hub", F.lit(1.0))
+        big = nodes.count() > driver_row_cap(hubs, "node", "hub")
         if big:
             e_src = e.repartition(par, "src").persist(
                 StorageLevel.MEMORY_AND_DISK
@@ -517,7 +507,6 @@ def hits(
                 "only exists after a half-step; there is no meaningful "
                 "round-0 state to return)"
             )
-        hubs = nodes.withColumn("hub", F.lit(1.0))
         auths = None
         for it in range(iterations):
             auths = (

@@ -2,15 +2,19 @@
 
 Local testing runs on local[N]; the same config block is what we would
 ship to a 1000-executor cluster via spark-submit --conf. AQE handles
-runtime skew/coalesce; explicit salting in operators/blocking.py handles
-the known-skewed token join.
+runtime skew/coalesce, including the token join in operators/blocking.py.
+
+driver_row_cap() is the one size gate of every kernel that has a
+driver-side fast path: it derives the cap from the session's own
+spark.sql.autoBroadcastJoinThreshold, so lowering or disabling that
+threshold moves every kernel to its distributed plan.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from ontoemma_spark import config
 
@@ -69,3 +73,25 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def driver_row_cap(df: DataFrame, *cols: str) -> int:
+    """Largest n for which n rows of ``df[cols]`` fit on the driver.
+
+    A side of n rows fits when n × width ≤ the session's
+    spark.sql.autoBroadcastJoinThreshold, the same bound Spark puts on a
+    broadcast build side. width is Spark's own per-row estimate for the
+    collected columns (defaultSize: 20 for string, 8 for bigint/double).
+    The threshold is read on every call, so a runtime ``spark.conf.set``
+    applies to the next kernel call. A disabled threshold (-1) returns
+    -1: nothing fits, not even an empty side. Callers measure n with the
+    probe they already run and take the fast path iff n <= the cap.
+    """
+    threshold = (
+        df.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    )
+    if threshold < 0:
+        return -1
+    schema = df._jdf.schema()
+    width = sum(schema.apply(c).dataType().defaultSize() for c in cols)
+    return threshold // width

@@ -156,11 +156,3 @@ def dump_kb_json(entities: DataFrame, edges: DataFrame, name: str, path: str) ->
         )
     with open(path, "w") as f:
         json.dump({"name": name, "entities": ents, "relations": rels}, f, sort_keys=True)
-
-
-def write_kb_fixture(spark: SparkSession, entities_rows: list, relations_rows: list,
-                     name: str, path: str) -> None:
-    """Test helper: build + dump a KB JSON from row tuples."""
-    ents = spark.createDataFrame(entities_rows, ENTITY_SCHEMA)
-    edges = spark.createDataFrame(relations_rows, EDGE_SCHEMA)
-    dump_kb_json(ents, edges, name, path)

@@ -1,5 +1,8 @@
 """candidate_pairs_broadcast_index must produce EXACTLY the same rows as
-the shuffle-join candidate_pairs (scores bit-identical, ranks equal)."""
+the shuffle-join candidate_pairs (scores bit-identical, ranks equal);
+the n-gram jaccard router must return the same rows on every path. The
+distributed side of each size gate is reached with the broadcast_off
+fixture (autoBroadcastJoinThreshold=-1)."""
 
 from ontoemma_spark.datagen import synthetic_kb
 from ontoemma_spark.operators.blocking import (
@@ -42,7 +45,7 @@ def test_broadcast_index_no_wide_shuffle(spark):
 def test_broadcast_jaccard_equals_relational(spark):
     from ontoemma_spark.operators.dedup import (
         ngram_jaccard_pairs,
-        ngram_jaccard_pairs_broadcast,
+        ngram_jaccard_pairs_auto,
         word_shingles,
     )
 
@@ -53,7 +56,7 @@ def test_broadcast_jaccard_equals_relational(spark):
     }
     fast = {
         (r["doc_a"], r["doc_b"]): r["jaccard"]
-        for r in ngram_jaccard_pairs_broadcast(docs, w=2, min_jaccard=0.3).collect()
+        for r in ngram_jaccard_pairs_auto(docs, w=2, min_jaccard=0.3).collect()
     }
     assert set(rel) == set(fast)
     for k in rel:
@@ -96,27 +99,30 @@ def test_prefix_jaccard_no_collect_in_plan(spark):
     assert "PythonUDF" not in plan
 
 
-def test_broadcast_jaccard_guard_falls_back(spark):
-    """With max_index_rows=0 the broadcast kernel must refuse to collect
-    and route through the distributed prefix plan — output identical."""
-    from ontoemma_spark.operators.dedup import ngram_jaccard_pairs_broadcast
+def test_broadcast_jaccard_guard_falls_back(spark, broadcast_off):
+    """When the postings index does not fit on the driver the n-gram
+    router must refuse to collect and route through a distributed plan
+    — output identical."""
+    from ontoemma_spark.operators.dedup import ngram_jaccard_pairs_auto
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    guarded = ngram_jaccard_pairs_broadcast(docs, w=2, min_jaccard=0.3, max_index_rows=0)
-    plan = guarded._jdf.queryExecution().optimizedPlan().toString()
-    assert "MapInPandas" not in plan  # fell back to the relational plan
     fast = {
         (r["doc_a"], r["doc_b"]): round(r["jaccard"], 9)
-        for r in ngram_jaccard_pairs_broadcast(docs, w=2, min_jaccard=0.3).collect()
+        for r in ngram_jaccard_pairs_auto(docs, w=2, min_jaccard=0.3).collect()
     }
-    assert {
-        (r["doc_a"], r["doc_b"]): round(r["jaccard"], 9) for r in guarded.collect()
-    } == fast
+    with broadcast_off():
+        guarded = ngram_jaccard_pairs_auto(docs, w=2, min_jaccard=0.3)
+        plan = guarded._jdf.queryExecution().optimizedPlan().toString()
+        assert "MapInPandas" not in plan  # fell back to the relational plan
+        assert {
+            (r["doc_a"], r["doc_b"]): round(r["jaccard"], 9) for r in guarded.collect()
+        } == fast
 
 
-def test_auto_jaccard_all_regimes_identical(spark):
+def test_auto_jaccard_all_regimes_identical(spark, broadcast_off, monkeypatch):
     """ngram_jaccard_pairs_auto must return the same rows whichever
     physical strategy its thresholds select."""
+    from ontoemma_spark.operators import dedup
     from ontoemma_spark.operators.dedup import ngram_jaccard_pairs_auto
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -125,29 +131,32 @@ def test_auto_jaccard_all_regimes_identical(spark):
         return {(r["doc_a"], r["doc_b"]): round(r["jaccard"], 9) for r in df.collect()}
 
     kernel = rows(ngram_jaccard_pairs_auto(docs, w=2, min_jaccard=0.3))
-    prefix = rows(ngram_jaccard_pairs_auto(
-        docs, w=2, min_jaccard=0.3, max_index_entries=0, zipf_mean_df=1e9))
-    relational = rows(ngram_jaccard_pairs_auto(
-        docs, w=2, min_jaccard=0.3, max_index_entries=0, zipf_mean_df=0.0))
+    with broadcast_off():
+        monkeypatch.setattr(dedup, "ZIPF_MEAN_DF", 1e9)
+        prefix = rows(ngram_jaccard_pairs_auto(docs, w=2, min_jaccard=0.3))
+        monkeypatch.setattr(dedup, "ZIPF_MEAN_DF", 0.0)
+        relational = rows(ngram_jaccard_pairs_auto(docs, w=2, min_jaccard=0.3))
     assert kernel == prefix == relational
     assert len(kernel) > 0
 
 
-def test_broadcast_index_guard_falls_back(spark):
-    """candidate_pairs_broadcast_index with max_index_rows=0 must fall
-    back to the relational candidate_pairs plan with identical output."""
+def test_broadcast_index_guard_falls_back(spark, broadcast_off):
+    """candidate_pairs_broadcast_index must fall back to the relational
+    candidate_pairs plan with identical output when the target index does
+    not fit on the driver — and match its own fast path."""
     s_ents, _ = synthetic_kb(spark, "SRC", n_entities=30, id_offset=0)
     t_ents, _ = synthetic_kb(spark, "TGT", n_entities=25, id_offset=10)
     s_tok, t_tok = entity_tokens(s_ents), entity_tokens(t_ents)
-    guarded = candidate_pairs_broadcast_index(
-        s_tok, t_tok, 30, 25, top_k=5, max_index_rows=0
-    )
-    plan = guarded._jdf.queryExecution().optimizedPlan().toString()
-    assert "MapInPandas" not in plan
-    assert _rows(guarded) == _rows(candidate_pairs(s_tok, t_tok, 30, 25, top_k=5))
+    fast = _rows(candidate_pairs_broadcast_index(s_tok, t_tok, 30, 25, top_k=5))
+    with broadcast_off():
+        guarded = candidate_pairs_broadcast_index(s_tok, t_tok, 30, 25, top_k=5)
+        plan = guarded._jdf.queryExecution().optimizedPlan().toString()
+        assert "MapInPandas" not in plan
+        assert _rows(guarded) == _rows(candidate_pairs(s_tok, t_tok, 30, 25, top_k=5))
+        assert _rows(guarded) == fast
 
 
-def test_r5_review_dedup_guards(spark):
+def test_r5_review_dedup_guards(spark, broadcast_off):
     """Round-5 review regressions: (1) the broadcast jaccard kernel
     skips docs shorter than w instead of KeyError; (2) the prefix plan
     refuses min_jaccard=0 and the auto router sends t=0 to the
@@ -164,7 +173,6 @@ def test_r5_review_dedup_guards(spark):
         exact_duplicates,
         minhash_signatures,
         ngram_jaccard_pairs_auto,
-        ngram_jaccard_pairs_broadcast,
         ngram_jaccard_pairs_prefix,
         word_shingles,
     )
@@ -174,14 +182,14 @@ def test_r5_review_dedup_guards(spark):
         "doc_id bigint, text string",
     )
     pairs = {(r["doc_a"], r["doc_b"])
-             for r in ngram_jaccard_pairs_broadcast(docs, w=3).collect()}
+             for r in ngram_jaccard_pairs_auto(docs, w=3).collect()}
     assert pairs == {(1, 2)}  # short/null docs skipped, no KeyError
 
     with _pytest.raises(ValueError, match="min_jaccard"):
         ngram_jaccard_pairs_prefix(docs, min_jaccard=0.0)
-    zero = {(r["doc_a"], r["doc_b"])
-            for r in ngram_jaccard_pairs_auto(
-                docs, min_jaccard=0.0, max_index_entries=1).collect()}
+    with broadcast_off():
+        zero = {(r["doc_a"], r["doc_b"])
+                for r in ngram_jaccard_pairs_auto(docs, min_jaccard=0.0).collect()}
     assert zero == {(1, 2)}  # t=0 routed to the relational plan
 
     sigs = minhash_signatures(word_shingles(docs.filter("doc_id = 1")), num_hashes=8)
@@ -228,3 +236,32 @@ def test_broadcast_index_class_dedup_with_ties(spark):
     for k in a:
         assert a[k][1] == b[k][1], k
         assert abs(a[k][0] - b[k][0]) < 1e-12, k
+
+
+def test_auto_jaccard_threshold_zero_both_sides(spark, broadcast_off):
+    """min_jaccard=0 on both sides of the n-gram gate: the kernel below
+    it, and above it the relational plan (the prefix plan refuses t=0)
+    — every overlapping pair, identical to ngram_jaccard_pairs."""
+    from ontoemma_spark.operators.dedup import (
+        ngram_jaccard_pairs,
+        ngram_jaccard_pairs_auto,
+        word_shingles,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, "a b c d e"), (2, "a b c x y"), (3, "c d e f g"), (4, "x y z"),
+         (5, "q r s"), (6, "a b"), (7, "s t"), (8, None)],
+        "doc_id bigint, text string",
+    )
+
+    def rows(df):
+        return {(r["doc_a"], r["doc_b"]): round(r["jaccard"], 9) for r in df.collect()}
+
+    rel = rows(ngram_jaccard_pairs(word_shingles(docs, w=2), min_jaccard=0.0))
+    fast = rows(ngram_jaccard_pairs_auto(docs, w=2, min_jaccard=0.0))
+    with broadcast_off():
+        slow_df = ngram_jaccard_pairs_auto(docs, w=2, min_jaccard=0.0)
+        assert "MapInPandas" not in slow_df._jdf.queryExecution().optimizedPlan().toString()
+        slow = rows(slow_df)
+    assert slow == rel == fast
+    assert len(rel) > 0

@@ -1,6 +1,8 @@
 """Connected components (G7), symmetric closure (G1), BFS regions (G2),
 eval metrics (J6/A4/A5)."""
 
+import pytest
+
 from ontoemma_spark.operators.components import connected_components
 from ontoemma_spark.operators.evaluate import (
     candidates_eval_at_k,
@@ -1024,7 +1026,7 @@ def test_scc_and_bow_tie_ignore_null_endpoints(spark):
     assert bt == {"a": "core", "b": "core"}
 
 
-def test_cc_unionfind_fast_path_equals_distributed(spark):
+def test_cc_unionfind_fast_path_equals_distributed(spark, broadcast_off):
     """r6: the guarded driver-side union-find fast path must label
     exactly like the distributed hash-min loop — chains, self-loops,
     nulls, string ids and all."""
@@ -1041,13 +1043,14 @@ def test_cc_unionfind_fast_path_equals_distributed(spark):
     )
     fast = {(r["node"], r["component"])
             for r in connected_components(edges).collect()}
-    slow = {(r["node"], r["component"])
-            for r in connected_components(edges, max_collect_edges=None).collect()}
+    with broadcast_off():
+        slow = {(r["node"], r["component"])
+                for r in connected_components(edges).collect()}
     assert fast == slow
     assert ("a", "a") in fast and ("d", "a") in fast and ("x", "x") in fast
 
 
-def test_scc_and_bowtie_fast_paths_equal_distributed(spark):
+def test_scc_and_bowtie_fast_paths_equal_distributed(spark, broadcast_off):
     """r6: guarded Tarjan/BFS fast paths must label exactly like the
     distributed FW-BW coloring + sentinel propagation."""
     from ontoemma_spark.operators.components import (
@@ -1069,16 +1072,46 @@ def test_scc_and_bowtie_fast_paths_equal_distributed(spark):
     edges = spark.createDataFrame(rows, "src string, dst string")
     fast_scc = {(r["node"], r["component"])
                 for r in strongly_connected_components(edges).collect()}
-    slow_scc = {(r["node"], r["component"])
-                for r in strongly_connected_components(
-                    edges, max_collect_edges=None).collect()}
-    assert fast_scc == slow_scc
-
     fast_bt = {(r["node"], r["component"], r["cls"])
                for r in bow_tie_classes(edges).collect()}
-    slow_bt = {(r["node"], r["component"], r["cls"])
-               for r in bow_tie_classes(edges, max_collect_edges=None).collect()}
+    # the gate is session-derived, so bow_tie's inner SCC goes
+    # distributed too
+    with broadcast_off():
+        slow_scc = {(r["node"], r["component"])
+                    for r in strongly_connected_components(edges).collect()}
+        slow_bt = {(r["node"], r["component"], r["cls"])
+                   for r in bow_tie_classes(edges).collect()}
+    assert fast_scc == slow_scc
     assert fast_bt == slow_bt
     cls = {n: c for n, _, c in fast_bt}
     assert cls["a1"] == "core" and cls["p"] == "in" and cls["q"] == "out"
     assert cls["s"] == "tendril_or_disconnected"
+
+
+def test_pagerank_hits_broadcast_and_partitioned_plans_agree(spark, broadcast_off):
+    """Both sides of the pagerank/hits gate: the broadcast rank-table
+    plan (rank table fits under the session threshold) and the
+    co-partitioned edge cache + shuffle_hash plan (threshold -1) give
+    the same scores."""
+    from ontoemma_spark.operators.graph import hits, pagerank
+
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("d", "b"),
+         ("e", "a"), ("b", "a")],
+        "src string, dst string",
+    )
+
+    def run():
+        pr = {r["node"]: r["rank"]
+              for r in pagerank(edges, iterations=4).collect()}
+        ht = {r["node"]: (r["authority"], r["hub"])
+              for r in hits(edges, iterations=4).collect()}
+        return pr, ht
+
+    small_pr, small_ht = run()
+    with broadcast_off():
+        big_pr, big_ht = run()
+    assert set(small_pr) == set(big_pr) == set("abcde")
+    for v in small_pr:
+        assert small_pr[v] == pytest.approx(big_pr[v], abs=1e-12), v
+        assert small_ht[v] == pytest.approx(big_ht[v], abs=1e-12), v

@@ -2,7 +2,7 @@
 kernel) must produce EXACTLY the rows of the composed plan it replaces
 (lsh_candidate_pairs → rescore_jaccard_pairs), including under the
 hot-band cap, and must fall back to that composed plan when the
-postings guard trips."""
+postings index does not fit on the driver."""
 
 import pytest
 
@@ -73,21 +73,22 @@ def test_fused_hot_band_cap_matches_drop_hot_bands(spark, sh_sig):
     assert set(fused) == set(composed)
 
 
-def test_fused_guard_falls_back_to_composed(spark, sh_sig):
+def test_fused_guard_falls_back_to_composed(spark, sh_sig, broadcast_off):
     sh, sig = sh_sig
-    guarded = lsh_jaccard_pairs_broadcast(
-        sh, sig, num_hashes=4, bands=2, min_jaccard=0.5,
-        keep_jaccard=True, max_index_rows=0,
-    )
-    # fallback is the fully relational composed plan: a band equi-join
-    # must appear (the kernel's mapInPandas probe must not)
-    plan = guarded._jdf.queryExecution().optimizedPlan().toString()
-    assert "MapInPandas" not in plan
-    assert _rows(guarded) == _rows(
+    fast = _rows(
         lsh_jaccard_pairs_broadcast(
             sh, sig, num_hashes=4, bands=2, min_jaccard=0.5, keep_jaccard=True
         )
     )
+    with broadcast_off():
+        guarded = lsh_jaccard_pairs_broadcast(
+            sh, sig, num_hashes=4, bands=2, min_jaccard=0.5, keep_jaccard=True,
+        )
+        # fallback is the fully relational composed plan: a band equi-join
+        # must appear (the kernel's mapInPandas probe must not)
+        plan = guarded._jdf.queryExecution().optimizedPlan().toString()
+        assert "MapInPandas" not in plan
+        assert _rows(guarded) == fast
 
 
 def test_fused_drops_jaccard_column_when_not_kept(spark, sh_sig):

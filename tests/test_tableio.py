@@ -20,7 +20,7 @@ def _edge_set(df):
     }
 
 
-def test_bucketed_table_format_same_kg_and_colocated_join(spark):
+def test_bucketed_table_format_same_kg_and_colocated_join(spark, broadcast_off):
     pages = datagen.synthetic_pages(spark, n_pages=60)
     kb, _ = datagen.synthetic_kb(spark, "KB", n_entities=40)
 
@@ -41,9 +41,7 @@ def test_bucketed_table_format_same_kg_and_colocated_join(spark):
 
         # co-located self-join on the bucket key: the bucketed scan
         # satisfies the join's required distribution → no Exchange.
-        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
+        with broadcast_off():
             e = spark.table(man_bt["stages"]["materialize"]["table"])
             joined = e.alias("a").join(
                 e.alias("b"), "subject_id"
@@ -51,8 +49,6 @@ def test_bucketed_table_format_same_kg_and_colocated_join(spark):
             plan = joined._jdf.queryExecution().executedPlan().toString()
             assert "SortMergeJoin" in plan, plan
             assert "Exchange" not in plan.split("SortMergeJoin")[1], plan
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     finally:
         for stage in man_bt["stages"].values():
             if "table" in stage:

@@ -142,7 +142,7 @@ def test_scc_hand_case(spark):
                    "d": "d", "e": "e", "h": "h"}
 
 
-def test_scc_empty_and_round_bound(spark):
+def test_scc_empty_and_round_bound(spark, broadcast_off):
     empty = spark.createDataFrame([], "src string, dst string")
     assert strongly_connected_components(empty).collect() == []
     # a depth-3 id-ordered DAG chain needs 3 coloring rounds; bound 1
@@ -155,10 +155,8 @@ def test_scc_empty_and_round_bound(spark):
     # the round bound is a property of the DISTRIBUTED coloring loop;
     # disable the r6 driver-side Tarjan fast path (which legitimately
     # returns the exact answer with no rounds at all) to reach it
-    with pytest.raises(RuntimeError, match="did not settle"):
-        strongly_connected_components(
-            chain, max_rounds=1, max_collect_edges=None
-        )
+    with broadcast_off(), pytest.raises(RuntimeError, match="did not settle"):
+        strongly_connected_components(chain, max_rounds=1)
     got = {r["node"]: r["component"] for r in
            strongly_connected_components(chain).collect()}
     assert got == {"a": "a", "b": "a", "c": "c", "d": "c", "e": "e", "f": "e"}
