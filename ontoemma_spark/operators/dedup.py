@@ -18,13 +18,13 @@ Scale notes:
   * MinHash/LSH: per-doc signatures aggregate map-side; the band join is
     an equi-join on band hash (bounded fan-out by construction).
   * pairwise n-gram jaccard: the shared-shingle self-join is the skewed
-    path; stopword-like shingles should be prefiltered at scale (df cap)
-    — exposed as max_shingle_df.
+    path (Σ df² fan-out); below the driver gate the broadcast-postings
+    kernel never materializes it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ontoemma_spark.session import driver_row_cap
@@ -149,6 +149,17 @@ def minhash_signatures_narrow(
     return docs.select(F.col(id_col).alias("doc_id"), *cols)
 
 
+def _rows_per_band(num_hashes: int, bands: int) -> int:
+    """Signature rows per LSH band; refuses an indivisible split."""
+    if num_hashes % bands:
+        raise ValueError(
+            f"num_hashes={num_hashes} not divisible by bands={bands}: the "
+            f"trailing {num_hashes % bands} hashes would silently never "
+            "enter any band, changing the LSH operating point"
+        )
+    return num_hashes // bands
+
+
 def band_hashes(
     signatures: DataFrame, num_hashes: int = 8, bands: int = 2
 ) -> DataFrame:
@@ -165,14 +176,8 @@ def band_hashes(
     Single-pass stacking (posexplode over the band array) — a union of
     per-band selects would recompute the signature plan once per band
     per consumer."""
-    if num_hashes % bands:
-        raise ValueError(
-            f"num_hashes={num_hashes} not divisible by bands={bands}: the "
-            f"trailing {num_hashes % bands} hashes would silently never "
-            "enter any band, changing the LSH operating point"
-        )
+    rows_per_band = _rows_per_band(num_hashes, bands)
     signatures = signatures.filter(F.col("h0").isNotNull())
-    rows_per_band = num_hashes // bands
     band_cols = [
         F.md5(
             F.concat_ws("|", *[F.col(f"h{b * rows_per_band + r}") for r in range(rows_per_band)])
@@ -414,15 +419,10 @@ def simhash_bits_narrow(
 def ngram_jaccard_pairs(
     shingles: DataFrame,
     min_jaccard: float = 0.5,
-    max_shingle_df: int | None = None,
 ) -> DataFrame:
     """Pairwise Jaccard over distinct shingle sets, blocked by shared
-    shingles: J = |∩| / (|A| + |B| - |∩|). max_shingle_df drops
-    stop-shingles before the self-join (the skew guard at scale)."""
+    shingles: J = |∩| / (|A| + |B| - |∩|)."""
     sh = shingles
-    if max_shingle_df is not None:
-        df_counts = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("sdf"))
-        sh = sh.join(df_counts.filter(F.col("sdf") <= max_shingle_df), "shingle").drop("sdf")
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     inter = (
         sh.select(F.col("doc_id").alias("doc_a"), "shingle")
@@ -726,134 +726,112 @@ def exact_substring_removal(
     )
 
 
-# Mean posting-list length at or below which a vocabulary counts as
-# Zipfian (long rare tail): above the driver gate such corpora take the
-# prefix-filtered plan, denser ones the relational self-join.
-ZIPF_MEAN_DF = 32.0
+# ---------------------------------------------------------------------------
+# The broadcast-postings jaccard kernel, shared by the n-gram router
+# (ngram_jaccard_pairs_auto) and the fused LSH rescore
+# (lsh_jaccard_pairs_broadcast): one persisted shingle-array table, one
+# size probe against the driver gate, one postings index collected to the
+# driver, and one threshold-scan probe over it. The LSH kernel adds only
+# its band arrays, hot-band sets and the band-agreement mask.
+# ---------------------------------------------------------------------------
 
 
-def ngram_jaccard_pairs_auto(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    w: int = 3,
-    min_jaccard: float = 0.5,
+def _shingle_arrays(
+    docs: DataFrame, text_col: str, id_col: str, w: int
 ) -> DataFrame:
-    """Exact pairwise n-gram jaccard (doc_a < doc_b, jaccard >=
-    min_jaccard) — picks the physical strategy by MEASURED vocabulary
-    shape (the same move Spark itself makes with
-    autoBroadcastJoinThreshold / AQE):
-
-      * the postings index fits on the driver (session.driver_row_cap on
-        its Σ|doc_ids| entries) → broadcast-postings kernel: the
-        shingle→docs index is broadcast as numpy arrays and each task
-        accumulates intersection counts for its docs against all others
-        — the Σ df² pair intermediate never shuffles. The entry count is
-        MEASURED first with one cheap aggregate job on the SAME plan
-        object, so the groupBy's shuffle files are reused by the collect
-        that follows (the map stage shows as skipped) — the same
-        legitimacy as a broadcast hash join's build side.
-      * too big + mean df <= ZIPF_MEAN_DF (Zipfian/web-text vocabulary,
-        long rare tail) + min_jaccard > 0 → prefix-filtered AllPairs
-        plan (ngram_jaccard_pairs_prefix), fully distributed.
-      * too big otherwise (dense vocabulary — every shingle a head
-        token, the Σ df² fan-out is inherent because the OUTPUT itself
-        is near-quadratic — or min_jaccard = 0, which the prefix plan
-        cannot take) → relational blocked self-join
-        (ngram_jaccard_pairs), fully distributed.
-
-    The oversized index is never pulled to the driver, so misuse cannot
-    OOM it; the mean df rides the size probe's aggregate. All three
-    paths return identical rows (tests/test_broadcast_index.py pins
-    pairwise identity). Measured at sf0.1 local[32]: kernel ~7s,
-    relational 18.5s, prefix 26s+ (dense testdata defeats prefix
-    filtering: 931 distinct shingles, median df 285 — no rare tokens
-    to prefix on; on Zipfian web text the ordering reverses).
-
-    (A toLocalIterator streaming guard was tried and rejected: it runs
-    the 32 reduce partitions as near-sequential jobs — 9.7s vs 7.4s at
-    sf0.1 — while the agg+collect pair keeps both jobs fully parallel.)
-    """
-    import numpy as np
-    import pandas as pd
-
+    """(doc_id, sh): each doc's DISTINCT w-shingle array, persisted
+    MEMORY_AND_DISK. The interpreted higher-order shingling is the
+    dominant cost and every consumer — the size probe, the postings
+    collect, the probe scan, the signatures — rescans it (DataFrame
+    actions do not share stages). Measured at sf0.1: guard + collect +
+    probe scan 2.7s cached vs 10-15s uncached. One array row per doc
+    (sketch-sized), not the pair fan-out; the caller owns the cache.
+    spread() buys scan parallelism before the heavy narrow compute: the
+    corpus often arrives as one parquet split (guide §2.6)."""
     from pyspark import StorageLevel
 
-    # persist the SHINGLE ARRAYS, not the postings: the interpreted
-    # higher-order shingling is the dominant cost and every consumer —
-    # the size probe, the postings collect, and the mapInPandas probe
-    # below — rescans it (DataFrame actions do not share stages).
-    # Measured at sf0.1: guard+collect+probe-scan 2.7s cached vs 10-15s
-    # uncached. Left persisted because the returned DataFrame is lazy;
-    # MEMORY_AND_DISK spills, never OOMs, and it is one array row per
-    # doc (sketch-sized), not the pair fan-out.
-    # spread(): the shingling HOF chain is interpreted and the corpus
-    # often arrives as one parquet split — buy scan parallelism before
-    # the heavy narrow compute, not after (guide §2.6).
-    sh = spread(docs).select(
+    return spread(docs).select(
         F.col(id_col).alias("doc_id"),
         F.array_distinct(shingle_array(text_col, w)).alias("sh"),
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    # no array_sort: order is re-derived by searchsorted in the code map
-    postings_df = sh.select("doc_id", F.explode("sh").alias("shingle")).groupBy(
-        "shingle"
-    ).agg(F.collect_list("doc_id").alias("doc_ids"))
-    stats = postings_df.agg(
-        F.sum(F.size("doc_ids")).alias("entries"),
-        F.avg(F.size("doc_ids")).alias("mean_df"),
-    ).first()
-    if (stats["entries"] or 0) > driver_row_cap(sh, "doc_id"):
-        # the oversized index never reaches the driver. Both distributed
-        # plans recompute from `docs` and never read the cached shingles,
-        # so the persist above would be a pure leak in a long-lived
-        # session — release it before returning.
-        sh.unpersist()
-        # prefix filtering requires t > 0 (its length filter divides
-        # by t); threshold-0 requests route to the relational plan
-        if min_jaccard > 0.0 and (stats["mean_df"] or 0.0) <= ZIPF_MEAN_DF:
-            return ngram_jaccard_pairs_prefix(
-                docs, text_col=text_col, id_col=id_col, w=w,
-                min_jaccard=min_jaccard,
-            )
-        return ngram_jaccard_pairs(
-            word_shingles(docs, text_col=text_col, id_col=id_col, w=w),
-            min_jaccard=min_jaccard,
-        )
-    # Arrow toPandas + vectorized searchsorted code mapping (see
-    # lsh_jaccard_pairs_broadcast): posting lists arrive as numpy
-    # arrays, not per-element Python objects
-    pdf_idx = postings_df.toPandas()
-    p_arrs = [np.asarray(a) for a in pdf_idx["doc_ids"].to_numpy()]
-    spark = docs.sparkSession
+
+
+def _postings_fit(sh: DataFrame) -> bool:
+    """The size probe: the postings index holds one doc_id entry per
+    (doc, distinct shingle), i.e. Σ|sh| — one cheap aggregate over the
+    cached arrays, gated by session.driver_row_cap. An oversized index
+    is never pulled to the driver, so misuse cannot OOM it."""
+    entries = sh.select(F.sum(F.size("sh"))).first()[0] or 0
+    return entries <= driver_row_cap(sh, "doc_id")
+
+
+def _postings_index(sh: DataFrame):
+    """Collect the shingle → doc_ids postings and code the docs.
+
+    Arrow toPandas (guide §6): the posting lists land as numpy arrays
+    per row instead of per-element Python objects, and the doc → code
+    mapping is a vectorized searchsorted per posting against the sorted
+    doc universe — the driver-side build takes milliseconds. No
+    array_sort in the agg: searchsorted makes within-list order
+    irrelevant. Docs with no shingles (shorter than w, null text) never
+    enter the index.
+
+    Returns (shingles, coded, all_docs, sizes): the shingle list, its
+    posting lists as doc-code arrays, the sorted doc ids, and each
+    doc's distinct-shingle count by code."""
+    import numpy as np
+
+    pdf = (
+        sh.select("doc_id", F.explode("sh").alias("shingle"))
+        .groupBy("shingle")
+        .agg(F.collect_list("doc_id").alias("doc_ids"))
+        .toPandas()
+    )
+    p_arrs = [np.asarray(a) for a in pdf["doc_ids"].to_numpy()]
     all_docs = (
         np.unique(np.concatenate(p_arrs)) if p_arrs else np.array([], dtype=object)
     )
-    code = {d: i for i, d in enumerate(all_docs.tolist())}
-    postings = {
-        s: np.searchsorted(all_docs, a)
-        for s, a in zip(pdf_idx["shingle"], p_arrs)
-    }
+    coded = [np.searchsorted(all_docs, a) for a in p_arrs]
     sizes = np.zeros(len(all_docs), dtype=np.int64)
-    for ids in postings.values():
+    for ids in coded:
         sizes[ids] += 1
-    bc = spark.sparkContext.broadcast(
-        (postings, np.array(all_docs.tolist(), dtype=object), sizes, code)
-    )
+    return list(pdf["shingle"]), coded, all_docs, sizes
 
+
+def _threshold_scan(
+    sh: DataFrame, index, min_jaccard: float, bands=None
+) -> DataFrame:
+    """Broadcast the postings index and probe it with every doc of
+    `sh`: (doc_a, doc_b, jaccard) for doc_a < doc_b with exact jaccard
+    >= min_jaccard. `bands` = (band_arrs, hot_sets) additionally keeps
+    only survivors agreeing with doc_a on a non-hot LSH band.
+
+    Per doc, the posting lists of its shingles scatter-add into an
+    int32 accumulator (int32 halves the scan bandwidth); candidates
+    are a THRESHOLD SCAN over it (guide §1.2 step 2 — per-task work): a
+    pair with J >= t needs inter >= t/(1+t) * (na + nb) >= t/(1+t) *
+    (na + min_b nb), so scanning acc for that floor over codes > me only
+    (the pair-once rule for free) needs no per-doc O(Σ df log Σ df)
+    sort of candidate ids. The floor uses the GLOBAL min doc size — conservative, no false
+    negatives; survivors are still exact-jaccard filtered."""
+    import numpy as np
+    import pandas as pd
+
+    keys, coded, all_docs, sizes = index
+    bc = sh.sparkSession.sparkContext.broadcast(
+        (
+            dict(zip(keys, coded)),
+            np.array(all_docs.tolist(), dtype=object),
+            sizes,
+            {d: i for i, d in enumerate(all_docs.tolist())},
+            bands,
+        )
+    )
     id_type = sh.schema["doc_id"].dataType.simpleString()
     out_schema = f"doc_a {id_type}, doc_b {id_type}, jaccard double"
 
-    # candidate extraction is a THRESHOLD SCAN over the accumulator
-    # (guide §1.2 step 2 — per-task work): a pair with J >= t needs
-    # inter >= t/(1+t) * (na + nb) >= t/(1+t) * (na + min_b nb), so
-    # scanning acc for that floor (over codes > me only — the
-    # pair-once rule for free) replaces the old per-doc
-    # unique(concat(postings)) sort, which was O(Σ df log Σ df) per doc
-    # and dominated the probe. The floor uses the GLOBAL min doc size —
-    # conservative, no false negatives; survivors are still exact-jaccard
-    # filtered. int32 accumulator halves the scan bandwidth.
     def probe(batches):
-        postings_l, names, sizes_l, code_l = bc.value
+        postings_l, names, sizes_l, code_l, bands_l = bc.value
         n_docs = len(names)
         acc = np.zeros(n_docs, dtype=np.int32)
         nb_min = int(sizes_l.min()) if n_docs else 0
@@ -861,9 +839,8 @@ def ngram_jaccard_pairs_auto(
         for pdf in batches:
             out = {"doc_a": [], "doc_b": [], "jaccard": []}
             for doc_id, shingles in zip(pdf["doc_id"], pdf["sh"]):
-                # docs shorter than w tokens (or null text) have no
-                # shingles, never entered the index, and can pair with
-                # nothing — skip, don't KeyError
+                # docs with no shingles never entered the index and can
+                # pair with nothing — skip, don't KeyError
                 me = code_l.get(doc_id)
                 if me is None:
                     continue
@@ -883,6 +860,16 @@ def ngram_jaccard_pairs_auto(
                     union = sizes_l[me] + sizes_l[cand] - inter
                     jac = inter / union
                     keep = jac >= min_jaccard
+                    if bands_l is not None and keep.any():
+                        # band agreement on the jaccard survivors only
+                        band_arrs, hot_sets = bands_l
+                        shared = np.zeros(len(cand), dtype=bool)
+                        for b, arr in enumerate(band_arrs):
+                            mine = arr[me]
+                            if not mine or (hot_sets[b] and mine.decode() in hot_sets[b]):
+                                continue
+                            shared |= arr[cand] == mine
+                        keep &= shared
                     k = int(keep.sum())
                     if k:
                         out["doc_a"].extend([doc_id] * k)
@@ -897,94 +884,47 @@ def ngram_jaccard_pairs_auto(
     return sh.mapInPandas(probe, schema=out_schema)
 
 
-
-
-def ngram_jaccard_pairs_prefix(
+def ngram_jaccard_pairs_auto(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     w: int = 3,
     min_jaccard: float = 0.5,
 ) -> DataFrame:
-    """Exact pairwise n-gram Jaccard via PREFIX FILTERING — the
-    scale-safe default (no driver-side state, no corpus-sized broadcast).
+    """Exact pairwise n-gram jaccard (doc_a < doc_b, jaccard >=
+    min_jaccard) — picks the physical strategy by MEASURED index size
+    (the same move Spark itself makes with autoBroadcastJoinThreshold):
 
-    Classic AllPairs/PPJoin design (Bayardo et al. WWW'07; Vernica et
-    al. SIGMOD'10 give the MapReduce formulation): order each doc's
-    shingle set by global rarity (document frequency asc, shingle asc)
-    and keep only the first p = n - ceil(t*n) + 1 shingles as its
-    "prefix". Any pair with J >= t MUST share a prefix shingle, so the
-    candidate join runs on the (rare-token) prefixes only; survivors are
-    rescored exactly with an in-row array intersection. Output is
-    identical to ngram_jaccard_pairs (exact, no false negatives).
+      * the postings index fits on the driver (session.driver_row_cap on
+        its Σ|sh| doc_id entries) → the broadcast-postings kernel: the
+        shingle→docs index is broadcast as numpy arrays and each task
+        accumulates intersection counts for its docs against all others
+        — the Σ df² pair intermediate never shuffles. The size is
+        measured first with one cheap aggregate over the cached shingle
+        arrays — the same legitimacy as a broadcast hash join's build
+        side.
+      * too big → the relational blocked self-join
+        (ngram_jaccard_pairs), fully distributed.
 
-    Why this scales to 100 TB where the broadcast-postings kernel dies:
-      * every stage is a bounded shuffle (groupBy shingle for df, window
-        per doc for the prefix, equi-join on prefix shingle) — nothing
-        is collected or broadcast;
-      * the join fan-out is Σ df² over PREFIX tokens only — the rarest
-        ~(1-t) fraction of each doc, and df==1 prefix tokens (the vast
-        majority under a Zipf vocabulary) are dropped before the join
-        since they cannot match;
-      * a length filter (t*|A| <= |B| <= |A|/t) prunes candidates in the
-        join condition itself.
+    Both paths return identical rows (tests/test_broadcast_index.py
+    pins pairwise identity on both sides of the gate). Measured at
+    sf0.1 local[32]: kernel ~7s, relational 18.5s.
 
-    Requires min_jaccard > 0: the length filter divides by t, so t=0
-    would NULL-reject every candidate and return an empty frame — the
-    opposite of "all overlapping pairs". Callers wanting t=0 use
-    ngram_jaccard_pairs (the relational plan has no such division).
+    (A toLocalIterator streaming guard was tried and rejected: it runs
+    the 32 reduce partitions as near-sequential jobs — 9.7s vs 7.4s at
+    sf0.1 — while the agg+collect pair keeps both jobs fully parallel.)
     """
-    t = float(min_jaccard)
-    if t <= 0.0:
-        raise ValueError(
-            "min_jaccard must be > 0 for the prefix-filter plan "
-            "(its length filter divides by it); use ngram_jaccard_pairs "
-            "for threshold 0"
+    sh = _shingle_arrays(docs, text_col, id_col, w)
+    if not _postings_fit(sh):
+        # the relational plan recomputes from `docs` and never reads the
+        # cached shingles, so the persist would be a pure leak in a
+        # long-lived session — release it before returning.
+        sh.unpersist()
+        return ngram_jaccard_pairs(
+            word_shingles(docs, text_col=text_col, id_col=id_col, w=w),
+            min_jaccard=min_jaccard,
         )
-    sh_arr = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.array_distinct(shingle_array(text_col, w)).alias("sh"),
-    ).withColumn("n", F.size("sh")).filter(F.col("n") > 0)
-
-    exploded = sh_arr.select("doc_id", "n", F.explode("sh").alias("shingle"))
-    sdf = exploded.groupBy("shingle").agg(F.count(F.lit(1)).alias("sdf"))
-    # df==1 shingles cannot contribute a candidate pair — drop them
-    # BEFORE the window (under Zipf most shingles are singletons, so
-    # this collapses both the window input and the prefix join).
-    keyed = exploded.join(sdf.filter(F.col("sdf") >= 2), "shingle")
-    wnd = Window.partitionBy("doc_id").orderBy(F.asc("sdf"), F.asc("shingle"))
-    prefix = (
-        keyed.withColumn("rn", F.row_number().over(wnd))
-        # p = n - ceil(t*n) + 1 prefix slots; rows beyond p are the
-        # frequent tail the filter theorem lets us skip.
-        .filter(F.col("rn") <= F.col("n") - F.ceil(F.lit(t) * F.col("n")) + 1)
-        .select("doc_id", "n", "shingle")
-    )
-    cand = (
-        prefix.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"), "shingle")
-        .join(
-            prefix.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"), "shingle"),
-            "shingle",
-        )
-        .filter(
-            (F.col("doc_a") < F.col("doc_b"))
-            # length filter: J(A,B) >= t requires t*|A| <= |B| <= |A|/t
-            & (F.col("nb") >= F.ceil(F.lit(t) * F.col("na")))
-            & (F.col("nb") <= F.floor(F.col("na") / F.lit(t)))
-        )
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    a = sh_arr.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
-    b = sh_arr.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    return (
-        cand.join(a, "doc_a")
-        .join(b, "doc_b")
-        .select("doc_a", "doc_b", (inter / union).alias("jaccard"))
-        .filter(F.col("jaccard") >= min_jaccard)
-    )
+    return _threshold_scan(sh, _postings_index(sh), min_jaccard)
 
 
 def resolve_duplicate_clusters(
@@ -1134,10 +1074,9 @@ def cached_shingle_signatures(
     every LSH consumer shares (the dedup query and the curation pass
     both build on this — extracted so they cannot drift):
 
-      * the per-doc distinct shingle ARRAY is computed once and
-        persisted — the interpreted higher-order shingle transform is
-        the dominant cost, and it feeds both the signatures and the
-        exact-jaccard rescore;
+      * the per-doc distinct shingle ARRAY is the jaccard kernel's
+        persisted table (_shingle_arrays) — it feeds both the
+        signatures and the exact-jaccard rescore;
       * signatures use the EXPLODED minhash form (md5 inside
         explode+groupBy runs in whole-stage codegen, 2x the
         interpreted narrow transform; per-doc shingles are
@@ -1151,12 +1090,7 @@ def cached_shingle_signatures(
     """
     from pyspark import StorageLevel
 
-    # spread(): single-split corpora would otherwise compute the whole
-    # interpreted shingling chain in ONE scan task (guide §2.6)
-    sh = spread(docs).select(
-        F.col(id_col).alias("doc_id"),
-        F.array_distinct(shingle_array(text_col, w)).alias("sh"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    sh = _shingle_arrays(docs, text_col, id_col, w)
     sig = minhash_signatures(
         sh.select("doc_id", F.explode("sh").alias("shingle")),
         num_hashes=num_hashes,
@@ -1186,32 +1120,23 @@ def lsh_jaccard_pairs_broadcast(
     the full band self-join fan-out (millions of candidate pairs at
     sf1.0, quadratic in bucket size), distincts it, then shuffles the
     per-doc shingle ARRAYS onto both sides of every pair and runs an
-    interpreted array_intersect per pair. The fused kernel broadcasts
-    the postings index once (same guarded collect as
-    ngram_jaccard_pairs_auto — the regime is MEASURED with
-    session.driver_row_cap, with the composed plan as the fallback
-    above the gate) plus one band-hash
-    array per band (~32 bytes/doc/band), computes intersections by
-    vectorized scatter-add + threshold scan, and applies the band
-    agreement as a vectorized byte-compare on the survivors — the pair
-    fan-out never exists as rows.
+    interpreted array_intersect per pair. This runs the n-gram
+    router's broadcast-postings kernel instead (same size gate, with
+    the composed plan as the fallback above it) plus one band-hash
+    array per band (~32 bytes/doc/band), and applies the band
+    agreement as a vectorized byte-compare on the jaccard survivors —
+    the pair fan-out never exists as rows.
 
     The hot-band cap (max_band_df) matches drop_hot_bands exactly: a
     (band_idx, band_hash) bucket with more than max_band_df docs
     generates no pairs.
     """
+    import hashlib
+
     import numpy as np
-    import pandas as pd
 
-    if num_hashes % bands:
-        raise ValueError(
-            f"num_hashes={num_hashes} not divisible by bands={bands}: the "
-            f"trailing {num_hashes % bands} hashes would silently never "
-            "enter any band, changing the LSH operating point"
-        )
-
-    entries = sh.select(F.sum(F.size("sh"))).first()[0] or 0
-    if entries > driver_row_cap(sh, "doc_id"):
+    rows_per_band = _rows_per_band(num_hashes, bands)
+    if not _postings_fit(sh):
         cand = lsh_candidate_pairs(
             sig, num_hashes=num_hashes, bands=bands, max_band_df=max_band_df
         )
@@ -1219,32 +1144,8 @@ def lsh_jaccard_pairs_broadcast(
             cand, sh, min_jaccard, keep_jaccard=keep_jaccard
         )
 
-    # no array_sort on the posting lists: the kernel re-codes them via
-    # searchsorted against the sorted doc universe, so within-list order
-    # is irrelevant — sorting 2.5M entries in the agg was pure waste
-    postings_df = (
-        sh.select("doc_id", F.explode("sh").alias("shingle"))
-        .groupBy("shingle")
-        .agg(F.collect_list("doc_id").alias("doc_ids"))
-    )
-    # Arrow toPandas (guide §6): the posting lists land as numpy arrays
-    # per row instead of per-element Python objects, and the doc→code
-    # mapping is a vectorized searchsorted per posting — the driver-side
-    # index build drops from seconds of Python loops to milliseconds.
-    pdf = postings_df.toPandas()
-    p_arrs = [np.asarray(a) for a in pdf["doc_ids"].to_numpy()]
-
-    spark = sh.sparkSession
-    all_docs = (
-        np.unique(np.concatenate(p_arrs)) if p_arrs else np.array([], dtype=object)
-    )
-    code = {d: i for i, d in enumerate(all_docs.tolist())}
-    shingle_list = list(pdf["shingle"])
-    coded = [np.searchsorted(all_docs, a) for a in p_arrs]
-    postings = dict(zip(shingle_list, coded))
-    sizes = np.zeros(len(all_docs), dtype=np.int64)
-    for ids in coded:
-        sizes[ids] += 1
+    index = _postings_index(sh)
+    shingle_list, coded, all_docs, _ = index
     # r6: signatures and band hashes are DERIVED ON THE DRIVER from the
     # already-collected postings index instead of running a second
     # explode + per-seed-min aggregation job over the whole corpus:
@@ -1254,10 +1155,7 @@ def lsh_jaccard_pairs_broadcast(
     # (np.unique(..., return_index=True) — md5 hex is fixed-width
     # lowercase, so bytes order == the hash order Spark's min uses).
     # hashlib.md5 hexdigest is bit-identical to Spark's md5().
-    import hashlib
-
     n_all = len(all_docs)
-    rows_per_band = num_hashes // bands
     lens = np.array([len(a) for a in coded], dtype=np.int64)
     minh: list[np.ndarray] = []
     if n_all:
@@ -1296,60 +1194,8 @@ def lsh_jaccard_pairs_broadcast(
             uniq_h, cnt = np.unique(arr, return_counts=True)
             hot_sets[b] = {h.decode() for h in uniq_h[cnt > max_band_df]}
         band_arrs.append(arr)
-    bc = spark.sparkContext.broadcast(
-        (postings, np.array(all_docs.tolist(), dtype=object), sizes, code, band_arrs, hot_sets)
-    )
 
-    id_type = sh.schema["doc_id"].dataType.simpleString()
-    out_schema = f"doc_a {id_type}, doc_b {id_type}, jaccard double"
-
-    def probe(batches):
-        postings_l, names, sizes_l, code_l, bands_l, hot_l = bc.value
-        n_docs = len(names)
-        acc = np.zeros(n_docs, dtype=np.int32)
-        nb_min = int(sizes_l.min()) if n_docs else 0
-        tt = min_jaccard / (1.0 + min_jaccard) if min_jaccard > 0 else 0.0
-        for pdf in batches:
-            out = {"doc_a": [], "doc_b": [], "jaccard": []}
-            for doc_id, shingles in zip(pdf["doc_id"], pdf["sh"]):
-                me = code_l.get(doc_id)
-                if me is None:
-                    continue
-                touched = []
-                for s in shingles:
-                    ids = postings_l.get(s)
-                    if ids is not None:
-                        acc[ids] += 1
-                        touched.append(ids)
-                if not touched:
-                    continue
-                na = int(sizes_l[me])
-                lo = max(1, int(tt * (na + nb_min)))  # floor() — safe side
-                cand = np.flatnonzero(acc[me + 1:] >= lo) + (me + 1)
-                if len(cand):
-                    inter = acc[cand]
-                    union = sizes_l[me] + sizes_l[cand] - inter
-                    jac = inter / union
-                    keep = jac >= min_jaccard
-                    if keep.any():
-                        # band agreement on the jaccard survivors only
-                        shared = np.zeros(len(cand), dtype=bool)
-                        for b in range(len(bands_l)):
-                            mine = bands_l[b][me]
-                            if not mine or (hot_l[b] and mine.decode() in hot_l[b]):
-                                continue
-                            shared |= bands_l[b][cand] == mine
-                        keep &= shared
-                    k = int(keep.sum())
-                    if k:
-                        out["doc_a"].extend([doc_id] * k)
-                        out["doc_b"].extend(names[cand[keep]])
-                        out["jaccard"].extend(jac[keep])
-                # memset reset (see ngram probe note)
-                acc.fill(0)
-            yield pd.DataFrame(out)
-
-    res = sh.mapInPandas(probe, schema=out_schema)
+    res = _threshold_scan(sh, index, min_jaccard, bands=(band_arrs, hot_sets))
     cols = ["doc_a", "doc_b"] + (["jaccard"] if keep_jaccard else [])
     return res.select(*cols)
 

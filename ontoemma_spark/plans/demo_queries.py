@@ -2664,14 +2664,13 @@ SELECT CAST(doc_id AS BIGINT) AS doc_id, {_SIMHASH_BITS} AS simhash FROM agg
 # 19. ngram_jaccard_dups — exact pairwise n-gram jaccard (blocked)
 def q_ngram_jaccard_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact pairwise jaccard ≥ JACCARD_MIN, ADAPTIVE physical strategy
-    (dedup.ngram_jaccard_pairs_auto): one stats job measures the shingle
-    vocabulary, then picks broadcast kernel (index measured-small —
-    bounded collect, same legitimacy as a broadcast hash join build
-    side) / prefix-filtered AllPairs plan (Zipfian vocab) / relational
-    blocked self-join (dense vocab). Misuse cannot OOM the driver: the
-    collect path is gated on the measured count and the fallbacks are
-    fully distributed. All paths bit-identical
-    (tests/test_broadcast_index.py)."""
+    (dedup.ngram_jaccard_pairs_auto): one stats job measures the
+    postings index, then picks the broadcast-postings kernel (index
+    measured-small — bounded collect, same legitimacy as a broadcast
+    hash join build side) or the relational blocked self-join. Misuse
+    cannot OOM the driver: the collect path is gated on the measured
+    count and the fallback is fully distributed. Both paths
+    bit-identical (tests/test_broadcast_index.py)."""
     docs = _t(spark, sf_dir, "documents")
     return D.ngram_jaccard_pairs_auto(
         docs, w=SHINGLE_W, min_jaccard=JACCARD_MIN

@@ -63,42 +63,6 @@ def test_broadcast_jaccard_equals_relational(spark):
         assert abs(rel[k] - fast[k]) < 1e-12, k
 
 
-def test_prefix_jaccard_equals_relational(spark):
-    """ngram_jaccard_pairs_prefix (the distributed scale-safe default)
-    is EXACT: identical pairs + values to the relational self-join."""
-    from ontoemma_spark.operators.dedup import (
-        ngram_jaccard_pairs,
-        ngram_jaccard_pairs_prefix,
-        word_shingles,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    for t in (0.3, 0.5, 0.8):
-        rel = {
-            (r["doc_a"], r["doc_b"]): r["jaccard"]
-            for r in ngram_jaccard_pairs(word_shingles(docs, w=2), min_jaccard=t).collect()
-        }
-        pfx = {
-            (r["doc_a"], r["doc_b"]): r["jaccard"]
-            for r in ngram_jaccard_pairs_prefix(docs, w=2, min_jaccard=t).collect()
-        }
-        assert set(rel) == set(pfx), t
-        for k in rel:
-            assert abs(rel[k] - pfx[k]) < 1e-12, (t, k)
-
-
-def test_prefix_jaccard_no_collect_in_plan(spark):
-    """The prefix plan is pure relational algebra — no Python stage, no
-    broadcast of corpus-derived state (scan-side broadcasts of the tiny
-    df table by AQE are fine; asserted: no mapInPandas node)."""
-    from ontoemma_spark.operators.dedup import ngram_jaccard_pairs_prefix
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    plan = ngram_jaccard_pairs_prefix(docs, w=2)._jdf.queryExecution().optimizedPlan().toString()
-    assert "FlatMapGroupsInPandas" not in plan and "MapInPandas" not in plan
-    assert "PythonUDF" not in plan
-
-
 def test_broadcast_jaccard_guard_falls_back(spark, broadcast_off):
     """When the postings index does not fit on the driver the n-gram
     router must refuse to collect and route through a distributed plan
@@ -119,10 +83,9 @@ def test_broadcast_jaccard_guard_falls_back(spark, broadcast_off):
         } == fast
 
 
-def test_auto_jaccard_all_regimes_identical(spark, broadcast_off, monkeypatch):
+def test_auto_jaccard_all_regimes_identical(spark, broadcast_off):
     """ngram_jaccard_pairs_auto must return the same rows whichever
-    physical strategy its thresholds select."""
-    from ontoemma_spark.operators import dedup
+    side of its size gate it takes."""
     from ontoemma_spark.operators.dedup import ngram_jaccard_pairs_auto
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -132,11 +95,8 @@ def test_auto_jaccard_all_regimes_identical(spark, broadcast_off, monkeypatch):
 
     kernel = rows(ngram_jaccard_pairs_auto(docs, w=2, min_jaccard=0.3))
     with broadcast_off():
-        monkeypatch.setattr(dedup, "ZIPF_MEAN_DF", 1e9)
-        prefix = rows(ngram_jaccard_pairs_auto(docs, w=2, min_jaccard=0.3))
-        monkeypatch.setattr(dedup, "ZIPF_MEAN_DF", 0.0)
         relational = rows(ngram_jaccard_pairs_auto(docs, w=2, min_jaccard=0.3))
-    assert kernel == prefix == relational
+    assert kernel == relational
     assert len(kernel) > 0
 
 
@@ -158,9 +118,9 @@ def test_broadcast_index_guard_falls_back(spark, broadcast_off):
 
 def test_r5_review_dedup_guards(spark, broadcast_off):
     """Round-5 review regressions: (1) the broadcast jaccard kernel
-    skips docs shorter than w instead of KeyError; (2) the prefix plan
-    refuses min_jaccard=0 and the auto router sends t=0 to the
-    relational plan; (3) band_hashes refuses indivisible num_hashes;
+    skips docs shorter than w instead of KeyError; (2) the auto router
+    sends t=0 to the relational plan above its gate; (3) band_hashes and
+    the fused LSH kernel refuse indivisible num_hashes;
     (4) exact_duplicates excludes null-text docs instead of collapsing
     them into one phantom group; (5) bloom_gated_dedup keeps null-key
     rows (is_dup false) instead of dropping them from both branches."""
@@ -171,9 +131,10 @@ def test_r5_review_dedup_guards(spark, broadcast_off):
         band_hashes,
         bloom_gated_dedup,
         exact_duplicates,
+        lsh_jaccard_pairs_broadcast,
         minhash_signatures,
         ngram_jaccard_pairs_auto,
-        ngram_jaccard_pairs_prefix,
+        shingle_array,
         word_shingles,
     )
 
@@ -185,8 +146,6 @@ def test_r5_review_dedup_guards(spark, broadcast_off):
              for r in ngram_jaccard_pairs_auto(docs, w=3).collect()}
     assert pairs == {(1, 2)}  # short/null docs skipped, no KeyError
 
-    with _pytest.raises(ValueError, match="min_jaccard"):
-        ngram_jaccard_pairs_prefix(docs, min_jaccard=0.0)
     with broadcast_off():
         zero = {(r["doc_a"], r["doc_b"])
                 for r in ngram_jaccard_pairs_auto(docs, min_jaccard=0.0).collect()}
@@ -195,6 +154,9 @@ def test_r5_review_dedup_guards(spark, broadcast_off):
     sigs = minhash_signatures(word_shingles(docs.filter("doc_id = 1")), num_hashes=8)
     with _pytest.raises(ValueError, match="not divisible"):
         band_hashes(sigs, num_hashes=8, bands=3)
+    sh = docs.select("doc_id", F.array_distinct(shingle_array("text")).alias("sh"))
+    with _pytest.raises(ValueError, match="not divisible"):
+        lsh_jaccard_pairs_broadcast(sh, sigs, num_hashes=8, bands=3)
 
     dups = exact_duplicates(docs).collect()
     assert sorted((r["rep_doc_id"], r["dup_count"]) for r in dups) == [
@@ -240,8 +202,8 @@ def test_broadcast_index_class_dedup_with_ties(spark):
 
 def test_auto_jaccard_threshold_zero_both_sides(spark, broadcast_off):
     """min_jaccard=0 on both sides of the n-gram gate: the kernel below
-    it, and above it the relational plan (the prefix plan refuses t=0)
-    — every overlapping pair, identical to ngram_jaccard_pairs."""
+    it and the relational plan above it both return every overlapping
+    pair, identical to ngram_jaccard_pairs."""
     from ontoemma_spark.operators.dedup import (
         ngram_jaccard_pairs,
         ngram_jaccard_pairs_auto,

@@ -95,3 +95,33 @@ def test_fused_drops_jaccard_column_when_not_kept(spark, sh_sig):
     sh, sig = sh_sig
     df = lsh_jaccard_pairs_broadcast(sh, sig, num_hashes=4, bands=2)
     assert df.columns == ["doc_a", "doc_b"]
+
+
+def test_fused_skips_docs_without_shingles_both_sides(spark, broadcast_off):
+    """A doc shorter than w and a null-text doc have no shingles: the
+    fused kernel skips them below the gate, and above it the composed
+    plan it falls back to drops them too — rows equal on both sides."""
+    docs = spark.createDataFrame(
+        [(1, "a b c d e f"), (2, "a b c d e f"), (3, "a b c d e g"),
+         (4, "x y z w v"), (5, "x y z w v u"), (6, "q"), (7, None)],
+        "doc_id bigint, text string",
+    )
+    sh, sig = cached_shingle_signatures(docs, w=2, num_hashes=4)
+    try:
+        composed = _rows(_composed(sh, sig))
+        fast = _rows(
+            lsh_jaccard_pairs_broadcast(
+                sh, sig, num_hashes=4, bands=2, min_jaccard=0.5, keep_jaccard=True
+            )
+        )
+        with broadcast_off():
+            slow = _rows(
+                lsh_jaccard_pairs_broadcast(
+                    sh, sig, num_hashes=4, bands=2, min_jaccard=0.5, keep_jaccard=True
+                )
+            )
+    finally:
+        sh.unpersist()
+        sig.unpersist()
+    assert fast == slow == composed
+    assert (1, 2) in fast
