@@ -1,17 +1,19 @@
 """Real, dependency-free media codecs for the multimodal operators.
 
 The container has no PIL/cv2/torchaudio, but several formats are fully
-decodable with the stdlib + numpy, so the feature-extraction kernel does
-REAL decoding for them instead of a stub:
+decodable with the stdlib + numpy:
 
   BMP   24-bit uncompressed (BITMAPINFOHEADER)        — struct + numpy
   PNG   8-bit gray/RGB/RGBA, non-interlaced           — zlib + unfilter
   PPM   P6 binary                                     — header + frombuffer
   WAV   PCM 8/16-bit                                  — stdlib wave
 
-Entropy-coded formats (JPEG, MP3, MP4) genuinely need a codec library;
-those fall back to the deterministic sha256 pseudo-feature, flagged
-decoded=false, so "runs" vs "really decoded" is visible in the output.
+multimodal.sample_frames decodes concatenated-P6 video streams for real
+and derives each frame's aHash grid feature (image_features); the BMP,
+PNG and WAV codecs are pinned by exact round-trip tests. Entropy-coded
+formats (JPEG, MP3, MP4) genuinely need a codec library; those fall back
+to the deterministic sha256 pseudo-feature, flagged decoded=false, so
+"runs" vs "really decoded" is visible in the output.
 
 Encoders for the same formats exist so tests can synthesize payloads
 from known pixel/sample arrays and assert exact round-trips.
@@ -237,7 +239,7 @@ def decode_wav(payload: bytes) -> tuple[np.ndarray, int]:
 
 
 # ---------------------------------------------------------------------------
-# Dispatch + real features
+# Concatenated-P6 streams + real features
 # ---------------------------------------------------------------------------
 
 
@@ -294,63 +296,6 @@ def split_ppm_stream(payload: bytes) -> list[bytes]:
     return members
 
 
-def nearest_resize(arr: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
-    """Nearest-neighbor resample (pixel-center mapping) for H×W or
-    H×W×C arrays — real resizing for the resize operator, up or down,
-    deterministic and dependency-free."""
-    h, w = arr.shape[0], arr.shape[1]
-    rows = np.minimum(((np.arange(out_h) + 0.5) * h / out_h).astype(np.int64), h - 1)
-    cols = np.minimum(((np.arange(out_w) + 0.5) * w / out_w).astype(np.int64), w - 1)
-    return arr[rows][:, cols].copy()
-
-
-def to_rgb(arr: np.ndarray) -> np.ndarray:
-    """Normalize a decoded image to the (h, w, 3) uint8 RGB shape
-    encode_bmp requires. decode_png legitimately returns 1-channel
-    (gray) and 4-channel (RGBA) arrays; encoding those directly
-    produces structurally broken BMPs (zero-padded gray rows, 4w-byte
-    rows against a declared 3w stride). Gray replicates the luma
-    plane; RGBA drops the alpha channel (straight drop, no
-    compositing — deterministic, and what a 24-bit consumer sees)."""
-    if arr.ndim == 2:
-        arr = arr[:, :, None]
-    if arr.ndim != 3:
-        raise ValueError(f"expected 2-D or 3-D image, got shape {arr.shape}")
-    c = arr.shape[2]
-    if c == 1:
-        return np.repeat(arr, 3, axis=2)
-    if c == 3:
-        return arr
-    if c == 4:
-        return np.ascontiguousarray(arr[:, :, :3])
-    raise ValueError(f"unsupported channel count {c}")
-
-
-def sniff(payload: bytes) -> str:
-    if payload[:2] == b"BM":
-        return "bmp"
-    if payload[:8] == _PNG_MAGIC:
-        return "png"
-    if payload[:2] == b"P6":
-        return "ppm"
-    if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
-        return "wav"
-    if payload[:2] == b"\xff\xd8":
-        return "jpeg"  # entropy-coded: not decodable without a codec lib
-    return "unknown"
-
-
-def decode_image(payload: bytes) -> np.ndarray:
-    kind = sniff(payload)
-    if kind == "bmp":
-        return decode_bmp(payload)
-    if kind == "png":
-        return decode_png(payload)
-    if kind == "ppm":
-        return decode_ppm(payload)
-    raise ValueError(f"no pure-python decoder for {kind}")
-
-
 def resize_block_mean(gray: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
     """Block-mean downsample (area interpolation on integer grids) —
     the resize primitive for the aHash-style grid feature."""
@@ -378,16 +323,3 @@ def image_features(arr: np.ndarray, grid: int = 8) -> list[float]:
         luma = a.reshape(a.shape[0], a.shape[1], -1)[:, :, 0]
     g = resize_block_mean(luma, grid, grid) / 255.0
     return [float(v) for v in g.ravel()]
-
-
-def audio_features(x: np.ndarray, sample_rate: int, n_bands: int = 6) -> list[float]:
-    """[rms, zero-crossing rate, n_bands log band energies] — real
-    classical audio features from the decoded waveform."""
-    if len(x) == 0:
-        return [0.0] * (2 + n_bands)
-    rms = float(np.sqrt(np.mean(x * x)))
-    zcr = float(np.mean(np.abs(np.diff(np.signbit(x).astype(np.int8)))))
-    spec = np.abs(np.fft.rfft(x))
-    bands = np.array_split(spec, n_bands)
-    energies = [float(np.log1p(np.sum(b * b))) for b in bands]
-    return [rms, zcr] + energies

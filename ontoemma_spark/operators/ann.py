@@ -93,14 +93,6 @@ def _signature_col(vec: Column, planes: list[list[float]]) -> Column:
     return F.concat(*bits)
 
 
-def _topk_ranked(scored: DataFrame, k: int) -> DataFrame:
-    """Shared top-k tail: TakeOrderedAndProject limit then a rank
-    window over <= k rows (cos desc, vec_id asc tie-break)."""
-    top = scored.orderBy(F.desc("cos"), F.asc("vec_id")).limit(k)
-    w = Window.orderBy(F.desc("cos"), F.asc("vec_id"))
-    return top.withColumn("rank", F.row_number().over(w))
-
-
 def _hyperplane(dim: int, seed: int) -> list[float]:
     """Deterministic pseudo-random unit hyperplane (no RNG state: values
     derived from a hash-like integer recurrence)."""
@@ -135,27 +127,12 @@ def lsh_bucket_candidates(
     return cosine_scores_vs_query(candidates, query_vec, id_col, vec_col)
 
 
-def lsh_bucket_topk(
-    embeddings: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    num_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """ANN: random-hyperplane LSH bucket + exact top-k rescore inside.
-    At 10^12 rows the bucket column becomes the table's partition key so
-    the probe prunes partitions instead of scanning."""
-    scored = lsh_bucket_candidates(embeddings, query_vec, num_planes, id_col, vec_col)
-    return _topk_ranked(scored, k)
-
-
 # ---------------------------------------------------------------------------
-# IVF (inverted-file) ANN: coarse quantizer cells + cell-probe search —
-# the second scale path next to hyperplane LSH. At 10^12 rows the cell
-# id becomes the table's partition key, so a probe reads nprobe/k of
-# the data instead of scanning (same pruning argument as LSH, but the
-# cells adapt to the data distribution when fit with kmeans_fit).
+# IVF (inverted-file) ANN: coarse quantizer cells for a cell-probe search
+# (the registry's ann_ivf_probe) — the second scale path next to
+# hyperplane LSH. At 10^12 rows the cell id becomes the table's
+# partition key, so a probe reads nprobe/k of the data instead of
+# scanning (same pruning argument as LSH).
 # ---------------------------------------------------------------------------
 
 
@@ -183,84 +160,10 @@ def assign_cells(
     return embeddings.withColumn(out_col, cell.cast("int"))
 
 
-def kmeans_fit(
-    embeddings: DataFrame,
-    k: int = 8,
-    iters: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> list[list[float]]:
-    """Deterministic distributed Lloyd's: init = the k rows with the
-    smallest xxhash64(id) (a seedless deterministic sample), then
-    `iters` rounds of assign (narrow, broadcast centroids as literals)
-    + per-cell mean (posexplode → groupBy(cell, dim) — ONE shuffle per
-    round, map-side partial agg). Only k×dim floats ever reach the
-    driver. Empty cells keep their previous centroid (standard Lloyd's
-    convention), so k is stable across rounds."""
-    # null vectors can neither seed nor move a centroid (len(None) /
-    # float(None) / new[None] all crash) — excluded up front
-    embeddings = embeddings.filter(F.col(vec_col).isNotNull())
-    first = embeddings.select(vec_col).first()
-    if first is None:
-        raise ValueError("kmeans_fit: embeddings table is empty")
-    dim = len(first[0])
-    init_rows = (
-        embeddings.select(id_col, vec_col)
-        .orderBy(F.abs(F.xxhash64(F.col(id_col).cast("string"))), F.col(id_col))
-        .limit(k)
-        .collect()
-    )
-    centroids = [[float(x) for x in r[vec_col]] for r in init_rows]
-    for _ in range(iters):
-        assigned = assign_cells(embeddings.select(vec_col), centroids, vec_col)
-        means = (
-            assigned.select("cell", F.posexplode(F.col(vec_col)).alias("dim", "v"))
-            .groupBy("cell", "dim")
-            .agg(F.avg(F.col("v").cast("double")).alias("m"))
-            .collect()
-        )
-        new = [list(c) for c in centroids]
-        by_cell: dict[int, dict[int, float]] = {}
-        for r in means:
-            by_cell.setdefault(r["cell"], {})[r["dim"]] = r["m"]
-        for cell, dims in by_cell.items():
-            new[cell] = [dims[d] for d in range(dim)]
-        centroids = new
-    return centroids
-
-
-def ivf_probe_topk(
-    embeddings: DataFrame,
-    centroids: list[list[float]],
-    query_vec: list[float],
-    k: int = 10,
-    nprobe: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF search: rank cells by centroid distance to the query, scan
-    only the nprobe nearest cells, exact cosine rescore + top-k
-    (TakeOrderedAndProject). With the table partitioned by cell this is
-    partition pruning, not a scan."""
-    q_dists = [
-        sum((float(v) - float(c)) ** 2 for v, c in zip(query_vec, cent))
-        for cent in centroids
-    ]
-    probe_cells = [
-        cell for cell, _ in sorted(enumerate(q_dists), key=lambda x: (x[1], x[0]))[:nprobe]
-    ]
-    assigned = assign_cells(embeddings, centroids, vec_col)
-    cands = assigned.filter(F.col("cell").isin(probe_cells)).drop("cell")
-    scored = cosine_scores_vs_query(cands, query_vec, id_col, vec_col)
-    return _topk_ranked(scored, k)
-
-
 def deterministic_grid_centroids(dim: int, k: int = 8) -> list[list[float]]:
     """Data-independent deterministic centroids (hashed-seed recurrence,
     like _hyperplane) — the coarse quantizer the DRIVER QUERY uses so
-    its DuckDB twin can embed the centroids as literals. Real
-    deployments fit kmeans_fit centroids instead (data-adaptive cells);
-    the probe machinery is identical either way."""
+    its DuckDB twin can embed the centroids as literals."""
     return [_hyperplane(dim, seed=1000 + i) for i in range(k)]
 
 

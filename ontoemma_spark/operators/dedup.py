@@ -375,7 +375,11 @@ def simhash_bits(shingles_or_tokens: DataFrame, num_bits: int = 16) -> DataFrame
     """SimHash over the first num_bits bits of md5 (one hex nibble's high
     bit per position): bit_i = 1 iff Σ_tokens (nibble_i ≥ 8 ? +1 : -1) > 0.
     Returns (doc_id, simhash) with simhash as a bit string — hex-nibble
-    construction keeps the SQL oracle identical."""
+    construction keeps the SQL oracle identical.
+
+    No entry point runs this wide (groupBy) form: it is the test
+    reference for simhash_bits_narrow, which the registry runs and which
+    must give identical bits (tests/test_multimodal_dedup.py)."""
     col = "shingle" if "shingle" in shingles_or_tokens.columns else "token"
     h = F.md5(F.col(col))
     sums = [

@@ -1,15 +1,13 @@
-"""Multimodal column plumbing: image/audio/video as opaque binary columns
-with typed metadata.
+"""Multimodal column plumbing: video as an opaque binary column with
+typed metadata.
 
-Feature extraction does REAL decoding for every format that is
-decodable without external codec libraries (media/codecs.py: BMP, PNG,
-PPM images — aHash-style 8x8 block-mean grid features; PCM WAV audio —
-rms/zcr/band-energy features). Entropy-coded formats (JPEG/MP3/MP4) and
-video containers genuinely need a codec library the container lacks;
-those fall back to a deterministic sha256 pseudo-feature and are
-flagged decoded=false, so "ran" vs "really decoded" is visible in the
-output, and swapping a real codec into `_decode_any` is the only change
-needed for production.
+Frame sampling does REAL decoding for the one video container that is
+decodable without external codec libraries (media/codecs.py:
+concatenated-P6 streams — aHash-style 8x8 block-mean grid features per
+frame). Entropy-coded containers (MP4 etc.) genuinely need a codec
+library the container lacks; those fall back to a deterministic sha256
+pseudo-feature and are flagged decoded=false, so "ran" vs "really
+decoded" is visible in the output.
 """
 
 from __future__ import annotations
@@ -19,7 +17,6 @@ from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ontoemma_spark.media import codecs
 
@@ -27,155 +24,12 @@ MEDIA_SCHEMA = (
     "media_id string, kind string, payload binary, mime string, width int, height int"
 )
 
-FEATURE_SCHEMA = (
-    "media_id string, kind string, n_bytes bigint, sha256 string, "
-    "decoded boolean, format string, width int, height int, feature array<float>"
-)
-
-# formats with a pure stdlib+numpy decoder in media/codecs.py
-DECODABLE = {"bmp", "png", "ppm", "wav"}
-
 
 def _sha_fallback(payload: bytes, feat_dim: int) -> list[float]:
     """Deterministic pseudo-feature for formats that need a real codec
     library (JPEG/MP3/…): sha256 bytes scaled to [0, 1)."""
     digest = hashlib.sha256(payload or b"").digest()
     return [digest[i] / 256.0 for i in range(feat_dim)]
-
-
-def _decode_any(payload: bytes, feat_dim: int) -> tuple[bool, str, int, int, list[float]]:
-    """(decoded, format, width, height, feature). Feature length is
-    per-modality: 64 (8x8 aHash grid) for decoded images, 8 (rms + zcr
-    + 6 band energies) for decoded audio, feat_dim for the sha fallback
-    — the schema is array<float>, consumers key on `format`."""
-    fmt = codecs.sniff(payload or b"")
-    try:
-        if fmt in ("bmp", "png", "ppm"):
-            arr = codecs.decode_image(payload)
-            return True, fmt, arr.shape[1], arr.shape[0], codecs.image_features(arr, grid=8)
-        if fmt == "wav":
-            x, rate = codecs.decode_wav(payload)
-            return True, fmt, len(x), 1, codecs.audio_features(x, rate, n_bands=6)
-    except Exception:
-        fmt = f"corrupt_{fmt}"
-    return False, fmt, 0, 0, _sha_fallback(payload, feat_dim)
-
-
-def extract_media_features(media: DataFrame, feat_dim: int = 8) -> DataFrame:
-    """mapInPandas feature extraction over binary payloads: Arrow-batched,
-    one Python interpreter visit per batch (not per row); at scale the
-    input should be repartitioned so batches are size-uniform (binary
-    payload skew), e.g. .repartition(n, "media_id"). Decodable formats
-    get real features (decoded=true); codec-needing formats get the
-    deterministic sha fallback (decoded=false)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = pdf["payload"]
-            decoded = payloads.map(lambda b: _decode_any(bytes(b or b""), feat_dim))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "n_bytes": payloads.map(lambda b: len(b) if b is not None else 0),
-                    "sha256": payloads.map(
-                        lambda b: hashlib.sha256(b or b"").hexdigest()
-                    ),
-                    "decoded": decoded.map(lambda t: t[0]),
-                    "format": decoded.map(lambda t: t[1]),
-                    "width": decoded.map(lambda t: t[2]),
-                    "height": decoded.map(lambda t: t[3]),
-                    "feature": decoded.map(lambda t: t[4]),
-                }
-            )
-
-    return media.select("media_id", "kind", "payload").mapInPandas(
-        batches, schema=FEATURE_SCHEMA
-    )
-
-
-def media_metadata(media: DataFrame) -> DataFrame:
-    """Native (no-Python) metadata projection over binary columns —
-    byte length and magic-byte sniffing stay JVM-side."""
-    payload = F.col("payload")
-    return media.select(
-        "media_id",
-        "kind",
-        F.length(payload).cast("bigint").alias("n_bytes"),
-        F.when(F.hex(F.substring(payload, 1, 2)) == "FFD8", "image/jpeg")
-        .when(F.hex(F.substring(payload, 1, 4)) == "89504E47", "image/png")
-        .when(F.substring(payload, 1, 2) == F.lit(b"BM"), "image/bmp")
-        .when(F.substring(payload, 1, 2) == F.lit(b"P6"), "image/x-portable-pixmap")
-        .when(
-            (F.substring(payload, 1, 4) == F.lit(b"RIFF"))
-            & (F.substring(payload, 9, 4) == F.lit(b"WAVE")),
-            "audio/wav",
-        )
-        .otherwise("application/octet-stream")
-        .alias("sniffed_mime"),
-    )
-
-
-RESIZED_SCHEMA = (
-    "media_id string, decoded boolean, format string, width int, height int, "
-    "out_width int, out_height int, payload binary"
-)
-
-
-def resize_images(media: DataFrame, out_w: int = 32, out_h: int = 32) -> DataFrame:
-    """Real nearest-neighbor resize over binary image columns
-    (mapInPandas, Arrow-batched): decodable formats (BMP/PNG/PPM) are
-    decoded, resampled (codecs.nearest_resize — pixel-center mapping),
-    and re-encoded as BMP (the family's uncompressed interchange
-    format, bit-exact round-trippable); codec-needing formats pass
-    their ORIGINAL payload through flagged decoded=false, so a
-    downstream consumer never silently treats unresized bytes as
-    resized. (width, height) report the SOURCE dims; (out_width,
-    out_height) the target.
-
-    Scale: one interpreter visit per Arrow batch; payload-skew guidance
-    as extract_media_features (repartition on media_id so batches are
-    size-uniform). Output payloads are bounded by out_w*out_h*3 + 54
-    bytes for decoded rows — a resize to thumbnail size SHRINKS the
-    shuffle, so run it before any exchange that carries the binary."""
-    if out_w < 1 or out_h < 1:
-        raise ValueError(f"target dims must be >= 1, got {out_w}x{out_h}")
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k: [] for k in
-                   ("media_id", "decoded", "format", "width", "height",
-                    "out_width", "out_height", "payload")}
-            for mid, b in zip(pdf["media_id"], pdf["payload"]):
-                payload = bytes(b or b"")
-                fmt = codecs.sniff(payload)
-                decoded, w, h, out_payload = False, 0, 0, payload
-                if fmt in ("bmp", "png", "ppm"):
-                    try:
-                        arr = codecs.decode_image(payload)
-                        h, w = arr.shape[0], arr.shape[1]
-                        # to_rgb AFTER the resize (smaller array): gray
-                        # and RGBA PNGs decode to 1/4 channels, which
-                        # encode_bmp would silently mangle
-                        out_payload = codecs.encode_bmp(
-                            codecs.to_rgb(codecs.nearest_resize(arr, out_h, out_w))
-                        )
-                        decoded = True
-                    except Exception:
-                        fmt = f"corrupt_{fmt}"
-                out["media_id"].append(mid)
-                out["decoded"].append(decoded)
-                out["format"].append(fmt)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["out_width"].append(out_w if decoded else 0)
-                out["out_height"].append(out_h if decoded else 0)
-                out["payload"].append(out_payload)
-            yield pd.DataFrame(out)
-
-    return media.select("media_id", "payload").mapInPandas(
-        batches, schema=RESIZED_SCHEMA
-    )
 
 
 FRAME_SCHEMA = (
@@ -263,84 +117,3 @@ def synthetic_videos(spark, n: int = 24) -> DataFrame:
         rows.append((f"v{i:04d}", "video", payload, "application/octet-stream",
                      None, None))
     return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
-def synthetic_media(spark, n: int = 50) -> DataFrame:
-    """Deterministic media table for tests, cycling through REAL
-    payloads (BMP / PNG / WAV — bit-exact round-trippable through
-    media/codecs.py) plus a jpeg-magic blob exercising the sha
-    fallback path."""
-    import numpy as np
-
-    rows = []
-    for i in range(n):
-        variant = i % 4
-        if variant == 0:  # fallback: jpeg magic, no pure-python decoder
-            kind, payload = "image", b"\xff\xd8" + bytes(
-                [(i * 7 + j) % 256 for j in range(16 + i % 5)]
-            )
-        elif variant == 1:  # real BMP
-            h, w = 5 + i % 3, 7 + i % 4
-            arr = ((np.arange(h * w * 3, dtype=np.int64) * (i + 3)) % 256).astype(
-                np.uint8
-            ).reshape(h, w, 3)
-            kind, payload = "image", codecs.encode_bmp(arr)
-        elif variant == 2:  # real PNG
-            h, w = 4 + i % 4, 6 + i % 3
-            arr = ((np.arange(h * w * 3, dtype=np.int64) * (i + 5)) % 256).astype(
-                np.uint8
-            ).reshape(h, w, 3)
-            kind, payload = "image", codecs.encode_png(arr)
-        else:  # real WAV
-            t = np.arange(400 + 10 * (i % 7)) / 16_000.0
-            x = 0.5 * np.sin(2 * np.pi * (200 + 13 * i) * t)
-            kind, payload = "audio", codecs.encode_wav(x, 16_000)
-        rows.append((f"m{i:04d}", kind, payload, "application/octet-stream", None, None))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
-def video_neardup_pairs(
-    videos: DataFrame, every_k: int = 2, min_shared: int = 1
-) -> DataFrame:
-    """Video-level near-duplicate detection, composed from the family's
-    primitives the way substring_dup_pairs composes from text grams:
-    sample frames (real decode), quantize each frame's aHash grid
-    feature to a 64-bit signature (bit = cell >= frame mean — the
-    classical aHash), and pair videos sharing at least min_shared
-    distinct frame signatures. Re-encoded, resized, or re-containered
-    copies keep their frame aHashes; the equi-join on the frame hash
-    is banded by construction (fan-out per hash = its frequency),
-    never all-pairs. Fallback (undecodable) rows never pair — their
-    sha pseudo-features are excluded with the decoded flag, not left
-    to collide.
-
-    Returns (vid_a, vid_b, n_shared_frames), vid_a < vid_b. The bit
-    quantization is a native column fold over the feature array — no
-    second Python pass after the decode."""
-    frames = sample_frames(videos, every_k=every_k).filter(F.col("decoded"))
-    mean = F.aggregate(
-        F.col("feature"), F.lit(0.0), lambda a, x: a + x
-    ) / F.size(F.col("feature"))
-    bits = F.array_join(
-        F.transform(
-            F.col("feature"),
-            lambda v: F.when(v >= F.col("_mean"), F.lit("1")).otherwise(F.lit("0")),
-        ),
-        "",
-    )
-    sig = (
-        frames.withColumn("_mean", mean)
-        .select("media_id", F.md5(bits).alias("fh"))
-        .distinct()
-    )
-    a = sig.select(F.col("media_id").alias("vid_a"), "fh")
-    b = sig.select(F.col("media_id").alias("vid_b"), "fh")
-    pairs = (
-        a.join(b, "fh")
-        .filter(F.col("vid_a") < F.col("vid_b"))
-        .groupBy("vid_a", "vid_b")
-        .agg(F.count(F.lit(1)).alias("n_shared_frames"))
-    )
-    if min_shared > 1:
-        pairs = pairs.filter(F.col("n_shared_frames") >= min_shared)
-    return pairs

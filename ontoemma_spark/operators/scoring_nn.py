@@ -339,9 +339,6 @@ def mlp_forward_sql(model: MLPModel, feature_exprs: dict[str, str]) -> str:
 # legacy plumbing shim (round-1 API, kept for callers/tests)
 # ---------------------------------------------------------------------------
 
-NN_INPUT_COLS = ["s_id", "t_id", "s_name", "t_name"]
-
-
 def score_pairs_nn(
     pairs_with_names: DataFrame,
     model: MLPModel | None = None,

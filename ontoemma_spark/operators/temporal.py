@@ -28,7 +28,7 @@ Both operators here are single-shuffle relational shapes that survive
 Reference seam: the reference engine has no temporal state at all (its
 KBs are point-in-time files, emma/OntoEmma.py:62-101); these operators
 are the beyond-reference layer that makes the KG pipeline's versioned
-edge state (graph.upsert_edges, streaming/kg_edges.py) *queryable* the
+edge state (graph.upsert_edges) *queryable* the
 way a production web-KG is (fact validity at crawl time).
 """
 

@@ -129,7 +129,7 @@ def winnowing_fingerprints(
     """Winnowing (Schleimer et al. 2003, the MOSS fingerprint): slide a
     window of w consecutive k-gram hashes and record each window's
     MINIMUM hash, rightmost-position tie-break — the local selection
-    whose guarantee the min-k sketch (document_fingerprints) lacks:
+    whose guarantee the min-k md5 sketch lacks:
     any two docs sharing a run of >= w+k-1 identical tokens share at
     least one selected fingerprint, at a density of ~2/(w+1) per gram.
     The shared-fingerprint equi-join is then the passage-level dedup
@@ -193,12 +193,10 @@ def document_fingerprints_narrow(
     k: int = 3,
 ) -> DataFrame:
     """Zero-shuffle fingerprint: k smallest md5(shingle) computed in-row
-    (array_sort ∘ transform over the shingle array). Identical rows to
-    document_fingerprints — INCLUDING the absence rule: docs with no
-    shingles (null text or fewer than w tokens) emit NO row on either
-    path. Without the filter this path emitted fingerprint '' for every
-    short doc, merging all of them as mutual "duplicates" in any
-    fingerprint-keyed dedup while the shuffle path emitted nothing."""
+    (array_sort ∘ transform over the shingle array). Docs with no
+    shingles (null text or fewer than w tokens) emit NO row: a
+    fingerprint '' for every short doc would merge all of them as
+    mutual "duplicates" in any fingerprint-keyed dedup."""
     from ontoemma_spark.operators.dedup import shingle_array
 
     hashes = F.array_sort(
@@ -221,22 +219,6 @@ def document_fingerprints_narrow(
             F.col(id_col).alias("doc_id"),
             F.array_join(F.slice(hashes, 1, k), "|").alias("fingerprint"),
         )
-    )
-
-
-def document_fingerprints(
-    shingles: DataFrame, k: int = 3
-) -> DataFrame:
-    """Winnowing-lite fingerprint: the k lexicographically-smallest
-    md5(shingle) values per doc, '|'-joined — a stable content sketch
-    robust to local edits. Input: (doc_id, shingle) distinct."""
-    hashed = shingles.select("doc_id", F.md5("shingle").alias("h"))
-    w = Window.partitionBy("doc_id").orderBy("h")
-    return (
-        hashed.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .groupBy("doc_id")
-        .agg(F.array_join(F.array_sort(F.collect_list("h")), "|").alias("fingerprint"))
     )
 
 

@@ -33,8 +33,6 @@ from ontoemma_spark.extract.triples import extract_triples
 from ontoemma_spark.operators.components import connected_components
 from ontoemma_spark.operators.scoring import LRModel
 
-STAGES = ["extract", "link", "canonicalize", "materialize"]
-
 
 def _manifest_path(out_dir: str) -> str:
     return os.path.join(out_dir, "_manifest.json")
@@ -49,9 +47,14 @@ def read_manifest(out_dir: str) -> dict:
 
 
 def _write_manifest(out_dir: str, manifest: dict) -> None:
+    """Dump to a temp file in out_dir, then rename it over the manifest:
+    a crash mid-dump leaves the previous manifest readable, so a resume
+    redoes the interrupted stage instead of failing to parse."""
     os.makedirs(out_dir, exist_ok=True)
-    with open(_manifest_path(out_dir), "w") as f:
+    path = _manifest_path(out_dir)
+    with open(path + ".tmp", "w") as f:
         json.dump(manifest, f, indent=2, sort_keys=True)
+    os.replace(path + ".tmp", path)
 
 
 def _checkpoint(df: DataFrame, out_dir: str, stage: str, manifest: dict, metrics: dict,

@@ -47,7 +47,6 @@ LSH_BANDS = 2  # 2 rows per band: collision prob 1-(1-j²)² — the
 JACCARD_MIN = 0.5
 EVENT_PRIORITY = ["signup", "purchase", "click", "view", "error"]  # TTY-rank analog
 
-_STOP_SQL = "(" + ",".join("'" + w.replace("'", "''") + "'" for w in ENGLISH_STOPWORDS_SORTED) + ")"
 _STOP_LIST_SQL = "[" + ",".join("'" + w.replace("'", "''") + "'" for w in ENGLISH_STOPWORDS_SORTED) + "]"
 
 
@@ -3381,13 +3380,6 @@ FROM documents d LEFT JOIN hits h ON d.doc_id = h.doc_id
 
 # --- curation family: PII redaction / mixture sampling / packing -----------
 
-# deterministic PII injection (every 10th doc) so the redaction has
-# real hits to find — same corruption-pattern trick as edge_validate.
-_PII_SUFFIX = (
-    " contact user{id}@example.com or +1 555-000-1234 at 192.168.1.99"
-)
-
-
 def q_redact_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII redaction (emails/phones/IPv4 → typed placeholders) with
     per-class hit counts; narrow regexp column math, zero shuffle."""
@@ -4254,7 +4246,7 @@ FROM hashed WHERE rn <= 3 GROUP BY doc_id
 # 25. media_meta — multimodal binary column metadata (native)
 def q_media_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary-column plumbing: byte length + content hash of the
-    utf-8-encoded document payloads (multimodal.media_metadata pattern)."""
+    utf-8-encoded document payloads."""
     docs = _t(spark, sf_dir, "documents")
     payload = F.encode(F.col("text"), "utf-8")
     return docs.select(
@@ -5821,8 +5813,7 @@ def q_ann_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     literalized centroids — zero shuffle), and exact cosine runs only
     inside the nprobe cells nearest the query. Deterministic
     data-independent centroids + query so the DuckDB twin replays the
-    identical distance argmin; the data-ADAPTIVE kmeans_fit quantizer
-    shares this probe machinery (pytest: tests/test_multimodal_dedup.py)."""
+    identical distance argmin."""
     from ontoemma_spark.operators.ann import assign_cells, cosine_scores_vs_query
 
     centroids, qvec, probe = _ann_ivf_params()

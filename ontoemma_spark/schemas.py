@@ -11,7 +11,6 @@ from pyspark.sql.types import (
     BinaryType,
     BooleanType,
     DoubleType,
-    LongType,
     MapType,
     StringType,
     StructField,
@@ -45,25 +44,6 @@ EDGE_SCHEMA = StructType(
     ]
 )
 
-# Similarity scores (OntoEmma.py:697-722 score dict).
-SCORE_SCHEMA = StructType(
-    [
-        StructField("s_id", StringType(), False),
-        StructField("t_id", StringType(), False),
-        StructField("score", DoubleType(), False),
-    ]
-)
-
-# Alignment triples (OntoEmma.py:549-563) == (subj, pred, obj, score).
-ALIGNMENT_SCHEMA = StructType(
-    [
-        StructField("s_id", StringType(), False),
-        StructField("t_id", StringType(), False),
-        StructField("score", DoubleType(), False),
-        StructField("provenance", StringType(), True),
-    ]
-)
-
 # North-rule input pages table (BASELINE.json input_hint).
 PAGES_SCHEMA = StructType(
     [
@@ -72,25 +52,6 @@ PAGES_SCHEMA = StructType(
         StructField("html", BinaryType(), True),
         StructField("text", StringType(), True),
         StructField("lang", StringType(), True),
-    ]
-)
-
-# Extract-stage output: (subj, pred, obj) mention triples + lineage.
-TRIPLE_SCHEMA = StructType(
-    [
-        StructField("url", StringType(), False),
-        StructField("sent_idx", LongType(), False),
-        StructField("subj", StringType(), False),
-        StructField("pred", StringType(), False),
-        StructField("obj", StringType(), False),
-    ]
-)
-
-# Canonicalization output: mention/node → canonical component id.
-COMPONENT_SCHEMA = StructType(
-    [
-        StructField("node", StringType(), False),
-        StructField("component", StringType(), False),
     ]
 )
 

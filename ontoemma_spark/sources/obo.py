@@ -22,7 +22,6 @@ from pyspark.sql import DataFrame, SparkSession
 from ontoemma_spark.schemas import EDGE_SCHEMA, ENTITY_SCHEMA
 
 _SYN_RE = re.compile(r'synonym:\s*"([^"]*)"')
-_DEF_RE = re.compile(r'def:\s*"([^"]*)"')
 
 
 def _parse_obo_stanzas(text: str, kb_prefix: str) -> tuple[list, list]:

@@ -342,56 +342,6 @@ def load_warc(
             "warc_ts travels as a naive UTC wall-time and any other session "
             "zone silently shifts every instant"
         )
-    return files.select("content").mapInPandas(
-        _pages_scan_udf(rows_per_batch), schema=PAGES_SCHEMA
-    )
-
-
-WARC_STATS_SCHEMA = (
-    "path string, pages bigint, records bigint, resyncs bigint, "
-    "truncated bigint, gzip_error bigint"
-)
-
-
-def warc_scan_stats(spark: SparkSession, path: str) -> DataFrame:
-    """Quarantine/observability report over an archive directory: one
-    row per archive with (pages emitted, records parsed, resync
-    recoveries, truncated-final-record flag, gzip-corruption flag) —
-    the counters an ingest job alerts on. Corrupt archives in the wild
-    are the NORM at crawl scale; this is the query that tells you how
-    much of a crawl the scanner quarantined vs parsed, per shard.
-
-    Same per-file parallelism and streaming scanner as load_warc (the
-    stats dict rides the same pass — no second parse), so running it
-    costs one archive scan with no page payloads in the output."""
-    files = spark.read.format("binaryFile").load(path)
-
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for p, c in zip(pdf["path"], pdf["content"]):
-                st: dict = {}
-                for _ in parse_warc_rows(bytes(c), stats=st):
-                    pass
-                rows.append((
-                    p, st.get("pages", 0), st.get("records", 0),
-                    st.get("resyncs", 0), st.get("truncated", 0),
-                    st.get("gzip_error", 0),
-                ))
-            yield pd.DataFrame(
-                rows,
-                columns=["path", "pages", "records", "resyncs",
-                         "truncated", "gzip_error"],
-            )
-
-    return files.select("path", "content").mapInPandas(
-        scan, schema=WARC_STATS_SCHEMA
-    )
-
-
-def _pages_scan_udf(rows_per_batch: int):
-    """The mapInPandas body shared by load_warc and read_warc_stream —
-    one definition so the batch and streaming scans cannot drift."""
 
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -399,7 +349,7 @@ def _pages_scan_udf(rows_per_batch: int):
                 (bytes(c) for c in pdf["content"]), rows_per_batch
             )
 
-    return parse
+    return files.select("content").mapInPandas(parse, schema=PAGES_SCHEMA)
 
 
 def batched_pages(
@@ -417,46 +367,6 @@ def batched_pages(
                 buf = []
     if buf:
         yield _flush(buf)
-
-
-# binaryFile's fixed schema — streaming file sources require it explicit
-_BINARYFILE_DDL = (
-    "path string, modificationTime timestamp, length long, content binary"
-)
-
-
-def read_warc_stream(
-    spark: SparkSession,
-    path: str,
-    rows_per_batch: int = _ROWS_PER_BATCH,
-    max_files_per_trigger: int = 4,
-) -> DataFrame:
-    """Streaming pages table over a directory where `.warc.gz` archives
-    ARRIVE (continuous crawl ingest): the file-source stream picks up
-    each new archive once per query, the same streamed per-member
-    scanner parses it, and the result composes with
-    streaming/pages.gate_page_stream for the inline curation gate.
-    Exactly-once across RESTARTS requires the caller to set
-    `checkpointLocation` on its writeStream — the processed-file ledger
-    lives in that checkpoint, not here; without one, a restarted query
-    reprocesses the whole directory.
-
-    Unit of progress = one archive file (the CC sharding unit), so a
-    trigger processes max_files_per_trigger archives — bounded work per
-    micro-batch regardless of archive backlog. Memory shape identical
-    to load_warc (bounded Arrow batches). The 2 GiB binaryFile cap
-    applies per file; streaming cannot pre-check sizes (the listing is
-    incremental), so shard oversized archives at the crawler.
-    """
-    files = (
-        spark.readStream.format("binaryFile")
-        .schema(_BINARYFILE_DDL)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .load(path)
-    )
-    return files.select("content").mapInPandas(
-        _pages_scan_udf(rows_per_batch), schema=PAGES_SCHEMA
-    )
 
 
 def write_warc(rows: list[tuple], fileobj, gzip_members: bool = False) -> None:

@@ -181,3 +181,28 @@ def test_pipeline_resume_survives_missing_canonicalize_metrics(
         resumed["stages"]["canonicalize"]["metrics"]["components"]
         == clean["stages"]["canonicalize"]["metrics"]["components"]
     )
+
+
+def test_manifest_write_crash_keeps_previous_manifest(tmp_path, monkeypatch):
+    """A crash inside json.dump must not leave a half-written manifest:
+    read_manifest still returns the previous one, so a resume redoes the
+    interrupted stage instead of failing to parse."""
+    import json
+
+    from ontoemma_spark import pipeline
+
+    out = str(tmp_path)
+    before = {"stages": {"extract": {"metrics": {"triples": 3}}}}
+    pipeline._write_manifest(out, before)
+
+    def half_dump(obj, f, **kw):
+        text = json.dumps(obj, **kw)
+        f.write(text[: len(text) // 2])
+        raise OSError("disk full")
+
+    monkeypatch.setattr(pipeline.json, "dump", half_dump)
+    after = {"stages": {**before["stages"], "link": {"metrics": {"links": 5}}}}
+    with pytest.raises(OSError, match="disk full"):
+        pipeline._write_manifest(out, after)
+    monkeypatch.undo()
+    assert pipeline.read_manifest(out) == before

@@ -1,6 +1,7 @@
 """Curation operators: PII redaction, mixture sampling, sequence packing."""
 
 import random
+from datetime import datetime, timezone
 
 from pyspark.sql import functions as F
 
@@ -634,3 +635,41 @@ def test_r5_review_curation_textstats_ann_guards(spark):
     assert [r["vec_id"] for r in top] == [1, 2]        # zero vector excluded
     pairs = embedding_neardup_pairs(emb, min_cos=0.5, exact=True).collect()
     assert {(r["id_a"], r["id_b"]) for r in pairs} == {(1, 2)}
+
+
+def _pages(spark, n=60):
+    epoch = datetime(2026, 1, 1, tzinfo=timezone.utc)
+    rows = []
+    for i in range(n):
+        if i % 10 == 0:
+            text = "dup dup dup dup dup dup dup dup dup dup"  # degenerate
+        else:
+            text = " ".join(
+                f"word{(i * 13 + j * 5) % 997} item{(i + j * 3) % 53}"
+                for j in range(15)
+            )
+        rows.append((f"u{i:04d}", epoch, bytearray(b""), text, "en"))
+    # replayed content: u0001's text under a different url
+    rows.append(("u9999", epoch, bytearray(b""), rows[1][3], "en"))
+    return spark.createDataFrame(
+        rows, "url string, warc_ts timestamp, html binary, text string, lang string"
+    )
+
+
+def test_page_gate_quality_matches_batch_op(spark):
+    """The gate's inline quality score must equal textstats
+    quality_scores on the same text."""
+    from ontoemma_spark.operators.textstats import quality_score_col, quality_scores
+
+    pages = _pages(spark)
+    batch = {
+        r["doc_id"]: r["quality_score"]
+        for r in quality_scores(pages, text_col="text", id_col="url").collect()
+    }
+    inline = {
+        r["url"]: r["q"]
+        for r in pages.select(
+            "url", F.round(quality_score_col("text"), 6).alias("q")
+        ).collect()
+    }
+    assert inline == batch

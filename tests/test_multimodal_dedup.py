@@ -1,11 +1,9 @@
 """Multimodal plumbing (stubbed decode, real Spark mechanics), dedup
 operators, ANN search, text stats."""
 
-import hashlib
-
 from pyspark.sql import functions as F
 
-from ontoemma_spark.operators.ann import brute_force_topk, lsh_bucket_topk
+from ontoemma_spark.operators.ann import brute_force_topk
 from ontoemma_spark.operators.dedup import (
     exact_duplicates,
     lsh_candidate_pairs,
@@ -14,54 +12,6 @@ from ontoemma_spark.operators.dedup import (
     simhash_bits,
     word_shingles,
 )
-from ontoemma_spark.operators.multimodal import (
-    extract_media_features,
-    media_metadata,
-    synthetic_media,
-)
-
-
-def test_media_feature_extraction_arrow_batched(spark):
-    from ontoemma_spark.media import codecs
-
-    media = synthetic_media(spark, n=30)
-    feats = extract_media_features(media, feat_dim=8).collect()
-    assert len(feats) == 30
-    by_id = {r["media_id"]: r for r in feats}
-    payloads = {
-        r["media_id"]: bytes(r["payload"]) for r in media.collect()
-    }
-    # m0000: jpeg magic → sha fallback, flagged not-decoded
-    d = hashlib.sha256(payloads["m0000"]).digest()
-    assert by_id["m0000"]["decoded"] is False
-    assert by_id["m0000"]["format"] == "jpeg"
-    assert by_id["m0000"]["feature"] == [d[i] / 256.0 for i in range(8)]
-    assert by_id["m0000"]["sha256"] == hashlib.sha256(payloads["m0000"]).hexdigest()
-    # m0001: real BMP → REAL decode, 8x8 aHash grid, exact python twin
-    arr = codecs.decode_bmp(payloads["m0001"])
-    assert by_id["m0001"]["decoded"] is True
-    assert by_id["m0001"]["format"] == "bmp"
-    assert (by_id["m0001"]["width"], by_id["m0001"]["height"]) == (
-        arr.shape[1], arr.shape[0])
-    import numpy as np
-    np.testing.assert_allclose(
-        by_id["m0001"]["feature"], codecs.image_features(arr, grid=8), rtol=1e-6)
-    # m0002: real PNG decode; m0003: real WAV decode
-    assert by_id["m0002"]["decoded"] is True and by_id["m0002"]["format"] == "png"
-    assert by_id["m0003"]["decoded"] is True and by_id["m0003"]["format"] == "wav"
-    x, rate = codecs.decode_wav(payloads["m0003"])
-    np.testing.assert_allclose(
-        by_id["m0003"]["feature"], codecs.audio_features(x, rate, n_bands=6),
-        rtol=1e-5)
-
-
-def test_media_metadata_native_sniffing(spark):
-    media = synthetic_media(spark, n=9)
-    rows = {r["media_id"]: r for r in media_metadata(media).collect()}
-    assert rows["m0000"]["sniffed_mime"] == "image/jpeg"  # \xff\xd8 magic
-    assert rows["m0001"]["sniffed_mime"] == "image/bmp"
-    assert rows["m0002"]["sniffed_mime"] == "image/png"
-    assert rows["m0003"]["sniffed_mime"] == "audio/wav"
 
 
 def test_codecs_roundtrip_exact():
@@ -228,10 +178,6 @@ def test_brute_force_topk_and_lsh(spark):
     top = brute_force_topk(emb, q, k=2).orderBy("rank").collect()
     assert [r["vec_id"] for r in top] == [1, 2]
     assert abs(top[0]["cos"] - 1.0) < 1e-6
-    # LSH bucket search returns a subset of the true ranking, query's own
-    # bucket always contains the exact match
-    lsh = lsh_bucket_topk(emb, q, k=2, num_planes=4).collect()
-    assert 1 in [r["vec_id"] for r in lsh]
 
 
 def test_narrow_sketches_equal_exploded(spark):
@@ -275,67 +221,6 @@ def test_shingle_array_short_text(spark):
     assert got == [[], [], ["a b c"]]
 
 
-def test_corrupt_media_payloads_fall_back(spark):
-    """Truncated/corrupt payloads with valid magic bytes must not kill
-    the Arrow batch: they fall back to the sha pseudo-feature flagged
-    decoded=false with a corrupt_ format tag."""
-    from ontoemma_spark.media import codecs
-
-    import numpy as np
-
-    good = codecs.encode_bmp(np.zeros((4, 4, 3), dtype=np.uint8))
-    rows = [
-        ("ok", "image", good, "application/octet-stream", None, None),
-        ("trunc_bmp", "image", good[:20], "application/octet-stream", None, None),
-        ("trunc_png", "image", b"\x89PNG\r\n\x1a\n" + b"\x00" * 8,
-         "application/octet-stream", None, None),
-        ("bad_wav", "audio", b"RIFF\x00\x00\x00\x00WAVEjunk",
-         "application/octet-stream", None, None),
-    ]
-    from ontoemma_spark.operators.multimodal import MEDIA_SCHEMA, extract_media_features
-
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    feats = {r["media_id"]: r for r in extract_media_features(media).collect()}
-    assert feats["ok"]["decoded"] is True
-    for mid in ("trunc_bmp", "trunc_png", "bad_wav"):
-        assert feats[mid]["decoded"] is False, mid
-        assert feats[mid]["format"].startswith("corrupt_"), feats[mid]["format"]
-        assert len(feats[mid]["feature"]) == 8  # sha fallback
-
-
-def test_kmeans_fit_and_ivf_probe(spark):
-    """IVF scale path: deterministic Lloyd's produces stable centroids;
-    the cell probe with enough nprobe recovers the brute-force top-k."""
-    from ontoemma_spark.operators.ann import (
-        assign_cells,
-        brute_force_topk,
-        ivf_probe_topk,
-        kmeans_fit,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    cents_a = kmeans_fit(emb, k=4, iters=3)
-    cents_b = kmeans_fit(emb, k=4, iters=3)
-    assert cents_a == cents_b  # deterministic
-    assert len(cents_a) == 4 and len(cents_a[0]) == 64
-
-    # every row lands in exactly one cell; cells are non-trivial
-    counts = {r["cell"]: r["count"]
-              for r in assign_cells(emb, cents_a).groupBy("cell").count().collect()}
-    assert sum(counts.values()) == emb.count()
-    assert len(counts) >= 2
-
-    q = [float(i % 7 - 3) / 3.0 for i in range(64)]
-    exact = [r["vec_id"] for r in brute_force_topk(emb, q, k=5).collect()]
-    # probing ALL cells must equal brute force exactly
-    probed_all = [r["vec_id"]
-                  for r in ivf_probe_topk(emb, cents_a, q, k=5, nprobe=4).collect()]
-    assert probed_all == exact
-    # probing the nearest half must still find most of the true top-k
-    probed = {r["vec_id"] for r in ivf_probe_topk(emb, cents_a, q, k=5, nprobe=2).collect()}
-    assert len(probed & set(exact)) >= 3
-
-
 def test_assign_cells_is_narrow_and_python_free(spark):
     from ontoemma_spark.operators.ann import assign_cells, deterministic_grid_centroids
 
@@ -374,17 +259,13 @@ def test_embedding_neardup_exact_vs_lsh(spark):
 def test_ann_empty_corpus_edges(spark):
     """Empty-input behavior is deliberate, not accidental: near-dup on
     an empty corpus returns an empty (id_a, id_b, cos) frame instead of
-    crashing on the dim probe; kmeans_fit refuses with a clear error."""
-    import pytest as _pytest
-
-    from ontoemma_spark.operators.ann import embedding_neardup_pairs, kmeans_fit
+    crashing on the dim probe."""
+    from ontoemma_spark.operators.ann import embedding_neardup_pairs
 
     empty = spark.createDataFrame([], "vec_id bigint, embedding array<double>")
     out = embedding_neardup_pairs(empty, 0.9)
     assert out.count() == 0
     assert set(out.columns) == {"id_a", "id_b", "cos"}
-    with _pytest.raises(ValueError, match="empty"):
-        kmeans_fit(empty, k=2, iters=1)
 
 
 def test_resolve_duplicate_clusters(spark):
@@ -698,72 +579,6 @@ def test_exact_substring_removal_hand_case(spark):
     assert again == {k: v["text"] for k, v in got.items()}
 
 
-def test_resize_images_real_resample(spark):
-    """Decodable images resize for real (nearest-neighbor, pixel-center
-    mapping, verified against the numpy reference on a known gradient);
-    output payloads are round-trippable BMPs at the target dims;
-    codec-needing formats pass original bytes through decoded=false."""
-    import numpy as np
-
-    from ontoemma_spark.media import codecs
-    from ontoemma_spark.operators.multimodal import resize_images, synthetic_media
-
-    media = synthetic_media(spark, n=16)
-    got = {r["media_id"]: r for r in resize_images(media, out_w=6, out_h=4).collect()}
-    assert len(got) == 16
-    src = {r["media_id"]: bytes(r["payload"]) for r in media.collect()}
-
-    for mid, r in got.items():
-        if r["decoded"]:
-            assert (r["out_width"], r["out_height"]) == (6, 4)
-            arr = codecs.decode_bmp(bytes(r["payload"]))
-            assert arr.shape == (4, 6, 3)
-            expect = codecs.nearest_resize(codecs.decode_image(src[mid]), 4, 6)
-            assert np.array_equal(arr, expect), mid
-            assert (r["height"], r["width"]) == codecs.decode_image(src[mid]).shape[:2]
-        else:
-            assert bytes(r["payload"]) == src[mid]  # untouched passthrough
-            assert r["format"] in ("jpeg", "wav")   # non-image payloads
-    # variants 1 (BMP) and 2 (PNG) of every 4 decode as images
-    assert sum(1 for r in got.values() if r["decoded"]) == 8
-
-
-def test_resize_images_gray_and_rgba_png(spark):
-    """Gray (1-channel) and RGBA (4-channel) PNGs — shapes decode_png
-    legitimately returns — must resize to VALID 3-channel BMPs, not the
-    silently-mangled payloads the r4 ADVICE reproduced (zero-padded gray
-    rows / ABGR 4w-byte rows vs a declared 3w stride). Gray replicates
-    luma; RGBA drops alpha (codecs.to_rgb)."""
-    import numpy as np
-
-    from ontoemma_spark.media import codecs
-
-    rng = np.random.RandomState(7)
-    gray = rng.randint(0, 256, (10, 8), dtype=np.uint8)
-    rgba = rng.randint(0, 256, (9, 7, 4), dtype=np.uint8)
-    media = spark.createDataFrame(
-        [("gray", "image", bytearray(codecs.encode_png(gray))),
-         ("rgba", "image", bytearray(codecs.encode_png(rgba)))],
-        "media_id string, kind string, payload binary",
-    )
-    from ontoemma_spark.operators.multimodal import resize_images
-
-    got = {r["media_id"]: r for r in resize_images(media, out_w=5, out_h=4).collect()}
-    for mid in ("gray", "rgba"):
-        assert got[mid]["decoded"] is True, mid
-        out = codecs.decode_bmp(bytes(got[mid]["payload"]))
-        assert out.shape == (4, 5, 3), mid
-    g = codecs.nearest_resize(gray, 4, 5)
-    assert np.array_equal(
-        codecs.decode_bmp(bytes(got["gray"]["payload"])),
-        np.repeat(g[:, :, None], 3, axis=2),
-    )
-    assert np.array_equal(
-        codecs.decode_bmp(bytes(got["rgba"]["payload"])),
-        codecs.nearest_resize(rgba, 4, 5)[:, :, :3],
-    )
-
-
 def test_sample_frames_ppm_stream(spark):
     """Concatenated-P6 'videos' decode for real: stride-k sampling emits
     frames 0, k, 2k… with formula-matching dims/counts and features that
@@ -913,43 +728,6 @@ def test_key_skew_stats(spark):
     assert got[0] == ("hot", 50, 0.5)
     assert {got[1][0], got[2][0]} == {"warm", None} and got[1][1] == 20
     assert got[3] == ("a", 5, 0.05)  # 'a' < 'b' tiebreak
-
-
-def test_video_neardup_pairs(spark):
-    """Videos sharing exact frames pair (even at different
-    positions in different containers); seeded-noise videos never pair; fallback
-    (MP4-magic) rows are excluded rather than colliding on the sha
-    pseudo-feature."""
-    import numpy as np
-
-    from ontoemma_spark.media import codecs
-    from ontoemma_spark.operators.multimodal import video_neardup_pairs
-
-    rng = np.random.RandomState(11)
-    shared = [rng.randint(0, 256, size=(6, 8, 3), dtype=np.uint8)
-              for _ in range(3)]
-    noise = lambda: rng.randint(0, 256, size=(6, 8, 3), dtype=np.uint8)
-    rows = [
-        ("vA", codecs.encode_ppm_stream([shared[0], noise(), shared[1]])),
-        ("vB", codecs.encode_ppm_stream([noise(), shared[0], shared[1], noise()])),
-        ("vC", codecs.encode_ppm_stream([noise(), noise()])),
-        ("vD", b"\x00\x00\x00\x18ftypmp42" + b"x" * 24),
-        ("vE", b"\x00\x00\x00\x18ftypmp42" + b"x" * 24),  # identical fallback
-    ]
-    vids = spark.createDataFrame(
-        [(m, "video", p, "application/octet-stream", None, None) for m, p in rows],
-        "media_id string, kind string, payload binary, mime string, "
-        "width int, height int",
-    )
-    got = {(r["vid_a"], r["vid_b"]): r["n_shared_frames"]
-           for r in video_neardup_pairs(vids, every_k=1).collect()}
-    # vA frames 0,2 = shared[0], shared[1]; vB frames 1,2 = the same
-    assert got == {("vA", "vB"): 2}
-    # every_k=2: vA samples frames {0,2} = {shared0, shared1}, vB
-    # samples {0,2} = {noise, shared1} → exactly one shared hash
-    got2 = {(r["vid_a"], r["vid_b"]): r["n_shared_frames"]
-            for r in video_neardup_pairs(vids, every_k=2).collect()}
-    assert got2 == {("vA", "vB"): 1}
 
 
 def test_dedup_normalize_and_latest_snapshot(spark):

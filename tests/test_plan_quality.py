@@ -129,13 +129,12 @@ def test_ann_lsh_bucket_is_narrow_and_python_free(spark):
 def test_ann_topk_plans_take_ordered(spark):
     """orderBy().limit(k) must plan TakeOrderedAndProject (per-partition
     local top-k), not a global single-task row_number window."""
-    from ontoemma_spark.operators.ann import brute_force_topk, lsh_bucket_topk
+    from ontoemma_spark.operators.ann import brute_force_topk
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     q = [float(i % 7 - 3) / 3.0 for i in range(64)]
-    for fn in (brute_force_topk, lsh_bucket_topk):
-        plan = _plan(fn(emb, q, k=5))
-        assert "TakeOrderedAndProject" in plan, plan
+    plan = _plan(brute_force_topk(emb, q, k=5))
+    assert "TakeOrderedAndProject" in plan, plan
 
 
 def test_easy_negatives_no_cartesian(spark):

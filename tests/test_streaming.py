@@ -70,143 +70,3 @@ def test_stream_dedup_matches_batch(spark, tmp_path):
     got = {r["event_id"] for r in spark.table("dedup_events").collect()}
     expected = {r["event_id"] for r in events.collect()}
     assert got == expected
-
-
-def test_kg_upsert_stream_matches_batch(spark, tmp_path):
-    """Streaming incremental edge ingest == batch consolidation of the
-    full corpus: three micro-batches of triples (with page overlap
-    across batches) folded by upsert_edge_stream must converge to the
-    SAME weighted edges as one batch weighted_edges over the union —
-    support/min/max compose additively; the distinct-page count comes
-    from the merged HLL sketch (exact n_pages drifts to an upper bound
-    across batches, which the test pins too)."""
-    import datetime
-
-    from pyspark.sql import functions as F
-
-    from ontoemma_spark.operators.graph import weighted_edges
-    from ontoemma_spark.operators.sketch import hll_estimate
-    from ontoemma_spark.streaming.kg import read_edge_state, upsert_edge_stream
-
-    src = str(tmp_path / "triples_src")
-    state = str(tmp_path / "edge_state")
-    ckpt = str(tmp_path / "ckpt")
-    schema = "subj string, pred string, obj string, url string, ts date"
-    d = datetime.date
-
-    def rows(lo, hi, day):
-        # triple alternates between two keys; urls overlap across batches
-        return [
-            (
-                "paris" if i % 2 == 0 else "france",
-                "is_in",
-                "france" if i % 2 == 0 else "europe",
-                f"u{i % 40}",
-                d(2024, 1, day),
-            )
-            for i in range(lo, hi)
-        ]
-
-    batches = [rows(0, 30, 1), rows(20, 50, 2), rows(10, 35, 3)]
-    for i, b in enumerate(batches):
-        spark.createDataFrame(b, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(f"{src}/b{i}")
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/*")
-    )
-    q = upsert_edge_stream(stream, state, ckpt)
-    q.awaitTermination(120)
-
-    final = read_edge_state(spark, state)
-    assert final is not None
-    got = {
-        (r["subj"], r["pred"], r["obj"]): r
-        for r in final.withColumn(
-            "est", F.round(hll_estimate("hll"), 2)
-        ).collect()
-    }
-    ref = {
-        (r["subj"], r["pred"], r["obj"]): r
-        for r in weighted_edges(
-            spark.createDataFrame(sum(batches, []), schema),
-            key_cols=("subj", "pred", "obj"),
-            page_col="url",
-            ts_col="ts",
-        ).collect()
-    }
-    assert set(got) == set(ref) and len(got) == 2
-    for k in ref:
-        assert got[k]["support"] == ref[k]["support"]
-        assert got[k]["first_seen"] == ref[k]["first_seen"]
-        assert got[k]["last_seen"] == ref[k]["last_seen"]
-        # summed n_pages overcounts cross-batch repeats ...
-        assert got[k]["n_pages"] > ref[k]["n_pages"]
-        # ... while the merged sketch stays on the true distinct count
-        # (exactly: at <=40 urls and m=64 linear counting is near-exact)
-        assert abs(got[k]["est"] - ref[k]["n_pages"]) / ref[k]["n_pages"] < 0.25
-
-
-def test_kg_upsert_batch_replay_idempotent(spark, tmp_path):
-    """Replaying a micro-batch with the same batch_id (the Structured
-    Streaming failure-recovery contract) must leave the state
-    byte-identical — the merge reads its PREDECESSOR version, never its
-    own output."""
-    import datetime
-
-    from ontoemma_spark.streaming.kg import apply_edge_batch, read_edge_state
-
-    schema = "subj string, pred string, obj string, url string, ts date"
-    d = datetime.date
-    state = str(tmp_path / "state")
-    b0 = spark.createDataFrame(
-        [("a", "p", "b", "u1", d(2024, 1, 1))], schema
-    )
-    b1 = spark.createDataFrame(
-        [("a", "p", "b", "u2", d(2024, 1, 2)),
-         ("c", "p", "d", "u3", d(2024, 1, 2))], schema
-    )
-    apply_edge_batch(b0, 0, state)
-    apply_edge_batch(b1, 1, state)
-    first = sorted(
-        map(tuple, read_edge_state(spark, state).drop("hll").collect())
-    )
-    apply_edge_batch(b1, 1, state)  # replay
-    second = sorted(
-        map(tuple, read_edge_state(spark, state).drop("hll").collect())
-    )
-    assert first == second
-    row = {r["subj"]: r for r in read_edge_state(spark, state).collect()}
-    assert row["a"]["support"] == 2 and row["c"]["support"] == 1
-
-
-def test_kg_upsert_null_key_edges_and_keep_versions_guard(spark, tmp_path):
-    """Regressions from the r5 review: (1) a triple with a NULL key
-    column must survive the batch sketch join AND fold (not duplicate)
-    across merges — null-safe key equality end to end; (2)
-    keep_versions=1 would delete the predecessor a replayed batch must
-    re-read, so it is refused loudly."""
-    import pytest as _pytest
-
-    from ontoemma_spark.streaming.kg import apply_edge_batch, read_edge_state
-
-    state = str(tmp_path / "state")
-    b0 = spark.createDataFrame(
-        [("a", "p", None, "u1", 10), ("a", "p", "b", "u2", 11)],
-        "subj string, pred string, obj string, url string, ts bigint",
-    )
-    apply_edge_batch(b0, 0, state)
-    b1 = spark.createDataFrame(
-        [("a", "p", None, "u3", 12)],
-        "subj string, pred string, obj string, url string, ts bigint",
-    )
-    apply_edge_batch(b1, 1, state)
-    rows = {(r["subj"], r["pred"], r["obj"]): r["support"]
-            for r in read_edge_state(spark, state).collect()}
-    # null-key edge present, folded into ONE row with summed support
-    assert rows == {("a", "p", None): 2, ("a", "p", "b"): 1}
-
-    with _pytest.raises(ValueError, match="keep_versions=1"):
-        apply_edge_batch(b1, 2, state, keep_versions=1)

@@ -185,68 +185,3 @@ def test_warc_oversized_archive_fails_actionably(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(w, "_BINARYFILE_MAX_BYTES", 10)  # pretend tiny cap
     with pytest.raises(ValueError, match="2 GiB per-file cap"):
         w.load_warc(spark, str(d))
-
-
-def test_warc_stream_ingest_with_curation_gate(spark, tmp_path):
-    """Continuous-crawl ingest: archives ARRIVE in a directory, the
-    streaming scanner picks each up exactly once, HTML→text extraction
-    and the curation gate run inline, and the result matches the batch
-    path over the same archives (batch/stream parity)."""
-    from pyspark.sql import functions as F
-
-    from ontoemma_spark.extract.html_text import extract_text_col
-    from ontoemma_spark.sources.warc import load_warc, read_warc_stream
-    from ontoemma_spark.streaming.pages import gate_page_stream
-
-    d = tmp_path / "arriving"
-    d.mkdir()
-    prose = (b"Researchers described the results in a long report about "
-             b"membrane proteins and their folding behavior under heat "
-             b"stress conditions with further commentary on methods.")
-    good = b"<html><body><p>" + prose + b"</p></body></html>"
-    degenerate = b"<html><body>spam spam spam spam spam spam spam spam</body></html>"
-    with open(d / "crawl0.warc.gz", "wb") as f:
-        write_warc([("http://st.example/good", datetime(2026, 1, 1, 1), good),
-                    ("http://st.example/degen", datetime(2026, 1, 1, 2), degenerate)],
-                   f, gzip_members=True)
-
-    def with_text(pages):
-        return pages.withColumn(
-            "text", F.coalesce(F.col("text"), extract_text_col("html"))
-        )
-
-    def run_stream(qname):
-        gated = gate_page_stream(with_text(read_warc_stream(spark, str(d))))
-        q = (gated.select("url", "quality_score", "repeat_ratio", "content_hash")
-             .writeStream.format("memory").queryName(qname)
-             .outputMode("append").trigger(availableNow=True).start())
-        q.awaitTermination(120)
-        return {r["url"]: r for r in spark.sql(f"select * from {qname}").collect()}
-
-    got1 = run_stream("warc_gate_1")
-    assert set(got1) == {"http://st.example/good"}  # degenerate gated out
-
-    # a second archive arrives — recrawl of the SAME good page (content
-    # dedup drops it) plus one genuinely new page
-    with open(d / "crawl1.warc.gz", "wb") as f:
-        write_warc([("http://st.example/good-mirror", datetime(2026, 1, 1, 3), good),
-                    ("http://st.example/new", datetime(2026, 1, 1, 4),
-                     b"<html><body><p>Another page offers different "
-                     b"vocabulary entirely with measurements plus citations "
-                     b"and careful statistical analysis of every cohort."
-                     b"</p></body></html>")],
-                   f, gzip_members=True)
-    got2 = run_stream("warc_gate_2")
-    tails = {u.rsplit("/", 1)[-1] for u in got2}
-    # content dedup keeps exactly ONE of the good/good-mirror pair
-    # (which one is arrival-order-dependent), plus the new page
-    assert "new" in tails and "degen" not in tails
-    assert len(tails & {"good", "good-mirror"}) == 1
-    assert len(got2) == 2
-
-    # batch/stream parity on the deduped CONTENT (url choice within a
-    # duplicate pair is arbitrary in both modes)
-    batch = gate_page_stream(with_text(load_warc(spark, str(d))))
-    batch_hashes = {r["content_hash"] for r in batch.select("content_hash").collect()}
-    stream_hashes = {r["content_hash"] for r in got2.values()}
-    assert batch_hashes == stream_hashes and len(batch_hashes) == 2

@@ -184,26 +184,6 @@ def test_gzip_member_corruption_never_raises(pos, val):
     assert st_.get("pages", 0) == len(got)
 
 
-def test_scan_stats_report(spark, tmp_path):
-    """warc_scan_stats: per-archive quarantine counters through the
-    Spark scan path (one clean archive, one with junk + truncation)."""
-    from ontoemma_spark.sources.warc import warc_scan_stats
-
-    d = tmp_path / "archives"
-    d.mkdir()
-    (d / "clean.warc").write_bytes(_archive(_rows(4)))
-    messy = (_archive(_rows(2)) + b"\x00\x00garbage\r\n"
-             + _archive(_rows(3)[2:]))[:-10]
-    (d / "messy.warc").write_bytes(messy)
-    got = {r["path"].split("/")[-1]: r
-           for r in warc_scan_stats(spark, str(d)).collect()}
-    assert got["clean.warc"]["pages"] == 4
-    assert got["clean.warc"]["resyncs"] == 0
-    assert got["messy.warc"]["resyncs"] >= 1
-    assert got["messy.warc"]["pages"] >= 2
-    assert got["messy.warc"]["truncated"] == 1
-
-
 def test_negative_content_length_resyncs_not_slurps():
     """'Content-Length: -1' must quarantine + resync like a non-numeric
     length — read(-1) would slurp the whole remaining archive into one
