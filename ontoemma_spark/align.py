@@ -58,8 +58,14 @@ def align(
     if normalize:
         s_entities = normalize_entities(s_entities)
         t_entities = normalize_entities(t_entities)
-    s_count = s_entities.count()
-    t_count = t_entities.count()
+    # both corpus sizes (the blocking IDFs' N) in one job, not two
+    side = F.col("_is_s")
+    s_count, t_count = (
+        s_entities.select(F.lit(True).alias("_is_s"))
+        .unionByName(t_entities.select(F.lit(False).alias("_is_s")))
+        .agg(F.count_if(side), F.count_if(~side))
+        .first()
+    )
 
     cands = candidate_pairs_broadcast_index(
         entity_tokens(s_entities), entity_tokens(t_entities), s_count, t_count, top_k=top_k

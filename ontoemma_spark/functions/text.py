@@ -16,12 +16,34 @@ codegen. Semantics are pinned to the reference implementations:
 
 from __future__ import annotations
 
+from pyspark import SparkContext
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from ontoemma_spark.functions.stopwords import ENGLISH_STOPWORDS_SORTED
 
 TOKEN_PATTERN = r"[A-Za-z\d]+"
+
+# words → (gateway, JVM Seq of their literal Columns)
+_IN_LISTS: dict = {}
+
+
+def isin_words(col: Column, words: tuple[str, ...]) -> Column:
+    """``col IN (words)``, same semantics as ``col.isin(*words)``.
+
+    Column.isin crosses py4j once per literal (build it, then add it to
+    the argument list): ~500 round trips for the 179 stopwords on every
+    call. The literal Seq is built once per JVM gateway here and reused,
+    so each call costs one round trip. The optimizer still rewrites a
+    literal IN longer than spark.sql.optimizer.inSetConversionThreshold
+    (10) to an InSet hash lookup."""
+    from pyspark.sql.classic.column import Column as JvmColumn, _to_seq
+
+    sc = SparkContext._active_spark_context
+    hit = _IN_LISTS.get(words)
+    if hit is None or hit[0] is not sc._gateway:
+        hit = _IN_LISTS[words] = (sc._gateway, _to_seq(sc, [F.lit(w)._jc for w in words]))
+    return JvmColumn(col._jc.isin(hit[1]))
 
 
 def clean(col) -> Column:
@@ -47,11 +69,11 @@ def tokenize(col, *, remove_stopwords: bool = True) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     toks = F.regexp_extract_all(c, F.lit(TOKEN_PATTERN), 0)
     if remove_stopwords:
-        # r6: isin(...) — the optimizer rewrites the literal IN to an
-        # InSet hash lookup; ~array_contains(literal array, t) scanned
-        # all 179 stopwords per token interpreted. Same null-safe
-        # equality membership semantics.
-        toks = F.filter(toks, lambda t: ~t.isin(*ENGLISH_STOPWORDS_SORTED))
+        # r6: a literal IN — the optimizer rewrites it to an InSet hash
+        # lookup; ~array_contains(literal array, t) scanned all 179
+        # stopwords per token interpreted. Same null-safe equality
+        # membership semantics.
+        toks = F.filter(toks, lambda t: ~isin_words(t, ENGLISH_STOPWORDS_SORTED))
     return toks
 
 

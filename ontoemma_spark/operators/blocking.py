@@ -29,7 +29,16 @@ from pyspark.sql import functions as F
 
 from ontoemma_spark import config
 from ontoemma_spark.functions.text import char_ngrams, idf, normalize_string, tokenize
-from ontoemma_spark.session import driver_row_cap
+from ontoemma_spark.session import gated_collect
+
+
+# Entry bound of the broadcast-index probe's per-task memo (token set →
+# its candidate list). An entry holds the key's tokens and three lists
+# of at most top_k items: under 8 KB at the default top_k of 100, so a
+# full memo stays under 16 MB per Python worker. A task whose sources
+# have more distinct token sets clears the memo and starts over, which
+# only costs recomputing later repeats.
+PROBE_MEMO_ENTRIES = 2048
 
 
 def entity_tokens(
@@ -149,8 +158,8 @@ def candidate_pairs_broadcast_index(
     (CandidateSelection.py:31-44 holds exactly this index in one dict);
     valid whenever the KB-side index fits in executor memory (KBs are
     ≤10^6 entities vs 10^12 mentions — the north-rule regime). That
-    regime is ENFORCED: the index entry count is checked first (cheap
-    count job) and when it does not fit on the driver
+    regime is ENFORCED: the index entries are collected under a
+    limit(cap + 1) gate, and when they do not fit on the driver
     (session.driver_row_cap) the call falls back to the relational
     candidate_pairs plan, so a both-sides-big misuse cannot OOM the
     driver (tests/test_broadcast_index.py pins fallback identity).
@@ -182,53 +191,41 @@ def candidate_pairs_broadcast_index(
     import numpy as np
     import pandas as pd
 
+    spark = s_tokens.sparkSession
     vocab = shared_vocabulary(
         token_idf(s_tokens, s_count), token_idf(t_tokens, t_count)
     ).filter((F.col("s_idf") >= idf_limit) & (F.col("t_idf") >= idf_limit))
-
     t_keyed = t_tokens.join(F.broadcast(vocab.select("token", "t_idf")), "token")
-    t_sets = t_keyed.groupBy("entity_id").agg(
-        F.array_sort(F.collect_set("token")).alias("toks")
-    )
-    # The KB-small regime is ENFORCED, not assumed: measure the postings
-    # entry count (Σ per-entity above-floor tokens — the same quantity
-    # as the old Σ|t_ids| over the token index) with one cheap aggregate
-    # job, then collect the class table. t_sets is persisted across the
-    # two actions (DataFrame actions do not share shuffle stages, so an
-    # unpersisted guard would double the compute). Above the cap, fall
-    # back to the fully relational plan — the oversized index is never
-    # pulled to the driver, it spills to executor disk at worst.
-    from pyspark import StorageLevel
-
-    t_sets = t_sets.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        entries = t_sets.select(F.sum(F.size("toks"))).first()[0] or 0
-        if entries > driver_row_cap(t_sets, "toks"):
-            return candidate_pairs(
-                s_tokens, t_tokens, s_count, t_count,
-                idf_limit=idf_limit, top_k=top_k,
-            )
-        class_rows = (
-            t_sets.groupBy("toks")
-            .agg(
-                F.slice(
-                    F.array_sort(F.collect_list("entity_id")), 1, top_k
-                ).alias("t_ids")
-            )
-            .collect()
+    # The KB-small regime is ENFORCED, not assumed, by ONE gated
+    # collect (session.gated_collect) of the postings entries: the rows
+    # of t_keyed, one per distinct (target entity, above-floor token).
+    # At most driver_row_cap + 1 of them come to the driver; over the
+    # cap the call falls back to the fully relational plan — the
+    # oversized index is never pulled to the driver, it spills to
+    # executor disk at worst. The driver groups the entries into
+    # token-set classes itself.
+    entry_rows = gated_collect(t_keyed, "entity_id", "token", "t_idf")
+    if entry_rows is None:
+        return candidate_pairs(
+            s_tokens, t_tokens, s_count, t_count,
+            idf_limit=idf_limit, top_k=top_k,
         )
-        vocab_rows = vocab.select("token", "t_idf").collect()
-    finally:
-        t_sets.unpersist()
-    spark = s_tokens.sparkSession
-    idf_map = {r["token"]: float(r["t_idf"]) for r in vocab_rows}
-    # class postings: token → unique class codes; per-class top_k t_ids
-    # (already ascending via array_sort)
+    idf_map: dict = {}
+    entity_toks: dict = {}
+    for e, tok, idf_v in entry_rows:
+        idf_map[tok] = float(idf_v)
+        entity_toks.setdefault(e, set()).add(tok)
+    # token-set classes, each with its top_k smallest non-null t_ids
+    class_members: dict = {}
+    for e, toks in entity_toks.items():
+        class_members.setdefault(tuple(sorted(toks)), []).append(e)
+    # class postings: token → unique class codes
     class_tids: list = []
     postings_lists: dict = {}
-    for ci, r in enumerate(class_rows):
-        class_tids.append(np.array(r["t_ids"], dtype=object))
-        for tok in r["toks"]:
+    for ci, (toks, members) in enumerate(class_members.items()):
+        t_ids = sorted(e for e in members if e is not None)[:top_k]
+        class_tids.append(np.array(t_ids, dtype=object))
+        for tok in toks:
             postings_lists.setdefault(tok, []).append(ci)
     postings = {
         tok: (np.array(cs, dtype=np.int64), idf_map[tok])
@@ -243,7 +240,7 @@ def candidate_pairs_broadcast_index(
     # 138s vs 10.5s with coalescing off — this was the r5
     # blocking-vs-best_match 131s/8s driver anomaly). An explicit
     # partition count is exempt from AQE coalescing.
-    par = s_tokens.sparkSession.sparkContext.defaultParallelism
+    par = spark.sparkContext.defaultParallelism
     s_grouped = (
         s_tokens.groupBy(F.col("entity_id").alias("s_id"))
         .agg(F.array_sort(F.collect_set("token")).alias("tokens"))
@@ -252,6 +249,8 @@ def candidate_pairs_broadcast_index(
 
     id_type = s_tokens.schema["entity_id"].dataType.simpleString()
     out_schema = f"s_id {id_type}, t_id {id_type}, cand_score double, rank int"
+
+    memo_entries = PROBE_MEMO_ENTRIES
 
     def probe(batches):
         postings_l, class_tids_l = bc.value
@@ -301,6 +300,8 @@ def candidate_pairs_broadcast_index(
                         res = (t_out, sc_out, list(range(1, len(t_out) + 1)))
                     else:
                         res = ([], [], [])
+                    if len(memo) >= memo_entries:
+                        memo.clear()
                     memo[key] = res
                 t_ids_r, sc_r, rk_r = res
                 if t_ids_r:

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ontoemma_spark import config
-from ontoemma_spark.session import driver_row_cap
+from ontoemma_spark.session import gated_collect
 
 
 def connected_components(
@@ -32,24 +32,24 @@ def connected_components(
     """(node, component) with component = min node id (string order) in
     the node's connected component. Edges are treated as undirected.
 
-    r6 fast path (guide §1.2 step 1): the edge list is COUNTED first;
-    when it fits on the driver (session.driver_row_cap) it is collected
-    (Arrow) and labeled by driver-side union-find — the hash-min loop
-    schedules several shuffle jobs per round, which on the pair graphs
-    this operator actually sees (LSH survivors, alignment links: orders of
-    magnitude smaller than the corpus) is pure fixed overhead. The
-    guarded collect has the same legitimacy as a broadcast hash join's
-    build side: measured first, bounded by construction, and the
-    distributed loop below remains the over-cap path, unchanged.
+    r6 fast path (guide §1.2 step 1): the edge list is collected in one
+    job when it fits on the driver (session.gated_collect, which takes
+    at most driver_row_cap + 1 edges) and labeled by driver-side
+    union-find — the hash-min loop schedules several shuffle jobs per
+    round, which on the pair graphs this operator actually sees (LSH
+    survivors, alignment links: orders of magnitude smaller than the
+    corpus) is pure fixed overhead. The gated collect has the same
+    legitimacy as a broadcast hash join's build side: bounded by
+    construction, and the distributed loop below remains the over-cap
+    path, unchanged.
     Identical labels: union-find tracks the MIN id per set with the
     same comparison order (UTF-8 binary == code-point order) and the
     same null/self-loop conventions (a null endpoint never joins; a
     self-loop-only node is its own singleton).
     """
     e_small = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    cap = driver_row_cap(e_small, "a", "b")
-    if e_small.limit(cap + 1).count() <= cap:
-        edge_rows = e_small.collect()
+    edge_rows = gated_collect(e_small, "a", "b")
+    if edge_rows is not None:
         parent: dict = {}
 
         def find(x):
@@ -61,8 +61,7 @@ def connected_components(
             return r
 
         has_null = False
-        for row in edge_rows:
-            a, b = row["a"], row["b"]
+        for a, b in edge_rows:
             if a is None or b is None:
                 has_null = True
             for v in (a, b):
@@ -336,21 +335,21 @@ def strongly_connected_components(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    # r6 fast path (same guarded-collect pattern as connected_components'
-    # union-find): live is already deduped and materialized, so the size
-    # probe is cheap; when it fits on the driver the SCC runs as
+    # r6 fast path (same gated-collect pattern as connected_components'
+    # union-find): live is already deduped and materialized, so its
+    # gated collect is cheap; when it fits on the driver the SCC runs as
     # driver-side iterative Tarjan — the FW-BW coloring loop schedules
     # dozens of shuffle jobs per outer round, pure fixed overhead on the
     # small distinct link graphs this sees. Identical labels (component = min
     # SCC member; self-loop-only nodes are singletons via the node
     # universe). Above the cap: the distributed loop below, unchanged.
-    cap = driver_row_cap(live, "src", "dst")
-    if live.limit(cap + 1).count() <= cap:
+    live_rows = gated_collect(live, "src", "dst")
+    if live_rows is not None:
         from collections import defaultdict
 
         adj = defaultdict(list)
-        for r in live.collect():
-            adj[r["src"]].append(r["dst"])
+        for a, b in live_rows:
+            adj[a].append(b)
         node_list = [r["node"] for r in nodes.collect()]
         comp = _tarjan_components(node_list, adj)
         spark = edges.sparkSession
@@ -483,7 +482,7 @@ def bow_tie_classes(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    # r6 fast path (same guarded-collect pattern as SCC's Tarjan): on a
+    # r6 fast path (same gated-collect pattern as SCC's Tarjan): on a
     # small distinct link graph the IN/OUT sides are two plain BFS
     # closures from the core, replacing a multi-round distributed
     # min-label propagation. Exact same classification: forward
@@ -491,15 +490,15 @@ def bow_tie_classes(
     # backward ⟺ the backward label. Above the cap: the distributed
     # propagation, unchanged. The inner SCC call above applies the same
     # gate to the same edges.
-    cap = driver_row_cap(live, "src", "dst")
-    if live.limit(cap + 1).count() <= cap:
+    live_rows = gated_collect(live, "src", "dst")
+    if live_rows is not None:
         from collections import defaultdict, deque
 
         fwd = defaultdict(list)
         bwd = defaultdict(list)
-        for r in live.collect():
-            fwd[r["src"]].append(r["dst"])
-            bwd[r["dst"]].append(r["src"])
+        for a, b in live_rows:
+            fwd[a].append(b)
+            bwd[b].append(a)
         labels = [(r["node"], r["component"]) for r in scc.collect()]
         core = {n for n, c in labels if c == core_id}
 

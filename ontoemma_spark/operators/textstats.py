@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ontoemma_spark.functions.stopwords import ENGLISH_STOPWORDS_SORTED
+from ontoemma_spark.functions.text import isin_words
 
 # Mini function-word profiles (pinned; top function words per language).
 LANG_PROFILES: dict[str, tuple[str, ...]] = {
@@ -47,7 +48,7 @@ def language_id(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id")
     toks = whitespace_tokens(text_col)
     n = F.size(toks)
     scores = {
-        lang: F.size(F.filter(toks, lambda t: t.isin(*words))) / n
+        lang: F.size(F.filter(toks, lambda t: isin_words(t, words))) / n
         for lang, words in LANG_PROFILES.items()
     }
     # deterministic argmax: fold over fixed lang order, strict > keeps first
@@ -68,14 +69,14 @@ def language_id(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id")
 def _quality_parts(text_col: str):
     toks = whitespace_tokens(text_col)
     n_toks = F.size(toks)
-    # r6: isin(...) over the literal list — the optimizer rewrites a
-    # large IN to an InSet HASH lookup per token; the previous
+    # r6: a literal IN — the optimizer rewrites a large IN to an
+    # InSet HASH lookup per token; the previous
     # array_contains(literal array, t) was a LINEAR SCAN of all 179
     # stopwords per token inside an interpreted lambda (~9.5k string
     # compares per doc; the dominant cost of the curation gate).
     # Identical semantics: both are null-safe equality membership.
     stop_ratio = F.size(
-        F.filter(toks, lambda t: t.isin(*ENGLISH_STOPWORDS_SORTED))
+        F.filter(toks, lambda t: isin_words(t, ENGLISH_STOPWORDS_SORTED))
     ) / n_toks
     mean_len = F.aggregate(
         toks, F.lit(0.0), lambda acc, t: acc + F.length(t).cast("double")

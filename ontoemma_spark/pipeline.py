@@ -15,14 +15,22 @@ with the same out_dir resumes after the last completed stage — the
 done-file pattern the reference uses in
 extract_training_data_from_umls.py:82,398-400,569-594.
 
-Counters use df.observe → collected metrics, so they cost no extra pass.
+Counters cost no extra Spark job: every row counter is observed
+(DataFrame.observe) on the frame a stage writes, so the write job
+computes it — tableio.write_stage records rows / per-bucket lineage, and
+the pipeline adds the stage-specific ones (pages, components,
+multi-host facts) the same way. The one exception is `mentions`, the
+count that fills the persisted mention table's cache before align()
+reads it.
 """
 
 from __future__ import annotations
 
 import json
 import os
+from typing import Callable
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -57,16 +65,24 @@ def _write_manifest(out_dir: str, manifest: dict) -> None:
     os.replace(path + ".tmp", path)
 
 
-def _checkpoint(df: DataFrame, out_dir: str, stage: str, manifest: dict, metrics: dict,
-                bucket_col: str | None = None, n_buckets: int = 64,
-                fmt: str | None = None) -> DataFrame:
+def _stage_rows(entry: dict) -> int:
+    """Rows the stage's write job observed (tableio.write_stage)."""
+    if "rows" in entry:
+        return entry["rows"]
+    return sum(entry["partition_lineage"].values())
+
+
+def _checkpoint(df: DataFrame, out_dir: str, stage: str, manifest: dict,
+                metrics: Callable[[dict], dict],
+                bucket_col: str | None = None, fmt: str | None = None) -> DataFrame:
+    """Write one stage, then its manifest entry with metrics(entry) —
+    built after the write job, from what it observed — in one manifest
+    write. Returns the checkpoint read back."""
     # the writer seam: parquet / bucketed_table / iceberg is tableio's
     # decision (explicit fmt > $SPARK_GRAFT_TABLE_FORMAT > parquet) —
     # the pipeline never touches a writer API directly.
-    entry = tableio.write_stage(
-        df, out_dir, stage, fmt=fmt, bucket_col=bucket_col, n_buckets=n_buckets
-    )
-    entry["metrics"] = metrics
+    entry = tableio.write_stage(df, out_dir, stage, fmt=fmt, bucket_col=bucket_col)
+    entry["metrics"] = metrics(entry)
     manifest["stages"][stage] = entry
     _write_manifest(out_dir, manifest)
     return tableio.read_stage(df.sparkSession, entry)
@@ -209,82 +225,61 @@ def run_pipeline(
         )
         triples = _checkpoint(
             raw_triples, out_dir, "extract", manifest,
-            metrics={},  # filled after action below
+            metrics=lambda e: {"pages": obs.get["pages"], "triples": _stage_rows(e)},
             fmt=table_format,
         )
-        manifest["stages"]["extract"]["metrics"] = {
-            "pages": obs.get["pages"], "triples": triples.count()
-        }
-        _write_manifest(out_dir, manifest)
 
     # ---- stage 2: link --------------------------------------------------
     if "link" in done:
         links = _read_stage(spark, done["link"])
     else:
-        from pyspark import StorageLevel
-
         # mention table: distinct surface forms from subj+obj positions.
-        # Persisted: align() consumes it AND the mentions counter below
-        # reads it again — unpersisted, the explode+distinct over the
-        # corpus-scale triples table would execute twice.
+        # Persisted, and counted right away: the count is the job that
+        # fills the cache align() then reads — unpersisted, the
+        # explode+distinct over the corpus-scale triples table would run
+        # once per consumer.
         mentions = mention_entities(triples).persist(StorageLevel.MEMORY_AND_DISK)
         try:
+            n_mentions = mentions.count()
             result = align(mentions, kb_entities, model=model, threshold=threshold)
-            links = _checkpoint(result.alignment, out_dir, "link", manifest,
-                                metrics={}, fmt=table_format)
-            manifest["stages"]["link"]["metrics"] = {
-                "mentions": mentions.count(), "links": links.count()
-            }
+            links = _checkpoint(
+                result.alignment, out_dir, "link", manifest,
+                metrics=lambda e: {"mentions": n_mentions, "links": _stage_rows(e)},
+                fmt=table_format,
+            )
         finally:
             mentions.unpersist()
-        _write_manifest(out_dir, manifest)
 
     # ---- stage 3: canonicalize -----------------------------------------
     if "canonicalize" in done:
         canon = _read_stage(spark, done["canonicalize"])
     else:
         cc = connected_components(links.select("s_id", "t_id"), src="s_id", dst="t_id")
-        canon = _checkpoint(cc, out_dir, "canonicalize", manifest, metrics={},
-                            fmt=table_format)
-        manifest["stages"]["canonicalize"]["metrics"] = {
-            "nodes": canon.count(),
-            "components": canon.select("component").distinct().count(),
-        }
-        _write_manifest(out_dir, manifest)
+        # components = distinct labels: every component has exactly one
+        # node equal to its label (its min id), and the NULL node (a null
+        # endpoint's own NULL component) matches itself null-safely once
+        obs = Observation("canonicalize")
+        observed = cc.observe(
+            obs, F.count_if(F.col("node").eqNullSafe(F.col("component"))).alias("components")
+        )
+        canon = _checkpoint(
+            observed, out_dir, "canonicalize", manifest,
+            metrics=lambda e: {"nodes": _stage_rows(e), "components": obs.get["components"]},
+            fmt=table_format,
+        )
 
     # ---- stage 4: materialize -------------------------------------------
     if "materialize" not in done:
         # rewrite triple endpoints to canonical ids
         kg_edges = canonical_edge_rewrite(triples, canon, keep_cols=("url", "sent_idx"))
-        materialized = _checkpoint(kg_edges, out_dir, "materialize", manifest, metrics={},
-                                   bucket_col="subject_id", fmt=table_format)
-        # per-partition lineage: row count per entity-hash bucket (the
-        # north rule's per-partition counters; on Iceberg these live in
-        # snapshot manifests for free). write_stage already recorded
-        # exactly these counts from parquet footers (partition_lineage)
-        # — reuse them instead of a third full scan; other formats fall
-        # back to one scan of the CHECKPOINTED table.
-        entry = manifest["stages"]["materialize"]
-        if "partition_lineage" in entry:
-            bucket_counts = dict(entry["partition_lineage"])
-        else:
-            bucket_expr = F.pmod(
-                F.xxhash64(F.col("subject_id")), F.lit(64)
-            ).alias("bucket")
-            bucket_counts = {
-                str(r["bucket"]): r["count"]
-                for r in materialized.groupBy(bucket_expr).count().collect()
-            }
         # nodes = distinct canonical entity ids. Every link endpoint IS
         # a CC node (connected_components' universe comes from the edge
         # list), so the previous union-plus-anti-join over links was
         # provably empty work — the count equals the canonicalize
         # stage's components metric, already on the manifest.
-        # edges counts the CHECKPOINTED table (metadata-cheap), not the
-        # pre-checkpoint lineage, which re-ran the rewrite joins.
-        # ADVICE r5: a crash between canonicalize's checkpoint and its
-        # metrics write leaves done=True with metrics={} — a resumed run
-        # must not KeyError here; recompute the component count from the
+        # ADVICE r5: a manifest whose canonicalize entry lost its
+        # metrics (older runs wrote the entry before its counters) must
+        # not KeyError here; recompute the component count from the
         # checkpointed canonical table when the metric is absent.
         n_components = (
             manifest["stages"]["canonicalize"].get("metrics", {}).get("components")
@@ -295,13 +290,16 @@ def run_pipeline(
             manifest["stages"]["canonicalize"].setdefault("metrics", {})[
                 "components"
             ] = n_components
-        manifest["stages"]["materialize"]["metrics"] = {
-            "nodes": n_components,
-            "edges": sum(bucket_counts.values()) if bucket_counts
-            else materialized.count(),
-        }
-        manifest["stages"]["materialize"]["partitions"] = bucket_counts
-        _write_manifest(out_dir, manifest)
+        # per-partition lineage: row count per entity-hash bucket (the
+        # north rule's per-partition counters), observed by the write
+        # job itself (tableio.write_stage's partition_lineage); edges is
+        # their sum.
+        def materialize_metrics(e: dict) -> dict:
+            e["partitions"] = dict(e["partition_lineage"])
+            return {"nodes": n_components, "edges": _stage_rows(e)}
+
+        _checkpoint(kg_edges, out_dir, "materialize", manifest,
+                    metrics=materialize_metrics, bucket_col="subject_id", fmt=table_format)
 
     # ---- stage 5 (optional): fuse ----------------------------------------
     if fuse and "fuse" not in done:
@@ -323,15 +321,16 @@ def run_pipeline(
             "n_hosts",
             "belief",
         )
-        fused_ck = _checkpoint(
-            fused, out_dir, "fuse", manifest, metrics={},
+        obs = Observation("fuse")
+        observed = fused.observe(
+            obs, F.count_if(F.col("n_hosts") > 1).alias("multi_host_facts")
+        )
+        _checkpoint(
+            observed, out_dir, "fuse", manifest,
+            metrics=lambda e: {
+                "facts": _stage_rows(e), "multi_host_facts": obs.get["multi_host_facts"]
+            },
             bucket_col="subject_id", fmt=table_format,
         )
-        n_facts = fused_ck.count()
-        manifest["stages"]["fuse"]["metrics"] = {
-            "facts": n_facts,
-            "multi_host_facts": fused_ck.filter(F.col("n_hosts") > 1).count(),
-        }
-        _write_manifest(out_dir, manifest)
 
     return read_manifest(out_dir)

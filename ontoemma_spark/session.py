@@ -7,7 +7,8 @@ runtime skew/coalesce, including the token join in operators/blocking.py.
 driver_row_cap() is the one size gate of every kernel that has a
 driver-side fast path: it derives the cap from the session's own
 spark.sql.autoBroadcastJoinThreshold, so lowering or disabling that
-threshold moves every kernel to its distributed plan.
+threshold moves every kernel to its distributed plan. gated_collect()
+applies it to a table the fast path collects, in one action.
 """
 
 from __future__ import annotations
@@ -95,3 +96,19 @@ def driver_row_cap(df: DataFrame, *cols: str) -> int:
     schema = df._jdf.schema()
     width = sum(schema.apply(c).dataType().defaultSize() for c in cols)
     return threshold // width
+
+
+def gated_collect(df: DataFrame, *cols: str) -> list[tuple] | None:
+    """The rows of ``df[cols]`` as tuples when they fit on the driver
+    (at most driver_row_cap(df, *cols) of them), else None.
+
+    One action, and the driver never receives more than cap + 1 rows:
+    each partition is limited to cap + 1 locally, in parallel, and the
+    survivors come back as Arrow. A plain limit(n).collect() would scan
+    the partitions one job at a time until n rows turned up, running an
+    uncached upstream one partition after another."""
+    cap = driver_row_cap(df, *cols)
+    table = df.select(*cols).limit(cap + 1).toArrow()
+    if table.num_rows > cap:
+        return None
+    return list(zip(*(table.column(c).to_pylist() for c in cols)))

@@ -32,8 +32,9 @@ from __future__ import annotations
 
 import os
 import re
+from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 FORMATS = ("parquet", "bucketed_table", "iceberg")
@@ -59,6 +60,32 @@ def _table_ident(out_dir: str, stage: str) -> str:
     return f"kg_{slug}_{h}_{stage}"
 
 
+def _observe_lineage(
+    df: DataFrame, bucket_col: str | None, n_buckets: int
+) -> tuple[DataFrame, Callable[[], dict]]:
+    """Attach the stage's lineage counters to the frame about to be
+    written, so the write job itself computes them (DataFrame.observe)
+    instead of a read-back job after it. Returns the observed frame and
+    a function that, after the write, gives the entry fields:
+    {"rows": n}, or with bucket_col {"partition_lineage": {bucket: n}}
+    over pmod(xxhash64(bucket_col), n_buckets) — the parquet layout's
+    bucket directories — listing only non-empty buckets.
+
+    The per-bucket counts are one array of count_if aggregates parsed
+    from one SQL string: a handful of py4j round trips, where n_buckets
+    separately built Columns cost thousands."""
+    obs = Observation()
+    if bucket_col is None:
+        observed = df.observe(obs, F.count(F.lit(1)).alias("rows"))
+        return observed, lambda: {"rows": obs.get["rows"]}
+    bucket = f"pmod(xxhash64(`{bucket_col}`), {n_buckets})"
+    counts = ", ".join(f"count_if({bucket} = {b})" for b in range(n_buckets))
+    observed = df.observe(obs, F.expr(f"array({counts})").alias("buckets"))
+    return observed, lambda: {
+        "partition_lineage": {str(b): n for b, n in enumerate(obs.get["buckets"]) if n}
+    }
+
+
 def write_stage(
     df: DataFrame,
     out_dir: str,
@@ -68,16 +95,24 @@ def write_stage(
     n_buckets: int = 64,
 ) -> dict:
     """Write one stage table; returns the manifest entry used to read it
-    back ({format, path|table, schema, done})."""
+    back ({format, path|table, schema, done}) with the lineage the write
+    job observed: "rows", or with bucket_col the row count per
+    entity-hash bucket ("partition_lineage"). A resume VALIDATES a
+    parquet checkpoint against it (validate_stage); the pipeline reads
+    its row counters from it. Iceberg keeps the same stats in its own
+    snapshot manifests, and the bucketed_table layout has no partition
+    directories, but both record the counts so the counters read the
+    same on every format."""
     fmt = resolve_format(fmt)
     path = os.path.join(out_dir, stage)
     entry: dict = {"format": fmt, "done": True}
+    observed, lineage = _observe_lineage(df, bucket_col, n_buckets)
 
     if fmt == "parquet":
         if bucket_col is not None:
             # entity-hash bucket partitioning (north rule): co-locates
             # each entity's rows; partition pruning serves point lookups.
-            out = df.withColumn(
+            out = observed.withColumn(
                 "bucket", F.pmod(F.xxhash64(F.col(bucket_col)), F.lit(n_buckets))
             )
             out.write.mode("overwrite").partitionBy("bucket").parquet(path)
@@ -85,59 +120,40 @@ def write_stage(
             entry["bucket_col"] = bucket_col
             entry["n_buckets"] = n_buckets
         else:
-            out = df
+            out = observed
             out.write.mode("overwrite").parquet(path)
         entry["path"] = path
         # schema pinned: an empty stage output writes no part files, so
         # a RESUMING run could not infer it otherwise.
         entry["schema"] = out.schema.json()
-        # per-partition lineage (north rule): row count per bucket
-        # directory, recorded at write time so a resume can VALIDATE the
-        # checkpoint before trusting it (validate_stage). Computed by
-        # reading the written files back — count-per-partition-value is
-        # answered from parquet footers + directory names, no data pages
-        # — so it costs metadata IO, not a recompute of df's lineage.
-        # (Iceberg keeps these stats in its own snapshot manifests; the
-        # bucketed_table layout has no partition dirs to key them by.)
-        back = df.sparkSession.read.schema(
-            out.schema
-        ).parquet(path)
-        if bucket_col is not None:
-            counts = back.groupBy("bucket").agg(F.count(F.lit(1)).alias("n")).collect()
-            entry["partition_lineage"] = {str(r["bucket"]): r["n"] for r in counts}
-        else:
-            entry["rows"] = back.count()
-        return entry
-
-    if fmt == "bucketed_table":
+    elif fmt == "bucketed_table":
         ident = _table_ident(out_dir, stage)
         key = bucket_col or df.columns[0]
         (
-            df.write.mode("overwrite")
+            observed.write.mode("overwrite")
             .bucketBy(n_buckets, key)
             .sortBy(key)
             .saveAsTable(ident)
         )
         entry.update(table=ident, bucket_col=key, schema=df.schema.json())
-        return entry
-
-    # fmt == "iceberg": the V2 writer call, gated on a configured catalog.
-    spark = df.sparkSession
-    catalog = spark.conf.get("spark.sql.catalog.kg", None)
-    if not catalog:
-        raise RuntimeError(
-            "table format 'iceberg' needs an Iceberg catalog on the session "
-            "(spark.sql.catalog.kg=org.apache.iceberg.spark.SparkCatalog + "
-            "iceberg-spark-runtime on the classpath); neither is available "
-            "in this sandbox. Use format='bucketed_table' for the same "
-            "co-located-join layout through the builtin catalog."
-        )
-    ident = f"kg.{_table_ident(out_dir, stage)}"
-    writer = df.writeTo(ident).using("iceberg")
-    if bucket_col is not None:
-        writer = writer.partitionedBy(F.bucket(n_buckets, F.col(bucket_col)))
-    writer.createOrReplace()
-    entry.update(table=ident, bucket_col=bucket_col, schema=df.schema.json())
+    else:
+        # fmt == "iceberg": the V2 writer call, gated on a configured catalog.
+        catalog = df.sparkSession.conf.get("spark.sql.catalog.kg", None)
+        if not catalog:
+            raise RuntimeError(
+                "table format 'iceberg' needs an Iceberg catalog on the session "
+                "(spark.sql.catalog.kg=org.apache.iceberg.spark.SparkCatalog + "
+                "iceberg-spark-runtime on the classpath); neither is available "
+                "in this sandbox. Use format='bucketed_table' for the same "
+                "co-located-join layout through the builtin catalog."
+            )
+        ident = f"kg.{_table_ident(out_dir, stage)}"
+        writer = observed.writeTo(ident).using("iceberg")
+        if bucket_col is not None:
+            writer = writer.partitionedBy(F.bucket(n_buckets, F.col(bucket_col)))
+        writer.createOrReplace()
+        entry.update(table=ident, bucket_col=bucket_col, schema=df.schema.json())
+    entry.update(lineage())
     return entry
 
 
@@ -146,9 +162,11 @@ def append_stage(df: DataFrame, entry: dict) -> None:
     write; on Iceberg this commits a new snapshot).
 
     MUTATES entry's recorded lineage (rows / partition_lineage) to the
-    post-append truth, same metadata-only re-read as write_stage —
-    without it validate_stage would flag every healthy appended
-    checkpoint as corrupt (stale expected counts). Callers persist the
+    post-append truth, re-counted from the parquet files (partition
+    directories + footers) — without it validate_stage would flag every
+    healthy appended checkpoint as corrupt (stale expected counts). The
+    table formats drop theirs instead: nothing validates them, and a
+    stale count must not be read as the table's. Callers persist the
     updated entry by rewriting the manifest, which the incremental
     path already does."""
     fmt = entry.get("format", "parquet")
@@ -182,6 +200,9 @@ def append_stage(df: DataFrame, entry: dict) -> None:
         df.write.mode("append").insertInto(entry["table"])
     else:  # iceberg
         df.writeTo(entry["table"]).append()
+    if fmt != "parquet":
+        entry.pop("rows", None)
+        entry.pop("partition_lineage", None)
 
 
 def read_stage(spark: SparkSession, entry: dict) -> DataFrame:

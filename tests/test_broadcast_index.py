@@ -227,3 +227,26 @@ def test_auto_jaccard_threshold_zero_both_sides(spark, broadcast_off):
         slow = rows(slow_df)
     assert slow == rel == fast
     assert len(rel) > 0
+
+
+def test_broadcast_index_memo_bound_overflow(spark, monkeypatch):
+    """The probe's per-task memo is bounded (PROBE_MEMO_ENTRIES): with a
+    bound of 2 every task's distinct source token sets overflow it many
+    times, interleaved with repeats that hit it, and the candidates stay
+    identical to the relational plan's."""
+    from ontoemma_spark.operators import blocking
+
+    monkeypatch.setattr(blocking, "PROBE_MEMO_ENTRIES", 2)
+    vocab = [f"w{i}" for i in range(12)]
+    t_rows = [(100 + t, vocab[(t * 5 + j) % 12]) for t in range(20) for j in range(3)]
+    # 60 sources over 12 distinct token sets, so sets repeat within a task
+    s_rows = [(s, vocab[(s % 15 + j * 4) % 12]) for s in range(60) for j in range(2)]
+    s_tok = spark.createDataFrame(s_rows, "entity_id bigint, token string").distinct()
+    t_tok = spark.createDataFrame(t_rows, "entity_id bigint, token string").distinct()
+    a = _rows(candidate_pairs(s_tok, t_tok, 60, 20, idf_limit=0.0, top_k=4))
+    b = _rows(candidate_pairs_broadcast_index(s_tok, t_tok, 60, 20, idf_limit=0.0, top_k=4))
+    assert len(a) > 60
+    assert set(a) == set(b)
+    for k in a:
+        assert a[k][1] == b[k][1], k
+        assert abs(a[k][0] - b[k][0]) < 1e-12, k

@@ -1,0 +1,124 @@
+"""The pipeline's manifest counters are observed on the stage writes
+(DataFrame.observe), not recounted by extra jobs. Each observed counter
+must equal its explicit recount, on every table format, and the whole
+fused pipeline must stay inside a Spark job budget, so that a counter
+action added back fails here."""
+
+import pytest
+from pyspark.sql import functions as F
+
+from ontoemma_spark import tableio
+from ontoemma_spark.datagen import synthetic_kb, synthetic_pages
+from ontoemma_spark.operators.components import connected_components
+from ontoemma_spark.pipeline import mention_entities, run_pipeline
+
+
+def _multi_host_pages(spark, n_pages=30, kb_size=10):
+    """Pages on three hosts; with kb_size < n_pages the same facts recur
+    on several hosts, so multi_host_facts is not 0."""
+    page_no = F.regexp_extract("url", r"(\d+)$", 1).cast("int")
+    return synthetic_pages(spark, n_pages=n_pages, kb_size=kb_size).withColumn(
+        "url",
+        F.concat(F.lit("https://h"), (page_no % 3).cast("string"),
+                 F.lit(".example/page/"), page_no.cast("string")),
+    )
+
+
+def _drop_tables(spark, manifest):
+    for entry in manifest["stages"].values():
+        if "table" in entry:
+            spark.sql(f"DROP TABLE IF EXISTS {entry['table']}")
+
+
+@pytest.mark.parametrize("fmt", ["parquet", "bucketed_table"])
+def test_observed_counters_equal_recounts(spark, tmp_path, fmt):
+    """Every manifest metric equals the count()/distinct().count()/
+    per-bucket groupBy the pipeline used to run for it, and every
+    checkpoint validates against the lineage its write observed."""
+    pages = _multi_host_pages(spark)
+    kb, _ = synthetic_kb(spark, "KB", n_entities=10)
+    m = run_pipeline(spark, pages, kb, str(tmp_path / fmt), table_format=fmt, fuse=True)
+    try:
+        st = m["stages"]
+
+        def read(stage):
+            return tableio.read_stage(spark, st[stage])
+
+        triples, canon, edges, fused = (
+            read("extract"), read("canonicalize"), read("materialize"), read("fuse")
+        )
+        n_components = canon.select("component").distinct().count()
+        bucket = F.pmod(F.xxhash64(F.col("subject_id")), F.lit(64))
+        partitions = {
+            str(r["b"]): r["count"] for r in edges.groupBy(bucket.alias("b")).count().collect()
+        }
+        assert st["extract"]["metrics"] == {"pages": pages.count(), "triples": triples.count()}
+        assert st["link"]["metrics"] == {
+            "mentions": mention_entities(triples).count(), "links": read("link").count()
+        }
+        assert st["canonicalize"]["metrics"] == {
+            "nodes": canon.count(), "components": n_components
+        }
+        assert st["materialize"]["metrics"] == {"nodes": n_components, "edges": edges.count()}
+        assert st["materialize"]["partitions"] == partitions
+        assert st["fuse"]["metrics"] == {
+            "facts": fused.count(),
+            "multi_host_facts": fused.filter(F.col("n_hosts") > 1).count(),
+        }
+        assert st["fuse"]["metrics"]["multi_host_facts"] > 0
+        for stage, entry in st.items():
+            assert tableio.validate_stage(spark, entry)["ok"], stage
+    finally:
+        _drop_tables(spark, m)
+
+
+def test_zero_row_stage_write_lineage(spark, tmp_path):
+    """An empty stage writes rows == 0, or an empty partition_lineage,
+    and still validates."""
+    empty = spark.range(10).select(F.col("id").cast("string").alias("k")).filter("k = 'x'")
+    flat = tableio.write_stage(empty, str(tmp_path), "flat")
+    bucketed = tableio.write_stage(empty, str(tmp_path), "bucketed", bucket_col="k")
+    assert flat["rows"] == 0
+    assert bucketed["partition_lineage"] == {}
+    assert tableio.validate_stage(spark, flat)["ok"]
+    assert tableio.validate_stage(spark, bucketed)["ok"]
+
+
+def test_component_count_identity_both_gate_sides(spark, broadcast_off):
+    """The canonicalize stage counts components as count_if(node <=>
+    component): one node per component equals its label, and the NULL
+    node of a null endpoint counts once — on both sides of CC's gate."""
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("d", "e"), ("f", "f"), (None, "g"), ("h", None)],
+        "s string, t string",
+    )
+
+    def both(cc):
+        labelled = cc.select(F.count_if(F.col("node").eqNullSafe(F.col("component")))).first()[0]
+        return labelled, cc.select("component").distinct().count()
+
+    fast = both(connected_components(edges, src="s", dst="t"))
+    with broadcast_off():
+        distributed = both(connected_components(edges, src="s", dst="t"))
+    assert fast[0] == fast[1] == distributed[0] == distributed[1]
+
+
+# Spark jobs of the pipeline below, measured on local[4] with 4 shuffle
+# partitions: 51 with every counter observed on its stage write and one
+# action per size gate; 87 when each counter, each write's read-back and
+# each gate probe ran jobs of its own.
+PIPELINE_JOB_BUDGET = 51
+
+
+def test_pipeline_job_budget(spark, tmp_path):
+    pages = synthetic_pages(spark, n_pages=20)
+    kb, _ = synthetic_kb(spark, "KB", n_entities=20)
+    sc = spark.sparkContext
+    group = "test_pipeline_job_budget"
+    sc.setJobGroup(group, group)
+    try:
+        run_pipeline(spark, pages, kb, str(tmp_path / "kg"), fuse=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs <= PIPELINE_JOB_BUDGET, jobs

@@ -86,3 +86,28 @@ def test_idf(spark):
 def test_acronym(spark):
     df = spark.createDataFrame([(["heart", "rate", "x2"],)], "t array<string>")
     assert df.select(acronym("t").alias("v")).collect()[0]["v"] == "hrx"
+
+
+def test_word_lists_stay_inset_and_are_built_once(spark):
+    """tokenize, the quality gate and language_id test membership in
+    pinned word lists through one cached JVM literal list per gateway.
+    The optimized plans keep the hash lookup: the 179-stopword IN
+    becomes an InSet; the 10-word language profiles are at
+    spark.sql.optimizer.inSetConversionThreshold and stay a literal IN."""
+    from ontoemma_spark.functions import text
+    from ontoemma_spark.functions.stopwords import ENGLISH_STOPWORDS_SORTED
+    from ontoemma_spark.operators.textstats import LANG_PROFILES, language_id, quality_score_col
+
+    docs = spark.createDataFrame([(1, "the cell of a body")], "doc_id long, text string")
+
+    def plan(df):
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    assert "INSET" in plan(docs.select(tokenize("text")))
+    assert "INSET" in plan(docs.select(quality_score_col("text")))
+    lang_plan = plan(language_id(docs))
+    for words in LANG_PROFILES.values():
+        assert f"IN ({','.join(words)})" in lang_plan
+    cached = text._IN_LISTS[ENGLISH_STOPWORDS_SORTED][1]
+    docs.select(tokenize("text"), quality_score_col("text")).collect()
+    assert text._IN_LISTS[ENGLISH_STOPWORDS_SORTED][1] is cached
