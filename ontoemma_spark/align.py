@@ -10,12 +10,23 @@ emma/OntoEmma.py:816-873 `align`) as one lazy DataFrame composition:
 
 The string-equiv anti-join short-circuit mirrors the reference: sources
 matched exactly skip model scoring entirely (OntoEmma.py:693-715).
+
+Two intermediates are persisted (MEMORY_AND_DISK): the candidates
+(bounded by top_k × |S|) and the string-equiv pairs (a subset of them).
+The candidates feed the string-equiv join and the to-score pairs; the
+string-equiv pairs feed the two anti-joins that short-circuit model
+scoring and the score union. Unpersisted, one action on the alignment
+would run the blocking probe four times. The caller owns the cache:
+AlignmentResult.release() unpersists both after the last action on the
+result (run_pipeline releases in the finally around its link write). If
+align() itself raises, it unpersists them before the error propagates.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -33,6 +44,12 @@ class AlignmentResult:
     string_equiv: DataFrame  # (s_id, t_id, score=1.0)
     scores: DataFrame  # all scored pairs (s_id, t_id, score)
     alignment: DataFrame  # strategy output (s_id, t_id, score)
+
+    def release(self) -> None:
+        """Unpersist the candidates and string-equiv pairs align()
+        cached. Later actions on this result recompute them."""
+        self.candidates.unpersist()
+        self.string_equiv.unpersist()
 
 
 def align(
@@ -69,10 +86,31 @@ def align(
 
     cands = candidate_pairs_broadcast_index(
         entity_tokens(s_entities), entity_tokens(t_entities), s_count, t_count, top_k=top_k
+    ).persist(StorageLevel.MEMORY_AND_DISK)
+    equiv = string_equiv_alignment(s_entities, t_entities, candidates=cands).persist(
+        StorageLevel.MEMORY_AND_DISK
     )
+    try:
+        scores = equiv.select("s_id", "t_id", "score").unionByName(
+            _model_scores(s_entities, t_entities, cands, equiv, model)
+        )
+        alignment = apply_alignment_strategy(scores, strategy, threshold)
+    except BaseException:
+        cands.unpersist()
+        equiv.unpersist()
+        raise
+    return AlignmentResult(cands, equiv, scores, alignment)
 
-    equiv = string_equiv_alignment(s_entities, t_entities, candidates=cands)
 
+def _model_scores(
+    s_entities: DataFrame,
+    t_entities: DataFrame,
+    cands: DataFrame,
+    equiv: DataFrame,
+    model,
+) -> DataFrame:
+    """(s_id, t_id, score) from the model for the candidates string
+    equivalence left unmatched."""
     # model scoring short-circuit (OntoEmma.py:695-722 _apply_model_align):
     # skip sources AND targets already string-equiv matched, and skip
     # unnamed entities whose canonical name equals their id (P8,
@@ -117,10 +155,7 @@ def align(
         hydrated = featurized.join(
             F.broadcast(_text_side(s_entities, "s")), "s_id"
         ).join(F.broadcast(_text_side(t_entities, "t")), "t_id")
-        model_scores = score_pairs_siamese(hydrated, model)
-        scores = equiv.select("s_id", "t_id", "score").unionByName(model_scores)
-        alignment = apply_alignment_strategy(scores, strategy, threshold)
-        return AlignmentResult(cands, equiv, scores, alignment)
+        return score_pairs_siamese(hydrated, model)
 
     if isinstance(model, MLPModel) and list(model.feature_names) == NN_PAIR_FEATURES:
         # NN pair scorer (reference _align_nn, OntoEmma.py:737,766-797):
@@ -150,8 +185,4 @@ def align(
             entity_feature_table(s_entities),
             entity_feature_table(t_entities),
         )
-    model_scores = model.score_pairs(featurized).select("s_id", "t_id", "score")
-
-    scores = equiv.select("s_id", "t_id", "score").unionByName(model_scores)
-    alignment = apply_alignment_strategy(scores, strategy, threshold)
-    return AlignmentResult(cands, equiv, scores, alignment)
+    return model.score_pairs(featurized).select("s_id", "t_id", "score")

@@ -199,16 +199,19 @@ def run_align(
                        strategy=strategy, threshold=threshold)
         alignment = result.alignment
 
-    if output:
-        write_alignment_any(alignment.select("s_id", "t_id", "score"), output)
+    try:
+        if output:
+            write_alignment_any(alignment.select("s_id", "t_id", "score"), output)
 
-    metrics: dict = {"alignments": alignment.count()}
-    if gold:
-        g = load_alignment_any(spark, gold)
-        m = precision_recall_f1(alignment.select("s_id", "t_id"), g).first()
-        metrics.update(
-            precision=m["precision"], recall=m["recall"], f1=m["f1"]
-        )
+        metrics: dict = {"alignments": alignment.count()}
+        if gold:
+            g = load_alignment_any(spark, gold)
+            m = precision_recall_f1(alignment.select("s_id", "t_id"), g).first()
+            metrics.update(
+                precision=m["precision"], recall=m["recall"], f1=m["f1"]
+            )
+    finally:
+        result.release()
     return alignment, metrics
 
 

@@ -130,33 +130,28 @@ def entity_feature_table(entities: DataFrame, id_out: str = "entity_id") -> Data
     return df
 
 
-def _set_jaccard(a: Column, b: Column) -> Column:
+def _set_jaccard(a: str, b: str) -> str:
     """Jaccard over arrays treated as sets; -1.0 if either empty
     (string_utils.py:52-63)."""
-    nonempty = (F.size(a) > 0) & (F.size(b) > 0)
-    return F.when(
-        nonempty,
-        F.size(F.array_intersect(a, b)).cast("double")
-        / F.size(F.array_union(a, b)).cast("double"),
-    ).otherwise(F.lit(-1.0))
+    return (
+        f"CASE WHEN size({a}) > 0 AND size({b}) > 0"
+        f" THEN CAST(size(array_intersect({a}, {b})) AS DOUBLE)"
+        f" / CAST(size(array_union({a}, {b})) AS DOUBLE) ELSE -1.0D END"
+    )
 
 
-def _max_jaccard(alists: Column, blists: Column) -> Column:
+def _max_jaccard(alists: str, blists: str) -> str:
     """Max pairwise jaccard over two arrays-of-token-arrays
     (EngineeredFeatureGenerator.py:149-163). Reference floor is 0.0 even
     when a pair would score -1.0 (max starts at 0.0). Native nested
     transform + array_max — no Python."""
-    all_scores = F.flatten(
-        F.transform(alists, lambda a: F.transform(blists, lambda b: _set_jaccard(a, b)))
-    )
-    return F.coalesce(
-        F.greatest(F.array_max(all_scores), F.lit(0.0)), F.lit(0.0)
-    )
+    pairs = f"transform({alists}, x -> transform({blists}, y -> {_set_jaccard('x', 'y')}))"
+    return f"coalesce(greatest(array_max(flatten({pairs})), 0.0D), 0.0D)"
 
 
-def _overlaps(a: Column, b: Column) -> Column:
+def _overlaps(a: str, b: str) -> str:
     """Non-disjoint test (EngineeredFeatureGenerator.py:165-173)."""
-    return F.coalesce(F.arrays_overlap(a, b), F.lit(False))
+    return f"coalesce(arrays_overlap({a}, {b}), false)"
 
 
 # Fixed feature order per the NN dataset reader
@@ -206,71 +201,80 @@ def featurize_pairs(
     """Candidate pairs (s_id, t_id, ...) × entity feature tables → the 32
     engineered features (EngineeredFeatureGenerator.py:226-338), all as
     native column expressions. Feature tables are broadcast by default
-    (KB side is small; at 10^12 pairs the pair side must never move)."""
-    s_feat = s_features.select([F.col(c).alias(f"s_{c}") for c in s_features.columns])
-    t_feat = t_features.select([F.col(c).alias(f"t_{c}") for c in t_features.columns])
+    (KB side is small; at 10^12 pairs the pair side must never move).
+
+    The features are SQL expression strings, which Spark parses into the
+    same native expressions a Column build gives, projected in one
+    selectExpr: tens of py4j round trips instead of one per expression
+    node. Double literals are written `…D`; a bare `-1.0` would parse as
+    a decimal."""
+    s_feat = s_features.toDF(*[f"s_{c}" for c in s_features.columns])
+    t_feat = t_features.toDF(*[f"t_{c}" for c in t_features.columns])
     if broadcast_features:
         s_feat, t_feat = F.broadcast(s_feat), F.broadcast(t_feat)
     df = pairs.join(s_feat, pairs["s_id"] == s_feat["s_entity_id"]).join(
         t_feat, pairs["t_id"] == t_feat["t_entity_id"]
     )
 
-    s, t = (lambda c: F.col(f"s_{c}")), (lambda c: F.col(f"t_{c}"))
-    sort = F.array_sort
+    def both(c: str) -> tuple[str, str]:
+        return f"s_{c}", f"t_{c}"
 
-    s_all = F.concat(s("aliases"), s("wiki_entities"), s("mesh_synonyms"), s("dbpedia_synonyms"))
-    t_all = F.concat(t("aliases"), t("wiki_entities"), t("mesh_synonyms"), t("dbpedia_synonyms"))
-    s_all_tokens = F.concat(
-        s("alias_tokens"), s("wiki_ent_tokens"), s("mesh_syn_tokens"), s("dbpedia_syn_tokens")
-    )
-    t_all_tokens = F.concat(
-        t("alias_tokens"), t("wiki_ent_tokens"), t("mesh_syn_tokens"), t("dbpedia_syn_tokens")
-    )
+    def synonyms(p: str) -> str:
+        return f"concat({p}_aliases, {p}_wiki_entities, {p}_mesh_synonyms, {p}_dbpedia_synonyms)"
+
+    def synonym_tokens(p: str) -> str:
+        return (
+            f"concat({p}_alias_tokens, {p}_wiki_ent_tokens, {p}_mesh_syn_tokens,"
+            f" {p}_dbpedia_syn_tokens)"
+        )
+
+    def same(c: str) -> str:
+        return f"s_{c} = t_{c}"
+
+    def same_set(c: str) -> str:
+        return f"array_sort(array_distinct(s_{c})) = array_sort(array_distinct(t_{c}))"
 
     feats = {
-        "has_same_canonical_name": s("canonical_name") == t("canonical_name"),
-        "has_same_canonical_name_tokens": s("name_tokens") == t("name_tokens"),
-        "has_same_canonical_name_token_set": sort(F.array_distinct(s("name_tokens")))
-        == sort(F.array_distinct(t("name_tokens"))),
-        "has_same_stemmed_name_tokens": s("stemmed_name_tokens") == t("stemmed_name_tokens"),
-        "has_same_stemmed_name_token_set": sort(F.array_distinct(s("stemmed_name_tokens")))
-        == sort(F.array_distinct(t("stemmed_name_tokens"))),
-        "has_same_lemmatized_name_tokens": s("lemmatized_name_tokens")
-        == t("lemmatized_name_tokens"),
-        "has_same_lemmatized_name_token_set": sort(F.array_distinct(s("lemmatized_name_tokens")))
-        == sort(F.array_distinct(t("lemmatized_name_tokens"))),
-        "name_char_4gram_jaccard": _set_jaccard(s("name_char_4grams"), t("name_char_4grams")),
-        "name_char_5gram_jaccard": _set_jaccard(s("name_char_5grams"), t("name_char_5grams")),
-        "has_alias_in_common": _overlaps(s("aliases"), t("aliases")),
-        "has_alias_tokens_in_common": _overlaps(s("alias_tokens"), t("alias_tokens")),
-        "has_alias_token_set_in_common": _overlaps(s("alias_token_set"), t("alias_token_set")),
-        "alias_token_jaccard": _set_jaccard(s("alias_token_set"), t("alias_token_set")),
-        "max_alias_token_jaccard": _max_jaccard(s("alias_token_set"), t("alias_token_set")),
-        "max_alias_4gram_jaccard": _max_jaccard(s("alias_char_4grams"), t("alias_char_4grams")),
-        "max_alias_5gram_jaccard": _max_jaccard(s("alias_char_5grams"), t("alias_char_5grams")),
-        "has_same_acronym": _overlaps(s("acronyms"), t("acronyms"))
-        | _overlaps(s("acronyms"), t("aliases"))
-        | _overlaps(s("aliases"), t("acronyms")),
-        "definition_token_jaccard": _set_jaccard(s("def_tokens"), t("def_tokens")),
-        "has_same_wiki_entity": _overlaps(s("wiki_entities"), t("wiki_entities")),
-        "wiki_entity_jaccard": _set_jaccard(s("wiki_entities"), t("wiki_entities")),
-        "max_wiki_entity_jaccard": _max_jaccard(s("wiki_ent_tokens"), t("wiki_ent_tokens")),
-        "has_same_mesh_synonym": _overlaps(s("mesh_synonyms"), t("mesh_synonyms")),
-        "mesh_synonym_jaccard": _set_jaccard(s("mesh_synonyms"), t("mesh_synonyms")),
-        "max_mesh_synonym_jaccard": _max_jaccard(s("mesh_syn_tokens"), t("mesh_syn_tokens")),
-        "has_same_dbpedia_synonym": _overlaps(s("dbpedia_synonyms"), t("dbpedia_synonyms")),
-        "dbpedia_synonym_jaccard": _set_jaccard(s("dbpedia_synonyms"), t("dbpedia_synonyms")),
-        "max_dbpedia_synonym_jaccard": _max_jaccard(
-            s("dbpedia_syn_tokens"), t("dbpedia_syn_tokens")
+        "has_same_canonical_name": same("canonical_name"),
+        "has_same_canonical_name_tokens": same("name_tokens"),
+        "has_same_canonical_name_token_set": same_set("name_tokens"),
+        "has_same_stemmed_name_tokens": same("stemmed_name_tokens"),
+        "has_same_stemmed_name_token_set": same_set("stemmed_name_tokens"),
+        "has_same_lemmatized_name_tokens": same("lemmatized_name_tokens"),
+        "has_same_lemmatized_name_token_set": same_set("lemmatized_name_tokens"),
+        "name_char_4gram_jaccard": _set_jaccard(*both("name_char_4grams")),
+        "name_char_5gram_jaccard": _set_jaccard(*both("name_char_5grams")),
+        "has_alias_in_common": _overlaps(*both("aliases")),
+        "has_alias_tokens_in_common": _overlaps(*both("alias_tokens")),
+        "has_alias_token_set_in_common": _overlaps(*both("alias_token_set")),
+        "alias_token_jaccard": _set_jaccard(*both("alias_token_set")),
+        "max_alias_token_jaccard": _max_jaccard(*both("alias_token_set")),
+        "max_alias_4gram_jaccard": _max_jaccard(*both("alias_char_4grams")),
+        "max_alias_5gram_jaccard": _max_jaccard(*both("alias_char_5grams")),
+        "has_same_acronym": (
+            f"({_overlaps('s_acronyms', 't_acronyms')})"
+            f" OR ({_overlaps('s_acronyms', 't_aliases')})"
+            f" OR ({_overlaps('s_aliases', 't_acronyms')})"
         ),
-        "has_overlapping_synonym": _overlaps(s_all, t_all),
-        "all_synonym_jaccard": _set_jaccard(s_all, t_all),
-        "max_all_synonym_jaccard": _max_jaccard(s_all_tokens, t_all_tokens),
-        "has_same_root_word": s("parse_root") == t("parse_root"),
+        "definition_token_jaccard": _set_jaccard(*both("def_tokens")),
+        "has_same_wiki_entity": _overlaps(*both("wiki_entities")),
+        "wiki_entity_jaccard": _set_jaccard(*both("wiki_entities")),
+        "max_wiki_entity_jaccard": _max_jaccard(*both("wiki_ent_tokens")),
+        "has_same_mesh_synonym": _overlaps(*both("mesh_synonyms")),
+        "mesh_synonym_jaccard": _set_jaccard(*both("mesh_synonyms")),
+        "max_mesh_synonym_jaccard": _max_jaccard(*both("mesh_syn_tokens")),
+        "has_same_dbpedia_synonym": _overlaps(*both("dbpedia_synonyms")),
+        "dbpedia_synonym_jaccard": _set_jaccard(*both("dbpedia_synonyms")),
+        "max_dbpedia_synonym_jaccard": _max_jaccard(*both("dbpedia_syn_tokens")),
+        "has_overlapping_synonym": _overlaps(synonyms("s"), synonyms("t")),
+        "all_synonym_jaccard": _set_jaccard(synonyms("s"), synonyms("t")),
+        "max_all_synonym_jaccard": _max_jaccard(synonym_tokens("s"), synonym_tokens("t")),
+        "has_same_root_word": same("parse_root"),
         "root_word_jaccard": _set_jaccard(
-            F.array_distinct(s("root_words")), F.array_distinct(t("root_words"))
+            "array_distinct(s_root_words)", "array_distinct(t_root_words)"
         ),
     }
-    out_cols = [F.col(c) for c in pairs.columns]
-    out_cols += [feats[name].cast("double").alias(name) for name in FEATURE_NAMES]
-    return df.select(*out_cols)
+    return df.selectExpr(
+        *[f"`{c}`" for c in pairs.columns],
+        *[f"CAST(({feats[name]}) AS DOUBLE) AS {name}" for name in FEATURE_NAMES],
+    )

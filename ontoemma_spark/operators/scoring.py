@@ -15,8 +15,7 @@ the 10^12-pair hot path.
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from ontoemma_spark.operators.features import FEATURE_NAMES
 
@@ -26,16 +25,19 @@ class LRModel:
         self.weights = weights
         self.bias = bias
 
-    def score_column(self) -> Column:
-        """sigmoid(b + Σ w_i * feature_i) as a native expression."""
-        z = F.lit(float(self.bias))
-        for name, w in self.weights.items():
-            if w != 0.0:
-                z = z + F.lit(float(w)) * F.col(name)
-        return F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
-
     def score_pairs(self, featurized: DataFrame, out: str = "score") -> DataFrame:
-        return featurized.withColumn(out, self.score_column())
+        """featurized with ``out`` = sigmoid(b + Σ w_i * feature_i), one
+        native expression built as SQL text and projected in one
+        selectExpr. An existing ``out`` column is replaced in place."""
+        terms = [f"{float(self.bias)!r}D"] + [
+            f"{float(w)!r}D * `{name}`" for name, w in self.weights.items() if w != 0.0
+        ]
+        score = f"1.0D / (1.0D + exp(-({' + '.join(terms)}))) AS `{out}`"
+        columns = featurized.columns
+        cols = [score if c == out else f"`{c}`" for c in columns]
+        if out not in columns:
+            cols.append(score)
+        return featurized.selectExpr(*cols)
 
     def to_dict(self) -> dict:
         return {"weights": self.weights, "bias": self.bias}

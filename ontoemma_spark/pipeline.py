@@ -239,6 +239,9 @@ def run_pipeline(
         # explode+distinct over the corpus-scale triples table would run
         # once per consumer.
         mentions = mention_entities(triples).persist(StorageLevel.MEMORY_AND_DISK)
+        # the finally also releases align()'s cached candidates and
+        # string-equiv pairs, so a failed link write leaves nothing persisted
+        result = None
         try:
             n_mentions = mentions.count()
             result = align(mentions, kb_entities, model=model, threshold=threshold)
@@ -248,6 +251,8 @@ def run_pipeline(
                 fmt=table_format,
             )
         finally:
+            if result is not None:
+                result.release()
             mentions.unpersist()
 
     # ---- stage 3: canonicalize -----------------------------------------

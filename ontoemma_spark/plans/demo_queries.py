@@ -4556,7 +4556,14 @@ def q_kg_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rewrite re-analyze the giant feature trees (measured at sf0.1:
     # 9.3s -> 7.8s). This is the in-memory analog of run_pipeline's
     # link-stage parquet checkpoint, so the two paths stay equivalent.
-    links = align(mentions, kb).alignment.localCheckpoint(eager=True)
+    result = align(mentions, kb)
+    try:
+        links = result.alignment.localCheckpoint(eager=True)
+    finally:
+        # the checkpoint holds the links: nothing below reads these
+        result.release()
+        mentions.unpersist()
+        kb.unpersist()
     canon = connected_components(links.select("s_id", "t_id"), src="s_id", dst="t_id")
     return canonical_edge_rewrite(triples, canon).distinct()
 
@@ -5468,8 +5475,8 @@ _LR_DEMO_BIAS = -1.5
 
 
 def q_lr_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """M2: LRModel.score_pairs — sigmoid(b + Σ w·f) as a native column
-    expression (scoring.py:29-38, the 10^12-pair hot path: zero Python)
+    """M2: LRModel.score_pairs — sigmoid(b + Σ w·f) as one native
+    expression (the 10^12-pair hot path: zero Python)
     — over the hash-checked pair features with pinned demo weights."""
     from ontoemma_spark.operators.scoring import LRModel
 

@@ -16,7 +16,9 @@ def aligned(spark):
     s_ents, _ = synthetic_kb(spark, "SRC", n_entities=60, id_offset=0)
     t_ents, _ = synthetic_kb(spark, "TGT", n_entities=50, id_offset=20)
     gold = gold_alignment(spark, "SRC", "TGT", s_count=60, t_offset=20, t_count=50)
-    return align(s_ents, t_ents), gold
+    result = align(s_ents, t_ents)
+    yield result, gold
+    result.release()
 
 
 def test_align_meets_reference_thresholds(spark, aligned):

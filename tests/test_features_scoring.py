@@ -10,7 +10,7 @@ from ontoemma_spark.operators.features import (
     entity_feature_table,
     featurize_pairs,
 )
-from ontoemma_spark.operators.scoring import LRModel, fit_lr
+from ontoemma_spark.operators.scoring import DEFAULT_LR_MODEL, LRModel, fit_lr
 
 ENT_SCHEMA = (
     "research_entity_id string, canonical_name string, aliases array<string>,"
@@ -99,3 +99,118 @@ def test_fit_lr_separates_labels(spark):
     scored = model.score_pairs(df).collect()
     for r in scored:
         assert (r["score"] > 0.5) == (r["label"] == 1.0)
+
+# Fixture pairs for the identity pin below. They cover an empty alias
+# list (S:2), null aliases (T:3), a null definition (S:2, T:3), null
+# additional_details (S:2), an empty map (T:2) and the legacy
+# mesh_synonynms key (S:3, whose mesh synonym matches T:3's).
+IDENTITY_S = [
+    ("S:1", "heart attack", ["heart attack", "myocardial infarction"], "necrosis of heart muscle",
+     [], None, [], {"wiki_entities": ["Myocardial_infarction"],
+                    "mesh_synonyms": ["Infarction, Myocardial"]}),
+    ("S:2", "renal failure", [], None, [], None, [], None),
+    ("S:3", "Kidney Failures", ["kidney failures", "KF"], "loss of kidney function", [], None, [],
+     {"mesh_synonynms": ["Renal Insufficiency"], "dbpedia_synonyms": ["Kidney_failure"]}),
+]
+IDENTITY_T = [
+    ("T:1", "heart attack", ["heart attack", "MI"], "necrosis of heart muscle tissue", [], None,
+     [], {"wiki_entities": ["Myocardial_infarction"],
+          "mesh_synonyms": ["Infarction, Myocardial", "Heart Attack"]}),
+    ("T:2", "liver failure", ["liver failure", "hepatic failure"], "", [], None, [], {}),
+    ("T:3", "kidney failure", None, None, [], None, [],
+     {"mesh_synonyms": ["Renal Insufficiency"],
+      "dbpedia_synonyms": ["Kidney_failure", "Renal_failure"]}),
+]
+# A model with a negative and an exponent-notation weight.
+IDENTITY_LR = LRModel(
+    {
+        "has_same_canonical_name": 2.5,
+        "wiki_entity_jaccard": -1.25,
+        "max_all_synonym_jaccard": 1e-05,
+    },
+    -0.75,
+)
+# (s_id, t_id) -> the 32 features in FEATURE_NAMES order, then the
+# DEFAULT_LR_MODEL score and the IDENTITY_LR score. Captured from the
+# Column-builder implementation these SQL expressions replaced.
+IDENTITY_EXPECTED = {
+    ("S:1", "T:1"): (
+        1.0, 1.0, 1.0, 1.0, 1.0, 1.0, 1.0, 1.0, 1.0, 1.0, 1.0, 1.0, 0.3333333333333333,
+        1.0, 1.0, 1.0, 1.0, 0.75, 1.0, 1.0, 1.0, 1.0, 0.5, 1.0, 0.0, -1.0, 0.0, 1.0, 0.5,
+        1.0, 1.0, 1.0,
+        0.9789929566027891, 0.6224616812360988,
+    ),
+    ("S:1", "T:2"): (
+        0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0,
+        0.06451612903225806, 0.06060606060606061, 0.0, -1.0, 0.0, -1.0, 0.0, 0.0, -1.0,
+        0.0, 0.0, -1.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0,
+        0.001006869139371313, 0.6224593312018546,
+    ),
+    ("S:1", "T:3"): (
+        0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, -1.0, 0.0, 0.0, 0.0,
+        0.0, -1.0, 0.0, -1.0, 0.0, 0.0, 0.0, 0.0, 0.0, -1.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0,
+        0.00040956716498605043, 0.6224593312018546,
+    ),
+    ("S:2", "T:1"): (
+        0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, -1.0, 0.0, 0.0, 0.0,
+        0.0, -1.0, 0.0, -1.0, 0.0, 0.0, -1.0, 0.0, 0.0, -1.0, 0.0, 0.0, -1.0, 0.0, 0.0,
+        0.0,
+        0.00040956716498605043, 0.6224593312018546,
+    ),
+    ("S:3", "T:1"): (
+        0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0,
+        0.0, 0.0, 0.0, -1.0, 0.0, 0.0, 0.0, 0.0, 0.0, -1.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0,
+        0.0015011822567369917, 0.6224593312018546,
+    ),
+    ("S:2", "T:2"): (
+        0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.3333333333333333, 0.3076923076923077, 0.0,
+        0.0, 0.0, -1.0, 0.0, 0.0, 0.0, 0.0, -1.0, 0.0, -1.0, 0.0, 0.0, -1.0, 0.0, 0.0,
+        -1.0, 0.0, 0.0, -1.0, 0.0, 1.0, 1.0,
+        0.0014153326401391707, 0.6224593312018546,
+    ),
+    ("S:2", "T:3"): (
+        0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.32, 0.2962962962962963, 0.0, 0.0, 0.0, -1.0,
+        0.0, 0.0, 0.0, 0.0, -1.0, 0.0, -1.0, 0.0, 0.0, -1.0, 0.0, 0.0, -1.0, 0.0, 0.0,
+        -1.0, 0.0, 1.0, 1.0,
+        0.0013808093485821816, 0.6224593312018546,
+    ),
+    ("S:3", "T:2"): (
+        0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0967741935483871, 0.058823529411764705, 0.0,
+        0.0, 0.0, 0.0, 0.0, 0.1724137931034483, 0.125, 0.0, -1.0, 0.0, -1.0, 0.0, 0.0,
+        -1.0, 0.0, 0.0, -1.0, 0.0, 0.0, 0.0, 0.3333333333333333, 0.0, 0.0,
+        0.0013497688503351275, 0.6224601145472421,
+    ),
+    ("S:3", "T:3"): (
+        0.0, 0.0, 0.0, 1.0, 1.0, 0.0, 0.0, 0.20689655172413793, 0.12121212121212122, 0.0,
+        0.0, 0.0, -1.0, 0.0, 0.0, 0.0, 0.0, -1.0, 0.0, -1.0, 0.0, 1.0, 1.0, 1.0, 1.0, 0.5,
+        1.0, 1.0, 0.4, 1.0, 0.0, 0.0,
+        0.0010354415705109024, 0.6224616812360988,
+    ),
+}
+
+
+def test_features_and_scores_match_pinned_values(spark):
+    s = spark.createDataFrame(IDENTITY_S, ENT_SCHEMA)
+    t = spark.createDataFrame(IDENTITY_T, ENT_SCHEMA)
+    pairs = s.select("research_entity_id").crossJoin(t.select("research_entity_id")).toDF(
+        "s_id", "t_id"
+    )
+    feats = featurize_pairs(pairs, entity_feature_table(s), entity_feature_table(t))
+    scored = DEFAULT_LR_MODEL.score_pairs(feats).withColumnRenamed("score", "default_score")
+    scored = IDENTITY_LR.score_pairs(scored, out="lr_score")
+    assert scored.columns == ["s_id", "t_id", *FEATURE_NAMES, "default_score", "lr_score"]
+    got = {
+        (r["s_id"], r["t_id"]): tuple(r[c] for c in scored.columns[2:])
+        for r in scored.collect()
+    }
+    assert got == IDENTITY_EXPECTED
+
+
+def test_score_pairs_replaces_existing_column_in_place(spark):
+    model = LRModel(weights={"f1": 2.0}, bias=-1.0)
+    df = spark.createDataFrame([(0.25, 1.0, "x")], "score double, f1 double, tag string")
+    out = model.score_pairs(df)
+    assert out.columns == ["score", "f1", "tag"]
+    row = out.first()
+    assert abs(row["score"] - 1 / (1 + math.exp(-1.0))) < 1e-12
+    assert row["tag"] == "x"

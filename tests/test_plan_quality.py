@@ -91,6 +91,45 @@ def test_featurize_pairs_is_python_free(spark):
     assert "pythonUDF" not in pairwise_exprs.lower()
 
 
+def _nodes_outside_cache(plan) -> list[str]:
+    """Node names of a logical plan, not descending into cached data."""
+    names = [plan.nodeName()]
+    if names[0] != "InMemoryRelation":
+        kids = plan.children()
+        for i in range(kids.size()):
+            names += _nodes_outside_cache(kids.apply(i))
+    return names
+
+
+def test_align_reads_candidates_and_equiv_through_cache(spark):
+    """align() persists its candidates and string-equiv pairs, and its
+    alignment reads both through the cache: the blocking probe
+    (MapInPandas) appears only inside cached relations, so it runs once,
+    when the candidates' cache fills, not once per consumer."""
+    from pyspark import StorageLevel
+
+    from ontoemma_spark.align import align
+    from ontoemma_spark.datagen import synthetic_kb
+
+    s_ents, _ = synthetic_kb(spark, "S", n_entities=20)
+    t_ents, _ = synthetic_kb(spark, "T", n_entities=20, id_offset=5)
+    result = align(s_ents, t_ents)
+    try:
+        for df in (result.candidates, result.string_equiv):
+            assert df.storageLevel == StorageLevel.MEMORY_AND_DISK
+        plan = result.candidates.select("s_id")._jdf.queryExecution().optimizedPlan()
+        cached = _nodes_outside_cache(plan)
+        assert "MapInPandas" not in cached and "InMemoryRelation" in cached
+        nodes = _nodes_outside_cache(result.alignment._jdf.queryExecution().optimizedPlan())
+        assert "MapInPandas" not in nodes, nodes
+        # the to-score candidates, two equiv anti-joins and the score union
+        assert nodes.count("InMemoryRelation") >= 4, nodes
+    finally:
+        result.release()
+    for df in (result.candidates, result.string_equiv):
+        assert df.storageLevel == StorageLevel.NONE
+
+
 def test_extract_stage_is_narrow(spark):
     from ontoemma_spark.datagen import synthetic_pages
     from ontoemma_spark.extract.triples import extract_triples
