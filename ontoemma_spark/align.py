@@ -161,8 +161,8 @@ def _model_scores(
         # NN pair scorer (reference _align_nn, OntoEmma.py:737,766-797):
         # the MLP's features are computed from the pair's canonical
         # names, not the 32 engineered features — rehydrate names via
-        # broadcast (KB-sized) and score with the native column forward
-        # pass (zero Python in the hot path).
+        # broadcast (KB-sized) and score with the SQL forward pass
+        # (zero Python in the hot path).
         from ontoemma_spark.operators.scoring_nn import nn_pair_features
 
         s_nm = s_entities.select(

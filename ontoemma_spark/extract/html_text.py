@@ -4,18 +4,16 @@ The per-row invariant (BASELINE.json input_hint) is: extracted text is a
 pure, byte-identical function of the page html per url. Two
 implementations of the SAME specification:
 
-  * extract_text_py   — pure Python (the executable specification; used
-                        by tests and the DuckDB oracle path)
   * extract_text_col  — native Spark column expression (regexp_replace
                         chain, JVM-side, whole-stage-codegen) — the
                         production path
-  * extract_text_mapinpandas — Arrow-batched pandas variant, the pattern
-                        for extractors that genuinely need Python libs
+  * extract_text_py   — pure Python, the executable specification the
+                        tests compare the native path against
 
 All regex patterns are restricted to constructs with identical semantics
 in java.util.regex and Python re (explicit character classes, inline
-(?is) flags, non-greedy quantifiers) so the three paths agree byte-
-for-byte; tests/test_extract.py asserts it.
+(?is) flags, non-greedy quantifiers) so the two agree byte-for-byte;
+tests/test_extract.py asserts it.
 
 Reference anchor: the reference's only text machinery is
 emma/utils/common.py:768-791 (from_text: sentence split + tokenize) and
@@ -25,12 +23,9 @@ new web-scale front end mandated by the north rule.
 
 from __future__ import annotations
 
-import html as _html
 import re
-from typing import Iterator
 
-import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # Patterns shared verbatim between Python re and Java regex. Boilerplate
@@ -87,51 +82,3 @@ def extract_text_col(html_col) -> Column:
         text = F.replace(text, F.lit(ent), F.lit(rep))
     text = F.trim(F.regexp_replace(text, _P_WS, " "))
     return text
-
-
-_WIKI_CRUFT_RE = r"\[\d+\]|\[citation needed\]"
-
-
-def clean_wiki_text_py(text: str) -> str:
-    """F14 (emma/utils/common.py:44-52): replace citation markers
-    ([3], [citation needed]) with EQUAL-LENGTH spaces so character
-    offsets into the original text stay valid — the length-preserving
-    property is the point (mention spans index into this text)."""
-    import re as _re
-
-    return _re.sub(_WIKI_CRUFT_RE, lambda m: " " * len(m.group(0)), text)
-
-
-def clean_wiki_text(pages: DataFrame, text_col: str = "text") -> DataFrame:
-    """F14 as an Arrow-batched transform (the replacement length depends
-    on the match, which regexp_replace cannot express natively)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = pdf.copy()
-            out[text_col] = out[text_col].map(
-                lambda t: clean_wiki_text_py(t) if t is not None else None
-            )
-            yield out
-
-    return pages.mapInPandas(batches, schema=pages.schema)
-
-
-def extract_text_mapinpandas(pages: DataFrame) -> DataFrame:
-    """Arrow-batched extraction (url, extracted_text). The pandas-UDF
-    plumbing pattern for stages that need real Python libraries
-    (trafilatura-class extractors) at scale: iterator form, per-batch
-    vectorized, no per-row Spark round trips."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "url": pdf["url"],
-                    "extracted_text": pdf["html"].map(extract_text_py),
-                }
-            )
-
-    return pages.select("url", "html").mapInPandas(
-        batches, schema="url string, extracted_text string"
-    )

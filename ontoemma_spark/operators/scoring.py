@@ -20,6 +20,18 @@ from pyspark.sql import DataFrame
 from ontoemma_spark.operators.features import FEATURE_NAMES
 
 
+def _with_score(featurized: DataFrame, score_sql: str, out: str) -> DataFrame:
+    """featurized plus the SQL expression score_sql as column ``out``,
+    projected in one selectExpr; an existing ``out`` column is replaced
+    in place."""
+    score = f"{score_sql} AS `{out}`"
+    columns = featurized.columns
+    cols = [score if c == out else f"`{c}`" for c in columns]
+    if out not in columns:
+        cols.append(score)
+    return featurized.selectExpr(*cols)
+
+
 class LRModel:
     def __init__(self, weights: dict[str, float], bias: float):
         self.weights = weights
@@ -27,17 +39,13 @@ class LRModel:
 
     def score_pairs(self, featurized: DataFrame, out: str = "score") -> DataFrame:
         """featurized with ``out`` = sigmoid(b + Σ w_i * feature_i), one
-        native expression built as SQL text and projected in one
-        selectExpr. An existing ``out`` column is replaced in place."""
+        native expression built as SQL text."""
         terms = [f"{float(self.bias)!r}D"] + [
             f"{float(w)!r}D * `{name}`" for name, w in self.weights.items() if w != 0.0
         ]
-        score = f"1.0D / (1.0D + exp(-({' + '.join(terms)}))) AS `{out}`"
-        columns = featurized.columns
-        cols = [score if c == out else f"`{c}`" for c in columns]
-        if out not in columns:
-            cols.append(score)
-        return featurized.selectExpr(*cols)
+        return _with_score(
+            featurized, f"1.0D / (1.0D + exp(-({' + '.join(terms)})))", out
+        )
 
     def to_dict(self) -> dict:
         return {"weights": self.weights, "bias": self.bias}

@@ -13,42 +13,28 @@ vectors the reference concatenates into its decision layer:
 
     hidden = tanh(X @ W1 + b1)        score = sigmoid(hidden @ W2 + b2)
 
-Two EQUIVALENT execution paths (tests pin them equal to 1e-12):
-
-  * MLPModel.score_column() — the forward pass unrolled into native
-    column expressions (tanh/exp are JVM built-ins), so scoring stays
-    inside whole-stage codegen: ZERO Python in the 10^12-pair hot path.
-    This is what align(model=...) uses.
-  * MLPModel.score_pairs_arrow() — iterator mapInPandas numpy
-    inference: the torch-SHAPED plumbing (model state materialized once
-    per partition, vectorized batch forward). When a torch artifact
-    exists, _load_model is the single swap point; everything around it
-    already handles the scale path (the pair DF never collects).
+MLPModel.score_pairs projects the forward pass as one SQL expression
+with literalized weights (mlp_forward_sql; tanh/exp are JVM built-ins),
+so scoring stays inside whole-stage codegen: zero Python in the
+10^12-pair hot path. The same text, over sql_pair_features, is the
+DuckDB oracle of the nn_scores query. MLPModel.forward is the numpy
+twin fit_mlp trains with; tests/test_nn_scorer.py pins score_pairs to
+it within 1e-12.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-TORCH_AVAILABLE = False  # no torch in this container
-
-NN_OUTPUT_SCHEMA = "s_id string, t_id string, score double"
-
-
-def _tanh_col(z: Column) -> Column:
-    """tanh via the exp identity, clamped at ±20 (tanh(±20) rounds to
-    ±1.0 in doubles, so the clamp is value-preserving and prevents exp
-    overflow). Same formula as _tanh_sql — cross-engine-identical."""
-    zc = F.least(F.greatest(z, F.lit(-20.0)), F.lit(20.0))
-    return F.lit(1.0) - F.lit(2.0) / (F.exp(F.lit(2.0) * zc) + F.lit(1.0))
+from ontoemma_spark.operators.scoring import _with_score
 
 
 def _tanh_sql(z: str) -> str:
+    """tanh via the exp identity, clamped at ±20 (tanh(±20) rounds to
+    ±1.0 in doubles, so the clamp is value-preserving and prevents exp
+    overflow) — the same double operations in Spark and DuckDB."""
     return f"(1.0 - 2.0 / (exp(2.0 * least(greatest({z}, -20.0), 20.0)) + 1.0))"
 
 
@@ -74,59 +60,16 @@ class MLPModel:
         assert self.W1.shape == (len(self.feature_names), len(self.b1))
         assert self.W2.shape == (len(self.b1),)
 
-    # ---- native path (JVM codegen — the hot path) ----------------------
-
-    def score_column(self) -> Column:
-        """sigmoid(W2 · tanh(W1ᵀx + b1) + b2) as a native expression.
-
-        tanh is spelled via the clamped exp identity (_tanh_col /
-        _tanh_sql) so Spark, DuckDB, and numpy evaluate the SAME double
-        operations — the oracle hash-compares at 6 decimals."""
-        hidden = []
-        for j in range(len(self.b1)):
-            z = F.lit(float(self.b1[j]))
-            for i, name in enumerate(self.feature_names):
-                w = float(self.W1[i, j])
-                if w != 0.0:
-                    z = z + F.lit(w) * F.col(name)
-            hidden.append(_tanh_col(z))
-        out = F.lit(self.b2)
-        for j, h in enumerate(hidden):
-            out = out + F.lit(float(self.W2[j])) * h
-        return F.lit(1.0) / (F.lit(1.0) + F.exp(-out))
-
     def score_pairs(self, featurized: DataFrame, out: str = "score") -> DataFrame:
-        return featurized.withColumn(out, self.score_column())
-
-    # ---- numpy path (torch-shaped Arrow plumbing) ----------------------
+        """featurized with ``out`` = the forward pass over its feature
+        columns, one native expression (mlp_forward_sql)."""
+        inputs = {name: f"`{name}`" for name in self.feature_names}
+        return _with_score(featurized, mlp_forward_sql(self, inputs), out)
 
     def forward(self, X: np.ndarray) -> np.ndarray:
         h = np.tanh(X @ self.W1 + self.b1)
         z = h @ self.W2 + self.b2
         return 1.0 / (1.0 + np.exp(-z))
-
-    def score_pairs_arrow(self, featurized: DataFrame) -> DataFrame:
-        """Batched inference via mapInPandas (iterator form → model
-        state realized once per partition, like a torch load would be).
-        Output identical to score_pairs (tests/test_nn_scorer.py)."""
-        names = self.feature_names
-        state = self.to_dict()
-
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            model = _load_model(state)  # once per partition
-            for pdf in batches:
-                X = pdf[names].to_numpy(dtype=np.float64)
-                yield pd.DataFrame(
-                    {
-                        "s_id": pdf["s_id"],
-                        "t_id": pdf["t_id"],
-                        "score": model(X),
-                    }
-                )
-
-        return featurized.select("s_id", "t_id", *names).mapInPandas(
-            run, schema=NN_OUTPUT_SCHEMA
-        )
 
     # ---- (de)serialization ---------------------------------------------
 
@@ -142,19 +85,6 @@ class MLPModel:
     @classmethod
     def from_dict(cls, d: dict) -> "MLPModel":
         return cls(d["feature_names"], d["W1"], d["b1"], d["W2"], d["b2"])
-
-
-def _load_model(state: dict):
-    """Executor-side model realization — called once per partition
-    iterator. For a reference-trained OntoEmmaNN archive on disk, use
-    operators/siamese.py load_allennlp_archive (reads .npz / .json[.gz]
-    / re-packed model.tar.gz through from_allennlp_state — full
-    BiLSTM/char-CNN numpy forward, no torch needed); here the state
-    dict IS the model (numpy forward)."""
-    if TORCH_AVAILABLE:  # pragma: no cover
-        raise NotImplementedError("plug torch.load(model_path) here")
-    model = MLPModel.from_dict(state)
-    return model.forward
 
 
 def fit_mlp(
@@ -266,9 +196,10 @@ def nn_pair_features(s_name, t_name) -> list[Column]:
             "f_acronym_eq"
         ),
         (F.least(ns, nt) / F.greatest(ns, nt)).alias("f_tok_ratio"),
-        (
-            F.least(F.length(ls), F.length(lt)).cast("double")
-            / F.greatest(F.length(ls), F.length(lt)).cast("double")
+        # try_divide: two empty names are 0/0 — NULL, as in the DuckDB twin
+        F.try_divide(
+            F.least(F.length(ls), F.length(lt)).cast("double"),
+            F.greatest(F.length(ls), F.length(lt)).cast("double"),
         ).alias("f_len_ratio"),
         (inter / F.greatest(ns, nt)).alias("f_shared_frac"),
     ]
@@ -317,9 +248,10 @@ def sql_pair_features(s_expr: str, t_expr: str) -> dict[str, str]:
 
 
 def mlp_forward_sql(model: MLPModel, feature_exprs: dict[str, str]) -> str:
-    """The model's forward pass as a single SQL scalar expression with
-    literalized weights — the 'pure matrix math is SQL-expressible'
-    oracle for the driver's nn_scores query."""
+    """The model's forward pass as one SQL scalar expression with
+    literalized weights, read the same by Spark SQL and DuckDB:
+    score_pairs projects it over the feature columns, and the nn_scores
+    oracle over sql_pair_features."""
     hidden = []
     for j in range(len(model.b1)):
         terms = [repr(float(model.b1[j]))]
@@ -333,25 +265,3 @@ def mlp_forward_sql(model: MLPModel, feature_exprs: dict[str, str]) -> str:
         out_terms.append(f"({float(model.W2[j])!r}) * {h}")
     z = " + ".join(out_terms)
     return f"(1.0 / (1.0 + exp(-({z}))))"
-
-
-# ---------------------------------------------------------------------------
-# legacy plumbing shim (round-1 API, kept for callers/tests)
-# ---------------------------------------------------------------------------
-
-def score_pairs_nn(
-    pairs_with_names: DataFrame,
-    model: MLPModel | None = None,
-    batch_size: int = 128,
-) -> DataFrame:
-    """M3 entry point over (s_id, t_id, s_name, t_name): compute the
-    SQL-twin pair features natively, then run the trained MLP through
-    the Arrow plumbing (reference batch-apply analog,
-    emma/OntoEmma.py:766-797)."""
-    from ontoemma_spark.operators.nn_weights import default_nn_model
-
-    model = model or default_nn_model()
-    featurized = pairs_with_names.select(
-        "s_id", "t_id", *nn_pair_features("s_name", "t_name")
-    )
-    return model.score_pairs_arrow(featurized)

@@ -574,11 +574,7 @@ def load_allennlp_archive(
     return SiameseScorer.from_allennlp_state(state, feature_names, words=words)
 
 
-def score_pairs_siamese(
-    pairs: DataFrame,
-    model: SiameseScorer,
-    batch_size: int = 128,
-) -> DataFrame:
+def score_pairs_siamese(pairs: DataFrame, model: SiameseScorer) -> DataFrame:
     """Arrow-batched inference over a pair DF carrying the text fields
     and the 32 engineered feature columns:
 

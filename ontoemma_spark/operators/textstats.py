@@ -572,9 +572,7 @@ def url_blocklist_filter(
     return pages.join(hit, url_col, "left_anti")
 
 
-def unigram_vocab(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def unigram_vocab(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(token, cnt): whitespace-token counts over the corpus — the
     unigram model table for unigram_logprob_scores. One explode + one
     map-side-combinable count agg. Write it bucketed by token

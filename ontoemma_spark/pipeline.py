@@ -11,9 +11,10 @@ Checkpointing: each stage writes through the tableio seam
 (parquet / bucketed_table / iceberg, chosen per run via the
 table_format argument or $SPARK_GRAFT_TABLE_FORMAT) plus a manifest entry
 `_manifest.json` with row counters (per-stage lineage/metrics). A rerun
-with the same out_dir resumes after the last completed stage — the
-done-file pattern the reference uses in
-extract_training_data_from_umls.py:82,398-400,569-594.
+with the same out_dir resumes after the last completed stage whose
+checkpoint still matches its recorded lineage — the done-file pattern
+the reference uses in extract_training_data_from_umls.py:82,398-400,
+569-594.
 
 Counters cost no extra Spark job: every row counter is observed
 (DataFrame.observe) on the frame a stage writes, so the write job
@@ -63,6 +64,27 @@ def _write_manifest(out_dir: str, manifest: dict) -> None:
     with open(path + ".tmp", "w") as f:
         json.dump(manifest, f, indent=2, sort_keys=True)
     os.replace(path + ".tmp", path)
+
+
+STAGES = ("extract", "link", "canonicalize", "materialize", "fuse")
+
+
+def _drop_from(manifest: dict, stage: str) -> None:
+    """Forget stage and every stage after it, so the run redoes them."""
+    for later in STAGES[STAGES.index(stage):]:
+        manifest["stages"].pop(later, None)
+
+
+def _drop_invalid(spark: SparkSession, manifest: dict) -> None:
+    """Resume-time audit: the first completed stage whose checkpoint no
+    longer matches the lineage its write recorded (tableio.validate_stage:
+    a deleted bucket directory, a half-copied table) is dropped with
+    every stage after it."""
+    for stage in STAGES:
+        entry = manifest["stages"].get(stage)
+        if entry is not None and not tableio.validate_stage(spark, entry)["ok"]:
+            _drop_from(manifest, stage)
+            return
 
 
 def _stage_rows(entry: dict) -> int:
@@ -162,6 +184,10 @@ def run_pipeline(
 ) -> dict:
     """Run (or resume) the full pipeline; returns the manifest.
 
+    A resume first validates every completed checkpoint against the
+    lineage its write recorded; the first stage that fails, and every
+    stage after it, are rerun.
+
     fuse=True appends an optional stage 5 that rolls the materialized
     edge table up to one row per canonical (subject, relation, object)
     with cross-page evidence (support, distinct hosts, noisy-or
@@ -179,6 +205,7 @@ def run_pipeline(
     this is an incremental read between snapshots).
     """
     manifest = read_manifest(out_dir)
+    _drop_invalid(spark, manifest)
     done = manifest["stages"]
 
     if incremental and "extract" in done:
@@ -195,8 +222,7 @@ def run_pipeline(
             # downstream stages are stale → recompute over the union
             # (fuse included — stale fused facts silently published as
             # current was a real bug: support/belief missed the delta)
-            for stage in ["link", "canonicalize", "materialize", "fuse"]:
-                manifest["stages"].pop(stage, None)
+            _drop_from(manifest, "link")
             m = manifest["stages"]["extract"].setdefault("metrics", {})
             # pages from the LEDGER, not += on a possibly-empty metrics
             # dict (a crash between checkpoint and metrics write leaves

@@ -302,20 +302,46 @@ SELECT DISTINCT subject_id, object_id, relation_type FROM (
 # ---------------------------------------------------------------------------
 
 def q_merge_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A8/O4: merge duplicate entities per key; canonical id =
-    '|'-joined sorted distinct member ids (kb_utils_refactor.py:358-362)."""
+    """A8/O4: graph.merge_entities over customers as entities, merged per
+    market segment (kb_utils_refactor.py:340-412). Ids are the custkey
+    as a string, so id order ("12" < "3") differs from name order
+    ("Customer#...3" < "Customer#...12") and the canonical name shows
+    the first-member-by-id rule; aliases share nation tags, so the union
+    dedups."""
+    from ontoemma_spark.operators.graph import merge_entities
+
     cust = _t(spark, sf_dir, "customer").filter(F.col("c_custkey") < 50)
-    return cust.groupBy(F.col("c_mktsegment").alias("merge_key")).agg(
-        F.array_join(F.array_sort(F.collect_set("c_name")), "|").alias("merged_id"),
-        F.count(F.lit(1)).cast("bigint").alias("n_members"),
+    nation = F.col("c_nationkey").cast("string")
+    entities = cust.select(
+        F.col("c_mktsegment").alias("merge_key"),
+        F.col("c_custkey").cast("string").alias("research_entity_id"),
+        F.col("c_name").alias("canonical_name"),
+        F.array("c_name", F.concat(F.lit("nation-"), nation)).alias("aliases"),
+        F.concat(F.lit("nation "), nation).alias("definition"),
+    )
+    merged = merge_entities(entities, "merge_key")
+    return merged.select(
+        "merge_key",
+        "research_entity_id",
+        "canonical_name",
+        F.array_join("aliases", "|").alias("aliases"),
+        "definition",
     )
 
 
 SQL_MERGE_ENTITIES = """
-SELECT c_mktsegment AS merge_key,
-       string_agg(DISTINCT c_name, '|' ORDER BY c_name) AS merged_id,
-       CAST(count(*) AS BIGINT) AS n_members
-FROM customer WHERE c_custkey < 50 GROUP BY c_mktsegment
+WITH e AS (
+  SELECT c_mktsegment AS merge_key, CAST(c_custkey AS VARCHAR) AS id,
+         c_name AS name, [c_name, 'nation-' || CAST(c_nationkey AS VARCHAR)] AS aliases,
+         'nation ' || CAST(c_nationkey AS VARCHAR) AS definition
+  FROM customer WHERE c_custkey < 50
+)
+SELECT merge_key,
+       string_agg(DISTINCT id, '|' ORDER BY id) AS research_entity_id,
+       arg_min(name, id) AS canonical_name,
+       array_to_string(list_sort(list_distinct(flatten(list(aliases)))), '|') AS aliases,
+       string_agg(DISTINCT definition, ' ' ORDER BY definition) AS definition
+FROM e GROUP BY merge_key
 """
 
 
@@ -359,15 +385,17 @@ FROM m
 # ---------------------------------------------------------------------------
 
 def q_missed_gold(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """E2/S15: gold pairs the aligner missed. gold = (e, e+1) diagonal;
-    predicted = string-equiv pairs of q5."""
+    """E2/S15: gold pairs the aligner missed (evaluate.missed_gold).
+    gold = (e, e+1) diagonal; predicted = string-equiv pairs of q5."""
+    from ontoemma_spark.operators.evaluate import missed_gold
+
     pred = q_string_equiv(spark, sf_dir)
     part = _t(spark, sf_dir, "part")
     gold = part.filter((F.col("p_partkey") % 2 == 0) & (F.col("p_partkey") < 200)).select(
         F.col("p_partkey").cast("bigint").alias("s_id"),
         (F.col("p_partkey") + 1).cast("bigint").alias("t_id"),
     )
-    return gold.join(pred.select("s_id", "t_id"), ["s_id", "t_id"], "left_anti")
+    return missed_gold(pred, gold)
 
 
 SQL_MISSED_GOLD = """
@@ -3176,10 +3204,9 @@ FROM sigs WHERE s = (SELECT s FROM qsig)
 
 # 20c. event_window_counts — tumbling-window event-time aggregation
 def q_event_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch run of the streaming windowed aggregation
-    (streaming/events.py windowed_event_counts — identical code path;
-    watermark is a no-op on batch). tests/test_streaming.py pins
-    streaming == batch on the same files; this row pins batch == SQL."""
+    """Hourly tumbling-window counts and value totals per event type
+    (streaming/events.py windowed_event_counts); this row pins them
+    against SQL."""
     from ontoemma_spark.streaming.events import windowed_event_counts
 
     ev = _t(spark, sf_dir, "events")
@@ -4576,9 +4603,10 @@ def q_nn_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M3: trained MLP pair scorer (the reference's decision-network
     analog, ontoemma_model.py:73-164) over the even/odd blocking
     candidates. Weights are PINNED (scripts/train_nn.py, deterministic
-    backprop); the forward pass runs as native column expressions
-    (whole-stage codegen — zero Python in the pair hot path), and the
-    oracle replays the exact same literalized matrix math in DuckDB."""
+    backprop); MLPModel.score_pairs projects the forward pass as one
+    SQL expression (mlp_forward_sql — whole-stage codegen, zero Python
+    in the pair hot path), and the oracle replays the same text in
+    DuckDB."""
     from ontoemma_spark.operators.nn_weights import default_nn_model
     from ontoemma_spark.operators.scoring_nn import nn_pair_features
 
@@ -4993,12 +5021,12 @@ SESSION_GAP_S = 43_200  # 12h: splits sf0.01's 10k events into ~3.3k sessions
 
 
 def q_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin of the applyInPandasWithState streaming sessionizer
-    (streaming/sessions.py): two-window sessionization, one shuffle on
-    user_id. tests/test_sessionization.py pins streaming == batch ==
-    python twin on controlled input; this query gives the family its
-    DuckDB-oracle row. Timestamps emitted as epoch microseconds
-    (bigint) so the value-hash compare is engine-neutral."""
+    """Gap-timeout sessionization (streaming/sessions.py
+    sessionize_batch): two-window sessionization, one shuffle on
+    user_id. tests/test_sessionization.py pins it to the python twin on
+    controlled input; this query gives the family its DuckDB-oracle
+    row. Timestamps emitted as epoch microseconds (bigint) so the
+    value-hash compare is engine-neutral."""
     from ontoemma_spark.streaming.sessions import sessionize_batch
 
     events = _t(spark, sf_dir, "events")
@@ -5859,15 +5887,12 @@ FROM assigned WHERE cell IN ({cells})
 """
 
 
-# 49. event_dedup — exactly-once ingest dedup (batch twin of the
-# streaming dropDuplicatesWithinWatermark path)
+# 49. event_dedup — exactly-once ingest dedup of replayed events
 def q_event_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """At-least-once → exactly-once bridge: the events table with every
     5th event REPLAYED (unioned duplicate) goes through
-    dedup_event_stream (the same function the streaming path uses; on
-    batch it is the global distinct) — per-type counts must equal the
-    clean table's. tests/test_streaming.py pins streaming==batch for
-    this function; this row pins batch==SQL."""
+    dedup_event_stream — per-type counts must equal the clean table's;
+    this row pins them against SQL."""
     from ontoemma_spark.streaming.events import dedup_event_stream
 
     ev = _t(spark, sf_dir, "events")

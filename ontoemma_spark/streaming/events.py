@@ -1,48 +1,22 @@
-"""Structured Streaming ingestion (SURVEY §2.11).
+"""Event-table aggregations over the batch events table (SURVEY §2.11).
 
-The reference is strictly batch — it has NO streaming operators; the
-north rule's resumability maps to batch checkpoints (pipeline.py). This
-module exists because a web-scale KG pipeline ingests pages/events
-continuously in practice: it provides the readStream → watermark →
-windowed-agg → writeStream shape over the same events schema the batch
-queries use, with an exactness contract: the streaming windowed counts
-must equal the batch windowed counts on the same data
-(tests/test_streaming.py asserts it via the memory sink).
+The reference is strictly batch and has no streaming operators; the
+north rule's resumability maps to batch checkpoints (pipeline.py). These
+are the two event-ingest operators the registry runs on the events
+table: tumbling-window counts and replayed-event dedup, each pinned
+against a DuckDB oracle (`event_window_counts`, `event_dedup`).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-EVENTS_DDL = (
-    "event_id bigint, ts timestamp, user_id bigint, event_type string,"
-    " value double, props string"
-)
 
-
-def read_event_stream(spark: SparkSession, path: str, max_files_per_trigger: int = 1) -> DataFrame:
-    """File-source stream over a directory of parquet event files —
-    explicit schema (streams cannot infer), bounded trigger size."""
+def windowed_event_counts(events: DataFrame, window: str = "1 hour") -> DataFrame:
+    """Event-time tumbling-window counts and value totals per type."""
     return (
-        spark.readStream.schema(EVENTS_DDL)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(path)
-    )
-
-
-def windowed_event_counts(
-    events: DataFrame, window: str = "1 hour", watermark: str = "2 hours"
-) -> DataFrame:
-    """Event-time tumbling-window counts per type with late-data
-    watermark — the canonical stateful streaming aggregation. Works
-    identically on a batch DataFrame (watermark is a no-op there), which
-    is how the batch-equivalence test pins correctness."""
-    src = events
-    if events.isStreaming:
-        src = events.withWatermark("ts", watermark)
-    return (
-        src.groupBy(F.window("ts", window).alias("w"), "event_type")
+        events.groupBy(F.window("ts", window).alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 6).alias("total_value"))
         .select(
             F.col("w.start").alias("window_start"),
@@ -53,30 +27,8 @@ def windowed_event_counts(
     )
 
 
-def run_stream_to_memory(
-    spark: SparkSession, src_path: str, query_name: str = "event_counts"
-):
-    """Start the stream into a complete-mode memory sink; caller awaits
-    termination/processing and reads spark.table(query_name)."""
-    counts = windowed_event_counts(read_event_stream(spark, src_path))
-    return (
-        counts.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .start()
-    )
-
-
-def dedup_event_stream(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """Exactly-once ingest dedup: drop replayed event_ids within the
-    watermark horizon (the at-least-once source → exactly-once sink
-    bridge every crawl/event ingest needs). State is bounded by the
-    watermark — ids older than the horizon are expired, so unbounded
-    corpora cannot grow unbounded state. Works identically on a batch
-    DataFrame (global distinct), which is how the equivalence test pins
-    it."""
-    src = events
-    if events.isStreaming:
-        src = events.withWatermark("ts", watermark)
-        return src.dropDuplicatesWithinWatermark(["event_id"])
-    return src.dropDuplicates(["event_id"])
+def dedup_event_stream(events: DataFrame) -> DataFrame:
+    """Exactly-once ingest dedup: drop replayed event_ids (the
+    at-least-once source → exactly-once sink bridge every crawl/event
+    ingest needs)."""
+    return events.dropDuplicates(["event_id"])

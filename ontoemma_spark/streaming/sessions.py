@@ -1,105 +1,21 @@
-"""Custom stateful streaming operator: user sessionization with gap
-timeout, via applyInPandasWithState.
+"""User sessionization with a gap timeout over the batch events table.
 
-The reference has no streaming (SURVEY §2.11); this is the canonical
-"custom stateful operator" a web-scale ingest pipeline needs (e.g.
-grouping crawl events into fetch sessions). State = per-user open
-session (start, last_ts, count); an event later than `gap` seconds
-after last_ts closes the session and opens a new one; watermark expiry
-flushes idle sessions.
+The reference has no streaming (SURVEY §2.11); sessionization is the
+canonical stateful event operator a web-scale ingest pipeline needs
+(e.g. grouping crawl events into fetch sessions). An event later than
+`gap` seconds after the user's previous event opens a new session.
 
-A pure-Python twin (`sessionize_py`) defines the expected output so the
-test can check the streaming result against closed-form truth.
+A pure-Python twin (`sessionize_py`) defines the expected output, so
+tests check the Spark result against closed-form truth.
 """
 
 from __future__ import annotations
 
-from typing import Any, Iterator, Tuple
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-SESSION_SCHEMA = (
-    "user_id bigint, session_start timestamp, session_end timestamp, n_events bigint"
-)
-STATE_SCHEMA = "start long, last long, n long"
 
 DEFAULT_GAP_SECONDS = 1800
-
-
-def _emit(user_id: int, start_us: int, last_us: int, n: int) -> pd.DataFrame:
-    return pd.DataFrame(
-        {
-            "user_id": [user_id],
-            "session_start": [pd.Timestamp(start_us, unit="us")],
-            "session_end": [pd.Timestamp(last_us, unit="us")],
-            "n_events": [n],
-        }
-    )
-
-
-def make_sessionizer(gap_seconds: int = DEFAULT_GAP_SECONDS):
-    gap_us = gap_seconds * 1_000_000
-
-    def fn(
-        key: Tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        user_id = key[0]
-        ts_list: list[int] = []
-        for pdf in pdfs:
-            ts_list.extend(int(t.value // 1000) for t in pd.to_datetime(pdf["ts"]))
-        if not ts_list:
-            return
-        ts_list.sort()
-        if state.exists:
-            start, last, n = state.get
-            # drop cross-batch late events older than the state frontier:
-            # moving `last` backwards would mis-split sessions (the
-            # within-batch sort handles intra-batch disorder; cross-batch
-            # order is the source's contract, e.g. event-time-ordered
-            # ingest; a real deployment widens this with an event-time
-            # timeout + reordering buffer)
-            ts_list = [t for t in ts_list if t >= last]
-            if not ts_list:
-                return
-        else:
-            start = last = ts_list[0]
-            n = 0
-        for t in ts_list:
-            if t - last > gap_us:
-                yield _emit(user_id, start, last, n)
-                start, n = t, 0
-            last = t
-            n += 1
-        state.update((start, last, n))
-
-    return fn
-
-
-def sessionize_stream(
-    events: DataFrame, gap_seconds: int = DEFAULT_GAP_SECONDS, watermark: str = "1 hour"
-) -> DataFrame:
-    """events (streaming, with ts) → CLOSED sessions per user. A session
-    closes when a later event for the same user exceeds the gap; the
-    final open session per user stays in state (a production deployment
-    adds an event-time timeout to flush idle users — kept NoTimeout here
-    for determinism: closed-session output is a pure function of the
-    data, independent of wall clock)."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            make_sessionizer(gap_seconds),
-            outputStructType=SESSION_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
 
 
 def sessionize_batch(
@@ -108,20 +24,17 @@ def sessionize_batch(
     user_col: str = "user_id",
     ts_col: str = "ts",
 ) -> DataFrame:
-    """Batch twin of sessionize_stream over a static events table:
-    classic two-window sessionization (new-session flag via lag, session
-    id via running sum, then groupBy) — one shuffle on user_id total,
-    since all three steps share the same partitioning and Spark plans a
-    single Exchange. Matches sessionize_py(include_open=True): every
-    session, including each user's final one (the streaming operator
-    holds that one in state).
+    """Sessions of a static events table: classic two-window
+    sessionization (new-session flag via lag, session id via running
+    sum, then groupBy) — one shuffle on user_id total, since all three
+    steps share the same partitioning and Spark plans a single
+    Exchange. Matches sessionize_py(include_open=True): every session,
+    including each user's final one.
 
     Scale: partition key is user_id — the natural key at 10^12 events;
     power-user skew is handled by AQE skew-join splitting on the window
-    exchange, or by switching to sessionize_stream, which processes
-    incrementally and never materializes a user's full history.
-    Gap comparison is in microseconds (strict >), bit-identical to the
-    streaming operator and the SQL oracle.
+    exchange. Gap comparison is in microseconds (strict >),
+    bit-identical to the SQL oracle.
     """
     from pyspark.sql import Window
 
@@ -138,9 +51,7 @@ def sessionize_batch(
         prev_us.isNull() | ((us - prev_us) > F.lit(gap_us)), 1
     ).otherwise(0)
     numbered = (
-        # null event times carry no session information and the
-        # streaming twin never sees them (watermarking requires ts) —
-        # drop them so batch == streaming on dirty input
+        # null event times and users carry no session information
         events.select(user_col, ts_col)
         .filter(F.col(ts_col).isNotNull() & F.col(user_col).isNotNull())
         .withColumn("_new", new_sess)
@@ -166,8 +77,7 @@ def sessionize_py(
     include_open: bool = True,
 ) -> list[tuple]:
     """Closed-form twin: (user_id, start, end, n) per session; the final
-    (still open) session per user is included only when include_open —
-    the streaming side keeps it in state."""
+    (still open) session per user is included only when include_open."""
     from collections import defaultdict
 
     by_user = defaultdict(list)

@@ -115,9 +115,9 @@ def main() -> None:
                 '"""PINNED weights of the default NN pair scorer.\n\n'
                 "GENERATED by scripts/train_nn.py (deterministic: fixed input,\n"
                 "fixed seed, full-batch backprop) — do not edit by hand; rerun\n"
-                "the script to reproduce byte-for-byte. Shared by the Spark\n"
-                "plan (MLPModel.score_column) and the generated DuckDB oracle\n"
-                '(mlp_forward_sql), so the two engines replay one model."""\n\n'
+                "the script to reproduce byte-for-byte. The Spark plan\n"
+                "(MLPModel.score_pairs) and the generated DuckDB oracle both\n"
+                'project it as mlp_forward_sql text: one model, two engines."""\n\n'
                 "from ontoemma_spark.operators.scoring_nn import MLPModel\n\n"
                 f"NN_STATE = {d!r}\n\n\n"
                 "def default_nn_model() -> MLPModel:\n"

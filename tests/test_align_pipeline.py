@@ -185,6 +185,29 @@ def test_pipeline_resume_survives_missing_canonicalize_metrics(
     )
 
 
+def test_pipeline_resume_reruns_stage_with_lost_bucket(spark, tmp_path_factory):
+    """A completed materialize checkpoint that lost one bucket directory
+    fails validation on resume: the stage reruns, and the KG equals the
+    clean run's."""
+    import os
+    import shutil
+
+    out_dir = str(tmp_path_factory.mktemp("kgpipe_lostbucket"))
+    pages = synthetic_pages(spark, n_pages=30)
+    kb, _ = synthetic_kb(spark, "KB", n_entities=40)
+    clean = run_pipeline(spark, pages, kb, out_dir)
+    edges_path = os.path.join(out_dir, "materialize")
+    clean_edges = sorted(map(tuple, spark.read.parquet(edges_path).collect()))
+
+    bucket = sorted(clean["stages"]["materialize"]["partition_lineage"])[0]
+    shutil.rmtree(os.path.join(edges_path, f"bucket={bucket}"))
+    assert len(spark.read.parquet(edges_path).collect()) < len(clean_edges)
+
+    resumed = run_pipeline(spark, pages, kb, out_dir)
+    assert resumed == clean
+    assert sorted(map(tuple, spark.read.parquet(edges_path).collect())) == clean_edges
+
+
 def test_manifest_write_crash_keeps_previous_manifest(tmp_path, monkeypatch):
     """A crash inside json.dump must not leave a half-written manifest:
     read_manifest still returns the previous one, so a resume redoes the

@@ -1,9 +1,7 @@
-"""S7 DBpedia N-Triples parser, M3 NN-scorer plumbing, F14 wiki clean."""
+"""S7 DBpedia N-Triples parser, M3 NN-scorer plumbing."""
 
-from pyspark.sql import functions as F
-
-from ontoemma_spark.extract.html_text import clean_wiki_text, clean_wiki_text_py
-from ontoemma_spark.operators.scoring_nn import score_pairs_nn
+from ontoemma_spark.operators.nn_weights import default_nn_model
+from ontoemma_spark.operators.scoring_nn import nn_pair_features
 from ontoemma_spark.sources.dbpedia import load_dbpedia_ntriples
 
 NT_SAMPLE = """<http://dbpedia.org/resource/Aspirin> <http://www.w3.org/2000/01/rdf-schema#label> "Aspirin"@en .
@@ -31,21 +29,11 @@ def test_nn_scorer_plumbing(spark):
          ("s2", "t2", "heart attack", "liver failure")],
         "s_id string, t_id string, s_name string, t_name string",
     )
-    got = {r["s_id"]: r["score"] for r in score_pairs_nn(pairs).collect()}
+    featurized = pairs.select("s_id", "t_id", *nn_pair_features("s_name", "t_name"))
+    scored = default_nn_model().score_pairs(featurized)
+    got = {r["s_id"]: r["score"] for r in scored.collect()}
     assert got["s1"] > 0.9           # exact-name pair scores high
     assert 0.0 <= got["s2"] < 0.5    # trained model keeps non-matches below threshold
     # deterministic across runs
-    again = {r["s_id"]: r["score"] for r in score_pairs_nn(pairs).collect()}
+    again = {r["s_id"]: r["score"] for r in scored.collect()}
     assert got == again
-
-
-def test_clean_wiki_text_length_preserving(spark):
-    s = "Aspirin[3] is used[citation needed] widely."
-    cleaned = clean_wiki_text_py(s)
-    assert len(cleaned) == len(s)
-    assert "[3]" not in cleaned and "citation" not in cleaned
-    assert cleaned.startswith("Aspirin    is used")
-
-    df = spark.createDataFrame([("u", s)], "url string, text string")
-    row = clean_wiki_text(df).collect()[0]
-    assert row["text"] == cleaned

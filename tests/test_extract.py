@@ -1,4 +1,4 @@
-"""Extract stage: byte-identical text per url across all three
+"""Extract stage: byte-identical text per url across both
 implementations, deterministic sentence split, and triple P/R = 1.0 on
 the closed-form synthetic pages."""
 
@@ -6,11 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ontoemma_spark.datagen import expected_triples, synthetic_pages
-from ontoemma_spark.extract.html_text import (
-    extract_text_col,
-    extract_text_mapinpandas,
-    extract_text_py,
-)
+from ontoemma_spark.extract.html_text import extract_text_col, extract_text_py
 from ontoemma_spark.extract.triples import (
     extract_triples,
     extract_triples_py,
@@ -31,11 +27,8 @@ def test_extract_text_byte_identical_all_paths(spark, pages):
         r["url"]: r["t"]
         for r in pages.select("url", extract_text_col("html").alias("t")).collect()
     }
-    arrow = {
-        r["url"]: r["extracted_text"] for r in extract_text_mapinpandas(pages).collect()
-    }
     py = {r["url"]: extract_text_py(bytes(r["html"])) for r in pages.select("url", "html").collect()}
-    assert native == arrow == py
+    assert native == py
     # boilerplate is gone, content text is present
     sample = native["https://example.org/page/0"]
     assert "tracker" not in sample and "copyright" not in sample
@@ -85,8 +78,6 @@ def test_extract_text_invalid_utf8_parity(spark):
     """Malformed UTF-8 html must not kill the scan (ANSI decode throws;
     Common-Crawl is full of it) — and the native path must still match
     the Python spec byte-for-byte, U+FFFD substitutions included."""
-    from ontoemma_spark.extract.html_text import extract_text_col, extract_text_py
-
     payloads = [
         b"\xff\xfe broken <p>but real text</p> \x80\x81",
         b"<p>truncated multibyte \xe2\x82</p>",
@@ -100,11 +91,3 @@ def test_extract_text_invalid_utf8_parity(spark):
            df.select("i", extract_text_col("html").alias("t")).collect()}
     for i, p in enumerate(payloads):
         assert got[i] == extract_text_py(p), (i, got[i], extract_text_py(p))
-
-    # the Arrow implementation must agree on the same invalid inputs
-    from ontoemma_spark.extract.html_text import extract_text_mapinpandas
-
-    pages = df.select(F.col("i").cast("string").alias("url"), "html")
-    arrow = {int(r["url"]): r[1] for r in extract_text_mapinpandas(pages).collect()}
-    for i, p in enumerate(payloads):
-        assert arrow[i] == extract_text_py(p), (i, arrow[i])

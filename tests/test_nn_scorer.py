@@ -6,13 +6,14 @@ F1 ≥ 0.7, which the repo applies to both models (SURVEY §5). Here:
 
   * fit_mlp on fixture pairs → align-style scoring meets the
     thresholds (a model that genuinely scores, not a name hash);
-  * the native-column forward pass equals the Arrow/mapInPandas
-    numpy forward pass bit-for-bit (same literals, same math);
+  * the SQL forward pass (score_pairs) equals the numpy forward pass
+    to 1e-12 (same literals, same math);
   * the pinned default model (nn_weights.py) separates variant
     positives from unrelated negatives;
   * determinism: retraining with the same seed reproduces weights.
 """
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -25,8 +26,8 @@ from ontoemma_spark.operators.scoring_nn import (
     NN_PAIR_FEATURES,
     MLPModel,
     fit_mlp,
+    mlp_forward_sql,
     nn_pair_features,
-    score_pairs_nn,
 )
 from ontoemma_spark.operators.strategy import best_alignment
 
@@ -70,22 +71,18 @@ def test_trained_mlp_meets_reference_thresholds(spark, setup):
 
 
 def test_native_equals_arrow_path(spark, setup):
-    """score_column (JVM codegen) and score_pairs_arrow (numpy over
-    Arrow batches) are the SAME model — scores equal to 1e-12."""
+    """score_pairs (one SQL expression, JVM codegen) and forward (numpy
+    over the collected features) are the SAME model — scores equal to
+    1e-12."""
     _, _, gold, cands, s_feat, t_feat = setup
     train = _train_feats(cands, gold, s_feat, t_feat)
     model = fit_mlp(train, "label", hidden=4, epochs=100, seed=3)
-    native = {
-        (r["s_id"], r["t_id"]): r["score"]
-        for r in model.score_pairs(train).select("s_id", "t_id", "score").collect()
-    }
-    arrow = {
-        (r["s_id"], r["t_id"]): r["score"]
-        for r in model.score_pairs_arrow(train).collect()
-    }
-    assert set(native) == set(arrow)
-    for k in native:
-        assert abs(native[k] - arrow[k]) < 1e-12, k
+    rows = model.score_pairs(train).select("score", *model.feature_names).collect()
+    assert rows
+    X = np.array([[float(r[f]) for f in model.feature_names] for r in rows])
+    expected = model.forward(X)
+    for r, e in zip(rows, expected):
+        assert abs(r["score"] - e) < 1e-12, (r, e)
 
 
 def test_fit_mlp_deterministic(spark, setup):
@@ -100,15 +97,19 @@ def test_fit_mlp_deterministic(spark, setup):
 
 def test_pinned_model_scores_name_pairs(spark):
     """The committed nn_weights model genuinely separates: exact/variant
-    name pairs score high, unrelated names score low — through the
-    legacy score_pairs_nn plumbing entry point (Arrow batched)."""
+    name pairs score high, unrelated names score low — score_pairs over
+    the nn_pair_features of the names."""
     rows = [
         ("a", "x", "chocolate firebrick powder", "chocolate firebrick powder"),
         ("b", "y", "chocolate firebrick powder", "firebrick powder chocolate"),
         ("c", "z", "chocolate firebrick powder", "navy lavender saddle tomato"),
     ]
     pairs = spark.createDataFrame(rows, "s_id string, t_id string, s_name string, t_name string")
-    got = {r["s_id"]: r["score"] for r in score_pairs_nn(pairs).collect()}
+    featurized = pairs.select("s_id", "t_id", *nn_pair_features("s_name", "t_name"))
+    got = {
+        r["s_id"]: r["score"]
+        for r in default_nn_model().score_pairs(featurized).collect()
+    }
     assert got["a"] > 0.9, got
     assert got["b"] > 0.7, got
     assert got["c"] < 0.3, got
@@ -117,13 +118,15 @@ def test_pinned_model_scores_name_pairs(spark):
 def test_default_model_shape():
     m = default_nn_model()
     assert m.feature_names == NN_PAIR_FEATURES
-    col = m.score_column()  # builds without a session error
-    assert col is not None
+    sql = mlp_forward_sql(m, {n: f"`{n}`" for n in m.feature_names})
+    assert all(f"`{n}`" in sql for n in NN_PAIR_FEATURES)
 
 
 def test_nn_features_bounded(spark):
-    """All 8 SQL-twin features land in [0, 1] (MLP input conditioning)."""
-    rows = [("s", "t", "alpha beta-2", ""), ("u", "v", "x", "x")]
+    """All 8 SQL-twin features land in [0, 1] (MLP input conditioning);
+    two empty names give a NULL length ratio, as the DuckDB twin does,
+    not a divide-by-zero error."""
+    rows = [("s", "t", "alpha beta-2", ""), ("u", "v", "x", "x"), ("e", "f", "", "")]
     pairs = spark.createDataFrame(
         rows, "s_id string, t_id string, s_name string, t_name string"
     )

@@ -29,11 +29,9 @@ TEST_REFERENCES = {
     # Reference twins: a test compares a reached path against them.
     "brute_force_topk": "tests/test_multimodal_dedup.py",
     "expected_triples": "tests/test_extract.py",
+    "extract_text_py": "tests/test_extract.py",
     "extract_triples_py": "tests/test_extract.py",
     "ENC_DIM": "tests/test_siamese.py",
-    "encode_bmp": "tests/test_multimodal_dedup.py",
-    "encode_png": "tests/test_multimodal_dedup.py",
-    "encode_wav": "tests/test_multimodal_dedup.py",
     "gold_alignment": "tests/test_align_pipeline.py",
     "pack_sequences_py": "tests/test_curation.py",
     "parse_warc_bytes": "tests/test_warc.py",
@@ -41,19 +39,6 @@ TEST_REFERENCES = {
     "sessionize_py": "tests/test_sessionization.py",
     "simhash_bits": "tests/test_multimodal_dedup.py",
     "split_sentences_spacy": "tests/test_spacy_parity.py",
-    # Second Spark paths a test still pins: fork audit open (ROADMAP).
-    "clean_wiki_text": "tests/test_dbpedia_nn_wiki.py",
-    "extract_text_mapinpandas": "tests/test_extract.py",
-    "run_stream_to_memory": "tests/test_streaming.py",
-    "score_pairs_nn": "tests/test_nn_scorer.py",
-    "sessionize_stream": "tests/test_sessionization.py",
-    # Tested, but no entry point reaches them: open (ROADMAP).
-    "decode_bmp": "tests/test_multimodal_dedup.py",
-    "decode_png": "tests/test_multimodal_dedup.py",
-    "decode_wav": "tests/test_multimodal_dedup.py",
-    "merge_entities": "tests/test_components_and_graph.py",
-    "missed_gold": "tests/test_components_and_graph.py",
-    "validate_stage": "tests/test_tableio.py",
 }
 
 

@@ -1,58 +1,11 @@
-"""Custom stateful streaming (applyInPandasWithState sessionization)
-vs the closed-form python twin. Input batches are time-ordered (the
-sessionizer assumes per-user in-order arrival within the watermark, as a
-real ingest with event-time-sorted micro-batches provides)."""
+"""Gap-timeout sessionization (sessionize_batch) vs the closed-form
+python twin."""
 
 import pandas as pd
-from pyspark.sql import functions as F
 
-from ontoemma_spark.streaming.sessions import sessionize_py, sessionize_stream
+from ontoemma_spark.streaming.sessions import sessionize_py
 
 GAP = 600  # 10 min
-
-
-def test_sessionize_stream_matches_python_twin(spark, tmp_path):
-    src = str(tmp_path / "events_sessions")
-    events = (
-        spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-        .select("user_id", "ts")
-        .filter(F.col("user_id") < 10)
-    )
-    # two time-ordered batches: first half by ts, then second half
-    # (approxQuantile rejects timestamps → cast to epoch seconds)
-    median_s = events.select(
-        F.unix_timestamp("ts").alias("s")
-    ).approxQuantile("s", [0.5], 0.0)[0]
-    median = F.timestamp_seconds(F.lit(median_s))
-    events.filter(F.col("ts") <= median).coalesce(1).write.mode("overwrite").parquet(src)
-    events.filter(F.col("ts") > median).coalesce(1).write.mode("append").parquet(src)
-
-    rows = [(r["user_id"], pd.Timestamp(r["ts"])) for r in events.collect()]
-    expected_closed = sessionize_py(rows, GAP, include_open=False)
-    assert len(expected_closed) > 0  # data actually has >10min gaps
-
-    stream = (
-        spark.readStream.schema("user_id bigint, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    sessions = sessionize_stream(stream, gap_seconds=GAP, watermark="10 minutes")
-    q = (
-        sessions.writeStream.format("memory")
-        .queryName("t_sessions")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = sorted(
-            (r["user_id"], pd.Timestamp(r["session_start"]),
-             pd.Timestamp(r["session_end"]), r["n_events"])
-            for r in spark.table("t_sessions").collect()
-        )
-    finally:
-        q.stop()
-    assert got == expected_closed
 
 
 def test_sessionize_py_twin():
@@ -75,7 +28,7 @@ def test_sessionize_batch_matches_python_twin(spark):
     )
     rows = [(r["user_id"], pd.Timestamp(r["ts"])) for r in events.collect()]
     # include_open=True: the batch form emits every session, including
-    # each user's final one (the streaming operator keeps that in state)
+    # each user's final one
     expected = sorted(
         (uid, start, end, n)
         for uid, start, end, n in sessionize_py(rows, GAP, include_open=True)
