@@ -58,23 +58,20 @@ def align(
     model: LRModel | None = None,
     strategy: str = "best",
     threshold: float = config.SIM_SCORE_THRESHOLD,
-    top_k: int = config.KEEP_TOP_K_CANDIDATES,
-    normalize: bool = True,
 ) -> AlignmentResult:
     """Candidates come from candidate_pairs_broadcast_index, which runs
     the relational blocking join itself when the target index does not
-    fit on the driver.
+    fit on the driver, keeping config.KEEP_TOP_K_CANDIDATES per source.
 
-    normalize: apply P1 KB normalization first (the reference align()
-    calls normalize_kb on both sides before candidate selection,
+    Both KBs are normalized first (P1: the reference align() calls
+    normalize_kb on both sides before candidate selection,
     OntoEmma.py:846-848 — tokenization is case-sensitive, so skipping it
     loses candidates on mixed-case input)."""
     from ontoemma_spark.operators.normalize import normalize_entities
 
     model = model or DEFAULT_LR_MODEL
-    if normalize:
-        s_entities = normalize_entities(s_entities)
-        t_entities = normalize_entities(t_entities)
+    s_entities = normalize_entities(s_entities)
+    t_entities = normalize_entities(t_entities)
     # both corpus sizes (the blocking IDFs' N) in one job, not two
     side = F.col("_is_s")
     s_count, t_count = (
@@ -85,7 +82,8 @@ def align(
     )
 
     cands = candidate_pairs_broadcast_index(
-        entity_tokens(s_entities), entity_tokens(t_entities), s_count, t_count, top_k=top_k
+        entity_tokens(s_entities), entity_tokens(t_entities), s_count, t_count,
+        top_k=config.KEEP_TOP_K_CANDIDATES,
     ).persist(StorageLevel.MEMORY_AND_DISK)
     equiv = string_equiv_alignment(s_entities, t_entities, candidates=cands).persist(
         StorageLevel.MEMORY_AND_DISK

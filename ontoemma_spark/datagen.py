@@ -145,7 +145,13 @@ def page_html(i: int, kb_size: int) -> bytes:
     return (_BOILERPLATE_HEAD.format(i=i) + body + _BOILERPLATE_TAIL).encode("utf-8")
 
 
-def synthetic_pages(spark: SparkSession, n_pages: int = 200, kb_size: int = 150) -> DataFrame:
+# concepts the synthetic pages mention unless a caller narrows them
+PAGES_KB_SIZE = 150
+
+
+def synthetic_pages(
+    spark: SparkSession, n_pages: int = 200, kb_size: int = PAGES_KB_SIZE
+) -> DataFrame:
     """North-rule input table (url, warc_ts, html, text, lang)."""
     epoch = datetime(2026, 1, 1, tzinfo=timezone.utc)
     rows = [
@@ -161,10 +167,11 @@ def synthetic_pages(spark: SparkSession, n_pages: int = 200, kb_size: int = 150)
     return spark.createDataFrame(rows, PAGES_SCHEMA)
 
 
-def expected_triples(spark: SparkSession, n_pages: int, kb_size: int = 150) -> DataFrame:
+def expected_triples(spark: SparkSession, n_pages: int) -> DataFrame:
+    """The triples synthetic_pages(spark, n_pages) states."""
     rows = []
     for i in range(n_pages):
-        for idx, (s, p, o) in enumerate(page_sentences(i, kb_size)):
+        for idx, (s, p, o) in enumerate(page_sentences(i, PAGES_KB_SIZE)):
             rows.append((f"https://example.org/page/{i}", idx, s, p, o))
     return spark.createDataFrame(
         rows, "url string, sent_idx long, subj string, pred string, obj string"

@@ -103,7 +103,7 @@ def extract_triples_py(text: str) -> list[tuple[int, str, str, str]]:
     return out
 
 
-def split_sentences_spacy(text: str | None, model: str = "en_core_web_sm") -> list[str]:
+def split_sentences_spacy(text: str | None) -> list[str]:
     """Optional REAL-spaCy sentence boundaries (F15) for users who ship
     the public model — lifts the regex spec's 0.955 golden boundary
     agreement to reference parity. Shares the per-executor pipeline
@@ -112,4 +112,4 @@ def split_sentences_spacy(text: str | None, model: str = "en_core_web_sm") -> li
     split_sentences_py so either can back a mapInPandas splitter."""
     from ontoemma_spark.functions.parse import load_spacy
 
-    return [s.text for s in load_spacy(model)(text or "").sents]
+    return [s.text for s in load_spacy()(text or "").sents]

@@ -95,23 +95,23 @@ def np_parse(name: str | None) -> tuple[str, list[str]]:
 _SPACY_NLP = None
 
 
-def load_spacy(model: str = "en_core_web_sm"):
-    """Executor-side pipeline singleton. NER/lemmatizer disabled — the
-    F9 feature only needs the dependency parse."""
+def load_spacy():
+    """Executor-side en_core_web_sm pipeline singleton. NER/lemmatizer
+    disabled — the F9 feature only needs the dependency parse."""
     global _SPACY_NLP
     if _SPACY_NLP is None:
         import spacy
 
-        _SPACY_NLP = spacy.load(model, disable=["ner", "lemmatizer"])
+        _SPACY_NLP = spacy.load("en_core_web_sm", disable=["ner", "lemmatizer"])
     return _SPACY_NLP
 
 
-def np_parse_spacy(name: str | None, model: str = "en_core_web_sm"):
+def np_parse_spacy(name: str | None):
     """(root, sorted root_words) from a REAL spaCy dependency parse —
     the exact reference semantics (EngineeredFeatureGenerator.py:34-44:
     root = the ROOT token's text, root_words = {token.head.text} over
     all tokens). Drop-in signature twin of np_parse."""
-    doc = load_spacy(model)(name or "")
+    doc = load_spacy()(name or "")
     root = ""
     heads: set[str] = set()
     for tok in doc:

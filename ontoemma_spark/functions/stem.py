@@ -9,9 +9,6 @@ prefixes, exceptional forms, steps 0-5, Y-marking), giving NLTK output
 parity by construction; tests/test_golden_parity.py pins a vendored
 golden list covering every exceptional form and each rule family.
 
-porter_stem (the original 1980 algorithm) is retained for callers that
-want it; the feature pipeline uses snowball_stem.
-
 The lemmatizer remains a rule-based stand-in: WordNetLemmatizer is a
 DATABASE lookup (morphy over the WordNet exception lists), which cannot
 be reproduced without shipping WordNet — documented divergence; both
@@ -20,141 +17,6 @@ features stay internally consistent.
 """
 
 from __future__ import annotations
-
-_VOWELS = set("aeiou")
-
-
-def _is_cons(word: str, i: int) -> bool:
-    ch = word[i]
-    if ch in _VOWELS:
-        return False
-    if ch == "y":
-        return i == 0 or not _is_cons(word, i - 1)
-    return True
-
-
-def _measure(stem: str) -> int:
-    """Number of VC sequences (the Porter 'm' measure)."""
-    m = 0
-    prev_cons = True
-    seen_vowel = False
-    for i in range(len(stem)):
-        cons = _is_cons(stem, i)
-        if not cons:
-            seen_vowel = True
-        elif seen_vowel:
-            m += 1
-            seen_vowel = False
-        prev_cons = cons
-    return m
-
-
-def _has_vowel(stem: str) -> bool:
-    return any(not _is_cons(stem, i) for i in range(len(stem)))
-
-
-def _ends_double_cons(word: str) -> bool:
-    return len(word) >= 2 and word[-1] == word[-2] and _is_cons(word, len(word) - 1)
-
-
-def _cvc(word: str) -> bool:
-    if len(word) < 3:
-        return False
-    return (
-        _is_cons(word, len(word) - 3)
-        and not _is_cons(word, len(word) - 2)
-        and _is_cons(word, len(word) - 1)
-        and word[-1] not in "wxy"
-    )
-
-
-def porter_stem(word: str) -> str:
-    """Porter stemmer, steps 1a-5b."""
-    if len(word) <= 2:
-        return word
-    w = word
-
-    # Step 1a
-    if w.endswith("sses"):
-        w = w[:-2]
-    elif w.endswith("ies"):
-        w = w[:-2]
-    elif w.endswith("ss"):
-        pass
-    elif w.endswith("s"):
-        w = w[:-1]
-
-    # Step 1b
-    if w.endswith("eed"):
-        if _measure(w[:-3]) > 0:
-            w = w[:-1]
-    else:
-        flag = False
-        if w.endswith("ed") and _has_vowel(w[:-2]):
-            w, flag = w[:-2], True
-        elif w.endswith("ing") and _has_vowel(w[:-3]):
-            w, flag = w[:-3], True
-        if flag:
-            if w.endswith(("at", "bl", "iz")):
-                w += "e"
-            elif _ends_double_cons(w) and not w.endswith(("l", "s", "z")):
-                w = w[:-1]
-            elif _measure(w) == 1 and _cvc(w):
-                w += "e"
-
-    # Step 1c
-    if w.endswith("y") and _has_vowel(w[:-1]):
-        w = w[:-1] + "i"
-
-    # Step 2
-    step2 = [
-        ("ational", "ate"), ("tional", "tion"), ("enci", "ence"), ("anci", "ance"),
-        ("izer", "ize"), ("abli", "able"), ("alli", "al"), ("entli", "ent"),
-        ("eli", "e"), ("ousli", "ous"), ("ization", "ize"), ("ation", "ate"),
-        ("ator", "ate"), ("alism", "al"), ("iveness", "ive"), ("fulness", "ful"),
-        ("ousness", "ous"), ("aliti", "al"), ("iviti", "ive"), ("biliti", "ble"),
-    ]
-    for suf, rep in step2:
-        if w.endswith(suf):
-            if _measure(w[: -len(suf)]) > 0:
-                w = w[: -len(suf)] + rep
-            break
-
-    # Step 3
-    step3 = [
-        ("icate", "ic"), ("ative", ""), ("alize", "al"), ("iciti", "ic"),
-        ("ical", "ic"), ("ful", ""), ("ness", ""),
-    ]
-    for suf, rep in step3:
-        if w.endswith(suf):
-            if _measure(w[: -len(suf)]) > 0:
-                w = w[: -len(suf)] + rep
-            break
-
-    # Step 4
-    step4 = [
-        "al", "ance", "ence", "er", "ic", "able", "ible", "ant", "ement",
-        "ment", "ent", "ou", "ism", "ate", "iti", "ous", "ive", "ize",
-    ]
-    for suf in step4:
-        if w.endswith(suf):
-            if _measure(w[: -len(suf)]) > 1:
-                w = w[: -len(suf)]
-            break
-    else:
-        if w.endswith("ion") and len(w) > 3 and w[-4] in "st" and _measure(w[:-3]) > 1:
-            w = w[:-3]
-
-    # Step 5a
-    if w.endswith("e"):
-        stem = w[:-1]
-        if _measure(stem) > 1 or (_measure(stem) == 1 and not _cvc(stem)):
-            w = stem
-    # Step 5b
-    if _measure(w) > 1 and _ends_double_cons(w) and w.endswith("l"):
-        w = w[:-1]
-    return w
-
 
 # ---------------------------------------------------------------------------
 # Porter2 / Snowball English (the algorithm NLTK's SnowballStemmer

@@ -63,21 +63,19 @@ def normalize_string(col) -> Column:
     return F.translate(F.lower(F.trim(c)), "_-", " ")
 
 
-def tokenize(col, *, remove_stopwords: bool = True) -> Column:
+def tokenize(col) -> Column:
     """Regex word tokens minus English stopwords, order+dups preserved
     (string_utils.py:96-105 returns a tuple, not a set)."""
     c = F.col(col) if isinstance(col, str) else col
     toks = F.regexp_extract_all(c, F.lit(TOKEN_PATTERN), 0)
-    if remove_stopwords:
-        # r6: a literal IN — the optimizer rewrites it to an InSet hash
-        # lookup; ~array_contains(literal array, t) scanned all 179
-        # stopwords per token interpreted. Same null-safe equality
-        # membership semantics.
-        toks = F.filter(toks, lambda t: ~isin_words(t, ENGLISH_STOPWORDS_SORTED))
-    return toks
+    # r6: a literal IN — the optimizer rewrites it to an InSet hash
+    # lookup; ~array_contains(literal array, t) scanned all 179
+    # stopwords per token interpreted. Same null-safe equality
+    # membership semantics.
+    return F.filter(toks, lambda t: ~isin_words(t, ENGLISH_STOPWORDS_SORTED))
 
 
-def char_ngrams(col, n: int, pad: str = "\x00") -> Column:
+def char_ngrams(col, n: int) -> Column:
     """Padded character n-grams (string_utils.py:27-35).
 
     The reference pads with (n-1) NUL bytes on both ends — parity quirk.
@@ -85,7 +83,7 @@ def char_ngrams(col, n: int, pad: str = "\x00") -> Column:
     needing the set apply array_distinct.
     """
     c = F.col(col) if isinstance(col, str) else col
-    padding = F.lit(pad * (n - 1))
+    padding = F.lit("\x00" * (n - 1))
     padded = F.concat(padding, c, padding)
     # positions 1 .. len(padded)-n+1
     return F.transform(

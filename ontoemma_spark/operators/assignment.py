@@ -45,9 +45,8 @@ from ontoemma_spark import config
 class _ModifiedHungarian:
     """Numpy port of ModifiedHungarian (modified_hungarian.py:8-145)."""
 
-    def __init__(self, mat: np.ndarray, best_n: int = config.MODH_KEEP_TOP_N_CANDIDATES,
-                 seed: int = 0):
-        self.best_n = best_n
+    def __init__(self, mat: np.ndarray, seed: int = 0):
+        self.best_n = config.MODH_KEEP_TOP_N_CANDIDATES
         self.transposed = False
         self.mat = np.asarray(mat, dtype=np.float64)
         self.row_num = self.mat.shape[0]
@@ -154,7 +153,6 @@ def modified_hungarian_alignment(
     t_order: list[str],
     threshold: float = config.SIM_SCORE_THRESHOLD,
     seed: int = 0,
-    best_n: int = config.MODH_KEEP_TOP_N_CANDIDATES,
 ) -> DataFrame:
     """MODH strategy with reference semantics (OntoEmma.py:577-611):
     collect the (KB-bounded) candidate scores, build the cost matrix in
@@ -174,7 +172,7 @@ def modified_hungarian_alignment(
     for (s, t), sc in sim.items():
         if s in s_idx and t in t_idx:
             mat[s_idx[s]][t_idx[t]] = 1.0 - sc
-    indices = _ModifiedHungarian(mat, best_n=best_n, seed=seed).compute()
+    indices = _ModifiedHungarian(mat, seed=seed).compute()
     out = []
     for r, c in sorted(indices):
         pair = (s_order[r], t_order[c])

@@ -46,8 +46,6 @@ def entity_tokens(
     id_col: str = "research_entity_id",
     aliases_col: str = "aliases",
     definition_col: str = "definition",
-    ngram_size: int = config.NGRAM_SIZE,
-    ngram_pad: str = "\x00",
 ) -> DataFrame:
     """Distinct (entity_id, token) pairs per CandidateSelection.py:46-88:
     word tokens of every alias ∪ char-n-grams of normalize_string(alias)
@@ -59,7 +57,7 @@ def entity_tokens(
     alias = F.coalesce(F.col(aliases_col), F.array().cast("array<string>"))
     word_toks = F.flatten(F.transform(alias, lambda a: tokenize(a)))
     gram_toks = F.flatten(
-        F.transform(alias, lambda a: char_ngrams(normalize_string(a), ngram_size, pad=ngram_pad))
+        F.transform(alias, lambda a: char_ngrams(normalize_string(a), config.NGRAM_SIZE))
     )
     def_toks = tokenize(F.coalesce(F.col(definition_col), F.lit("")))
     return (

@@ -27,7 +27,6 @@ def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_iterations: int = config.CC_MAX_ITERATIONS,
 ) -> DataFrame:
     """(node, component) with component = min node id (string order) in
     the node's connected component. Edges are treated as undirected.
@@ -103,7 +102,7 @@ def connected_components(
         .localCheckpoint(eager=True)
     )
 
-    for _ in range(max_iterations):
+    for _ in range(config.CC_MAX_ITERATIONS):
         # neighbor-label messages; partial min combines map-side.
         msgs = (
             sym.join(labels.withColumnRenamed("node", "a"), "a")
@@ -144,14 +143,13 @@ def connected_components(
     # silent non-convergence would split one component across several
     # canonical ids — fail loudly instead.
     raise RuntimeError(
-        f"connected_components did not converge in {max_iterations} rounds "
-        "(graph diameter exceeds the bound); raise max_iterations"
+        f"connected_components did not converge in {config.CC_MAX_ITERATIONS} "
+        "rounds (graph diameter exceeds the bound); raise config.CC_MAX_ITERATIONS"
     )
 
 
 def _min_reach_labels_bidir(
-    edges: DataFrame, nodes: DataFrame, max_iterations: int,
-    seed_col: str | None = None,
+    edges: DataFrame, nodes: DataFrame, seed_col: str | None = None,
 ) -> DataFrame:
     """(node, label, blabel): label = min node id that can REACH node
     along directed edges, blabel = min node id node can reach (both
@@ -190,7 +188,7 @@ def _min_reach_labels_bidir(
         )
         .localCheckpoint(eager=True)
     )
-    for _ in range(max_iterations):
+    for _ in range(config.CC_MAX_ITERATIONS):
         msgs = (
             edges2.join(labels.withColumnRenamed("node", "src"), ["src", "dir"])
             .groupBy(F.col("dst").alias("node"), "dir")
@@ -226,8 +224,8 @@ def _min_reach_labels_bidir(
                 .select("node", F.col("f").alias("label"), F.col("b").alias("blabel"))
             )
     raise RuntimeError(
-        f"directed min-label propagation did not converge in {max_iterations} "
-        "rounds; raise max_iterations"
+        "directed min-label propagation did not converge in "
+        f"{config.CC_MAX_ITERATIONS} rounds; raise config.CC_MAX_ITERATIONS"
     )
 
 
@@ -288,7 +286,6 @@ def strongly_connected_components(
     src: str = "src",
     dst: str = "dst",
     max_rounds: int = 20,
-    max_iterations: int = config.CC_MAX_ITERATIONS,
 ) -> DataFrame:
     """(node, component) over a DIRECTED graph, component = min node id
     in the node's strongly connected component. The web-graph shape:
@@ -386,7 +383,7 @@ def strongly_connected_components(
             .localCheckpoint(eager=True)
         )
 
-        both = _min_reach_labels_bidir(live, nodes, max_iterations)
+        both = _min_reach_labels_bidir(live, nodes)
         settled = (
             both.filter(F.col("label") == F.col("blabel"))
             .select("node", F.col("label").alias("component"))
@@ -424,8 +421,6 @@ def bow_tie_classes(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_rounds: int = 20,
-    max_iterations: int = config.CC_MAX_ITERATIONS,
 ) -> DataFrame:
     """Broder et al. (2000) bow-tie anatomy of a directed link graph:
     every node classified as
@@ -450,10 +445,9 @@ def bow_tie_classes(
 
     Output: (node, component, cls). Empty input → empty output.
     """
-    scc = strongly_connected_components(
-        edges, src=src, dst=dst, max_rounds=max_rounds,
-        max_iterations=max_iterations,
-    ).localCheckpoint(eager=True)
+    scc = strongly_connected_components(edges, src=src, dst=dst).localCheckpoint(
+        eager=True
+    )
     top = (
         scc.groupBy("component")
         .agg(F.count("*").alias("n"))
@@ -531,9 +525,7 @@ def bow_tie_classes(
         return spark.createDataFrame(
             rows, schema=f"node {node_t}, component {node_t}, cls string"
         )
-    reach = _min_reach_labels_bidir(
-        live, seeded, max_iterations, seed_col="_seed"
-    )
+    reach = _min_reach_labels_bidir(live, seeded, seed_col="_seed")
     sent = F.lit(BOW_TIE_SENTINEL)
     return scc.join(reach, "node").select(
         "node",

@@ -59,7 +59,6 @@ def mixture_sample(
     weights: DataFrame,
     source_col: str = "source",
     id_col: str = "doc_id",
-    salt: str = "mix",
 ) -> DataFrame:
     """Deterministic per-source mixture sampling (the Pile/Dolma-style
     source weighting): keep each doc with its source's probability,
@@ -68,7 +67,7 @@ def mixture_sample(
     the same documents.
 
     weights: (source, weight) with weight in [0, 1]. The draw is
-    md5(salt:doc_id) compared lexicographically against the weight's
+    md5("mix:" || doc_id) compared lexicographically against the weight's
     8-hex-digit threshold — string comparison is engine-portable
     (identical in Spark, DuckDB, Python), unlike float division of
     hash ints.
@@ -106,7 +105,7 @@ def mixture_sample(
         F.col("source").alias(source_col), thresh.alias("_thresh")
     )
     draw = F.substring(
-        F.md5(F.concat(F.lit(f"{salt}:"), F.col(id_col).cast("string"))), 1, 8
+        F.md5(F.concat(F.lit("mix:"), F.col(id_col).cast("string"))), 1, 8
     )
     return (
         docs.join(F.broadcast(w), source_col, "left")
@@ -121,14 +120,13 @@ def token_budget_sample(
     source_col: str = "source",
     text_col: str = "text",
     id_col: str = "doc_id",
-    salt: str = "budget",
 ) -> DataFrame:
     """Deterministic per-source TOKEN-budget sampling — the "take N
     tokens from each source" mixture op (vs mixture_sample's keep-
     probability form, which controls doc counts, not token mass):
-    docs are admitted in salted-hash order until the source's budget
-    is exhausted. Admission rule: a doc is kept iff the tokens
-    admitted BEFORE it are under budget — the boundary-crossing doc is
+    docs are admitted in md5("budget:" || doc_id) order until the
+    source's budget is exhausted. Admission rule: a doc is kept iff the
+    tokens admitted BEFORE it are under budget — the boundary-crossing doc is
     included (soft cap; budgets land within one doc of exact). The
     hash order makes the selection stable across runs, machines and
     partitionings, and independent of input order. A null-text doc
@@ -149,7 +147,7 @@ def token_budget_sample(
     per-source top-k has). Returns the kept docs + (n_tokens,
     tokens_before) for audit."""
     draw = F.substring(
-        F.md5(F.concat(F.lit(f"{salt}:"), F.col(id_col).cast("string"))), 1, 16
+        F.md5(F.concat(F.lit("budget:"), F.col(id_col).cast("string"))), 1, 16
     )
     # '' splits to [''] (size 1) — an empty doc must cost 0 tokens,
     # same as null, or the admission accounting is inconsistent
@@ -178,12 +176,9 @@ def token_budget_sample(
 def leakage_safe_split(
     docs: DataFrame,
     url_col: str = "url",
-    train: float = 0.9,
-    dev: float = 0.05,
-    salt: str = "split",
 ) -> DataFrame:
-    """Group-leakage-safe train/dev/test assignment: EVERY page of a
-    registrable host lands in the same split, decided by a salted hash
+    """Group-leakage-safe 90/5/5 train/dev/test assignment: EVERY page of
+    a registrable host lands in the same split, decided by a salted hash
     of the HOST, not the document. Near-duplicate pages overwhelmingly
     share a host (templated articles, mirrored paths), so a per-doc
     split would leak paraphrases of held-out text into train — the
@@ -196,7 +191,7 @@ def leakage_safe_split(
       * ZERO shuffle — one narrow expression per row, no groupBy(host),
         no window, no join;
       * INCREMENTALLY STABLE — a host's split depends only on
-        md5(salt:host), so re-running after a new crawl batch never
+        md5("split:" || host), so re-running after a new crawl batch never
         moves an existing host (append-only splits; quantile splits
         reshuffle the boundary every time the corpus grows);
       * split sizes are proportional in expectation over hosts (law of
@@ -213,19 +208,10 @@ def leakage_safe_split(
     """
     from ontoemma_spark.operators.textstats import host_of
 
-    if train < 0 or dev < 0 or train + dev > 1:
-        raise ValueError(f"invalid split fractions train={train} dev={dev}")
-
-    def _thresh(frac: float) -> str:
-        # frac >= 1.0 needs 9 hex digits, which loses the lexicographic
-        # compare against 8-digit draws — use the above-every-draw
-        # sentinel instead (mixture_sample's device)
-        return "zzzzzzzz" if frac >= 1.0 else format(int(frac * 16**8), "08x")
-
-    t_train = _thresh(train)
-    t_dev = _thresh(train + dev)
+    t_train = format(int(0.9 * 16**8), "08x")
+    t_dev = format(int((0.9 + 0.05) * 16**8), "08x")
     host = F.coalesce(host_of(url_col), F.lit(""))
-    draw = F.substring(F.md5(F.concat(F.lit(f"{salt}:"), host)), 1, 8)
+    draw = F.substring(F.md5(F.concat(F.lit("split:"), host)), 1, 8)
     return docs.withColumn("host", host).withColumn(
         "split",
         F.when(draw < t_train, "train")
@@ -241,7 +227,6 @@ def pack_sequences(
     text_col: str = "text",
     id_col: str = "doc_id",
     group_col: str | None = None,
-    docs_per_group: int = 50_000,
 ) -> DataFrame:
     """Greedy sequence packing: fill fixed-capacity training contexts
     with whole documents (first-fit in doc-id order), the standard
@@ -263,13 +248,13 @@ def pack_sequences(
     Scale: one shuffle keyed by the group hash; each group's packing
     is a single in-memory pass over its docs inside an Arrow batch, so
     the group size bounds task memory. n_groups=None (default)
-    auto-sizes from a corpus count so each group holds ~docs_per_group
-    docs — a fixed default would silently build 10^10-doc Arrow
-    batches at 10^12 docs. Pass n_groups explicitly to skip the count
+    auto-sizes from a corpus count so each group holds ~50,000 docs — a
+    fixed default would silently build 10^10-doc Arrow batches at 10^12
+    docs. Pass n_groups explicitly to skip the count
     pass when the corpus size is already known.
     """
     if group_col is None and n_groups is None:
-        n_groups = max(16, -(-docs.count() // docs_per_group))  # ceil
+        n_groups = max(16, -(-docs.count() // 50_000))  # ceil
     # '' splits to [''] (size 1); an empty doc has nothing to pack and
     # must not occupy bin capacity — count it 0 so the filter drops it
     toks = F.when(

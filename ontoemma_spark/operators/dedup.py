@@ -81,16 +81,14 @@ def word_shingles(
     text_col: str = "text",
     id_col: str = "doc_id",
     w: int = 3,
-    distinct: bool = True,
 ) -> DataFrame:
-    """(doc_id, shingle) exploded form — for the RELATIONAL consumers
-    (shared-shingle blocking join, pairwise jaccard). Sketches should
-    use shingle_array instead (narrow)."""
-    sh = docs.select(
+    """Distinct (doc_id, shingle) exploded form — for the RELATIONAL
+    consumers (shared-shingle blocking join, pairwise jaccard). Sketches
+    should use shingle_array instead (narrow)."""
+    return docs.select(
         F.col(id_col).alias("doc_id"),
         F.explode(shingle_array(text_col, w)).alias("shingle"),
-    )
-    return sh.distinct() if distinct else sh
+    ).distinct()
 
 
 def exact_duplicates(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -267,10 +265,9 @@ def dedup_state(
               doc_id: the probe only asks "seen?", so the state is the
               band VOCABULARY — far smaller than the per-doc table)
 
-    At 10^12 docs both are corpus-scale tables: write each bucketed by
-    its join key (tableio.write_stage with bucket_col="content_hash" /
-    "band_hash") so every future batch probe co-locates and only the
-    batch side shuffles.
+    At 10^12 docs both are corpus-scale tables: store each as a table
+    bucketed by its join key (content_hash / band_hash) so every future
+    batch probe co-locates and only the batch side shuffles.
 
     max_band_df (measured over this corpus slice, per-doc memberships
     BEFORE the vocabulary distinct) excludes boilerplate bands from
@@ -303,7 +300,6 @@ def incremental_dedup(
     w: int = 3,
     num_hashes: int = 8,
     bands: int = 2,
-    max_band_df: int | None = None,
 ) -> DataFrame:
     """Batch-vs-corpus dedup — the incremental-ingest shape (a new
     crawl batch against the state of everything already admitted),
@@ -327,13 +323,7 @@ def incremental_dedup(
     (band_idx, band_hash), |batch|-sized on the probe side; with the
     state tables bucketed on those keys (dedup_state's contract) only
     the batch shuffles. Nothing here scans more than the
-    already-materialized state.
-
-    max_band_df (measured over THIS batch's per-doc band memberships)
-    guards a degenerate batch — e.g. a crawl slice that is one site's
-    boilerplate: its hot band would mark the whole batch near-dup on a
-    single vocabulary hit. Use the same cap given to dedup_state so
-    probe and state agree on which bands are signal."""
+    already-materialized state."""
     seen = seen_hashes.select("content_hash").distinct().withColumn(
         "_exact", F.lit(True)
     )
@@ -346,8 +336,6 @@ def incremental_dedup(
             new_docs, text_col=text_col, id_col=id_col, w=w, num_hashes=num_hashes
         )
         stacked = band_hashes(sig, num_hashes=num_hashes, bands=bands)
-        if max_band_df is not None:
-            stacked = drop_hot_bands(stacked, max_band_df)
         hits = (
             stacked
             .join(
@@ -371,8 +359,12 @@ def incremental_dedup(
     )
 
 
-def simhash_bits(shingles_or_tokens: DataFrame, num_bits: int = 16) -> DataFrame:
-    """SimHash over the first num_bits bits of md5 (one hex nibble's high
+# SimHash width: one bit from each of the first SIMHASH_BITS md5 hex nibbles
+SIMHASH_BITS = 16
+
+
+def simhash_bits(shingles_or_tokens: DataFrame) -> DataFrame:
+    """SimHash over the first SIMHASH_BITS bits of md5 (one hex nibble's high
     bit per position): bit_i = 1 iff Σ_tokens (nibble_i ≥ 8 ? +1 : -1) > 0.
     Returns (doc_id, simhash) with simhash as a bit string — hex-nibble
     construction keeps the SQL oracle identical.
@@ -386,10 +378,12 @@ def simhash_bits(shingles_or_tokens: DataFrame, num_bits: int = 16) -> DataFrame
         F.sum(
             F.when(F.substring(h, i + 1, 1).isin(*"89abcdef"), 1).otherwise(-1)
         ).alias(f"b{i}")
-        for i in range(num_bits)
+        for i in range(SIMHASH_BITS)
     ]
     agg = shingles_or_tokens.groupBy("doc_id").agg(*sums)
-    bits = F.concat(*[F.when(F.col(f"b{i}") > 0, "1").otherwise("0") for i in range(num_bits)])
+    bits = F.concat(
+        *[F.when(F.col(f"b{i}") > 0, "1").otherwise("0") for i in range(SIMHASH_BITS)]
+    )
     return agg.select("doc_id", bits.alias("simhash"))
 
 
@@ -398,7 +392,6 @@ def simhash_bits_narrow(
     text_col: str = "text",
     id_col: str = "doc_id",
     w: int = 3,
-    num_bits: int = 16,
 ) -> DataFrame:
     """SimHash with ZERO shuffle: per-bit vote sums run inside the row
     via aggregate() over the distinct-shingle array. Identical values to
@@ -415,7 +408,7 @@ def simhash_bits_narrow(
         )
 
     bits = F.concat(
-        *[F.when(bit_sum(i) > 0, "1").otherwise("0") for i in range(num_bits)]
+        *[F.when(bit_sum(i) > 0, "1").otherwise("0") for i in range(SIMHASH_BITS)]
     )
     return docs.select(F.col(id_col).alias("doc_id"), bits.alias("simhash"))
 
@@ -994,7 +987,6 @@ def contamination_hits(
     id_col: str = "doc_id",
     w: int = 5,
     bench_text_col: str = "text",
-    broadcast_benchmark: bool = True,
 ) -> DataFrame:
     """Benchmark decontamination (the GPT-3/PaLM-style eval-set scrub):
     flag training docs sharing any w-word gram with a benchmark corpus.
@@ -1007,17 +999,13 @@ def contamination_hits(
     Scale: the benchmark side is eval sets — thousands of docs, a gram
     set in the millions — so it broadcasts and the corpus-side probe is
     a map-side semi-join: no shuffle of the 10^12-doc gram stream, and
-    the per-doc hit count aggregates map-side (doc-keyed). Set
-    broadcast_benchmark=False if the contamination set is itself
-    corpus-sized (falls back to a shuffled equi-join).
+    the per-doc hit count aggregates map-side (doc-keyed).
     """
-    bench_grams = (
+    bench_grams = F.broadcast(
         benchmark.select(
             F.explode(F.array_distinct(shingle_array(bench_text_col, w))).alias("gram")
         ).distinct()
     )
-    if broadcast_benchmark:
-        bench_grams = F.broadcast(bench_grams)
     doc_grams = docs.select(
         F.col(id_col).alias("doc_id"),
         F.explode(F.array_distinct(shingle_array(text_col, w))).alias("gram"),
@@ -1242,7 +1230,7 @@ def bloom_state(
     bigints). One explode + one map-side-combinable bit_or aggregate;
     at 10^12 keys the aggregate's combine happens in the scan stage and
     the exchange carries at most m_bits/32 rows. Persist bucketed on
-    word_idx (tableio.write_stage) so every future probe co-locates.
+    word_idx so every future probe co-locates.
 
     vs dedup_state's exact tables: the bloom answers "maybe seen" in
     O(m_bits) space with a tunable false-positive rate (size m_bits at
@@ -1295,7 +1283,6 @@ def bloom_gated_dedup(
     corpus_keys: DataFrame,
     key_col: str = "key",
     id_col: str = "doc_id",
-    state: DataFrame | None = None,
     m_bits: int = BLOOM_M_BITS,
     k: int = BLOOM_K,
 ) -> DataFrame:
@@ -1314,18 +1301,16 @@ def bloom_gated_dedup(
     callers on the ingest hot path should persist or checkpoint the
     probe output so the bloom join runs once — the driver query and
     tests leave it lazy because the probe is a narrow broadcast shape.
-    A state built HERE is persisted before use: both union branches
+    The bloom state is persisted before use: both union branches
     inline the probe, and without the persist each would rebuild the
     bloom — a full corpus_keys scan per branch for a table of at most
-    m_bits/32 rows (production callers pass a materialized `state`,
-    which already avoids this).
+    m_bits/32 rows.
     """
-    if state is None:
-        from pyspark import StorageLevel
+    from pyspark import StorageLevel
 
-        state = bloom_state(
-            corpus_keys, key_col=key_col, m_bits=m_bits, k=k
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+    state = bloom_state(
+        corpus_keys, key_col=key_col, m_bits=m_bits, k=k
+    ).persist(StorageLevel.MEMORY_AND_DISK)
     probed = bloom_probe(
         batch, state, key_col=key_col, id_col=id_col, m_bits=m_bits, k=k
     )

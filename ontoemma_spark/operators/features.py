@@ -196,22 +196,19 @@ def featurize_pairs(
     pairs: DataFrame,
     s_features: DataFrame,
     t_features: DataFrame,
-    broadcast_features: bool = True,
 ) -> DataFrame:
     """Candidate pairs (s_id, t_id, ...) × entity feature tables → the 32
     engineered features (EngineeredFeatureGenerator.py:226-338), all as
-    native column expressions. Feature tables are broadcast by default
-    (KB side is small; at 10^12 pairs the pair side must never move).
+    native column expressions. Feature tables are broadcast (KB side is
+    small; at 10^12 pairs the pair side must never move).
 
     The features are SQL expression strings, which Spark parses into the
     same native expressions a Column build gives, projected in one
     selectExpr: tens of py4j round trips instead of one per expression
     node. Double literals are written `…D`; a bare `-1.0` would parse as
     a decimal."""
-    s_feat = s_features.toDF(*[f"s_{c}" for c in s_features.columns])
-    t_feat = t_features.toDF(*[f"t_{c}" for c in t_features.columns])
-    if broadcast_features:
-        s_feat, t_feat = F.broadcast(s_feat), F.broadcast(t_feat)
+    s_feat = F.broadcast(s_features.toDF(*[f"s_{c}" for c in s_features.columns]))
+    t_feat = F.broadcast(t_features.toDF(*[f"t_{c}" for c in t_features.columns]))
     df = pairs.join(s_feat, pairs["s_id"] == s_feat["s_entity_id"]).join(
         t_feat, pairs["t_id"] == t_feat["t_entity_id"]
     )

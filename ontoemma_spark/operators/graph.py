@@ -17,13 +17,11 @@ from ontoemma_spark import config
 from ontoemma_spark.session import driver_row_cap
 
 
-def symmetric_closure(
-    edges: DataFrame, inverse_map: dict[str, str] | None = None
-) -> DataFrame:
+def symmetric_closure(edges: DataFrame) -> DataFrame:
     """Add the reversed edge with the inverse relation type for every
     relation whose type has a defined inverse (kb_utils_refactor.py:425-456,
     SYMMETRIC_RELATIONS constants.py:66-73); dedupe."""
-    inverse_map = inverse_map if inverse_map is not None else config.SYMMETRIC_RELATIONS
+    inverse_map = config.SYMMETRIC_RELATIONS
     mapping = F.create_map(*[F.lit(x) for kv in inverse_map.items() for x in kv])
     reversed_edges = (
         edges.filter(F.col("relation_type").isin(list(inverse_map.keys())))
@@ -133,6 +131,10 @@ def merge_entities(entities: DataFrame, merge_key: str) -> DataFrame:
     )
 
 
+# rounds between localCheckpoints of pagerank's and hits' iterates
+CHECKPOINT_EVERY = 8
+
+
 def pagerank(
     edges: DataFrame,
     iterations: int = 5,
@@ -140,7 +142,6 @@ def pagerank(
     src: str = "src",
     dst: str = "dst",
     dedupe: bool = True,
-    checkpoint_every: int = 8,
 ) -> DataFrame:
     """Fixed-iteration power-method PageRank over a directed edge list
     — the iterative-join sibling of connected_components, for ranking
@@ -161,14 +162,14 @@ def pagerank(
     edges on src) + ONE groupBy(dst) with a map-side-combinable sum;
     edge out-degrees are computed once and persisted with the edges.
 
-    checkpoint_every: rounds between localCheckpoint(eager)s of the
-    rank table. Unlike CC's unbounded frontier loop (which must
-    checkpoint each round), a FIXED iteration count composes into one
-    bounded DAG — measured at sf0.1, per-round checkpointing cost 10x
-    wall clock (one scheduled job + materialization per round) vs
-    letting Spark run the composed plan as a single job. The default
-    only cuts in for long runs, where it bounds Catalyst plan depth
-    and gives failure-recovery points; lower it on flaky clusters."""
+    The rank table is localCheckpoint(eager)ed every CHECKPOINT_EVERY
+    rounds. Unlike CC's unbounded frontier loop (which must checkpoint
+    each round), a FIXED iteration count composes into one bounded DAG
+    — measured at sf0.1, per-round checkpointing cost 10x wall clock
+    (one scheduled job + materialization per round) vs letting Spark
+    run the composed plan as a single job. The checkpoint only cuts in
+    for long runs, where it bounds Catalyst plan depth and gives
+    failure-recovery points."""
     from pyspark import StorageLevel
 
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
@@ -236,7 +237,7 @@ def pagerank(
                 "node",
                 (F.lit(base) + F.lit(damping) * F.coalesce(F.col("m"), F.lit(0.0))).alias("rank"),
             )
-            if (it + 1) % checkpoint_every == 0 and it + 1 < iterations:
+            if (it + 1) % CHECKPOINT_EVERY == 0 and it + 1 < iterations:
                 ranks = ranks.localCheckpoint(eager=True)
         # the final checkpoint is unconditional: it materializes the
         # whole composed DAG in ONE job while nodes/weighted are still
@@ -431,7 +432,6 @@ def hits(
     src: str = "src",
     dst: str = "dst",
     dedupe: bool = True,
-    checkpoint_every: int = 8,
 ) -> DataFrame:
     """Fixed-iteration HITS (Kleinberg 1999) over a directed edge list
     — the hub/authority complement to `pagerank` for the web-graph side
@@ -453,7 +453,7 @@ def hits(
     Scale shape: per iteration ONE equi join (hubs ⋈ edges on src) +
     ONE map-side-combinable sum for authorities, then the mirror pair
     for hubs; the edge table is persisted once and reused every round.
-    Same composed-DAG discipline as `pagerank` (checkpoint_every)."""
+    Same composed-DAG discipline as `pagerank` (CHECKPOINT_EVERY)."""
     from pyspark import StorageLevel
 
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
@@ -527,7 +527,7 @@ def hits(
                 .agg(F.sum("authority").alias("hub"))
                 .withColumnRenamed("src", "node")
             )
-            if (it + 1) % checkpoint_every == 0 and it + 1 < iterations:
+            if (it + 1) % CHECKPOINT_EVERY == 0 and it + 1 < iterations:
                 hubs = hubs.localCheckpoint(eager=True)
                 auths = auths.localCheckpoint(eager=True)
         # materialize the whole iteration DAG ONCE; the normalization
@@ -699,7 +699,6 @@ def upsert_edges(
     batch: DataFrame,
     key_cols: tuple[str, ...] = ("subj", "pred", "obj"),
     sketch_col: str | None = None,
-    sketch_m: int = 64,
 ) -> DataFrame:
     """Incremental KG edge merge: fold a new crawl batch's weighted
     edges (the `weighted_edges` shape — support, n_pages, first_seen,
@@ -723,11 +722,11 @@ def upsert_edges(
     drifts into an upper bound. Null sides behave as empty sketches.
 
     Scale shape: ONE full-outer equi join on the triple key. When both
-    sides are written with tableio.write_stage bucketed by the same
-    key, the join is exchange-free on the (large) standing side; the
-    result is written back bucketed, so every subsequent merge stays
-    co-located. No window, no union-regroup over history; the sketch
-    merge is in-row (m ints per edge — 256 B at m=64)."""
+    sides are stored as tables bucketed by the same key, the join is
+    exchange-free on the (large) standing side; the result is written
+    back bucketed, so every subsequent merge stays co-located. No
+    window, no union-regroup over history; the sketch merge is in-row
+    (HLL_M = 64 ints per edge — 256 B)."""
     from ontoemma_spark.operators import sketch as SK
 
     keys = list(key_cols)
@@ -751,9 +750,9 @@ def upsert_edges(
     ]
     if sketch_col is not None:
         out.append(
-            SK.hll_merge(
-                F.col(f"c.{sketch_col}"), F.col(f"b.{sketch_col}"), m=sketch_m
-            ).alias(sketch_col)
+            SK.hll_merge(F.col(f"c.{sketch_col}"), F.col(f"b.{sketch_col}")).alias(
+                sketch_col
+            )
         )
     # null-SAFE key equality: weighted_edges keeps null-key groups
     # (groupBy treats NULL as a group), and a null-unsafe full outer
@@ -878,7 +877,6 @@ def neighborhood_function(
     rounds: int = 3,
     src: str = "src",
     dst: str = "dst",
-    m: int | None = None,
 ) -> DataFrame:
     """HyperANF (Boldi-Rosa-Vigna 2011): per-node, per-hop
     neighborhood-function estimates — |{u : dist(v→u) <= h}| for
@@ -902,7 +900,7 @@ def neighborhood_function(
     """
     from ontoemma_spark.operators import sketch as SK
 
-    m = SK.HLL_M if m is None else m
+    m = SK.HLL_M
     nodes = (
         edges.select(F.col(src).alias("node"))
         .union(edges.select(F.col(dst).alias("node")))
@@ -914,13 +912,13 @@ def neighborhood_function(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    regs = SK.hll_sketch(nodes, ["node"], "node", m=m).localCheckpoint(eager=True)
+    regs = SK.hll_sketch(nodes, ["node"], "node").localCheckpoint(eager=True)
 
     def est(df, hop):
         return df.select(
             "node",
             F.lit(hop).cast("bigint").alias("hop"),
-            F.round(SK.hll_estimate(F.col("hll"), m=m), 4).alias("est"),
+            F.round(SK.hll_estimate(F.col("hll")), 4).alias("est"),
         )
 
     outs = [est(regs, 0)]
@@ -951,7 +949,6 @@ def harmonic_centrality(
     rounds: int = 3,
     src: str = "src",
     dst: str = "dst",
-    m: int | None = None,
 ) -> DataFrame:
     """Approximate harmonic centrality (Boldi-Vigna, "Axioms for
     Centrality": the one centrality satisfying all three axioms) via
@@ -971,7 +968,6 @@ def harmonic_centrality(
     nf = neighborhood_function(
         edges.select(F.col(dst).alias("src"), F.col(src).alias("dst")),
         rounds=rounds,
-        m=m,
     )
     w = Window.partitionBy("node").orderBy("hop")
     contrib = nf.select(
@@ -1139,7 +1135,6 @@ def random_walks(
     edges: DataFrame,
     length: int = 4,
     walks_per_node: int = 1,
-    seed: str = "w",
     src: str = "src",
     dst: str = "dst",
     symmetrize: bool = True,
@@ -1200,7 +1195,7 @@ def random_walks(
             ).alias("i"),
             F.col("node"),
         ).select(
-            F.concat_ws("-", F.lit(seed), F.col("node"), F.col("i")).alias(
+            F.concat_ws("-", F.lit("w"), F.col("node"), F.col("i")).alias(
                 "walk_id"
             ),
             F.col("node").alias("cur"),

@@ -25,11 +25,11 @@ MEDIA_SCHEMA = (
 )
 
 
-def _sha_fallback(payload: bytes, feat_dim: int) -> list[float]:
-    """Deterministic pseudo-feature for formats that need a real codec
-    library (JPEG/MP3/…): sha256 bytes scaled to [0, 1)."""
+def _sha_fallback(payload: bytes) -> list[float]:
+    """Deterministic 8-dim pseudo-feature for formats that need a real
+    codec library (JPEG/MP3/…): sha256 bytes scaled to [0, 1)."""
     digest = hashlib.sha256(payload or b"").digest()
-    return [digest[i] / 256.0 for i in range(feat_dim)]
+    return [digest[i] / 256.0 for i in range(8)]
 
 
 FRAME_SCHEMA = (
@@ -38,7 +38,7 @@ FRAME_SCHEMA = (
 )
 
 
-def sample_frames(media: DataFrame, every_k: int = 2, feat_dim: int = 8) -> DataFrame:
+def sample_frames(media: DataFrame, every_k: int = 2) -> DataFrame:
     """Frame sampling over binary video columns: one OUTPUT ROW per
     sampled frame (indices 0, k, 2k, … — the standard stride sample).
     The real-decode path is the concatenated-P6 stream container
@@ -76,8 +76,7 @@ def sample_frames(media: DataFrame, every_k: int = 2, feat_dim: int = 8) -> Data
                 try:
                     frames = codecs.split_ppm_stream(payload)
                 except Exception:
-                    emit(mid, 0, 0, False, 0, 0,
-                         _sha_fallback(payload, feat_dim))
+                    emit(mid, 0, 0, False, 0, 0, _sha_fallback(payload))
                     continue
                 for idx in range(0, len(frames), every_k):
                     arr = codecs.decode_ppm(frames[idx])

@@ -59,16 +59,16 @@ def fit_lr(
     featurized: DataFrame,
     label_col: str = "label",
     feature_names: list[str] | None = None,
-    lr: float = 0.5,
     epochs: int = 300,
-    l2: float = 1e-3,
 ) -> LRModel:
-    """Deterministic full-batch logistic regression (driver-side numpy).
+    """Deterministic full-batch logistic regression (driver-side numpy),
+    step size 0.5, L2 penalty 1e-3.
 
     Replaces sklearn fit (OntoEmmaLRModel.py:35-46). Features are
     standardized implicitly by the bounded feature ranges ([-1, 1]);
     full-batch GD with fixed epochs is reproducible bit-for-bit.
     """
+    lr, l2 = 0.5, 1e-3
     feature_names = feature_names or FEATURE_NAMES
     rows = featurized.select(*feature_names, label_col).collect()
     X = np.array([[float(r[f]) for f in feature_names] for r in rows])

@@ -94,7 +94,6 @@ def fit_mlp(
     hidden: int = 8,
     lr: float = 0.3,
     epochs: int = 1500,
-    l2: float = 1e-4,
     seed: int = 7,
 ) -> MLPModel:
     """Deterministic full-batch backprop on the driver (numpy).
@@ -104,8 +103,10 @@ def fit_mlp(
     size is KB-bounded, so driver-side numpy is the honest equivalent —
     inference is the scale path, not training. Fixed seed + full-batch
     GD → bit-reproducible weights (the basis for the pinned
-    nn_weights.py used by the driver query's static SQL oracle).
+    nn_weights.py used by the driver query's static SQL oracle). The L2
+    penalty is 1e-4.
     """
+    l2 = 1e-4
     from ontoemma_spark.operators.features import FEATURE_NAMES
 
     feature_names = feature_names or FEATURE_NAMES

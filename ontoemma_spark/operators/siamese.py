@@ -104,9 +104,7 @@ class _TableEmbedding(_EmbeddingCache):
         return v if v is not None else super().__call__(token)
 
 
-def load_word_embeddings(
-    path: str | None = None, dim: int = WORD_DIM
-) -> _EmbeddingCache:
+def load_word_embeddings(path: str | None = None) -> _EmbeddingCache:
     """Seam for the reference's pretrained 300-d table
     (config/ontoemma_nn_all.json:27 weights300.txt.gz, GloVe text
     format: `word v1 .. v300` per line, space- or tab-separated,
@@ -119,7 +117,7 @@ def load_word_embeddings(
     like the model weights, realized once per partition.
     """
     if path is None:
-        return _EmbeddingCache(dim, "word300")
+        return _EmbeddingCache(WORD_DIM, "word300")
     table: dict[str, np.ndarray] = {}
     opener = gzip.open if str(path).endswith(".gz") else open
     with opener(path, "rt", encoding="utf-8", errors="replace") as f:
@@ -130,13 +128,13 @@ def load_word_embeddings(
             if len(parts) < 2:
                 continue  # blank/stray line
             word, vals = parts[0], [p for p in parts[1:] if p]
-            if len(vals) != dim:
+            if len(vals) != WORD_DIM:
                 raise ValueError(
                     f"{path} line {ln + 1}: {len(vals)} dims for "
-                    f"{word!r}, model expects {dim}"
+                    f"{word!r}, model expects {WORD_DIM}"
                 )
             table[word] = np.asarray(vals, dtype=np.float32)
-    return _TableEmbedding(table, dim, "word300")
+    return _TableEmbedding(table, WORD_DIM, "word300")
 
 
 def _relu(x: np.ndarray) -> np.ndarray:
@@ -208,15 +206,14 @@ class CharCNN:
     size a conv1d with 50 filters + relu + max-pool, outputs
     concatenated (ontoemma_nn_all.json:31-42)."""
 
-    def __init__(self, filters: dict[int, tuple[np.ndarray, np.ndarray]],
-                 char_salt: str = "char100"):
+    def __init__(self, filters: dict[int, tuple[np.ndarray, np.ndarray]]):
         # filters[n] = (W (F, n*C), b (F,)) — conv expressed as a matmul
         # over flattened char windows
         self.filters = {
             int(n): (np.asarray(W, dtype=np.float64), np.asarray(b, dtype=np.float64))
             for n, (W, b) in filters.items()
         }
-        self.chars = _EmbeddingCache(CHAR_DIM, char_salt)
+        self.chars = _EmbeddingCache(CHAR_DIM, "char100")
 
     def encode_token(self, token: str) -> np.ndarray:
         outs = []

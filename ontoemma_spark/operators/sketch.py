@@ -53,10 +53,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-HLL_M = 64  # registers; must be a power of two <= 256 (bucket = 2 hex chars)
-# alpha_m from Flajolet et al. 2007 §4 for the small-m cases, else the
-# asymptotic formula.
-_ALPHA = {16: 0.673, 32: 0.697, 64: 0.709}
+HLL_M = 64  # registers; a power of two <= 256 (bucket = 2 hex chars)
+# alpha_m for m = 64, from Flajolet et al. 2007 §4
+_ALPHA_M = 0.709
 # zero bits contributed by the first non-zero hex nibble
 _NIBBLE_ZEROS = {
     "1": 3, "2": 2, "3": 2, "4": 1, "5": 1, "6": 1, "7": 1,
@@ -65,15 +64,11 @@ _NIBBLE_ZEROS = {
 _RHO_HEX_CHARS = 13  # 52 bits of rank material after the bucket chars
 
 
-def _alpha(m: int) -> float:
-    return _ALPHA.get(m, 0.7213 / (1 + 1.079 / m))
-
-
-def hll_bucket(item, m: int = HLL_M) -> Column:
-    """Register index 0..m-1 for an item (string column)."""
+def hll_bucket(item) -> Column:
+    """Register index 0..HLL_M-1 for an item (string column)."""
     c = F.col(item) if isinstance(item, str) else item
     return (
-        F.conv(F.substring(F.md5(c), 1, 2), 16, 10).cast("int") % m
+        F.conv(F.substring(F.md5(c), 1, 2), 16, 10).cast("int") % HLL_M
     ).alias("bucket")
 
 
@@ -100,21 +95,19 @@ def hll_sketch(
     df: DataFrame,
     key_cols: list[str],
     item_col: str,
-    m: int = HLL_M,
     out_col: str = "hll",
 ) -> DataFrame:
     """Per-key HLL register array over the items observed for that key.
 
     Shape: ONE scan — groupBy(key+bucket).max(rho) partial-aggregates
-    in the scan stage (the exchange carries <= m+1 rows per key) —
+    in the scan stage (the exchange carries <= HLL_M+1 rows per key) —
     then one groupBy(key) map assembly + an in-row scatter into the
     dense array. Null items hash to a null bucket, survive the first
     groupBy as a sentinel row, and are filtered in-row at assembly, so
     keys whose items are all null still get a row (all-zero sketch,
     estimate 0) WITHOUT a second scan of the source."""
-    assert 256 % m == 0, "m must divide 256 (bucket = 2 hex chars)"
     per_bucket = (
-        df.select(*key_cols, hll_bucket(item_col, m), hll_rho(item_col))
+        df.select(*key_cols, hll_bucket(item_col), hll_rho(item_col))
         .groupBy(*key_cols, "bucket")
         .agg(F.max("rho").alias("mr"))
     )
@@ -131,7 +124,7 @@ def hll_sketch(
         .select(
             *key_cols,
             F.transform(
-                F.sequence(F.lit(0), F.lit(m - 1)),
+                F.sequence(F.lit(0), F.lit(HLL_M - 1)),
                 lambda b: F.coalesce(
                     F.element_at(F.col("_regs"), b), F.lit(0)
                 ),
@@ -140,19 +133,19 @@ def hll_sketch(
     )
 
 
-def hll_merge(a, b, m: int = HLL_M) -> Column:
+def hll_merge(a, b) -> Column:
     """Merge two register arrays: element-wise max. Null-safe — a null
     side behaves as the empty sketch."""
     ca = F.col(a) if isinstance(a, str) else a
     cb = F.col(b) if isinstance(b, str) else b
-    empty = F.array_repeat(F.lit(0), m).cast("array<int>")
+    empty = F.array_repeat(F.lit(0), HLL_M).cast("array<int>")
     return F.zip_with(
         F.coalesce(ca, empty), F.coalesce(cb, empty),
         lambda x, y: F.greatest(x, y),
     )
 
 
-def hll_estimate(regs, m: int = HLL_M) -> Column:
+def hll_estimate(regs) -> Column:
     """Distinct-count estimate from a register array (double).
 
     Raw estimate alpha_m * m^2 / sum(2^-M_j); linear counting
@@ -165,7 +158,8 @@ def hll_estimate(regs, m: int = HLL_M) -> Column:
         F.lit(0.0),
         lambda acc, r: acc + F.pow(F.lit(2.0), -r.cast("double")),
     )
-    raw = F.lit(_alpha(m) * m * m) / inv_sum
+    m = HLL_M
+    raw = F.lit(_ALPHA_M * m * m) / inv_sum
     v = F.size(F.filter(c, lambda r: r == 0))
     return (
         F.when(v == m, F.lit(0.0))

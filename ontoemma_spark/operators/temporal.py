@@ -219,6 +219,10 @@ def version_intervals(
     )
 
 
+# interval_join refuses an interval that covers more buckets than this
+MAX_BUCKETS_PER_INTERVAL = 10_000
+
+
 def interval_join(
     points: DataFrame,
     intervals: DataFrame,
@@ -226,7 +230,6 @@ def interval_join(
     start: str = "start",
     end: str = "end",
     bucket_width: int = 100,
-    max_buckets_per_interval: int = 10_000,
 ) -> DataFrame:
     """Half-open interval membership ``start <= t < end`` as an
     EQUI-join: intervals explode into the fixed-width buckets they
@@ -243,12 +246,12 @@ def interval_join(
     ``bucket_width`` trades replication for selectivity: each interval
     lands in ceil(len/width)+1 buckets, each point in 1. Pick width ≈
     median interval length. The guard fails LOUDLY if any interval
-    would cover more than ``max_buckets_per_interval`` buckets (an
+    would cover more than MAX_BUCKETS_PER_INTERVAL buckets (an
     unbounded interval — end = +inf sentinel, corrupt timestamp —
     would otherwise explode the build side quietly; this is a data
     bug, the operator refuses to amplify it. Note the check runs
     before explode but costs an extra aggregate job; it is the same
-    eager-guard stance as WARC's check_sizes).
+    eager-guard stance as load_warc's size check).
 
     Empty/degenerate intervals (end <= start) match nothing and are
     dropped up front. Null timestamps/bounds never match (null bucket
@@ -278,10 +281,10 @@ def interval_join(
             + 1
         ).alias("n")
     ).first()
-    if worst and worst["n"] is not None and worst["n"] > max_buckets_per_interval:
+    if worst and worst["n"] is not None and worst["n"] > MAX_BUCKETS_PER_INTERVAL:
         raise ValueError(
             f"an interval covers {worst['n']} buckets "
-            f"(> max_buckets_per_interval={max_buckets_per_interval}); "
+            f"(> MAX_BUCKETS_PER_INTERVAL={MAX_BUCKETS_PER_INTERVAL}); "
             "widen bucket_width or fix the interval data"
         )
     b_iv = iv.withColumn(

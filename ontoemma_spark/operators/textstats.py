@@ -518,9 +518,8 @@ def host_of(url_col) -> F.Column:
 # standard strip set for crawl canonicalization. Deliberately narrow:
 # ambiguous keys like `ref` are resource-identifying on major hosts
 # (GitHub/GitLab `?ref=<branch>` names different file contents), so
-# stripping them would merge distinct pages — extend via the
-# tracking_param_re argument per corpus instead. `(=|$)` also catches
-# the valueless form (`?fbclid`).
+# stripping them would merge distinct pages. `(=|$)` also catches the
+# valueless form (`?fbclid`).
 _TRACKING_PARAM_RE = r"^(utm_[^=]*|fbclid|gclid)(=|$)"
 
 
@@ -575,8 +574,8 @@ def url_blocklist_filter(
 def unigram_vocab(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(token, cnt): whitespace-token counts over the corpus — the
     unigram model table for unigram_logprob_scores. One explode + one
-    map-side-combinable count agg. Write it bucketed by token
-    (tableio.write_stage) so repeated scoring runs co-locate."""
+    map-side-combinable count agg. Store it bucketed by token so
+    repeated scoring runs co-locate."""
     return (
         docs.select(F.explode(whitespace_tokens(text_col)).alias("token"))
         .groupBy("token")
@@ -694,7 +693,7 @@ def latest_snapshot(
     )
 
 
-def normalize_url(url_col, tracking_param_re: str = _TRACKING_PARAM_RE) -> F.Column:
+def normalize_url(url_col) -> F.Column:
     """Canonical URL for crawl-level exact dedup (the first dedup pass
     of every Common-Crawl pipeline: the same page is fetched under
     http/https, with/without www, with tracking params, with a
@@ -738,7 +737,7 @@ def normalize_url(url_col, tracking_param_re: str = _TRACKING_PARAM_RE) -> F.Col
     )
     params = F.filter(
         F.split(F.coalesce(F.parse_url(c, F.lit("QUERY")), F.lit("")), "&"),
-        lambda p: (p != F.lit("")) & ~p.rlike(tracking_param_re),
+        lambda p: (p != F.lit("")) & ~p.rlike(_TRACKING_PARAM_RE),
     )
     qs = F.array_join(F.array_sort(params), "&")
     return F.concat(

@@ -19,13 +19,13 @@ from ontoemma_spark.functions.text import tokenize
 
 def train_dev_test_split(
     pairs: DataFrame,
-    train: float = config.TRAINING_PART,
-    dev: float = config.DEVELOPMENT_PART,
     label_col: str = "label",
 ) -> DataFrame:
     """M5: stratified deterministic split — within each label, rows are
-    ordered by a content hash and assigned by quantile position. Adds a
+    ordered by a content hash and assigned by quantile position
+    (config.TRAINING_PART / DEVELOPMENT_PART / the rest). Adds a
     'split' column ∈ {train, dev, test}."""
+    train, dev = config.TRAINING_PART, config.DEVELOPMENT_PART
     key_cols = [c for c in pairs.columns if c != label_col]
     # md5 hex order as the pseudo-random key: deterministic, engine-
     # portable (identical in DuckDB → oracle-checkable), uniform enough

@@ -7,14 +7,12 @@
   (the node set is the canonicalize stage's (node, component)
   checkpoint — no separate node table is written)
 
-Checkpointing: each stage writes through the tableio seam
-(parquet / bucketed_table / iceberg, chosen per run via the
-table_format argument or $SPARK_GRAFT_TABLE_FORMAT) plus a manifest entry
-`_manifest.json` with row counters (per-stage lineage/metrics). A rerun
-with the same out_dir resumes after the last completed stage whose
-checkpoint still matches its recorded lineage — the done-file pattern
-the reference uses in extract_training_data_from_umls.py:82,398-400,
-569-594.
+Checkpointing: each stage writes a parquet checkpoint through the
+tableio seam plus an entry in `_manifest.json` with row counters
+(per-stage lineage/metrics). A rerun with the same out_dir resumes after
+the last completed stage whose checkpoint still matches its recorded
+lineage — the done-file pattern the reference uses in
+extract_training_data_from_umls.py:82,398-400,569-594.
 
 Counters cost no extra Spark job: every row counter is observed
 (DataFrame.observe) on the frame a stage writes, so the write job
@@ -40,7 +38,6 @@ from ontoemma_spark.align import align
 from ontoemma_spark.extract.html_text import extract_text_col
 from ontoemma_spark.extract.triples import extract_triples
 from ontoemma_spark.operators.components import connected_components
-from ontoemma_spark.operators.scoring import LRModel
 
 
 def _manifest_path(out_dir: str) -> str:
@@ -78,8 +75,8 @@ def _drop_from(manifest: dict, stage: str) -> None:
 def _drop_invalid(spark: SparkSession, manifest: dict) -> None:
     """Resume-time audit: the first completed stage whose checkpoint no
     longer matches the lineage its write recorded (tableio.validate_stage:
-    a deleted bucket directory, a half-copied table) is dropped with
-    every stage after it."""
+    a deleted bucket or stage directory, a half-copied table) is dropped
+    with every stage after it."""
     for stage in STAGES:
         entry = manifest["stages"].get(stage)
         if entry is not None and not tableio.validate_stage(spark, entry)["ok"]:
@@ -96,22 +93,16 @@ def _stage_rows(entry: dict) -> int:
 
 def _checkpoint(df: DataFrame, out_dir: str, stage: str, manifest: dict,
                 metrics: Callable[[dict], dict],
-                bucket_col: str | None = None, fmt: str | None = None) -> DataFrame:
+                bucket_col: str | None = None) -> DataFrame:
     """Write one stage, then its manifest entry with metrics(entry) —
     built after the write job, from what it observed — in one manifest
     write. Returns the checkpoint read back."""
-    # the writer seam: parquet / bucketed_table / iceberg is tableio's
-    # decision (explicit fmt > $SPARK_GRAFT_TABLE_FORMAT > parquet) —
-    # the pipeline never touches a writer API directly.
-    entry = tableio.write_stage(df, out_dir, stage, fmt=fmt, bucket_col=bucket_col)
+    # the writer seam: the pipeline never touches a writer API directly.
+    entry = tableio.write_stage(df, out_dir, stage, bucket_col=bucket_col)
     entry["metrics"] = metrics(entry)
     manifest["stages"][stage] = entry
     _write_manifest(out_dir, manifest)
     return tableio.read_stage(df.sparkSession, entry)
-
-
-def _read_stage(spark: SparkSession, stage_entry: dict) -> DataFrame:
-    return tableio.read_stage(spark, stage_entry)
 
 
 def mention_entities(triples: DataFrame) -> DataFrame:
@@ -176,13 +167,12 @@ def run_pipeline(
     pages: DataFrame,
     kb_entities: DataFrame,
     out_dir: str,
-    model: LRModel | None = None,
     threshold: float = config.SIM_SCORE_THRESHOLD,
     incremental: bool = False,
-    table_format: str | None = None,
     fuse: bool = False,
 ) -> dict:
-    """Run (or resume) the full pipeline; returns the manifest.
+    """Run (or resume) the full pipeline; returns the manifest. Stage 2
+    links with align()'s default LR model.
 
     A resume first validates every completed checkpoint against the
     lineage its write recorded; the first stage that fails, and every
@@ -201,8 +191,7 @@ def run_pipeline(
     triples are appended to the extract checkpoint and the downstream
     stages (link → canonicalize → materialize) are recomputed over the
     union. Extraction is the full-corpus scan — at 10^12 pages the
-    incremental delta is the only affordable operating mode (on Iceberg
-    this is an incremental read between snapshots).
+    incremental delta is the only affordable operating mode.
     """
     manifest = read_manifest(out_dir)
     _drop_invalid(spark, manifest)
@@ -228,14 +217,14 @@ def run_pipeline(
             # dict (a crash between checkpoint and metrics write leaves
             # done=True with metrics={}; the ledger is the truth)
             m["pages"] = processed.count() + n_new
-            triples_now = _read_stage(spark, manifest["stages"]["extract"])
+            triples_now = tableio.read_stage(spark, manifest["stages"]["extract"])
             m["triples"] = triples_now.count()
             _write_manifest(out_dir, manifest)
             done = manifest["stages"]
 
     # ---- stage 1: extract ---------------------------------------------
     if "extract" in done:
-        triples = _read_stage(spark, done["extract"])
+        triples = tableio.read_stage(spark, done["extract"])
     else:
         with_text = pages.withColumn(
             "text", F.coalesce(F.col("text"), extract_text_col("html"))
@@ -252,12 +241,11 @@ def run_pipeline(
         triples = _checkpoint(
             raw_triples, out_dir, "extract", manifest,
             metrics=lambda e: {"pages": obs.get["pages"], "triples": _stage_rows(e)},
-            fmt=table_format,
         )
 
     # ---- stage 2: link --------------------------------------------------
     if "link" in done:
-        links = _read_stage(spark, done["link"])
+        links = tableio.read_stage(spark, done["link"])
     else:
         # mention table: distinct surface forms from subj+obj positions.
         # Persisted, and counted right away: the count is the job that
@@ -270,11 +258,10 @@ def run_pipeline(
         result = None
         try:
             n_mentions = mentions.count()
-            result = align(mentions, kb_entities, model=model, threshold=threshold)
+            result = align(mentions, kb_entities, threshold=threshold)
             links = _checkpoint(
                 result.alignment, out_dir, "link", manifest,
                 metrics=lambda e: {"mentions": n_mentions, "links": _stage_rows(e)},
-                fmt=table_format,
             )
         finally:
             if result is not None:
@@ -283,7 +270,7 @@ def run_pipeline(
 
     # ---- stage 3: canonicalize -----------------------------------------
     if "canonicalize" in done:
-        canon = _read_stage(spark, done["canonicalize"])
+        canon = tableio.read_stage(spark, done["canonicalize"])
     else:
         cc = connected_components(links.select("s_id", "t_id"), src="s_id", dst="t_id")
         # components = distinct labels: every component has exactly one
@@ -296,7 +283,6 @@ def run_pipeline(
         canon = _checkpoint(
             observed, out_dir, "canonicalize", manifest,
             metrics=lambda e: {"nodes": _stage_rows(e), "components": obs.get["components"]},
-            fmt=table_format,
         )
 
     # ---- stage 4: materialize -------------------------------------------
@@ -316,7 +302,7 @@ def run_pipeline(
             manifest["stages"]["canonicalize"].get("metrics", {}).get("components")
         )
         if n_components is None:
-            canon_ck = _read_stage(spark, manifest["stages"]["canonicalize"])
+            canon_ck = tableio.read_stage(spark, manifest["stages"]["canonicalize"])
             n_components = canon_ck.select("component").distinct().count()
             manifest["stages"]["canonicalize"].setdefault("metrics", {})[
                 "components"
@@ -330,13 +316,13 @@ def run_pipeline(
             return {"nodes": n_components, "edges": _stage_rows(e)}
 
         _checkpoint(kg_edges, out_dir, "materialize", manifest,
-                    metrics=materialize_metrics, bucket_col="subject_id", fmt=table_format)
+                    metrics=materialize_metrics, bucket_col="subject_id")
 
     # ---- stage 5 (optional): fuse ----------------------------------------
     if fuse and "fuse" not in done:
         from ontoemma_spark.operators.fusion import fuse_triples
 
-        edges_now = _read_stage(spark, manifest["stages"]["materialize"])
+        edges_now = tableio.read_stage(spark, manifest["stages"]["materialize"])
         fused = fuse_triples(
             edges_now.select(
                 F.col("subject_id").alias("subj"),
@@ -361,7 +347,7 @@ def run_pipeline(
             metrics=lambda e: {
                 "facts": _stage_rows(e), "multi_host_facts": obs.get["multi_host_facts"]
             },
-            bucket_col="subject_id", fmt=table_format,
+            bucket_col="subject_id",
         )
 
     return read_manifest(out_dir)

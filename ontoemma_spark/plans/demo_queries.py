@@ -1158,9 +1158,10 @@ def q_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _hits_sql(iterations: int = 5) -> str:
+def _hits_sql() -> str:
     """Unrolled HITS twin: a_k from h_{k-1}, h_k from a_k, one final
     sum-normalization; round-6 absorbs sum-order reassociation."""
+    iterations = 5
     parts = ["""
 WITH base_edges AS (
   SELECT DISTINCT 'c' || CAST(o.o_custkey AS VARCHAR) AS src,
@@ -1233,7 +1234,8 @@ def q_label_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     return label_propagation(und, iterations=4).select("node", "label")
 
 
-def _lpa_sql(iterations: int = 4) -> str:
+def _lpa_sql() -> str:
+    iterations = 4
     parts = ["""
 WITH ids AS (
   SELECT DISTINCT doc_id % 200 AS i FROM documents
@@ -1482,9 +1484,9 @@ def _hll_est_expr() -> str:
     """The estimate CASE over a folded{sfx} row (inv_sum, v) — raw
     alpha_m*m^2/inv_sum with the linear-counting small-range branch,
     twin of sketch.hll_estimate."""
-    from ontoemma_spark.operators.sketch import HLL_M, _alpha
+    from ontoemma_spark.operators.sketch import _ALPHA_M, HLL_M
 
-    raw = f"{_alpha(HLL_M)!r} * {HLL_M * HLL_M} / inv_sum"
+    raw = f"{_ALPHA_M!r} * {HLL_M * HLL_M} / inv_sum"
     return (
         f"CASE WHEN v = {HLL_M} THEN 0.0 "
         f"WHEN {raw} <= 2.5 * {HLL_M} AND v > 0 "
@@ -1538,14 +1540,14 @@ def q_neighborhood_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     return neighborhood_function(ring.unionAll(chords), rounds=3)
 
 
-def _hyperanf_sql(rounds: int = 3, reverse: bool = False,
-                  harmonic: bool = False) -> str:
+def _hyperanf_sql(reverse: bool = False, harmonic: bool = False) -> str:
     """DuckDB twin of q_neighborhood_sizes / q_harmonic_centrality:
     exact <= h-hop reachable sets via unrolled joins, then the
     hll_distinct register/fold/estimate chain (same md5 bucket/rho
     string arithmetic) per hop. reverse=True walks edges backwards
     (who reaches v — the harmonic-centrality direction); harmonic=True
     emits Σ_h (est_h − est_{h−1})/h instead of the per-hop rows."""
+    rounds = 3
     parts = [f"""
 WITH e AS (
   SELECT DISTINCT src, dst FROM (
@@ -1733,9 +1735,12 @@ def q_k_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _k_core_sql(k: int = 3, rounds: int = 4) -> str:
-    """Unrolled peel: degrees -> under-k nodes -> anti-join, repeated
-    `rounds` times (>= the fixture's convergence depth of 2)."""
+def _k_core_sql() -> str:
+    """Unrolled 3-core peel: degrees -> under-3 nodes -> anti-join,
+    repeated 4 times (>= the fixture's convergence depth of 2). Each
+    round's CTEs are MATERIALIZED: inlined, every e{i} would expand
+    e{i-1} three times over, which DuckDB plans exponentially."""
+    k, rounds = 3, 4
     parts = ["""
 WITH raw AS (
   SELECT 'n' || CAST(doc_id % 40 AS VARCHAR) AS src,
@@ -1756,11 +1761,11 @@ WITH raw AS (
   FROM raw WHERE src <> dst
 )"""]
     for i in range(1, rounds + 1):
-        parts.append(f""", bad{i} AS (
+        parts.append(f""", bad{i} AS MATERIALIZED (
   SELECT node FROM (
     SELECT u AS node FROM e{i - 1} UNION ALL SELECT v AS node FROM e{i - 1}
   ) GROUP BY node HAVING COUNT(*) < {k}
-), e{i} AS (
+), e{i} AS MATERIALIZED (
   SELECT u, v FROM e{i - 1} e
   WHERE NOT EXISTS (SELECT 1 FROM bad{i} b WHERE b.node = e.u)
     AND NOT EXISTS (SELECT 1 FROM bad{i} b WHERE b.node = e.v)
@@ -1795,7 +1800,8 @@ def q_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("walk_id", F.array_join("path", " ").alias("path"))
 
 
-def _random_walks_sql(length: int = 3, wpn: int = 2) -> str:
+def _random_walks_sql() -> str:
+    length, wpn = 3, 2
     parts = [f"""
 WITH raw AS (
   SELECT 'n' || CAST(doc_id % 30 AS VARCHAR) AS s,
@@ -1983,7 +1989,8 @@ def q_functional_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _functional_resolve_sql(rounds: int = 2, prior: float = 0.8) -> str:
+def _functional_resolve_sql() -> str:
+    rounds, prior = 2, 0.8
     parts = [f"""
 WITH t AS ({_CLAIMS_SQL}),
 c AS (SELECT DISTINCT host, subj, pred, obj FROM t),
@@ -3868,10 +3875,11 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("node", F.round("rank", 6).alias("rank"))
 
 
-def _pagerank_sql(iterations: int = 5, damping: float = 0.85) -> str:
+def _pagerank_sql() -> str:
     """Unrolled power-iteration twin; float literals injected via repr
     and cast to DOUBLE so both engines run the identical binary
     arithmetic (round-6 absorbs sum-order reassociation)."""
+    iterations, damping = 5, 0.85
     d = repr(damping)
     base = repr(1.0 - damping)
     head = """
@@ -5872,8 +5880,10 @@ def _sql_ann_ivf_probe() -> str:
     dlist = "[" + ", ".join(dist(lit) for lit in lits) + "]"
     qlit = "[" + ", ".join(repr(v) for v in qvec) + "]::DOUBLE[]"
     cells = ", ".join(str(c) for c in probe)
+    # assigned is MATERIALIZED: DuckDB 1.0 runs the inlined form about
+    # 4x slower at sf0.01, with the same rows
     return f"""
-WITH assigned AS (
+WITH assigned AS MATERIALIZED (
   SELECT vec_id, embedding::DOUBLE[] AS e,
          list_indexof({dlist}, list_min({dlist})) - 1 AS cell
   FROM (SELECT vec_id, embedding FROM embeddings)

@@ -27,8 +27,9 @@ def positive_pairs(gold: DataFrame) -> DataFrame:
     return gold.filter(F.col("label") == 1.0).select("s_id", "t_id")
 
 
-def write_alignment_tsv(alignment: DataFrame, path: str, provenance: str = "OntoEmma") -> None:
-    """S12: sorted-by-score-desc 4-col TSV (OntoEmma.py:952-968).
+def write_alignment_tsv(alignment: DataFrame, path: str) -> None:
+    """S12: sorted-by-score-desc 4-col TSV (OntoEmma.py:952-968), the
+    fourth column the provenance "OntoEmma".
 
     Note on scale: a global orderBy is a full sort; the reference output
     contract requires it, so it stays — but it runs once on the final
@@ -37,7 +38,7 @@ def write_alignment_tsv(alignment: DataFrame, path: str, provenance: str = "Onto
     (
         alignment.select(
             "s_id", "t_id", F.col("score").cast("string").alias("score"),
-            F.lit(provenance).alias("provenance"),
+            F.lit("OntoEmma").alias("provenance"),
         )
         .orderBy(F.desc("score"), "s_id", "t_id")
         .coalesce(1)

@@ -25,11 +25,10 @@ _ABSTRACT_PREDS = [
 _TRIPLE_RE = r'^<([^>]+)>\s+<([^>]+)>\s+(?:"((?:[^"\\]|\\.)*)"(?:@(\w+))?|<([^>]+)>)\s*\.\s*$'
 
 
-def load_dbpedia_ntriples(
-    spark: SparkSession, path: str, lang: str = "en", kb_prefix: str = "DBP"
-) -> DataFrame:
+def load_dbpedia_ntriples(spark: SparkSession, path: str) -> DataFrame:
     """S7: entities with rdfs:label → canonical name and abstract →
-    definition, grouped by subject URI."""
+    definition, grouped by subject URI, ids "DBP:<local name>". Only
+    untagged and English (@en) literals are kept."""
     lines = spark.read.text(path)
     parsed = lines.select(
         F.regexp_extract("value", _TRIPLE_RE, 1).alias("subj"),
@@ -37,7 +36,7 @@ def load_dbpedia_ntriples(
         F.regexp_extract("value", _TRIPLE_RE, 3).alias("lit"),
         F.regexp_extract("value", _TRIPLE_RE, 4).alias("lit_lang"),
     ).filter((F.col("subj") != "") & (F.col("lit") != ""))
-    parsed = parsed.filter((F.col("lit_lang") == "") | (F.col("lit_lang") == lang))
+    parsed = parsed.filter((F.col("lit_lang") == "") | (F.col("lit_lang") == "en"))
 
     labels = parsed.filter(F.col("pred").isin(_LABEL_PREDS)).groupBy("subj").agg(
         F.min("lit").alias("canonical_name"),
@@ -49,7 +48,7 @@ def load_dbpedia_ntriples(
     return (
         labels.join(abstracts, "subj", "left")
         .select(
-            F.concat(F.lit(f"{kb_prefix}:"), F.element_at(F.split("subj", "/"), -1)).alias(
+            F.concat(F.lit("DBP:"), F.element_at(F.split("subj", "/"), -1)).alias(
                 "research_entity_id"
             ),
             "canonical_name",

@@ -83,9 +83,9 @@ def load_obo(spark: SparkSession, path: str, kb_prefix: str = "OBO") -> tuple[Da
     )
 
 
-def load_mesh(spark: SparkSession, path: str, kb_prefix: str = "MSH") -> DataFrame:
-    """S6: MeSH ASCII records → entities (UI→id, MH→name, ENTRY→aliases,
-    MS→definition), per kb_load_refactor.py:246-285."""
+def load_mesh(spark: SparkSession, path: str) -> DataFrame:
+    """S6: MeSH ASCII records → entities ("MSH:" UI→id, MH→name,
+    ENTRY→aliases, MS→definition), per kb_load_refactor.py:246-285."""
     with open(path) as f:
         text = f.read()
     ents = []
@@ -107,6 +107,6 @@ def load_mesh(spark: SparkSession, path: str, kb_prefix: str = "MSH") -> DataFra
                 ms = val.strip()
         if ui and mh:
             ents.append(
-                (f"{kb_prefix}:{ui}", mh, [mh] + entries, ms, [], None, [], None)
+                (f"MSH:{ui}", mh, [mh] + entries, ms, [], None, [], None)
             )
     return spark.createDataFrame(ents, ENTITY_SCHEMA)

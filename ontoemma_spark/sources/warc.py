@@ -87,13 +87,13 @@ _MAX_RESYNC_BYTES = 1_048_576
 _MAX_LINE = 65_536
 
 
-def _resync(stream, stats: dict, max_bytes: int = _MAX_RESYNC_BYTES):
+def _resync(stream, stats: dict):
     """Skip quarantined bytes until the next `WARC/` preamble line (the
     standard warcio-style recovery). Returns that line, or None when no
-    preamble appears within max_bytes / before EOF."""
+    preamble appears within _MAX_RESYNC_BYTES / before EOF."""
     stats["resyncs"] = stats.get("resyncs", 0) + 1
     seen = 0
-    while seen < max_bytes:
+    while seen < _MAX_RESYNC_BYTES:
         line = stream.readline(_MAX_LINE)
         if not line:
             return None
@@ -289,18 +289,13 @@ def _flush(rows: list[tuple]) -> pd.DataFrame:
     return pdf
 
 
-def load_warc(
-    spark: SparkSession,
-    path: str,
-    rows_per_batch: int = _ROWS_PER_BATCH,
-    check_sizes: bool = True,
-) -> DataFrame:
+def load_warc(spark: SparkSession, path: str) -> DataFrame:
     """Pages table from a directory/glob of .warc / .warc.gz archives.
 
     Parallelism = one task per archive file (binaryFile source), the
     production CC sharding unit; each task streams the archive through
     the python record scanner and emits bounded Arrow batches
-    (`rows_per_batch` pages each — see the module docstring's memory
+    (`_ROWS_PER_BATCH` pages each — see the module docstring's memory
     shape). At 10^12 pages you have ~10^5 archives per crawl — ample
     task parallelism with zero shuffle.
 
@@ -310,13 +305,11 @@ def load_warc(
     instant (an 8-hour shift on a PST cluster). The project session
     (session.get_spark) pins UTC; foreign sessions must too.
 
-    check_sizes runs an EAGER listing-only job (content column pruned,
-    no file bytes read) so archives over binaryFile's cap fail here
-    with an actionable message instead of an opaque mid-scan JVM error
-    — the failure happens at scan time inside the data source, so it
-    cannot be intercepted lazily. Pass check_sizes=False to keep the
-    constructor fully lazy when the archive sizes are already known
-    (e.g. a fixed crawl whose shards are all ~1 GiB).
+    The size check runs an EAGER listing-only job (content column
+    pruned, no file bytes read) so archives over binaryFile's cap fail
+    here with an actionable message instead of an opaque mid-scan JVM
+    error — the failure happens at scan time inside the data source, so
+    it cannot be intercepted lazily.
     """
     files = spark.read.format("binaryFile").load(path)
     # binaryFile holds each file as ONE JVM byte array (2 GiB hard cap).
@@ -325,7 +318,7 @@ def load_warc(
         .where(F.col("length") > _BINARYFILE_MAX_BYTES)
         .limit(3)
         .collect()
-    ) if check_sizes else []
+    )
     if oversized:
         names = ", ".join(r["path"] for r in oversized)
         raise ValueError(
@@ -346,7 +339,7 @@ def load_warc(
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield from batched_pages(
-                (bytes(c) for c in pdf["content"]), rows_per_batch
+                (bytes(c) for c in pdf["content"]), _ROWS_PER_BATCH
             )
 
     return files.select("content").mapInPandas(parse, schema=PAGES_SCHEMA)

@@ -208,6 +208,27 @@ def test_pipeline_resume_reruns_stage_with_lost_bucket(spark, tmp_path_factory):
     assert sorted(map(tuple, spark.read.parquet(edges_path).collect())) == clean_edges
 
 
+def test_pipeline_resume_reruns_stage_with_lost_directory(spark, tmp_path_factory):
+    """A completed link checkpoint whose whole directory is gone fails
+    validation on resume instead of raising PATH_NOT_FOUND: link and
+    every stage after it rerun, and the KG equals the clean run's."""
+    import os
+    import shutil
+
+    out_dir = str(tmp_path_factory.mktemp("kgpipe_lostdir"))
+    pages = synthetic_pages(spark, n_pages=30)
+    kb, _ = synthetic_kb(spark, "KB", n_entities=40)
+    clean = run_pipeline(spark, pages, kb, out_dir)
+    edges_path = os.path.join(out_dir, "materialize")
+    clean_edges = sorted(map(tuple, spark.read.parquet(edges_path).collect()))
+
+    shutil.rmtree(os.path.join(out_dir, "link"))
+
+    resumed = run_pipeline(spark, pages, kb, out_dir)
+    assert resumed == clean
+    assert sorted(map(tuple, spark.read.parquet(edges_path).collect())) == clean_edges
+
+
 def test_manifest_write_crash_keeps_previous_manifest(tmp_path, monkeypatch):
     """A crash inside json.dump must not leave a half-written manifest:
     read_manifest still returns the previous one, so a resume redoes the

@@ -1,8 +1,8 @@
 """The pipeline's manifest counters are observed on the stage writes
 (DataFrame.observe), not recounted by extra jobs. Each observed counter
-must equal its explicit recount, on every table format, and the whole
-fused pipeline must stay inside a Spark job budget, so that a counter
-action added back fails here. A run leaves nothing persisted, and a
+must equal its explicit recount, and the whole fused pipeline must stay
+inside a Spark job budget, so that a counter action added back fails
+here. A run leaves nothing persisted, and a
 second run in the same session reuses the first run's generated
 classes."""
 
@@ -26,52 +26,42 @@ def _multi_host_pages(spark, n_pages=30, kb_size=10):
     )
 
 
-def _drop_tables(spark, manifest):
-    for entry in manifest["stages"].values():
-        if "table" in entry:
-            spark.sql(f"DROP TABLE IF EXISTS {entry['table']}")
-
-
-@pytest.mark.parametrize("fmt", ["parquet", "bucketed_table"])
-def test_observed_counters_equal_recounts(spark, tmp_path, fmt):
+def test_observed_counters_equal_recounts(spark, tmp_path):
     """Every manifest metric equals the count()/distinct().count()/
     per-bucket groupBy the pipeline used to run for it, and every
     checkpoint validates against the lineage its write observed."""
     pages = _multi_host_pages(spark)
     kb, _ = synthetic_kb(spark, "KB", n_entities=10)
-    m = run_pipeline(spark, pages, kb, str(tmp_path / fmt), table_format=fmt, fuse=True)
-    try:
-        st = m["stages"]
+    m = run_pipeline(spark, pages, kb, str(tmp_path), fuse=True)
+    st = m["stages"]
 
-        def read(stage):
-            return tableio.read_stage(spark, st[stage])
+    def read(stage):
+        return tableio.read_stage(spark, st[stage])
 
-        triples, canon, edges, fused = (
-            read("extract"), read("canonicalize"), read("materialize"), read("fuse")
-        )
-        n_components = canon.select("component").distinct().count()
-        bucket = F.pmod(F.xxhash64(F.col("subject_id")), F.lit(64))
-        partitions = {
-            str(r["b"]): r["count"] for r in edges.groupBy(bucket.alias("b")).count().collect()
-        }
-        assert st["extract"]["metrics"] == {"pages": pages.count(), "triples": triples.count()}
-        assert st["link"]["metrics"] == {
-            "mentions": mention_entities(triples).count(), "links": read("link").count()
-        }
-        assert st["canonicalize"]["metrics"] == {
-            "nodes": canon.count(), "components": n_components
-        }
-        assert st["materialize"]["metrics"] == {"nodes": n_components, "edges": edges.count()}
-        assert st["materialize"]["partitions"] == partitions
-        assert st["fuse"]["metrics"] == {
-            "facts": fused.count(),
-            "multi_host_facts": fused.filter(F.col("n_hosts") > 1).count(),
-        }
-        assert st["fuse"]["metrics"]["multi_host_facts"] > 0
-        for stage, entry in st.items():
-            assert tableio.validate_stage(spark, entry)["ok"], stage
-    finally:
-        _drop_tables(spark, m)
+    triples, canon, edges, fused = (
+        read("extract"), read("canonicalize"), read("materialize"), read("fuse")
+    )
+    n_components = canon.select("component").distinct().count()
+    bucket = F.pmod(F.xxhash64(F.col("subject_id")), F.lit(64))
+    partitions = {
+        str(r["b"]): r["count"] for r in edges.groupBy(bucket.alias("b")).count().collect()
+    }
+    assert st["extract"]["metrics"] == {"pages": pages.count(), "triples": triples.count()}
+    assert st["link"]["metrics"] == {
+        "mentions": mention_entities(triples).count(), "links": read("link").count()
+    }
+    assert st["canonicalize"]["metrics"] == {
+        "nodes": canon.count(), "components": n_components
+    }
+    assert st["materialize"]["metrics"] == {"nodes": n_components, "edges": edges.count()}
+    assert st["materialize"]["partitions"] == partitions
+    assert st["fuse"]["metrics"] == {
+        "facts": fused.count(),
+        "multi_host_facts": fused.filter(F.col("n_hosts") > 1).count(),
+    }
+    assert st["fuse"]["metrics"]["multi_host_facts"] > 0
+    for stage, entry in st.items():
+        assert tableio.validate_stage(spark, entry)["ok"], stage
 
 
 def test_zero_row_stage_write_lineage(spark, tmp_path):

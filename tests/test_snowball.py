@@ -9,7 +9,7 @@ so any regression in the port surfaces as a diff against known
 Snowball outputs.
 """
 
-from ontoemma_spark.functions.stem import porter_stem, snowball_stem
+from ontoemma_spark.functions.stem import snowball_stem
 
 # (word, porter2 output) — exceptional forms and one-per-rule coverage.
 GOLDEN = [
@@ -103,11 +103,6 @@ def test_snowball_idempotent_on_fixture_vocab():
         a, b = snowball_stem(w), snowball_stem(w)
         assert a == b
         assert isinstance(a, str) and a
-
-
-def test_porter1_still_available():
-    assert porter_stem("running") == "run"
-    assert porter_stem("caresses") == "caress"
 
 
 # ---------------------------------------------------------------------------

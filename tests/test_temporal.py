@@ -100,7 +100,7 @@ def test_interval_join_membership_and_edges(spark):
 def test_interval_join_unbounded_interval_guard(spark):
     pts = spark.createDataFrame([(1, 0)], "pid bigint, t bigint")
     ivs = spark.createDataFrame([(1, 0, 10**12)], "iid bigint, start bigint, end bigint")
-    with pytest.raises(ValueError, match="max_buckets_per_interval"):
+    with pytest.raises(ValueError, match="MAX_BUCKETS_PER_INTERVAL"):
         interval_join(pts, ivs, bucket_width=100)
 
 
