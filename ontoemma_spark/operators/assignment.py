@@ -12,7 +12,8 @@ the cheapest assignment seen; stop after 11 rounds without improvement.
 The cost matrix is (|s_kb| × |t_kb|) — KB-bounded, exactly the regime
 the reference runs on a single node — so this runs driver-side numpy by
 design. The DISTRIBUTED stand-in for unbounded score sets remains
-strategy.greedy_one_to_one_alignment (mutual-best rounds); this module
+strategy.greedy_one_to_one_alignment (one greedy sweep per connected
+component of the score graph); this module
 exists for output fidelity with the reference on its own fixture
 (tests/test_assignment_strategies.py:23-36 → tests/test_modh.py).
 

@@ -1301,16 +1301,10 @@ def bloom_gated_dedup(
     callers on the ingest hot path should persist or checkpoint the
     probe output so the bloom join runs once — the driver query and
     tests leave it lazy because the probe is a narrow broadcast shape.
-    The bloom state is persisted before use: both union branches
-    inline the probe, and without the persist each would rebuild the
-    bloom — a full corpus_keys scan per branch for a table of at most
-    m_bits/32 rows.
+    The bloom state is built once without a persist: the second branch
+    reuses the first branch's broadcast exchange (ReusedExchange).
     """
-    from pyspark import StorageLevel
-
-    state = bloom_state(
-        corpus_keys, key_col=key_col, m_bits=m_bits, k=k
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    state = bloom_state(corpus_keys, key_col=key_col, m_bits=m_bits, k=k)
     probed = bloom_probe(
         batch, state, key_col=key_col, id_col=id_col, m_bits=m_bits, k=k
     )

@@ -3,18 +3,20 @@
 Reference: emma/OntoEmma.py:542-629 (_apply_best/_all/_modh) and
 emma/utils/modified_hungarian.py. BEST/ALL are pure window/filter plans;
 MODH (global assignment) is inherently sequential in the reference
-(randomized greedy iteration, modified_hungarian.py:8-145) — here it is a
-deterministic distributed greedy: iterate mutual-best matching rounds,
-which yields a maximal matching. On the reference's fixture semantics
+(randomized greedy iteration, modified_hungarian.py:8-145) — here it is
+a deterministic greedy maximal matching, swept once per connected
+component of the score graph. On the reference's fixture semantics
 (tests/test_assignment_strategies.py) all strategies agree on count.
 """
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ontoemma_spark import config
+from ontoemma_spark.operators.components import connected_components
 
 
 def best_alignment(scores: DataFrame, threshold: float = config.SIM_SCORE_THRESHOLD) -> DataFrame:
@@ -38,58 +40,62 @@ def greedy_one_to_one_alignment(
     scores: DataFrame,
     threshold: float = config.SIM_SCORE_THRESHOLD,
 ) -> DataFrame:
-    """MODH stand-in (OntoEmma.py:576-611): approximate global 1:1
-    assignment. Deterministic mutual-best rounds: a pair is matched when
-    it is simultaneously the best remaining candidate of its source AND
-    of its target; matched rows are removed and the round repeats. This
-    is the classic distributed greedy-matching algorithm — every round is
-    two window ranks + a filter, no driver-side state.
+    """MODH stand-in (OntoEmma.py:576-611): the sequential greedy 1:1
+    matching over (score desc, s_id, t_id) — walk the pairs with score ≥
+    threshold in that order, keeping a pair when neither endpoint is
+    matched yet. The result is a maximal matching.
 
-    Termination: the globally best remaining pair is always mutual-best,
-    so every round matches ≥1 pair and the loop ends in ≤ min(|S|, |T|)
-    rounds — the result is a maximal matching by construction.
+    Equivalence: the greedy never looks across connected components of
+    the thresholded score graph, so it splits over them.
+    connected_components labels the side-tagged endpoints ("s:"‖s_id,
+    "t:"‖t_id: a source and a target may share an id), a Spark window
+    ranks each component's pairs (Spark decides NaN placement and
+    string collation), and one grouped applyInPandas sweeps each
+    component in rank order — a constant number of Spark rounds.
+    Mutual-best rounds (per-s_id and per-t_id windows, both restrictions
+    of this order) reach the same matching but need one round per link
+    of a path-shaped graph.
+
+    Bounds: connected_components' gate, or config.CC_MAX_ITERATIONS on
+    its distributed path; the largest component's thresholded pairs sit
+    in one pandas frame on one task. Rows with a NULL s_id or t_id are
+    dropped (align()'s entity_tokens never produces them).
 
     Diverges from the reference's randomized row-order greedy
     (modified_hungarian.py:113-118 shuffles rows) — documented
-    deliberate determinism (SURVEY.md §7.3 hard part 2).
-
-    For OUTPUT FIDELITY with the reference algorithm (including its
-    iterative cost reduction and quirks), use
-    operators.assignment.modified_hungarian_alignment — the faithful
-    seeded port, KB-bounded driver-side numpy, pinned against the
-    reference's own fixture in tests/test_modh.py. This greedy remains
-    the unbounded-input scale path.
+    deliberate determinism (SURVEY.md §7.3 hard part 2). For output
+    fidelity with the reference (its iterative cost reduction and
+    quirks), use operators.assignment.modified_hungarian_alignment — the
+    seeded port, KB-bounded driver-side numpy, pinned in
+    tests/test_modh.py. This greedy is the unbounded-input scale path.
     """
-    remaining = scores.filter(F.col("score") >= threshold)
-    matched = None
-    ws = Window.partitionBy("s_id").orderBy(F.desc("score"), F.asc("t_id"))
-    wt = Window.partitionBy("t_id").orderBy(F.desc("score"), F.asc("s_id"))
-    while True:
-        ranked = remaining.withColumn("rs", F.row_number().over(ws)).withColumn(
-            "rt", F.row_number().over(wt)
-        )
-        # column order is NOT stable across rounds: the using-column
-        # anti-joins below move their key to the front, so round 2's
-        # `remaining` has columns [t_id, s_id, score] — select by name
-        # before the union (positional union swapped s/t for every
-        # round after the first; caught by the modh_greedy oracle row).
-        mutual = ranked.filter((F.col("rs") == 1) & (F.col("rt") == 1)).select(
-            *scores.columns
-        )
-        mutual = mutual.localCheckpoint(eager=True)
-        if mutual.isEmpty():
-            break
-        matched = mutual if matched is None else matched.unionByName(mutual)
-        remaining = (
-            remaining.join(mutual.select("s_id").distinct(), "s_id", "left_anti")
-            .join(mutual.select("t_id").distinct(), "t_id", "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        if remaining.isEmpty():
-            break
-    if matched is None:
-        return scores.filter(F.lit(False))
-    return matched.select(*scores.columns)
+    cols = scores.columns
+    kept = scores.filter(
+        (F.col("score") >= threshold) & F.col("s_id").isNotNull() & F.col("t_id").isNotNull()
+    )
+    s_node = F.concat(F.lit("s:"), F.col("s_id").cast("string"))
+    t_node = F.concat(F.lit("t:"), F.col("t_id").cast("string"))
+    comps = connected_components(kept.select(s_node.alias("src"), t_node.alias("dst")))
+    order = Window.partitionBy("component").orderBy(
+        F.desc("score"), F.asc("s_id"), F.asc("t_id")
+    )
+    ranked = (
+        kept.withColumn("node", s_node)
+        .join(comps, "node")
+        .select(*cols, "component", F.row_number().over(order).alias("_rank"))
+    )
+
+    def sweep(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values("_rank")
+        used_s, used_t, keep = set(), set(), []
+        for s, t in zip(pdf["s_id"], pdf["t_id"]):
+            keep.append(s not in used_s and t not in used_t)
+            if keep[-1]:
+                used_s.add(s)
+                used_t.add(t)
+        return pdf.loc[keep, cols]
+
+    return ranked.groupBy("component").applyInPandas(sweep, schema=scores.schema)
 
 
 def apply_alignment_strategy(

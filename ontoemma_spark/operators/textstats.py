@@ -454,7 +454,6 @@ def source_rollup(
     docs: DataFrame,
     source_col: str = "source",
     text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Host/source-level corpus signals — the aggregation behind
     domain-level filtering (the C4/RefinedWeb pattern: drop or downweight
@@ -473,10 +472,8 @@ def source_rollup(
     and aggregated through the same two stages — ONE corpus scan and
     ONE corpus exchange total (a previous revision joined
     quality_scores() back on doc_id, scanning and shuffling the corpus
-    twice, and ignored text_col/id_col while at it; id_col is now
-    unused and kept only for signature compatibility).
+    twice, and ignored text_col while at it).
     """
-    del id_col  # no per-doc join anymore; see docstring
     base = docs.select(
         F.col(source_col).alias("source"),
         F.md5(F.col(text_col)).alias("_h"),

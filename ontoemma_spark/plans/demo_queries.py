@@ -5787,14 +5787,14 @@ LIMIT 100
 """
 
 
-# 47. modh_greedy — G6 scale variant: iterative mutual-best matching
+# 47. modh_greedy — G6 scale variant: greedy matching per component
 def q_modh_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G6 distributed variant (strategy.py greedy_one_to_one_alignment):
-    deterministic mutual-best rounds over a PATH-GRAPH score fixture
-    with strictly decreasing weights — each round matches exactly one
-    pair (the worst case for the loop), and the final matching has the
-    closed form {(2k, 2k+1)}, which is what the SQL twin selects. This
-    hash-checks the iterative algorithm itself, not just one round."""
+    the deterministic greedy 1:1 matching over a PATH-GRAPH score
+    fixture with strictly decreasing weights — one connected component
+    whose greedy chain is as long as the graph, so every match depends
+    on the one before it. The final matching has the closed form
+    {(2k, 2k+1)}, which is what the SQL twin selects."""
     from ontoemma_spark.operators.strategy import greedy_one_to_one_alignment
 
     part = _t(spark, sf_dir, "part")

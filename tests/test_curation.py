@@ -513,7 +513,7 @@ def test_bloom_gated_dedup_exact_under_forced_fps(spark):
     the bloom is saturated: m_bits=64 with 40 keys guarantees false
     positives, and every one must be resolved by the confirm join.
     Also: fresh rows (maybe_seen=false) are correct by the no-false-
-    negative property alone."""
+    negative property alone, and the call leaves nothing persisted."""
     from pyspark.sql import functions as F
 
     from ontoemma_spark.operators.dedup import bloom_gated_dedup, bloom_probe, bloom_state
@@ -524,10 +524,13 @@ def test_bloom_gated_dedup_exact_under_forced_fps(spark):
     batch = spark.createDataFrame(
         [(i, f"k{i}") for i in range(80)], ["doc_id", "key"]
     )
+    n_persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
     got = {
         r["doc_id"]: r["is_dup"]
         for r in bloom_gated_dedup(batch, corpus, m_bits=64, k=2).collect()
     }
+    # nothing is left cached: the caller has no handle to release it
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == n_persisted
     assert len(got) == 80
     for i in range(80):
         assert got[i] == (i < 40), i
@@ -618,7 +621,7 @@ def test_r5_review_curation_textstats_ann_guards(spark):
     )
     roll = source_rollup(
         pages.withColumn("source", F.lit("a.ex")),
-        text_col="body", id_col="url",
+        text_col="body",
     ).collect()
     assert roll[0]["n_docs"] == 2 and roll[0]["n_distinct"] == 1
 

@@ -197,29 +197,80 @@ def test_lemmatize_invariants(word):
     assert simple_lemmatize(b) == b
 
 
+def py_greedy_sweep(rows, threshold):
+    """Sequential greedy 1:1 matching: walk the pairs with score >=
+    threshold in (score desc, s_id, t_id) order and keep a pair when
+    neither endpoint is matched yet."""
+    used_s, used_t, out = set(), set(), set()
+    for s_, t_, score in sorted(
+        (r for r in rows if r[2] >= threshold), key=lambda r: (-r[2], r[0], r[1])
+    ):
+        if s_ not in used_s and t_ not in used_t:
+            used_s.add(s_)
+            used_t.add(t_)
+            out.add((s_, t_, score))
+    return out
+
+
+def _greedy_rows(pairs, tied, shared_ids):
+    """Score rows over index pairs. tied draws scores from three values,
+    so most pairs tie with another; shared_ids gives sources and targets
+    one id space, so s_id "3" and t_id "3" are different nodes."""
+    s_pre, t_pre = ("", "") if shared_ids else ("s", "t")
+    return [
+        (f"{s_pre}{a}", f"{t_pre}{b}",
+         (0.5, 0.9, 1.0)[(a + 2 * b) % 3] if tied else 1.0 / (1 + 7 * a + 13 * b))
+        for a, b in pairs
+    ]
+
+
 @settings(max_examples=10, deadline=None)
-@given(st.lists(
-    st.tuples(st.integers(0, 5), st.integers(0, 5)),
-    min_size=1, max_size=12, unique=True,
-))
-def test_greedy_matching_properties(spark, pairs):
+@given(
+    st.lists(
+        st.tuples(st.integers(0, 5), st.integers(0, 5)),
+        min_size=0, max_size=12, unique=True,
+    ),
+    st.booleans(),
+    st.booleans(),
+    st.sampled_from([0.0, 0.9]),
+)
+def test_greedy_matching_properties(spark, pairs, tied, shared_ids, threshold):
     """On any score table: the greedy result is a 1:1 MATCHING (no s or
-    t repeats), is a subset of the input, and is MAXIMAL (no remaining
-    input pair has both endpoints free)."""
+    t repeats), is a subset of the input, is MAXIMAL (no remaining
+    input pair at or above the threshold has both endpoints free), and
+    equals the sequential sorted sweep — with heavy score ties, a shared
+    s/t id space, empty input and a threshold equal to a score."""
     from ontoemma_spark.operators.strategy import greedy_one_to_one_alignment
 
-    rows = [(f"s{a}", f"t{b}", 1.0 / (1 + 7 * a + 13 * b)) for a, b in pairs]
+    rows = _greedy_rows(pairs, tied, shared_ids)
     scores = spark.createDataFrame(rows, "s_id string, t_id string, score double")
-    got = [(r["s_id"], r["t_id"]) for r in
-           greedy_one_to_one_alignment(scores, threshold=0.0).collect()]
-    all_pairs = {(f"s{a}", f"t{b}") for a, b in pairs}
-    assert set(got) <= all_pairs
+    got = [tuple(r) for r in
+           greedy_one_to_one_alignment(scores, threshold=threshold).collect()]
+    assert set(got) == py_greedy_sweep(rows, threshold)
+    assert set(got) <= set(rows)
     ss = [p[0] for p in got]
     ts = [p[1] for p in got]
     assert len(ss) == len(set(ss)) and len(ts) == len(set(ts))  # 1:1
     used_s, used_t = set(ss), set(ts)
-    for s_, t_ in all_pairs:  # maximality
-        assert s_ in used_s or t_ in used_t
+    for s_, t_, score in rows:  # maximality
+        assert score < threshold or s_ in used_s or t_ in used_t
+
+
+def test_greedy_matching_distributed_components(spark, broadcast_off):
+    """The same sweep identity when connected_components takes its
+    distributed path (nothing fits on the driver), on tied scores in a
+    shared id space, and on empty input."""
+    from ontoemma_spark.operators.strategy import greedy_one_to_one_alignment
+
+    pairs = [(a, b) for a in range(5) for b in range(5) if (a * b + a) % 3 != 1]
+    rows = _greedy_rows(pairs, tied=True, shared_ids=True)
+    schema = "s_id string, t_id string, score double"
+    with broadcast_off():
+        for data in (rows, []):
+            scores = spark.createDataFrame(data, schema)
+            got = {tuple(r) for r in
+                   greedy_one_to_one_alignment(scores, threshold=0.9).collect()}
+            assert got == py_greedy_sweep(data, 0.9)
 
 
 def py_lsh_dedup(docs, w, num_hashes, bands, min_jaccard):

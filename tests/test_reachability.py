@@ -9,6 +9,8 @@ same-named orphan can stay alive, but reached code is never flagged):
    keyword or by position, by some call in program code or tests,
    unless it names a column (COLUMN_PARAMETERS). An option no call
    passes is a constant in disguise.
+3. every parameter of a package function is read by its body. A
+   parameter the body never loads is dead weight in every call.
 
 Program code is the package and its entry points: scripts/, perfbench/,
 bench.py, bench_extra.py and __spark_entry__.py.
@@ -209,4 +211,38 @@ def test_every_option_is_passed():
     assert not unset, (
         "no call in program code or tests passes these options; make each "
         f"the constant it always is: {unset}"
+    )
+
+
+def _unread_parameters():
+    """where(param) for every parameter of a package function whose body
+    never loads it. self, cls and _-prefixed names are exempt, and so is
+    the registry's uniform q_*(spark, sf_dir) signature."""
+    for f in _files([PACKAGE]):
+        for fn in ast.walk(ast.parse(f.read_text())):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            a = fn.args
+            params = [
+                p.arg for p in a.posonlyargs + a.args + a.kwonlyargs + [a.vararg, a.kwarg]
+                if p is not None
+            ]
+            loaded = {
+                n.id for stmt in fn.body for n in ast.walk(stmt)
+                if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load)
+            }
+            registry = fn.name.startswith("q_")
+            for p in params:
+                if p in loaded or p in ("self", "cls") or p.startswith("_"):
+                    continue
+                if registry and p in ("spark", "sf_dir"):
+                    continue
+                yield f"{f.relative_to(ROOT)}:{fn.lineno} {fn.name}({p})"
+
+
+def test_every_parameter_is_read():
+    unread = list(_unread_parameters())
+    assert not unread, (
+        "these functions never read a parameter; drop it from the "
+        f"signature and from every call: {unread}"
     )

@@ -44,7 +44,7 @@ def test_greedy_one_to_one_is_a_matching(spark, scores):
     t_ids = [r["t_id"] for r in rows]
     assert len(s_ids) == len(set(s_ids)) and len(t_ids) == len(set(t_ids))
     got = {(r["s_id"], r["t_id"]) for r in rows}
-    # mutual-best: s1-t1 (0.99) then s2-t2 (0.97), s4-t4, s3-t3
+    # greedy in score order: s1-t1 (0.99), s2-t2 (0.97), s4-t4, s3-t3
     assert got == {("s1", "t1"), ("s2", "t2"), ("s3", "t3"), ("s4", "t4")}
 
 
@@ -63,18 +63,39 @@ def test_dispatch(spark, scores):
         apply_alignment_strategy(scores, "nope")
 
 
-def test_greedy_multi_round_preserves_column_roles(spark):
-    """Regression: the using-column anti-joins reorder columns between
-    rounds; rows matched in round 2+ must still carry (s_id, t_id) in
-    the right roles. Path graph with decreasing weights forces one
-    match per round."""
-    from ontoemma_spark.operators.strategy import greedy_one_to_one_alignment
-
+def _path_scores(spark, n):
+    """Path-shaped score graph s0-t1-s2-t3-… with strictly decreasing
+    weights: the greedy matches (s2k, t2k+1) for k < n, and the
+    mutual-best rounds this replaced needed one round per match."""
     rows = []
-    for k in range(4):
+    for k in range(n):
         rows.append((f"s{2 * k}", f"t{2 * k + 1}", 1.0 / (4 * k + 1)))
         rows.append((f"s{2 * k + 2}", f"t{2 * k + 1}", 1.0 / (4 * k + 3)))
-    scores = spark.createDataFrame(rows, "s_id string, t_id string, score double")
+    return spark.createDataFrame(rows, "s_id string, t_id string, score double")
+
+
+def test_greedy_multi_round_preserves_column_roles(spark):
+    """Regression: rows matched deep in a greedy chain must still carry
+    (s_id, t_id) in the right roles — an earlier round-based version
+    reordered columns between rounds and swapped them."""
     got = {(r["s_id"], r["t_id"]) for r in
-           greedy_one_to_one_alignment(scores, threshold=0.0).collect()}
+           greedy_one_to_one_alignment(_path_scores(spark, 4), threshold=0.0).collect()}
     assert got == {(f"s{2 * k}", f"t{2 * k + 1}") for k in range(4)}
+
+
+def test_greedy_job_count_does_not_grow_with_chain_length(spark):
+    """One component sweep, not one Spark round per match: the path
+    fixture runs the same number of jobs at 4 and at 12 matches (6 on
+    local[4]; the round-based version ran about 10 per match)."""
+    sc = spark.sparkContext
+    jobs = []
+    for n in (4, 12):
+        group = f"test_greedy_job_count_{n}"
+        sc.setJobGroup(group, group)
+        try:
+            rows = greedy_one_to_one_alignment(_path_scores(spark, n), threshold=0.0).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(rows) == n
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    assert jobs[0] == jobs[1] <= 12, jobs
