@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from ontoemma_spark import config
 from ontoemma_spark.operators.blocking import candidate_pairs_broadcast_index, entity_tokens
 from ontoemma_spark.operators.features import entity_feature_table, featurize_pairs
+from ontoemma_spark.operators.normalize import filter_named_entities, normalize_entities
 from ontoemma_spark.operators.scoring import DEFAULT_LR_MODEL, LRModel
 from ontoemma_spark.operators.strategy import apply_alignment_strategy
 from ontoemma_spark.operators.string_equiv import string_equiv_alignment
@@ -67,8 +68,6 @@ def align(
     normalize_kb on both sides before candidate selection,
     OntoEmma.py:846-848 — tokenization is case-sensitive, so skipping it
     loses candidates on mixed-case input)."""
-    from ontoemma_spark.operators.normalize import normalize_entities
-
     model = model or DEFAULT_LR_MODEL
     s_entities = normalize_entities(s_entities)
     t_entities = normalize_entities(t_entities)
@@ -112,18 +111,13 @@ def _model_scores(
     # model scoring short-circuit (OntoEmma.py:695-722 _apply_model_align):
     # skip sources AND targets already string-equiv matched, and skip
     # unnamed entities whose canonical name equals their id (P8,
-    # :710-715 — unnamed OWL imports are never model-scored).
-    s_named = s_entities.filter(
-        F.col("canonical_name") != F.col("research_entity_id")
-    ).select(F.col("research_entity_id").alias("s_id"))
-    t_named = t_entities.filter(
-        F.col("canonical_name") != F.col("research_entity_id")
-    ).select(F.col("research_entity_id").alias("t_id"))
-    to_score = (
-        cands.join(equiv.select("s_id").distinct(), "s_id", "left_anti")
-        .join(equiv.select("t_id").distinct(), "t_id", "left_anti")
-        .join(s_named, "s_id", "left_semi")
-        .join(t_named, "t_id", "left_semi")
+    # :710-715 — unnamed OWL imports are never model-scored). The
+    # featurize and name joins below are inner, so feeding them the
+    # named entities alone drops the unnamed ones' pairs.
+    s_entities = filter_named_entities(s_entities)
+    t_entities = filter_named_entities(t_entities)
+    to_score = cands.join(equiv.select("s_id"), "s_id", "left_anti").join(
+        equiv.select("t_id"), "t_id", "left_anti"
     )
     from ontoemma_spark.operators.scoring_nn import NN_PAIR_FEATURES, MLPModel
     from ontoemma_spark.operators.siamese import SiameseScorer, score_pairs_siamese

@@ -1,9 +1,14 @@
-"""Native (JVM-side, codegen-friendly) column expressions for the
+"""Native (JVM-side, codegen-friendly) SQL expressions for the
 reference's string/token primitives.
 
-Every function here returns a pyspark Column built purely from built-in
-functions — no Python UDFs — so Catalyst keeps them inside whole-stage
-codegen. Semantics are pinned to the reference implementations:
+Every function here takes Spark SQL expression text (a column name, or
+any expression) and returns Spark SQL expression text built purely from
+built-in functions — no Python UDFs — so Catalyst keeps them inside
+whole-stage codegen. Callers project them with one selectExpr (or one
+F.expr where a Column is needed): Spark parses the whole projection in
+one py4j call, where a Column build costs one call per expression node.
+Double literals carry the D suffix; a bare 1.0 parses as a decimal.
+Semantics are pinned to the reference implementations:
 
   clean/canonicalize     emma/utils/string_utils.py:6-14
   normalize_string       emma/utils/string_utils.py:87-93
@@ -16,102 +21,92 @@ codegen. Semantics are pinned to the reference implementations:
 
 from __future__ import annotations
 
-from pyspark import SparkContext
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 from ontoemma_spark.functions.stopwords import ENGLISH_STOPWORDS_SORTED
 
 TOKEN_PATTERN = r"[A-Za-z\d]+"
-
-# words → (gateway, JVM Seq of their literal Columns)
-_IN_LISTS: dict = {}
+EMPTY_STRINGS = "CAST(array() AS array<string>)"
 
 
-def isin_words(col: Column, words: tuple[str, ...]) -> Column:
-    """``col IN (words)``, same semantics as ``col.isin(*words)``.
-
-    Column.isin crosses py4j once per literal (build it, then add it to
-    the argument list): ~500 round trips for the 179 stopwords on every
-    call. The literal Seq is built once per JVM gateway here and reused,
-    so each call costs one round trip. The optimizer still rewrites a
-    literal IN longer than spark.sql.optimizer.inSetConversionThreshold
-    (10) to an InSet hash lookup."""
-    from pyspark.sql.classic.column import Column as JvmColumn, _to_seq
-
-    sc = SparkContext._active_spark_context
-    hit = _IN_LISTS.get(words)
-    if hit is None or hit[0] is not sc._gateway:
-        hit = _IN_LISTS[words] = (sc._gateway, _to_seq(sc, [F.lit(w)._jc for w in words]))
-    return JvmColumn(col._jc.isin(hit[1]))
+def sql_string(s: str) -> str:
+    """s as a Spark SQL string literal (backslash escapes)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'").replace("\x00", "\\u0000") + "'"
 
 
-def clean(col) -> Column:
+def in_words(x: str, words: tuple[str, ...]) -> str:
+    """``x IN (words)``: null-safe equality membership. The optimizer
+    rewrites a literal IN longer than
+    spark.sql.optimizer.inSetConversionThreshold (10) to an InSet hash
+    lookup."""
+    return f"{x} IN ({', '.join(map(sql_string, words))})"
+
+
+def _fresh(name: str, *texts: str) -> str:
+    """A lambda variable name that occurs in none of texts, so a
+    primitive's lambda never captures a caller's variable."""
+    k = 0
+    while any(f"{name}{k}" in t for t in texts):
+        k += 1
+    return f"{name}{k}"
+
+
+def clean(s: str) -> str:
     """Strip every char outside [a-zA-Z0-9 ] (string_utils.py:6-10)."""
-    return F.regexp_replace(F.col(col) if isinstance(col, str) else col, r"[^a-zA-Z0-9 ]+", "")
+    return f"regexp_replace({s}, '[^a-zA-Z0-9 ]+', '')"
 
 
-def canonicalize(col) -> Column:
+def canonicalize(s: str) -> str:
     """clean + lowercase (string_utils.py:13-14)."""
-    return F.lower(clean(col))
+    return f"lower({clean(s)})"
 
 
-def normalize_string(col) -> Column:
+def normalize_string(s: str) -> str:
     """strip, lower, drop '-', '_'→' ' (string_utils.py:87-93)."""
-    c = F.col(col) if isinstance(col, str) else col
     # translate maps '_'→' ' and deletes '-' (to-string shorter than from).
-    return F.translate(F.lower(F.trim(c)), "_-", " ")
+    return f"translate(lower(trim({s})), '_-', ' ')"
 
 
-def tokenize(col) -> Column:
+def tokenize(s: str) -> str:
     """Regex word tokens minus English stopwords, order+dups preserved
-    (string_utils.py:96-105 returns a tuple, not a set)."""
-    c = F.col(col) if isinstance(col, str) else col
-    toks = F.regexp_extract_all(c, F.lit(TOKEN_PATTERN), 0)
-    # r6: a literal IN — the optimizer rewrites it to an InSet hash
-    # lookup; ~array_contains(literal array, t) scanned all 179
-    # stopwords per token interpreted. Same null-safe equality
-    # membership semantics.
-    return F.filter(toks, lambda t: ~isin_words(t, ENGLISH_STOPWORDS_SORTED))
+    (string_utils.py:96-105 returns a tuple, not a set). The 179-word
+    IN becomes an InSet hash lookup per token."""
+    t = _fresh("tok", s)
+    return (
+        f"filter(regexp_extract_all({s}, {sql_string(TOKEN_PATTERN)}, 0),"
+        f" {t} -> NOT {in_words(t, ENGLISH_STOPWORDS_SORTED)})"
+    )
 
 
-def char_ngrams(col, n: int) -> Column:
+def char_ngrams(s: str, n: int) -> str:
     """Padded character n-grams (string_utils.py:27-35).
 
     The reference pads with (n-1) NUL bytes on both ends — parity quirk.
     Returns the list of n-grams in order (duplicates preserved); callers
     needing the set apply array_distinct.
     """
-    c = F.col(col) if isinstance(col, str) else col
-    padding = F.lit("\x00" * (n - 1))
-    padded = F.concat(padding, c, padding)
+    pad = sql_string("\x00" * (n - 1))
+    padded = f"concat({pad}, {s}, {pad})"
+    i = _fresh("pos", s)
     # positions 1 .. len(padded)-n+1
-    return F.transform(
-        F.sequence(F.lit(1), F.length(padded) - F.lit(n - 1)),
-        lambda i: padded.substr(i, F.lit(n)),
+    return f"transform(sequence(1, length({padded}) - {n - 1}), {i} -> substr({padded}, {i}, {n}))"
+
+
+def jaccard(a: str, b: str) -> str:
+    """|a∩b| / |a∪b| over arrays treated as sets; -1.0 if either side
+    empty (string_utils.py:52-63)."""
+    return (
+        f"CASE WHEN size({a}) > 0 AND size({b}) > 0"
+        f" THEN CAST(size(array_intersect({a}, {b})) AS DOUBLE)"
+        f" / CAST(size(array_union({a}, {b})) AS DOUBLE) ELSE -1.0D END"
     )
 
 
-def jaccard(a, b) -> Column:
-    """|a∩b| / |a∪b| over array columns; -1.0 if either side empty
-    (string_utils.py:52-63). Inputs are treated as sets."""
-    ca = F.col(a) if isinstance(a, str) else a
-    cb = F.col(b) if isinstance(b, str) else b
-    nonempty = (F.size(ca) > 0) & (F.size(cb) > 0)
-    inter = F.size(F.array_intersect(ca, cb)).cast("double")
-    union = F.size(F.array_union(ca, cb)).cast("double")
-    return F.when(nonempty, inter / union).otherwise(F.lit(-1.0))
-
-
-def idf(corpus_size, freq) -> Column:
+def idf(corpus_size: int, freq: str) -> str:
     """ln(N/df + 1) (string_utils.py:17-24)."""
-    n = F.lit(float(corpus_size)) if isinstance(corpus_size, (int, float)) else corpus_size
-    f = F.col(freq) if isinstance(freq, str) else freq
-    return F.log(n / f + F.lit(1.0))
+    return f"ln({float(corpus_size)!r}D / {freq} + 1.0D)"
 
 
-def acronym(tokens_col) -> Column:
+def acronym(tokens: str) -> str:
     """First char of each token, concatenated
     (EngineeredFeatureGenerator.py:122-129)."""
-    c = F.col(tokens_col) if isinstance(tokens_col, str) else tokens_col
-    return F.array_join(F.transform(c, lambda t: t.substr(F.lit(1), F.lit(1))), "")
+    t = _fresh("tok", tokens)
+    return f"array_join(transform({tokens}, {t} -> substr({t}, 1, 1)), '')"

@@ -24,11 +24,17 @@ Scale notes (100 TB design):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ontoemma_spark import config
-from ontoemma_spark.functions.text import char_ngrams, idf, normalize_string, tokenize
+from ontoemma_spark.functions.text import (
+    EMPTY_STRINGS,
+    char_ngrams,
+    idf,
+    normalize_string,
+    tokenize,
+)
 from ontoemma_spark.session import gated_collect
 
 
@@ -54,25 +60,23 @@ def entity_tokens(
     Null guards matter: concat(NULL, ...) is NULL, which would silently
     emit ZERO tokens for an entity with a null definition or alias list
     — dropping it from candidate selection entirely."""
-    alias = F.coalesce(F.col(aliases_col), F.array().cast("array<string>"))
-    word_toks = F.flatten(F.transform(alias, lambda a: tokenize(a)))
-    gram_toks = F.flatten(
-        F.transform(alias, lambda a: char_ngrams(normalize_string(a), config.NGRAM_SIZE))
-    )
-    def_toks = tokenize(F.coalesce(F.col(definition_col), F.lit("")))
+    alias = f"coalesce(`{aliases_col}`, {EMPTY_STRINGS})"
+    word_toks = f"flatten(transform({alias}, a -> {tokenize('a')}))"
+    gram = char_ngrams(normalize_string("a"), config.NGRAM_SIZE)
+    gram_toks = f"flatten(transform({alias}, a -> {gram}))"
+    def_toks = tokenize(f"coalesce(`{definition_col}`, '')")
     return (
-        entities.select(
-            F.col(id_col).alias("entity_id"),
-            F.array_distinct(F.concat(word_toks, gram_toks, def_toks)).alias("tokens"),
+        entities.selectExpr(
+            f"`{id_col}` AS entity_id",
+            f"explode(array_distinct(concat({word_toks}, {gram_toks}, {def_toks}))) AS token",
         )
-        .select("entity_id", F.explode("tokens").alias("token"))
         # a NULL entity id contributes tokens that count() then skips,
         # producing df=0 groups and a divide-by-zero in ln(N/df + 1)
         # (found by null probing). Invalid-id entities are the
         # validate_entities quarantine's job; here they are simply
         # excluded from the posting lists. Null tokens (null alias
         # elements) are dropped for the same reason.
-        .filter(F.col("entity_id").isNotNull() & F.col("token").isNotNull())
+        .filter("entity_id IS NOT NULL AND token IS NOT NULL")
     )
 
 
@@ -80,8 +84,8 @@ def token_idf(tokens: DataFrame, corpus_size: int) -> DataFrame:
     """(token, df, idf) with idf = ln(N/df + 1) (string_utils.py:17-24,
     applied at CandidateSelection.py:119-127). Input must be distinct
     (entity_id, token) pairs, so count == countDistinct."""
-    return tokens.groupBy("token").agg(F.count("entity_id").alias("df")).select(
-        "token", "df", idf(corpus_size, "df").alias("idf")
+    return tokens.groupBy("token").agg(F.count("entity_id").alias("df")).selectExpr(
+        "token", "df", f"{idf(corpus_size, 'df')} AS idf"
     )
 
 

@@ -5,12 +5,14 @@ memoizes per-entity token work in a dict (:199-207); here that becomes a
 materialized per-entity feature table computed ONCE per entity
 (entity_feature_table), which candidate pairs join against (broadcast —
 the KB side is small). The 32 pairwise features are then pure native
-column expressions over the joined row — no Python in the pair loop at
-all, which is the hot path at 10^12 pairs.
+expressions over the joined row — no Python in the pair loop at all,
+which is the hot path at 10^12 pairs.
 
-Stemming/lemmatization run as Arrow-batched pandas UDFs
-(iterator-of-series form) since they are per-token Python; everything
-else (equality flags, jaccards, max-jaccards, overlaps, acronyms) is
+Both tables are built from SQL expression text (functions/text.py),
+each projected in one selectExpr. Stemming/lemmatization/parsing run
+as one Arrow-batched pandas UDF (iterator-of-series form), the one
+Column step, since they are per-token Python; everything else
+(equality flags, jaccards, max-jaccards, overlaps, acronyms) is
 JVM-side.
 
 Known reference bug NOT replicated: _char_tokenize returns a generator
@@ -25,13 +27,13 @@ from __future__ import annotations
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
 from ontoemma_spark.functions.stem import simple_lemmatize, snowball_stem
-from ontoemma_spark.functions.text import acronym, char_ngrams, tokenize
+from ontoemma_spark.functions.text import EMPTY_STRINGS, acronym, char_ngrams, jaccard, tokenize
 
 
 _DERIVED_TEXT_TYPE = StructType(
@@ -71,72 +73,57 @@ def _derived_text_udf(it: Iterator[tuple[pd.Series, pd.Series]]) -> Iterator[pd.
         )
 
 
-def _detail(key: str) -> Column:
+def _detail(key: str) -> str:
     """additional_details[key] with the legacy-misspelling patch
     (EngineeredFeatureGenerator.py:216-224): mesh_synonynms accepted,
     missing keys default to []."""
-    col = F.element_at(F.col("additional_details"), key)
+    col = f"element_at(additional_details, '{key}')"
     if key == "mesh_synonyms":
-        col = F.coalesce(col, F.element_at(F.col("additional_details"), "mesh_synonynms"))
-    return F.coalesce(col, F.array().cast("array<string>"))
+        col = f"coalesce({col}, element_at(additional_details, 'mesh_synonynms'))"
+    return f"coalesce({col}, {EMPTY_STRINGS})"
 
 
 def entity_feature_table(entities: DataFrame, id_out: str = "entity_id") -> DataFrame:
     """Per-entity precompute (EngineeredFeatureGenerator.py:175-197
     _form_dict_entry). One row per entity; joined (broadcast) into the
-    candidate-pair DF by featurize_pairs."""
-    aliases = F.coalesce(F.col("aliases"), F.array().cast("array<string>"))
-    name_tokens = tokenize("canonical_name")
-    alias_tokens = F.transform(aliases, lambda a: tokenize(a))
-    df = entities.select(
-        F.col("research_entity_id").alias(id_out),
-        F.col("canonical_name"),
-        aliases.alias("aliases"),
-        name_tokens.alias("name_tokens"),
-        F.array_distinct(char_ngrams("canonical_name", 4)).alias("name_char_4grams"),
-        F.array_distinct(char_ngrams("canonical_name", 5)).alias("name_char_5grams"),
-        alias_tokens.alias("alias_tokens"),
-        F.transform(aliases, lambda a: F.array_distinct(char_ngrams(a, 4))).alias(
-            "alias_char_4grams"
-        ),
-        F.transform(aliases, lambda a: F.array_distinct(char_ngrams(a, 5))).alias(
-            "alias_char_5grams"
-        ),
-        F.transform(alias_tokens, lambda t: acronym(t)).alias("acronyms"),
-        F.transform(alias_tokens, lambda t: F.array_sort(t)).alias("alias_token_set"),
-        tokenize(F.coalesce(F.col("definition"), F.lit(""))).alias("def_tokens"),
-        _detail("wiki_entities").alias("wiki_entities"),
-        _detail("mesh_synonyms").alias("mesh_synonyms"),
-        _detail("dbpedia_synonyms").alias("dbpedia_synonyms"),
-    )
-    df = df.withColumn(
-        "wiki_ent_tokens", F.transform("wiki_entities", lambda s: tokenize(s))
-    ).withColumn(
-        "mesh_syn_tokens", F.transform("mesh_synonyms", lambda s: tokenize(s))
-    ).withColumn(
-        "dbpedia_syn_tokens", F.transform("dbpedia_synonyms", lambda s: tokenize(s))
-    )
+    candidate-pair DF by featurize_pairs. The text columns are one
+    selectExpr; the fused Python pass is the one Column step."""
+    aliases = f"coalesce(aliases, {EMPTY_STRINGS})"
+    alias_tokens = f"transform({aliases}, a -> {tokenize('a')})"
+
+    def each(arr: str, body: str) -> str:
+        return f"transform({arr}, x -> {body})"
+
+    text = {
+        id_out: "research_entity_id",
+        "canonical_name": "canonical_name",
+        "aliases": aliases,
+        "name_tokens": tokenize("canonical_name"),
+        "name_char_4grams": f"array_distinct({char_ngrams('canonical_name', 4)})",
+        "name_char_5grams": f"array_distinct({char_ngrams('canonical_name', 5)})",
+        "alias_tokens": alias_tokens,
+        "alias_char_4grams": each(aliases, f"array_distinct({char_ngrams('x', 4)})"),
+        "alias_char_5grams": each(aliases, f"array_distinct({char_ngrams('x', 5)})"),
+        "acronyms": each(alias_tokens, acronym("x")),
+        "alias_token_set": each(alias_tokens, "array_sort(x)"),
+        "def_tokens": tokenize("coalesce(definition, '')"),
+        "wiki_entities": _detail("wiki_entities"),
+        "mesh_synonyms": _detail("mesh_synonyms"),
+        "dbpedia_synonyms": _detail("dbpedia_synonyms"),
+        "wiki_ent_tokens": each(_detail("wiki_entities"), tokenize("x")),
+        "mesh_syn_tokens": each(_detail("mesh_synonyms"), tokenize("x")),
+        "dbpedia_syn_tokens": each(_detail("dbpedia_synonyms"), tokenize("x")),
+    }
+    df = entities.selectExpr(*[f"{e} AS `{c}`" for c, e in text.items()])
     # All per-entity Python (F8 stem/lemmatize, F9 parse root — the NP
     # head finder of functions/parse.py, golden-tested in
     # tests/test_parse_root.py) runs in ONE fused Arrow pass.
-    df = (
-        df.withColumn("_d", _derived_text_udf("name_tokens", "canonical_name"))
-        .withColumn("stemmed_name_tokens", F.col("_d.stemmed"))
-        .withColumn("lemmatized_name_tokens", F.col("_d.lemmatized"))
-        .withColumn("parse_root", F.col("_d.root"))
-        .withColumn("root_words", F.col("_d.root_words"))
-        .drop("_d")
-    )
-    return df
-
-
-def _set_jaccard(a: str, b: str) -> str:
-    """Jaccard over arrays treated as sets; -1.0 if either empty
-    (string_utils.py:52-63)."""
-    return (
-        f"CASE WHEN size({a}) > 0 AND size({b}) > 0"
-        f" THEN CAST(size(array_intersect({a}, {b})) AS DOUBLE)"
-        f" / CAST(size(array_union({a}, {b})) AS DOUBLE) ELSE -1.0D END"
+    return df.withColumn("_d", _derived_text_udf("name_tokens", "canonical_name")).selectExpr(
+        *[f"`{c}`" for c in text],
+        "_d.stemmed AS stemmed_name_tokens",
+        "_d.lemmatized AS lemmatized_name_tokens",
+        "_d.root AS parse_root",
+        "_d.root_words AS root_words",
     )
 
 
@@ -145,7 +132,7 @@ def _max_jaccard(alists: str, blists: str) -> str:
     (EngineeredFeatureGenerator.py:149-163). Reference floor is 0.0 even
     when a pair would score -1.0 (max starts at 0.0). Native nested
     transform + array_max — no Python."""
-    pairs = f"transform({alists}, x -> transform({blists}, y -> {_set_jaccard('x', 'y')}))"
+    pairs = f"transform({alists}, x -> transform({blists}, y -> {jaccard('x', 'y')}))"
     return f"coalesce(greatest(array_max(flatten({pairs})), 0.0D), 0.0D)"
 
 
@@ -239,12 +226,12 @@ def featurize_pairs(
         "has_same_stemmed_name_token_set": same_set("stemmed_name_tokens"),
         "has_same_lemmatized_name_tokens": same("lemmatized_name_tokens"),
         "has_same_lemmatized_name_token_set": same_set("lemmatized_name_tokens"),
-        "name_char_4gram_jaccard": _set_jaccard(*both("name_char_4grams")),
-        "name_char_5gram_jaccard": _set_jaccard(*both("name_char_5grams")),
+        "name_char_4gram_jaccard": jaccard(*both("name_char_4grams")),
+        "name_char_5gram_jaccard": jaccard(*both("name_char_5grams")),
         "has_alias_in_common": _overlaps(*both("aliases")),
         "has_alias_tokens_in_common": _overlaps(*both("alias_tokens")),
         "has_alias_token_set_in_common": _overlaps(*both("alias_token_set")),
-        "alias_token_jaccard": _set_jaccard(*both("alias_token_set")),
+        "alias_token_jaccard": jaccard(*both("alias_token_set")),
         "max_alias_token_jaccard": _max_jaccard(*both("alias_token_set")),
         "max_alias_4gram_jaccard": _max_jaccard(*both("alias_char_4grams")),
         "max_alias_5gram_jaccard": _max_jaccard(*both("alias_char_5grams")),
@@ -253,21 +240,21 @@ def featurize_pairs(
             f" OR ({_overlaps('s_acronyms', 't_aliases')})"
             f" OR ({_overlaps('s_aliases', 't_acronyms')})"
         ),
-        "definition_token_jaccard": _set_jaccard(*both("def_tokens")),
+        "definition_token_jaccard": jaccard(*both("def_tokens")),
         "has_same_wiki_entity": _overlaps(*both("wiki_entities")),
-        "wiki_entity_jaccard": _set_jaccard(*both("wiki_entities")),
+        "wiki_entity_jaccard": jaccard(*both("wiki_entities")),
         "max_wiki_entity_jaccard": _max_jaccard(*both("wiki_ent_tokens")),
         "has_same_mesh_synonym": _overlaps(*both("mesh_synonyms")),
-        "mesh_synonym_jaccard": _set_jaccard(*both("mesh_synonyms")),
+        "mesh_synonym_jaccard": jaccard(*both("mesh_synonyms")),
         "max_mesh_synonym_jaccard": _max_jaccard(*both("mesh_syn_tokens")),
         "has_same_dbpedia_synonym": _overlaps(*both("dbpedia_synonyms")),
-        "dbpedia_synonym_jaccard": _set_jaccard(*both("dbpedia_synonyms")),
+        "dbpedia_synonym_jaccard": jaccard(*both("dbpedia_synonyms")),
         "max_dbpedia_synonym_jaccard": _max_jaccard(*both("dbpedia_syn_tokens")),
         "has_overlapping_synonym": _overlaps(synonyms("s"), synonyms("t")),
-        "all_synonym_jaccard": _set_jaccard(synonyms("s"), synonyms("t")),
+        "all_synonym_jaccard": jaccard(synonyms("s"), synonyms("t")),
         "max_all_synonym_jaccard": _max_jaccard(synonym_tokens("s"), synonym_tokens("t")),
         "has_same_root_word": same("parse_root"),
-        "root_word_jaccard": _set_jaccard(
+        "root_word_jaccard": jaccard(
             "array_distinct(s_root_words)", "array_distinct(t_root_words)"
         ),
     }

@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ontoemma_spark import config
-from ontoemma_spark.functions.text import normalize_string
+from ontoemma_spark.functions.text import EMPTY_STRINGS, normalize_string
 
 _REL_CLASSES = {
     "syn_relations": config.UMLS_SYNONYM_REL_LABELS,
@@ -25,20 +25,19 @@ _REL_CLASSES = {
 
 
 def normalize_entities(entities: DataFrame) -> DataFrame:
-    """P1 string normalization over name/aliases/definition/contexts."""
-    return entities.withColumn(
-        "canonical_name", normalize_string("canonical_name")
-    ).withColumn(
-        "aliases",
-        F.array_distinct(F.transform("aliases", lambda a: normalize_string(a))),
-    ).withColumn(
-        "definition", normalize_string(F.coalesce(F.col("definition"), F.lit("")))
-    ).withColumn(
-        "other_contexts",
-        F.transform(
-            F.coalesce(F.col("other_contexts"), F.array().cast("array<string>")),
-            lambda c: normalize_string(c),
+    """P1 string normalization over name/aliases/definition/contexts,
+    in place (column order kept)."""
+    normalized = {
+        "canonical_name": normalize_string("canonical_name"),
+        "aliases": f"array_distinct(transform(aliases, a -> {normalize_string('a')}))",
+        "definition": normalize_string("coalesce(definition, '')"),
+        "other_contexts": (
+            f"transform(coalesce(other_contexts, {EMPTY_STRINGS}),"
+            f" c -> {normalize_string('c')})"
         ),
+    }
+    return entities.selectExpr(
+        *[f"{normalized[c]} AS {c}" if c in normalized else f"`{c}`" for c in entities.columns]
     )
 
 

@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ontoemma_spark.functions.stopwords import ENGLISH_STOPWORDS_SORTED
-from ontoemma_spark.functions.text import isin_words
+from ontoemma_spark.functions.text import in_words
 
 # Mini function-word profiles (pinned; top function words per language).
 LANG_PROFILES: dict[str, tuple[str, ...]] = {
@@ -23,9 +23,9 @@ LANG_PROFILES: dict[str, tuple[str, ...]] = {
 }
 
 
-def whitespace_tokens(text_col) -> F.Column:
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    return F.split(c, " ")
+def whitespace_tokens(text_col: str) -> str:
+    """SQL text: the column split on single spaces."""
+    return f"split(`{text_col}`, ' ')"
 
 
 def token_counts(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -33,7 +33,7 @@ def token_counts(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
     (word pieces = letter runs / digit runs / single punctuation), chars."""
     return docs.select(
         F.col(id_col).alias("doc_id"),
-        F.size(whitespace_tokens(text_col)).cast("bigint").alias("ws_tokens"),
+        F.size(F.expr(whitespace_tokens(text_col))).cast("bigint").alias("ws_tokens"),
         F.size(
             F.regexp_extract_all(F.col(text_col), F.lit(r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"), 0)
         ).cast("bigint").alias("re_tokens"),
@@ -44,49 +44,42 @@ def token_counts(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 def language_id(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Function-word-ratio language ID: per language, the fraction of
     tokens present in that language's profile; predicted language =
-    argmax (profile order tiebreak via greatest-chain determinism)."""
+    argmax (profile order tiebreak via greatest-chain determinism).
+    The 10-word profiles stay a literal IN (at the InSet threshold)."""
     toks = whitespace_tokens(text_col)
-    n = F.size(toks)
     scores = {
-        lang: F.size(F.filter(toks, lambda t: isin_words(t, words))) / n
+        lang: f"size(filter({toks}, w -> {in_words('w', words)})) / size({toks})"
         for lang, words in LANG_PROFILES.items()
     }
     # deterministic argmax: fold over fixed lang order, strict > keeps first
     langs = list(LANG_PROFILES)
-    pred = F.lit(langs[0])
+    pred = f"'{langs[0]}'"
     best = scores[langs[0]]
     for lang in langs[1:]:
-        pred = F.when(scores[lang] > best, F.lit(lang)).otherwise(pred)
-        best = F.when(scores[lang] > best, scores[lang]).otherwise(best)
-    out = docs.select(
-        F.col(id_col).alias("doc_id"),
-        *[F.round(scores[lang], 6).alias(f"score_{lang}") for lang in langs],
-        pred.alias("pred_lang"),
+        pred = f"CASE WHEN {scores[lang]} > {best} THEN '{lang}' ELSE {pred} END"
+        best = f"CASE WHEN {scores[lang]} > {best} THEN {scores[lang]} ELSE {best} END"
+    return docs.selectExpr(
+        f"`{id_col}` AS doc_id",
+        *[f"round({scores[lang]}, 6) AS score_{lang}" for lang in langs],
+        f"{pred} AS pred_lang",
     )
-    return out
 
 
-def _quality_parts(text_col: str):
+def _quality_parts(text_col: str) -> tuple[str, str, str, str, str]:
+    """SQL text of (n_toks, mean_len, stop_ratio, distinct_ratio,
+    score). The 179-stopword IN becomes an InSet hash lookup per token,
+    where an array_contains over a literal array would scan every
+    stopword."""
     toks = whitespace_tokens(text_col)
-    n_toks = F.size(toks)
-    # r6: a literal IN — the optimizer rewrites a large IN to an
-    # InSet HASH lookup per token; the previous
-    # array_contains(literal array, t) was a LINEAR SCAN of all 179
-    # stopwords per token inside an interpreted lambda (~9.5k string
-    # compares per doc; the dominant cost of the curation gate).
-    # Identical semantics: both are null-safe equality membership.
-    stop_ratio = F.size(
-        F.filter(toks, lambda t: isin_words(t, ENGLISH_STOPWORDS_SORTED))
-    ) / n_toks
-    mean_len = F.aggregate(
-        toks, F.lit(0.0), lambda acc, t: acc + F.length(t).cast("double")
-    ) / n_toks
-    distinct_ratio = F.size(F.array_distinct(toks)) / n_toks
+    n_toks = f"size({toks})"
+    stop_ratio = f"size(filter({toks}, w -> {in_words('w', ENGLISH_STOPWORDS_SORTED)})) / {n_toks}"
+    mean_len = f"aggregate({toks}, 0.0D, (acc, w) -> acc + CAST(length(w) AS DOUBLE)) / {n_toks}"
+    distinct_ratio = f"size(array_distinct({toks})) / {n_toks}"
     score = (
-        F.when(n_toks >= 20, 0.25).otherwise(0.0)
-        + F.when((mean_len >= 3) & (mean_len <= 10), 0.25).otherwise(0.0)
-        + F.when(stop_ratio <= 0.5, 0.25).otherwise(0.0)
-        + F.when(distinct_ratio >= 0.2, 0.25).otherwise(0.0)
+        f"CASE WHEN {n_toks} >= 20 THEN 0.25D ELSE 0.0D END"
+        f" + CASE WHEN ({mean_len}) >= 3 AND ({mean_len}) <= 10 THEN 0.25D ELSE 0.0D END"
+        f" + CASE WHEN ({stop_ratio}) <= 0.5D THEN 0.25D ELSE 0.0D END"
+        f" + CASE WHEN ({distinct_ratio}) >= 0.2D THEN 0.25D ELSE 0.0D END"
     )
     return n_toks, mean_len, stop_ratio, distinct_ratio, score
 
@@ -97,7 +90,7 @@ def quality_score_col(text_col: str = "text") -> F.Column:
     gate) with no join against quality_scores' output. The single
     source of the four 0.25 gates; quality_scores projects the same
     expression."""
-    return _quality_parts(text_col)[4]
+    return F.expr(_quality_parts(text_col)[4])
 
 
 def quality_scores(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -105,18 +98,15 @@ def quality_scores(docs: DataFrame, text_col: str = "text", id_col: str = "doc_i
     ratio, alpha ratio, distinct-token ratio + a combined [0,1] score
     (the C4/Gopher-style cheap filters)."""
     n_toks, mean_len, stop_ratio, distinct_ratio, score = _quality_parts(text_col)
-    alpha_ratio = (
-        F.length(F.regexp_replace(F.col(text_col), r"[^a-zA-Z]", ""))
-        / F.length(text_col)
-    )
-    return docs.select(
-        F.col(id_col).alias("doc_id"),
-        n_toks.cast("bigint").alias("n_tokens"),
-        F.round(mean_len, 6).alias("mean_token_len"),
-        F.round(stop_ratio, 6).alias("stopword_ratio"),
-        F.round(alpha_ratio, 6).alias("alpha_ratio"),
-        F.round(distinct_ratio, 6).alias("distinct_ratio"),
-        F.round(score, 6).alias("quality_score"),
+    alpha_ratio = f"length(regexp_replace(`{text_col}`, '[^a-zA-Z]', '')) / length(`{text_col}`)"
+    return docs.selectExpr(
+        f"`{id_col}` AS doc_id",
+        f"CAST({n_toks} AS BIGINT) AS n_tokens",
+        f"round({mean_len}, 6) AS mean_token_len",
+        f"round({stop_ratio}, 6) AS stopword_ratio",
+        f"round({alpha_ratio}, 6) AS alpha_ratio",
+        f"round({distinct_ratio}, 6) AS distinct_ratio",
+        f"round({score}, 6) AS quality_score",
     )
 
 
@@ -574,7 +564,7 @@ def unigram_vocab(docs: DataFrame, text_col: str = "text") -> DataFrame:
     map-side-combinable count agg. Store it bucketed by token so
     repeated scoring runs co-locate."""
     return (
-        docs.select(F.explode(whitespace_tokens(text_col)).alias("token"))
+        docs.selectExpr(f"explode({whitespace_tokens(text_col)}) AS token")
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -622,7 +612,7 @@ def unigram_logprob_scores(
     )
     toks = docs.select(
         F.col(id_col).alias("doc_id"),
-        F.explode(whitespace_tokens(text_col)).alias("token"),
+        F.explode(F.expr(whitespace_tokens(text_col))).alias("token"),
     )
     scored = (
         toks.join(vocab, "token", "left")

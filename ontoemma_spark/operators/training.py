@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ontoemma_spark import config
-from ontoemma_spark.functions.text import tokenize
+from ontoemma_spark.functions.text import idf, tokenize
 
 
 def train_dev_test_split(
@@ -133,14 +133,14 @@ def definition_tfidf_cosine(
     numerator is a token equi-join restricted to the pair set and the
     norms are per-entity aggregates — no vectors materialized, no UDF.
     Adds 'def_tfidf_cosine' (0.0 when either side has no tokens)."""
-    s_tok = s_entities.select(
-        F.col("research_entity_id").alias("s_id"),
-        F.explode(tokenize(F.coalesce(F.col("definition"), F.lit("")))).alias("token"),
-    ).groupBy("s_id", "token").agg(F.count(F.lit(1)).alias("tf"))
-    t_tok = t_entities.select(
-        F.col("research_entity_id").alias("t_id"),
-        F.explode(tokenize(F.coalesce(F.col("definition"), F.lit("")))).alias("token"),
-    ).groupBy("t_id", "token").agg(F.count(F.lit(1)).alias("tf"))
+    tokens = tokenize("coalesce(definition, '')")
+    def_tokens = f"explode({tokens}) AS token"
+    s_tok = s_entities.selectExpr("research_entity_id AS s_id", def_tokens).groupBy(
+        "s_id", "token"
+    ).agg(F.count(F.lit(1)).alias("tf"))
+    t_tok = t_entities.selectExpr("research_entity_id AS t_id", def_tokens).groupBy(
+        "t_id", "token"
+    ).agg(F.count(F.lit(1)).alias("tf"))
 
     n_docs = s_entities.count() + t_entities.count()
     df = (
@@ -148,7 +148,7 @@ def definition_tfidf_cosine(
         .union(t_tok.select(F.col("t_id").alias("eid"), "token"))
         .groupBy("token")
         .agg(F.countDistinct("eid").alias("df"))
-        .select("token", F.log(F.lit(float(n_docs)) / F.col("df") + 1).alias("idf"))
+        .selectExpr("token", f"{idf(n_docs, 'df')} AS idf")
     )
     s_w = s_tok.join(F.broadcast(df), "token").select(
         "s_id", "token", (F.col("tf") * F.col("idf")).alias("s_w")

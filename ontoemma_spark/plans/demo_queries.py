@@ -61,11 +61,11 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def q_kb_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P1/F1/F2/F3: per-entity normalization projection (SURVEY §2.2)."""
     part = _t(spark, sf_dir, "part")
-    return part.select(
-        F.col("p_partkey").cast("bigint").alias("entity_id"),
-        normalize_string("p_name").alias("norm_name"),
-        canonicalize("p_name").alias("canon_name"),
-        F.size(tokenize("p_name")).cast("bigint").alias("n_tokens"),
+    return part.selectExpr(
+        "CAST(p_partkey AS BIGINT) AS entity_id",
+        f"{normalize_string('p_name')} AS norm_name",
+        f"{canonicalize('p_name')} AS canon_name",
+        f"CAST(size({tokenize('p_name')}) AS BIGINT) AS n_tokens",
     )
 
 

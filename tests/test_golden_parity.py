@@ -4,8 +4,6 @@ reference semantics and must NEVER change silently — a diff here means
 tokenization/blocking behavior drift that would break alignment parity.
 """
 
-from pyspark.sql import functions as F
-
 from ontoemma_spark.functions.text import char_ngrams, normalize_string, tokenize
 
 # (input, expected tokens) — reference tokenizer [A-Za-z\d]+ minus NLTK
@@ -34,20 +32,20 @@ GOLDEN_NORMALIZE = [
 
 def test_golden_tokens(spark):
     df = spark.createDataFrame([(s,) for s, _ in GOLDEN_TOKENS], "s string")
-    got = [r["v"] for r in df.select(tokenize("s").alias("v")).collect()]
+    got = [r["v"] for r in df.selectExpr(f"{tokenize('s')} AS v").collect()]
     assert got == [exp for _, exp in GOLDEN_TOKENS]
 
 
 def test_golden_ngrams(spark):
     for s, n, exp in GOLDEN_NGRAMS:
         df = spark.createDataFrame([(s,)], "s string")
-        got = df.select(char_ngrams("s", n).alias("v")).collect()[0]["v"]
+        got = df.selectExpr(f"{char_ngrams('s', n)} AS v").collect()[0]["v"]
         assert got == exp, (s, n)
 
 
 def test_golden_normalize(spark):
     df = spark.createDataFrame([(s,) for s, _ in GOLDEN_NORMALIZE], "s string")
-    got = [r["v"] for r in df.select(normalize_string("s").alias("v")).collect()]
+    got = [r["v"] for r in df.selectExpr(f"{normalize_string('s')} AS v").collect()]
     assert got == [exp for _, exp in GOLDEN_NORMALIZE]
 
 

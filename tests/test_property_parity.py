@@ -35,27 +35,43 @@ def py_jaccard(a, b):
     return -1.0
 
 
+def _in_transform(spark, strings, primitive):
+    """primitive applied inside a transform over one array column of
+    all the strings, once under each lambda variable name the
+    primitives pick for themselves first; returns the per-element
+    results."""
+    df = spark.createDataFrame([(strings,)], "a array<string>")
+    names = ("tok0", "pos0")
+    row = df.selectExpr(*[f"transform(a, {v} -> {primitive(v)}) AS {v}" for v in names]).first()
+    assert row["tok0"] == row["pos0"]
+    return row["tok0"]
+
+
 @settings(max_examples=8, deadline=None)
 @given(st.lists(TEXTS, min_size=1, max_size=40))
 def test_tokenize_matches_python(spark, strings):
     df = spark.createDataFrame([(s,) for s in strings], "s string")
-    got = [r["v"] for r in df.select(tokenize("s").alias("v")).collect()]
+    got = [r["v"] for r in df.selectExpr(f"{tokenize('s')} AS v").collect()]
     assert got == [py_tokenize(s) for s in strings]
+    assert _in_transform(spark, strings, tokenize) == [py_tokenize(s) for s in strings]
 
 
 @settings(max_examples=8, deadline=None)
 @given(st.lists(TEXTS, min_size=1, max_size=40))
 def test_normalize_matches_python(spark, strings):
     df = spark.createDataFrame([(s,) for s in strings], "s string")
-    got = [r["v"] for r in df.select(normalize_string("s").alias("v")).collect()]
+    got = [r["v"] for r in df.selectExpr(f"{normalize_string('s')} AS v").collect()]
     assert got == [py_normalize(s) for s in strings]
+    assert _in_transform(spark, strings, normalize_string) == [py_normalize(s) for s in strings]
 
 
 @settings(max_examples=6, deadline=None)
 @given(st.lists(TEXTS, min_size=1, max_size=25), st.integers(min_value=2, max_value=6))
 def test_ngrams_match_python(spark, strings, n):
     df = spark.createDataFrame([(s,) for s in strings], "s string")
-    got = [r["v"] for r in df.select(char_ngrams("s", n).alias("v")).collect()]
+    got = [r["v"] for r in df.selectExpr(f"{char_ngrams('s', n)} AS v").collect()]
+    assert got == [py_ngrams(s, n) for s in strings]
+    got = _in_transform(spark, strings, lambda x: char_ngrams(x, n))
     assert got == [py_ngrams(s, n) for s in strings]
 
 
@@ -74,7 +90,7 @@ def test_jaccard_matches_python(spark, pairs):
     # arrays treated as sets in the Spark impl → dedupe inputs for parity
     pairs = [(sorted(set(a)), sorted(set(b))) for a, b in pairs]
     df = spark.createDataFrame(pairs, "a array<string>, b array<string>")
-    got = [r["v"] for r in df.select(jaccard("a", "b").alias("v")).collect()]
+    got = [r["v"] for r in df.selectExpr(f"{jaccard('a', 'b')} AS v").collect()]
     exp = [py_jaccard(a, b) for a, b in pairs]
     for g, e in zip(got, exp):
         assert abs(g - e) < 1e-12
